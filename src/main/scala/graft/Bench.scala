@@ -29,7 +29,8 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     // cpus as a JSON value: numeric when it is one (the contract), quoted
     // otherwise (e.g. local[*]) so the artifact line stays parseable
-    val cpusJson = if (cpus.forall(_.isDigit)) cpus else "\"" + cpus + "\""
+    val cpusJson =
+      if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "\"" + cpus + "\""
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -37,6 +38,11 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failures = scala.collection.mutable.SortedSet.empty[String]
+    def failed(name: String, e: Throwable): Unit = {
+      failures += name
+      System.err.println(s"[bench] FAILED $name: $e")
+    }
 
     // Warm-up outside any timer: (a) run EVERY query once at sf0.001 so
     // whole-stage codegen, Janino, shuffle machinery, broadcast paths and
@@ -64,7 +70,7 @@ object Bench {
     // runs first — r6 charged q_cluster_keep_one 2.8s for a 1.0s plan.
     val tSetup = System.nanoTime()
     try SparkEntry.benchOnboard(spark, sfDir)
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => failed("benchOnboard", e) }
     val setupSec = (System.nanoTime() - tSetup) / 1e9
 
     // Two timed passes, min per query: a single local[32] JVM shows
@@ -73,10 +79,15 @@ object Bench {
     def pass(): Map[String, Double] =
       picked.toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { force(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
+        try { force(fn(spark, sfDir)) }
+        catch { case e: Throwable => failed(name, e); -1L }
         name -> (System.nanoTime() - t0) / 1e9
       }.toMap
     val p1 = pass(); val p2 = pass()
+    // a failed step keeps its time-to-failure as its timing but is NAMED
+    // in the artifact, so a fast failure can never pass for a fast query
+    def failedJson = failures.toSeq.map("\"" + _ + "\"")
+      .mkString("[", ",", "]")
     val results = p1.map { case (k, v) => k -> math.min(v, p2(k)) }
 
     // relay pipeline throughput: envelope → mod-filter → per-partition
@@ -100,7 +111,8 @@ object Bench {
         "\"" + k + "\":" + (math.round(v * 1000) / 1000.0) }
         .mkString("{", ",", "}")
       println(s"""{"metric":"total","value":${results.values.sum},""" +
-        s""""unit":"sec","queries":$qs,"cpus":$cpusJson,"sf":"$sfDir"}""")
+        s""""unit":"sec","queries":$qs,"failed":$failedJson,""" +
+        s""""cpus":$cpusJson,"sf":"$sfDir"}""")
       spark.stop()
       return
     }
@@ -174,11 +186,12 @@ object Bench {
       // scaling check verify the c8/c32 runs differ by core count
       // without inferring it from per-query ratios
       s""""cpus":$cpusJson,""" +
+      s""""failed":$failedJson,""" +
       s""""sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("/tmp/graft_bench.json"),
       s"""{"metric":"total","value":$total,"unit":"sec","setup_sec":$setupSec,""" +
-      s""""queries":$fullMap,"sf":"$sfDir"}""" + "\n")
+      s""""queries":$fullMap,"failed":$failedJson,"sf":"$sfDir"}""" + "\n")
     catch { case _: Throwable => () }
     println(line)
     spark.stop()

@@ -427,10 +427,7 @@ object ScaleProbe {
       deriveNext(spark, DerivedDir, Derived10Dir, level = 2)
       def du(dir: String): Long =
         graft.pipeline.StoreFs.listFileStatusesRecursive(dir)
-          .map { case (p, _, _) =>
-            try java.nio.file.Files.size(java.nio.file.Paths.get(
-              p.stripPrefix("file:"))) catch { case _: Throwable => 0L }
-          }.sum
+          .map(_.getLen).sum
       def minOf2(run: () => Unit): Double = {
         def once(): Double = {
           val t0 = System.nanoTime(); run()

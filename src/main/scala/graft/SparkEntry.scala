@@ -1763,9 +1763,10 @@ object SparkEntry {
           graft.sources.WireFixtures.postingsStoreDir(s, dir)),
         Seq(Seq("table", "value"), Seq("the", "data"), Seq("spark")))),
 
-    // ---- store COMPACTION: five trickle appends leave five overlapping
-    // token ranges; compaction rewrites to the canonical range layout
-    // (atomic swap) and serving over the compacted store is
+    // ---- store COMPACTION: five trickle appends (the first one
+    // publishes the store's generation 1) leave five overlapping token
+    // ranges; compaction publishes the canonical range layout as the
+    // next generation and serving over the compacted store is
     // row-identical to the full-corpus derivation ----
     "q_postings_compact" -> ((s, dir) => {
       val root = tempQueryDir("pcompact").toString
@@ -1859,10 +1860,10 @@ object SparkEntry {
         Seq("the", "of", "data"), k = 20)
     }),
 
-    // ---- takedown GC: tombstone, then COMPACT — the rewrite physically
-    // drops the tombstoned rows and clears the set (crash-safe ordering:
-    // the set clears LAST, and an anti-join of already-purged ids is a
-    // no-op) — then serve; results identical to the tombstone-only read ----
+    // ---- takedown GC: tombstone, then COMPACT — the rewrite publishes
+    // a fresh generation of the live rows (empty overlay) and gc retires
+    // the old one, physically dropping the tombstoned rows — then serve;
+    // results identical to the tombstone-only read ----
     "q_postings_gc" -> ((s, dir) => {
       val root = tempQueryDir("pgc").toString
       val d = docs(s, dir).select("doc_id", "text")
@@ -1993,8 +1994,8 @@ object SparkEntry {
         .write.mode("append").parquet(s"$gen/doclens")
       graft.pipeline.Retrieval.tombstoneDocs(s, idx, Seq(999999L, 3L))
       // crashed-maintenance leftovers: a compaction tmp that never
-      // swapped in and a backup that never got deleted (legacy flat
-      // roots still run the swap protocol — the artifact audit stays)
+      // swapped in and a backup that never got deleted (the single-table
+      // swaps still run the swap protocol — the artifact audit stays)
       graft.pipeline.StoreFs.mkdirs(s"$gen/postings.compact.12345")
       graft.pipeline.StoreFs.mkdirs(s"$gen/doclens.old.12345")
       // batch-layout audit (listing-sized, no rows read): plant by hand

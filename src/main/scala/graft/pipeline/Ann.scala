@@ -879,15 +879,13 @@ object Ann {
 
   /** Takedown GC for a [[writeIndex]] store: rewrite `cells/` without
     * the tombstoned rows (clustered by cell_id, so the serving scan's
-    * cell probe keeps its pruning). On a VERSIONED store the rewrite is
-    * one fresh-generation publish (codebook carried over unchanged,
-    * live cells only) followed by gc — atomic, no clear-last ordering,
-    * old overlay retired with its generation; the swap + clear-LAST
-    * protocol (crash between leaves tombstones applied to
-    * already-purged cells, an anti-join no-op) remains for legacy flat
-    * roots. The codebook's CONTENT is untouched either way: centroids
-    * are corpus statistics, not memberships, and drift only on a full
-    * [[writeIndex]] retrain. */
+    * cell probe keeps its pruning). The rewrite is one fresh-generation
+    * [[VersionedStore.publish]] (codebook carried over unchanged, live
+    * cells only) followed by [[VersionedStore.gc]] — atomic, the old
+    * overlay retired with its generation; a legacy flat root migrates
+    * here exactly as a rebuild migrates it. The codebook's CONTENT is
+    * untouched: centroids are corpus statistics, not memberships, and
+    * drift only on a full [[writeIndex]] retrain. */
   def compactIndexCells(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, numFiles: Int = 4, keepGenerations: Int = 0): Unit = {
     require(numFiles > 0, s"compactIndexCells: numFiles $numFiles")
@@ -901,23 +899,15 @@ object Ann {
     // post-compaction [[appendToIndexBatch]] writes keep working
     val liveCells = shapeByCell(Tombstones.filterLive(
       spark.read.parquet(s"$t0/cells"), t0, "id"), numFiles)
-    if (VersionedStore.isVersioned(storeDir)) {
-      VersionedStore.publish(storeDir, Map(
-        "codebook" -> spark.read.parquet(s"$t0/codebook"),
-        "cells" -> liveCells),
-        partitionBy =
-          if (batched) Map("cells" -> Seq("batch")) else Map.empty)
-      // keepGenerations: [[Retrieval.compactPostingsIndex]]'s retention
-      // knob — 0 (default) makes compaction the erasure deadline
-      VersionedStore.gc(storeDir, keep = keepGenerations)
-      ()
-    } else {
-      val tmp = s"$storeDir/cells.compact.${ProcessHandle.current.pid}"
-      (if (batched) liveCells.write.partitionBy("batch")
-       else liveCells.write).parquet(tmp)
-      Dedup.swapDir(s"$storeDir/cells", tmp)
-      Tombstones.clear(storeDir)
-    }
+    VersionedStore.publish(storeDir, Map(
+      "codebook" -> spark.read.parquet(s"$t0/codebook"),
+      "cells" -> liveCells),
+      partitionBy =
+        if (batched) Map("cells" -> Seq("batch")) else Map.empty)
+    // keepGenerations: [[Retrieval.compactPostingsIndex]]'s retention
+    // knob — 0 (default) makes compaction the erasure deadline
+    VersionedStore.gc(storeDir, keep = keepGenerations)
+    ()
   }
 
   /** Split every OVERSIZED cell of a [[writeIndex]] store — the IVF
@@ -930,18 +920,14 @@ object Ann {
     * so the pass costs O(oversized cells' members), not O(store), and the
     * untouched cells' rows rewrite clustered but unassigned-unchanged.
     *
-    * Publish protocol: on a VERSIONED store the final codebook and the
-    * rewritten cells land as ONE atomic generation (publish + gc) — no
-    * intermediate states at all. On a legacy flat root the pass runs
-    * the three-swap protocol, every crash window serving-safe and
-    * fsck-visible as layout artifacts:
-    *   1. codebook ← old ∪ sub-centroids (superset: new cells are empty,
-    *      serving unchanged — a probe may rank an empty cell, costing
-    *      recall nothing because its member scan is empty);
-    *   2. cells ← untouched rows ∪ reassigned members (live rows only —
-    *      the rewrite subsumes takedown GC exactly like
-    *      [[compactIndexCells]], and the tombstone set clears after);
-    *   3. codebook ← superset minus the split parents (now memberless).
+    * Commit: the final codebook (split parents replaced by their
+    * sub-centroids) and the rewritten cells (untouched rows plus the
+    * reassigned members, live rows only — the rewrite subsumes takedown
+    * GC exactly like [[compactIndexCells]]) land as ONE
+    * [[VersionedStore.publish]] followed by [[VersionedStore.gc]] — the
+    * one commit path of every store rewrite, with no intermediate state
+    * for a reader to see. A legacy flat root migrates here exactly as
+    * a rebuild migrates it.
     *
     * Duplicate-heavy cells may refuse to split (identical vectors share
     * every argmin, so all members follow one sub-centroid); the returned
@@ -952,7 +938,7 @@ object Ann {
     *
     * Reference analogue: the buffer's region re-carve under
     * maintenance locks (DbusEventBuffer.java:2199-2202) — serving reads
-    * never see a half-moved region; here the swap is the lock. */
+    * never see a half-moved region; here the pointer flip is the lock. */
   def rebalanceCells(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, corpus: DataFrame, maxCellSize: Long,
       splitFactor: Int = 2, iters: Int = 3): Seq[(Long, Long)] = {
@@ -1031,30 +1017,14 @@ object Ann {
     val finalBook =
       centroidsDf(spark, book.filterNot(c => splitIds.contains(c._1))
         ++ subBook).coalesce(1)
-    if (VersionedStore.isVersioned(storeDir)) {
-      // one atomic generation: final codebook + rewritten cells together
-      // (the live frame is persisted, so the publish reads cached rows,
-      // not the old generation's files mid-retirement)
-      VersionedStore.publish(storeDir, Map(
-        "codebook" -> finalBook, "cells" -> newCells))
-      VersionedStore.gc(storeDir, keep = 0)
-    } else {
-      // legacy flat root: three-swap protocol (see scaladoc)
-      val tmpBook1 = s"$storeDir/codebook.compact.${ProcessHandle.current.pid}"
-      centroidsDf(spark, book ++ subBook)
-        .coalesce(1).write.parquet(tmpBook1)
-      Dedup.swapDir(s"$storeDir/codebook", tmpBook1)
-      val tmpCells = s"$storeDir/cells.compact.${ProcessHandle.current.pid}"
-      newCells.write.parquet(tmpCells)
-      Dedup.swapDir(s"$storeDir/cells", tmpCells)
-      Tombstones.clear(storeDir) // the rewrite kept live rows only
-      // drop the now-memberless split parents from the codebook
-      val tmpBook2 = s"$storeDir/codebook.compact.${ProcessHandle.current.pid}"
-      finalBook.write.parquet(tmpBook2)
-      Dedup.swapDir(s"$storeDir/codebook", tmpBook2)
-    }
+    // one atomic generation: final codebook + rewritten cells together
+    // (the live frame is persisted, so the publish reads cached rows,
+    // not the old generation's files mid-retirement)
+    VersionedStore.publish(storeDir, Map(
+      "codebook" -> finalBook, "cells" -> newCells))
+    VersionedStore.gc(storeDir, keep = 0)
     oversized.toSeq
-    // every exit — early empty return, the loud guards, a failed swap —
+    // every exit — early empty return, the loud guards, a failed publish —
     // must release the persisted store copy, or repeated maintenance
     // attempts against a store needing fsck pile caches into the block
     // manager
@@ -1075,13 +1045,12 @@ object Ann {
     * job — no training, no per-cell loop, stored float vectors of
     * untouched cells never read.
     *
-    * Publish protocol mirrors [[rebalanceCells]]: one atomic generation
-    * (publish + gc) on a versioned store; on a legacy flat root the
-    * CELLS swap lands first (reassigned rows reference survivors, which
-    * the old codebook also carries — every intermediate state audits
-    * clean) and the codebook shrink follows. The rewrite keeps live
-    * rows only, so it subsumes takedown GC like every rewrite here.
-    * Like compaction, the pass assumes appends are quiesced.
+    * Commit mirrors [[rebalanceCells]]: the survivor codebook and the
+    * rewritten cells land as one [[VersionedStore.publish]] followed by
+    * [[VersionedStore.gc]], and a legacy flat root migrates on it. The
+    * rewrite keeps live rows only, so it subsumes takedown GC like every
+    * rewrite here. Like compaction, the pass assumes appends are
+    * quiesced.
     *
     * Loud floor guard: a `minCellSize` no cell reaches would absorb the
     * whole codebook into nothing — that is a retrain
@@ -1141,21 +1110,9 @@ object Ann {
       val newCells = shapeByCell(untouched.unionByName(reassigned),
         numFiles)
       val newBook = centroidsDf(spark, survivors).coalesce(1)
-      if (VersionedStore.isVersioned(storeDir)) {
-        VersionedStore.publish(storeDir, Map(
-          "codebook" -> newBook, "cells" -> newCells))
-        VersionedStore.gc(storeDir, keep = 0)
-      } else {
-        // flat root: cells first (reassigned rows point at survivors the
-        // old codebook also carries), then the codebook shrink
-        val tmpCells = s"$storeDir/cells.compact.${ProcessHandle.current.pid}"
-        newCells.write.parquet(tmpCells)
-        Dedup.swapDir(s"$storeDir/cells", tmpCells)
-        Tombstones.clear(storeDir) // the rewrite kept live rows only
-        val tmpBook = s"$storeDir/codebook.compact.${ProcessHandle.current.pid}"
-        newBook.write.parquet(tmpBook)
-        Dedup.swapDir(s"$storeDir/codebook", tmpBook)
-      }
+      VersionedStore.publish(storeDir, Map(
+        "codebook" -> newBook, "cells" -> newCells))
+      VersionedStore.gc(storeDir, keep = 0)
       merged.toSeq.sortBy(_._1)
     } finally live.unpersist()
   }

@@ -510,32 +510,33 @@ object Dedup {
       shingleN: Int = 3, k: Int = 64, bands: Int = 16,
       numFiles: Int = 1): Unit = {
     require(numFiles > 0, s"appendToSignatureStoreBatch: numFiles $numFiles")
-    val t = VersionedStore.tableRoot(dir)
-    // WRITE-TIME layout guard (the [[Ann.appendToIndexBatch]] rule): a
-    // batch subdir under a flat sigs/ table would break every later
-    // read at partition discovery — loud here beats corrupt-at-read
-    require(!StoreFs.isDirectory(s"$t/sigs") ||
-        StoreFs.listDirNames(s"$t/sigs").exists(_.startsWith("batch=")),
-      s"appendToSignatureStoreBatch: $dir is a flat store — a" +
-        " batch-addressed append would mix layouts and break partition" +
-        " discovery; bootstrap the store with writeSignatureStore's" +
-        " batchId")
     // signed ONCE, as the contract above states: both row sets derive
     // from one cached signature pass (without the persist each write's
-    // plan re-ran the shingle+hash kernel), and the two writes land in
-    // different tables' batch dirs so they overlap (guide §2.6)
+    // plan re-ran the shingle+hash kernel). A root with no generation
+    // yet is born by publishing this batch as generation 1
+    // ([[VersionedStore.append]]); otherwise the two writes land in
+    // different tables' batch dirs of the current generation, overlapped
+    // and settled together (a replay of this batch must never start
+    // while an orphaned sibling write to the same batch dirs is in
+    // flight)
     val sigs = minhashSignatures(newDocs, textCol, idCol, shingleN, k)
       .persist()
-    try {
-      // settled together: a replay of this batch must never start while
-      // an orphaned sibling write to the same batch dirs is in flight
-      val a = Overlap.run(sigs.coalesce(numFiles)
-        .write.mode("overwrite").parquet(s"$t/sigs/batch=$batchId"))
-      val b = Overlap.run(bandedBucketsFromSignatures(sigs, k, bands)
-        .coalesce(numFiles)
-        .write.mode("overwrite").parquet(s"$t/banded/batch=$batchId"))
-      Overlap.settle(a, b)
-    } finally sigs.unpersist()
+    try VersionedStore.append(dir, Seq(
+        s"sigs/batch=$batchId" -> (() => sigs.coalesce(numFiles)),
+        s"banded/batch=$batchId" -> (() =>
+          bandedBucketsFromSignatures(sigs, k, bands).coalesce(numFiles))),
+      "overwrite") { t =>
+      // WRITE-TIME layout guard (the [[Ann.appendToIndexBatch]] rule): a
+      // batch subdir under a flat sigs/ table would break every later
+      // read at partition discovery — loud here beats corrupt-at-read
+      require(!StoreFs.isDirectory(s"$t/sigs") ||
+          StoreFs.listDirNames(s"$t/sigs").exists(_.startsWith("batch=")),
+        s"appendToSignatureStoreBatch: $dir is a flat store — a" +
+          " batch-addressed append would mix layouts and break partition" +
+          " discovery; bootstrap the store with writeSignatureStore's" +
+          " batchId")
+    }
+    finally sigs.unpersist()
   }
 
   /** [[readSignatureStore]] PINNED at append batch `maxBatch` —
@@ -632,15 +633,19 @@ object Dedup {
       readSignatureStorePinned(spark, storeDir, pin), k, jaccardThreshold)
   }
 
-  /** Compact a [[writeSignatureStore]] store in place — the takedown GC
+  /** Compact a [[writeSignatureStore]] store — the takedown GC
     * [[tombstoneSignatures]]' scaladoc promises: tombstoned rows drop
-    * physically from both tables and the set clears (on a versioned
-    * store, stays behind in retired generations the gc sweeps). A
-    * batch-addressed store keeps its FULL `batch=<id>` layout through
-    * the rewrite — the [[Ann.compactIndexCells]] rule: a row's batch
-    * identity is preserved, never rolled up, so as-of pins stay exact
-    * across the GC and post-compaction [[appendToSignatureStoreBatch]]
-    * writes keep working. */
+    * physically from both tables. The rewrite is one fresh-generation
+    * [[VersionedStore.publish]] of the live rows followed by
+    * [[VersionedStore.gc]] — the one commit path of every store
+    * rewrite; the old overlay stays behind in the retired generations
+    * the gc sweeps, and a legacy flat root migrates here exactly as a
+    * rebuild migrates it. A batch-addressed store keeps its FULL
+    * `batch=<id>` layout through the rewrite — the
+    * [[Ann.compactIndexCells]] rule: a row's batch identity is
+    * preserved, never rolled up, so as-of pins stay exact across the GC
+    * and post-compaction [[appendToSignatureStoreBatch]] writes keep
+    * working. */
   def compactSignatureStore(spark: org.apache.spark.sql.SparkSession,
       dir: String, numFiles: Int = 4, keepGenerations: Int = 0): Unit = {
     require(numFiles > 0, s"compactSignatureStore: numFiles $numFiles")
@@ -653,25 +658,13 @@ object Dedup {
       spark.read.parquet(s"$t0/$table"), t0, "id").coalesce(numFiles)
     val sigsLive = live("sigs")
     val bandedLive = live("banded")
-    if (VersionedStore.isVersioned(dir)) {
-      VersionedStore.publish(dir, Map(
-        "sigs" -> sigsLive, "banded" -> bandedLive),
-        partitionBy =
-          if (batched) Map("sigs" -> Seq("batch"), "banded" -> Seq("batch"))
-          else Map.empty)
-      VersionedStore.gc(dir, keep = keepGenerations)
-      ()
-    } else {
-      def swapIn(sub: String)(df: DataFrame): Unit = {
-        val tmp = s"$dir/$sub.compact.${ProcessHandle.current.pid}"
-        (if (batched) df.write.partitionBy("batch") else df.write)
-          .parquet(tmp)
-        swapDir(s"$dir/$sub", tmp)
-      }
-      swapIn("sigs")(sigsLive)
-      swapIn("banded")(bandedLive)
-      Tombstones.clear(dir)
-    }
+    VersionedStore.publish(dir, Map(
+      "sigs" -> sigsLive, "banded" -> bandedLive),
+      partitionBy =
+        if (batched) Map("sigs" -> Seq("batch"), "banded" -> Seq("batch"))
+        else Map.empty)
+    VersionedStore.gc(dir, keep = keepGenerations)
+    ()
   }
 
   /** Record a doc takedown against a persisted signature store —

@@ -20,8 +20,9 @@ import org.apache.spark.sql.types.StructType
   * so the emitted file is what a one-task `df.write.parquet` would have
   * produced: same logical types, same codec, a Spark-style
   * `part-00000-<uuid>.c000.<codec>.parquet` name and a `_SUCCESS`
-  * marker (the layout checks treat marker files as layout, and the
-  * DuckDB oracle reads the stores — the byte-compat gate).
+  * marker when `mapreduce.fileoutputcommitter.marksuccessfuljobs` is on
+  * (the layout checks treat marker files as layout, and the DuckDB
+  * oracle reads the stores — the byte-compat gate).
   *
   * Scope: only frames whose OPTIMIZED plan collapses to a
   * [[LocalRelation]] (possibly under coalesce/repartition nodes — the
@@ -79,8 +80,11 @@ private[graft] object DriverParquet {
         try rows.foreach(writer.write)
         finally writer.close()
         // the distributed writer's commit marker — layout parity for
-        // the fsck marker checks and human inspection
-        StoreFs.createExclusive(s"$dir/_SUCCESS")
+        // the fsck marker checks and human inspection, under the same
+        // Hadoop switch its committer honors
+        if (job.getConfiguration.getBoolean(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", true))
+          StoreFs.createExclusive(s"$dir/_SUCCESS")
         true
     }
 }

@@ -95,9 +95,10 @@ private[graft] object PlanCache {
     * non-versioned store rebuilt in-session, a test planting
     * corruption) leaves the plan unchanged — a plan-keyed memo would
     * silently serve the stale rows. Each HadoopFsRelation root
-    * contributes its recursive (name, mtime) listing: Spark part-file
-    * names carry task UUIDs and a commit refreshes mtimes, so ANY
-    * rewrite — same rows or not — changes the salt. One driver FS
+    * contributes its recursive (name, mtime, length) listing: Spark
+    * part-file names carry task UUIDs and a commit refreshes mtimes, so
+    * ANY rewrite — same rows or not — changes the salt, and the length
+    * still catches a same-name rewrite whose mtime was reset. One driver FS
     * metadata listing per file root per call (micro vs the Spark job
     * the memo avoids); listings beyond 64 entries collapse to a digest
     * so keys stay bounded for corpus-sized roots. */
@@ -120,7 +121,8 @@ private[graft] object PlanCache {
     if (roots.isEmpty) return ""
     val salt = roots.map { root =>
       val listing = StoreFs.listFileStatusesRecursive(root)
-        .map { case (p, _, mtime) => s"$p@$mtime" }.sorted
+        .map(st => s"${st.getPath}@${st.getModificationTime}:${st.getLen}")
+        .sorted
       if (listing.length <= 64) listing.mkString(",")
       else {
         val md = java.security.MessageDigest.getInstance("MD5")

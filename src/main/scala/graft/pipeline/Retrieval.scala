@@ -230,33 +230,37 @@ object Retrieval {
     * store here. `numFiles` defaults to 1 for the trickle regime; a
     * bulk backfill raises it so the batch tokenize + write parallelize.
     *
-    * On a versioned store the append lands INSIDE the current
-    * generation (the verdict-of-record layout: whole rebuilds are
-    * generations, increments are in-generation appends). Crash caveat
-    * (stated, not hidden): one APPEND is still two file commits — a
-    * crash between them leaves the batch indexed without its length
-    * norms, recoverable by re-running the batch or by the next
-    * [[compactPostingsIndex]]/rebuild publish; the replay-safe form is
-    * [[appendToPostingsIndexBatch]]. The BUILD path no longer carries
-    * this window at all ([[writePostingsIndex]] publishes the pair
-    * atomically). */
+    * One rule places the write ([[VersionedStore.append]]): a store is
+    * born by publish, so on a root with no generation yet this batch
+    * becomes generation 1; later batches land INSIDE the current
+    * generation (whole rebuilds are generations, increments are
+    * in-generation appends), and a legacy flat root keeps taking them
+    * in place until its next publish — rebuild or compaction —
+    * migrates it. Crash caveat (stated, not hidden): an in-generation
+    * APPEND is two file commits — a crash between them leaves the batch
+    * indexed without its length norms, recoverable by re-running the
+    * batch or by the next [[compactPostingsIndex]]/rebuild publish; the
+    * replay-safe form is [[appendToPostingsIndexBatch]]. */
   def appendToPostingsIndex(newDocs: DataFrame, dir: String,
       numFiles: Int = 1, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     require(numFiles > 0, s"appendToPostingsIndex: numFiles $numFiles")
-    val t = VersionedStore.tableRoot(dir)
-    // postings and doclens land in different tables — the two writes
-    // overlap (guide §2.6), same rows per table as the sequential form;
-    // Overlap.settle terminates BOTH before any failure propagates (no
-    // orphaned in-flight sibling for a retry to race against)
-    val a = Overlap.run(positionalPostings(newDocs, idCol, textCol)
-      .repartitionByRange(numFiles, col("token"))
-      .sortWithinPartitions("token", "doc_id", "pos")
-      .write.mode("append").parquet(s"$t/postings"))
-    val b = Overlap.run(docLengths(newDocs, idCol, textCol)
-      .coalesce(1).write.mode("append").parquet(s"$t/doclens"))
-    Overlap.settle(a, b)
+    VersionedStore.append(dir,
+      batchTables(newDocs, "", numFiles, idCol, textCol), "append")()
   }
+
+  /** One append batch's (postings, doclens) frames under `suffix`
+    * (`""`, or `/batch=<id>` for the batch-addressed layout) — the
+    * shape both append forms write, so a born store's generation 1 and
+    * a later in-generation append can never drift apart. */
+  private def batchTables(newDocs: DataFrame, suffix: String,
+      numFiles: Int, idCol: String, textCol: String)
+      : Seq[(String, () => DataFrame)] = Seq(
+    s"postings$suffix" -> (() => positionalPostings(newDocs, idCol, textCol)
+      .repartitionByRange(numFiles, col("token"))
+      .sortWithinPartitions("token", "doc_id", "pos")),
+    s"doclens$suffix" ->
+      (() => docLengths(newDocs, idCol, textCol).coalesce(1)))
 
   /** STREAMING-append form of [[appendToPostingsIndex]]: the batch's
     * postings and norms land in their own `batch=<id>` subdirs with
@@ -266,25 +270,16 @@ object Retrieval {
     * tf/df/n_hits. The store reads like any postings index (the batch
     * partition column rides along and every consumer ignores it); a
     * stream-maintained store uses THIS form for every write from its
-    * first batch (partition discovery rejects a layout that mixes flat
-    * files with batch subdirs). */
+    * first batch, which publishes generation 1 with the batch-addressed
+    * layout (partition discovery rejects a layout that mixes flat files
+    * with batch subdirs). */
   def appendToPostingsIndexBatch(newDocs: DataFrame, dir: String,
       batchId: Long, numFiles: Int = 1, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     require(numFiles > 0, s"appendToPostingsIndexBatch: numFiles $numFiles")
-    val t = VersionedStore.tableRoot(dir)
-    // different tables' batch dirs — overlapped ([[appendToPostingsIndex]]);
-    // settled together so a checkpoint-restart retry of this batch can
-    // never overwrite batch=<id> while an orphaned sibling write is
-    // still in flight
-    val a = Overlap.run(positionalPostings(newDocs, idCol, textCol)
-      .repartitionByRange(numFiles, col("token"))
-      .sortWithinPartitions("token", "doc_id", "pos")
-      .write.mode("overwrite").parquet(s"$t/postings/batch=$batchId"))
-    val b = Overlap.run(docLengths(newDocs, idCol, textCol)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$t/doclens/batch=$batchId"))
-    Overlap.settle(a, b)
+    VersionedStore.append(dir,
+      batchTables(newDocs, s"/batch=$batchId", numFiles, idCol, textCol),
+      "overwrite")()
   }
 
   /** The LIVE postings of a persisted index (feed to [[phraseSearch]] /
@@ -413,36 +408,33 @@ object Retrieval {
     bm25TopKFromIndex(readPostingsIndexPinned(spark, dir, pin),
       readDocLengthsPinned(spark, dir, pin), terms, k, k1, b)
 
-  /** Compact a [[writePostingsIndex]] store in place: a long trickle of
+  /** Compact a [[writePostingsIndex]] store: a long trickle of
     * single-file [[appendToPostingsIndex]] batches accumulates many
     * small files whose token ranges all overlap — every file survives
     * the `token IN (...)` min/max prune and the point-read discipline
-    * degrades back toward a full scan. Compaction rewrites the store
+    * degrades back toward a full scan. Compaction rewrites the live rows
     * into the canonical layout (global token ranges, in-file sort),
     * restoring one-or-two-file prunes — and doubles as the takedown GC:
-    * [[tombstoneDocs]]'d rows are physically dropped during the rewrite
-    * and the tombstone set cleared LAST (a crash between leaves the set
-    * applied to already-purged tables — an anti-join of absent ids is a
-    * no-op, so the store serves correctly at every intermediate state).
-    * Live-row-identical by construction (a re-partition of the live
-    * set — no merge logic). On a VERSIONED store the rewrite is one
-    * fresh-generation publish of the live rows followed by gc: the
-    * pair lands atomically, the new generation starts with an empty
-    * tombstone overlay (no clear-last ordering to get right), and the
-    * gc is the physical purge — the swap protocol and its documented
-    * crash windows exist only for legacy flat roots, where the
-    * write-to-tmp + two-rename path (restore-on-failure, see
-    * [[Dedup.swapDir]]) still applies. The store-maintenance op every
-    * append-only layout needs; reference analogue: the bootstrap DB's
-    * applied-log compaction
-    * (databus-bootstrap-producer/.../BootstrapDBCleaner.java:1). */
-  /** `keepGenerations` (versioned roots only): how many PRE-compaction
-    * generations stay pinned-readable after the rewrite. The default 0
-    * is the compliance posture — compaction is the erasure deadline, so
-    * no pre-takedown bytes survive it; a deployment that values
-    * reproducibility windows over immediate physical purge raises it
-    * (erased rows stay filtered by each generation's overlay either
-    * way — retention only affects raw bytes, never serving). */
+    * [[tombstoneDocs]]'d rows are physically dropped. Live-row-identical
+    * by construction (a re-partition of the live set — no merge logic).
+    *
+    * The rewrite is one fresh-generation [[VersionedStore.publish]]
+    * followed by [[VersionedStore.gc]], the one commit path of every
+    * store rewrite: the pair lands atomically, the new generation starts
+    * with an empty tombstone overlay, and the gc is the physical purge.
+    * A legacy flat root migrates here exactly as a rebuild migrates it —
+    * the publish carries its pending flat takedowns and sweeps its flat
+    * dirs. The store-maintenance op every append-only layout needs;
+    * reference analogue: the bootstrap DB's applied-log compaction
+    * (databus-bootstrap-producer/.../BootstrapDBCleaner.java:1).
+    *
+    * `keepGenerations`: how many PRE-compaction generations stay
+    * pinned-readable after the rewrite. The default 0 is the compliance
+    * posture — compaction is the erasure deadline, so no pre-takedown
+    * bytes survive it; a deployment that values reproducibility windows
+    * over immediate physical purge raises it (erased rows stay filtered
+    * by each generation's overlay either way — retention only affects
+    * raw bytes, never serving). */
   def compactPostingsIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, numFiles: Int = 4, keepGenerations: Int = 0): Unit = {
     require(numFiles > 0, s"compactPostingsIndex: numFiles $numFiles")
@@ -466,33 +458,19 @@ object Retrieval {
     val postingsLive = shaped(readPostingsIndex(spark, dir)) // takedown GC
     val doclensLive = readDocLengths(spark, dir)
       .coalesce(math.min(numFiles, 2))
-    if (VersionedStore.isVersioned(dir)) {
-      // live reads above are lazy plans over the OLD generation; publish
-      // writes them into the new one, then gc retires everything the
-      // pointer no longer references — including the purged rows and the
-      // old overlay (compaction IS the erasure deadline, so pinned reads
-      // of pre-compaction generations do not survive it)
-      VersionedStore.publish(dir, Map(
-        "postings" -> postingsLive, "doclens" -> doclensLive),
-        partitionBy =
-          if (batched) Map("postings" -> Seq("batch"),
-            "doclens" -> Seq("batch"))
-          else Map.empty)
-      VersionedStore.gc(dir, keep = keepGenerations)
-      ()
-    } else {
-      def swapIn(sub: String)(write: String => Unit): Unit = {
-        val tmp = s"$dir/$sub.compact.${ProcessHandle.current.pid}"
-        write(tmp)
-        Dedup.swapDir(s"$dir/$sub", tmp)
-      }
-      def writer(df: DataFrame)(tmp: String): Unit =
-        (if (batched) df.write.partitionBy("batch") else df.write)
-          .parquet(tmp)
-      swapIn("postings")(writer(postingsLive))
-      swapIn("doclens")(writer(doclensLive))
-      Tombstones.clear(dir)
-    }
+    // live reads above are lazy plans over the OLD generation; publish
+    // writes them into the new one, then gc retires everything the
+    // pointer no longer references — including the purged rows and the
+    // old overlay (compaction IS the erasure deadline, so pinned reads
+    // of pre-compaction generations do not survive it)
+    VersionedStore.publish(dir, Map(
+      "postings" -> postingsLive, "doclens" -> doclensLive),
+      partitionBy =
+        if (batched) Map("postings" -> Seq("batch"),
+          "doclens" -> Seq("batch"))
+        else Map.empty)
+    VersionedStore.gc(dir, keep = keepGenerations)
+    ()
   }
 
   /** The LIVE doc-length norms of a persisted index (tombstone-aware,

@@ -115,13 +115,12 @@ object StoreFs {
     else walkFiles(fs, p).map(_.getPath.getName).filter(_.endsWith(suffix))
   }
 
-  /** Recursive file statuses under `dir`: (full path, name, mtime).
-    * Empty when absent. The event-log writer's stamp bookkeeping. */
-  def listFileStatusesRecursive(dir: String): Seq[(String, String, Long)] = {
+  /** Recursive file statuses under `dir` (empty when absent) — the
+    * event-log writer's stamp bookkeeping and the memo content salt. */
+  def listFileStatusesRecursive(dir: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
     val (fs, p) = fsPath(dir)
-    if (!fs.exists(p)) Seq.empty
-    else walkFiles(fs, p).map(st =>
-      (st.getPath.toString, st.getPath.getName, st.getModificationTime))
+    if (!fs.exists(p)) Seq.empty else walkFiles(fs, p)
   }
 
   /** Set a file's modification time (the event-log generation stamp);

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *   - a blind re-append after a foreachBatch retry double-counts a
   *     batch (the hazard the batch-addressed writes exist to prevent —
   *     fsck detects it when some other writer blind-appended anyway);
-  *   - the compaction GC clears the tombstone set LAST, so a crash in
-  *     the window leaves tombstones naming already-purged ids (a
+  *   - a takedown of an id the store never indexed (or one a rewrite
+  *     already purged) leaves a tombstone naming an absent id (a
   *     serving no-op by design, but the operator should see the state);
   *   - an ANN cell row pointing at a centroid the codebook doesn't
   *     have, or one vector assigned to two cells, breaks retrieval's

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * `<store>/tombstones` — and every read anti-joins it, so a takedown
   * is O(request) regardless of store size and never rewrites stored
   * rows. Compaction is the GC: it physically drops tombstoned rows
-  * during its rewrite and clears the tombstone set, resetting the read
-  * side to a plain scan.
+  * during its rewrite, which publishes a fresh [[VersionedStore]]
+  * generation whose overlay starts empty, resetting the read side to a
+  * plain scan.
   *
   * This is the missing half of the append-only store protocol: append
   * handles growth, tombstones handle the takedown/right-to-be-forgotten
@@ -189,13 +190,4 @@ object Tombstones {
             Seq(idCol), "left_anti")
           .select(rows.columns.map(col).toSeq: _*)
     }
-
-  /** Drop the tombstone set — the LAST step of a compaction GC, after
-    * every store table has been rewritten without the tombstoned rows.
-    * Ordering is the crash-safety: a crash before this point leaves the
-    * set applied to already-purged tables, and an anti-join of absent
-    * ids is a no-op — the store serves correctly at every intermediate
-    * state. */
-  def clear(storeDir: String): Unit =
-    StoreFs.deleteRecursive(dirOf(storeDir))
 }

@@ -279,18 +279,25 @@ object VersionedStore {
     * only after every table and the completeness marker are down; any
     * crash before it leaves readers on the previous generation.
     *
-    * LEGACY-FLAT MIGRATION: a publish over a root that still carries the
-    * FLAT layout (pre-generation tables, and in particular a flat
-    * `tombstones/` set) supersedes it — and a pending takedown recorded
-    * under the old layout must not stop filtering just because the
-    * store was rebuilt: the flat id set is CARRIED into the new
-    * generation's overlay before the marker lands (a rebuilt table may
-    * re-index the erased ids; live-rows rebuilds carry them redundantly,
-    * which an anti-join cannot observe). After the flip the superseded
-    * flat set and any flat dir shadowing a published table name are
-    * DELETED — they are unreferenced bytes no reader can reach and no
-    * gc would otherwise retire; a crash mid-cleanup leaves them for the
-    * next publish's idempotent re-sweep (fsck: `superseded_flat_dirs`).
+    * This is the ONE commit path of every paired store (postings +
+    * doclens, sigs + banded, codebook + cells): a store is BORN by
+    * publish (its first build, or its first append — see [[append]]),
+    * and every later rewrite (rebuild, compaction, rebalance, merge) is
+    * the next publish followed by [[gc]].
+    *
+    * LEGACY-FLAT MIGRATION: a root written before generations existed
+    * (flat tables, and in particular a flat `tombstones/` set) migrates
+    * on its next publish, whether that is a rebuild or a compaction. A
+    * pending takedown recorded under the old layout must not stop
+    * filtering just because the store was rewritten: the flat id set is
+    * CARRIED into the new generation's overlay before the marker lands
+    * (a rebuilt table may re-index the erased ids; live-rows rewrites
+    * carry them redundantly, which an anti-join cannot observe). After
+    * the flip the superseded flat set and any flat dir shadowing a
+    * published table name are DELETED — they are unreferenced bytes no
+    * reader can reach and no gc would otherwise retire; a crash
+    * mid-cleanup leaves them for the next publish's idempotent re-sweep
+    * (fsck: `superseded_flat_dirs`).
     *
     * Table names are slash-separable relative paths (a batch-addressed
     * bootstrap publishes `cells/batch=0`); the BASE segment must not
@@ -465,28 +472,61 @@ object VersionedStore {
       gen
     }
 
-  /** Is `root` a versioned store? One pointer probe per protocol form —
-    * the layout dispatch every migrated store family runs before
-    * choosing between generation-resolved and flat-table paths. */
+  /** Is `root` a versioned store? One pointer probe per protocol form.
+    * Every paired-store writer publishes, so a root they wrote is
+    * versioned from its first write; false means nothing was published
+    * yet, or a legacy flat root that its next publish migrates. */
   def isVersioned(root: String): Boolean =
     StoreFs.exists(s"$root/$Pointer") || markerGens(root).nonEmpty
 
-  /** The directory holding `root`'s LIVE tables: the current generation
-    * when the store is versioned, `root` itself for a flat (unversioned
-    * or stream-maintained) store — the single resolution point that lets
-    * every store reader serve either layout. Loud on a dangling pointer
-    * (a generation someone hand-deleted): serving a missing dir as an
-    * empty store is the silent failure this module exists to prevent. */
-  def tableRoot(root: String): String =
-    currentGen(root) match {
-      case None => root
-      case Some(g) =>
-        require(StoreFs.exists(s"${genDir(root, g)}/$Marker"),
-          s"VersionedStore.tableRoot: pointer at $root names generation $g" +
-            " which is absent or incomplete — repair with adopt() (fsck:" +
-            " pointer_to_missing_generation)")
-        genDir(root, g)
+  /** The current generation's directory, or None before the first
+    * publish — the one pointer resolution behind [[tableRoot]] and
+    * [[append]]. Loud on a dangling pointer (a generation someone
+    * hand-deleted): serving a missing dir as an empty store is the
+    * silent failure this module exists to prevent. */
+  private def publishedRoot(root: String): Option[String] =
+    currentGen(root).map { g =>
+      require(StoreFs.exists(s"${genDir(root, g)}/$Marker"),
+        s"VersionedStore.tableRoot: pointer at $root names generation $g" +
+          " which is absent or incomplete — repair with adopt() (fsck:" +
+          " pointer_to_missing_generation)")
+      genDir(root, g)
     }
+
+  /** The directory holding `root`'s LIVE tables: the current generation,
+    * or `root` itself when nothing is published there — a legacy flat
+    * root, whose tables stay readable in place until its next publish
+    * (rebuild or compaction) migrates it. Loud on a dangling pointer,
+    * like [[publishedRoot]]. */
+  def tableRoot(root: String): String = publishedRoot(root).getOrElse(root)
+
+  /** Land one APPEND's `tables` (relative names, as [[publish]] takes
+    * them, each frame built by its own write) with `mode` in the
+    * current generation, written concurrently and settled together so
+    * a retried batch never races an orphaned sibling write. A root
+    * with no generation and none of the tables is BORN instead: the
+    * same frames publish as its generation 1. A legacy flat root
+    * (tables present, no generation) keeps taking appends in place
+    * until its next publish migrates it — publishing the batch alone
+    * would sweep its flat tables. `check` sees the resolved table root
+    * before any write (layout guards). */
+  private[graft] def append(root: String,
+      tables: Seq[(String, () => DataFrame)], mode: String)(
+      check: String => Unit = _ => ()): Unit = {
+    val landed = publishedRoot(root).orElse(Some(root).filter(r =>
+      tables.exists { case (n, _) =>
+        StoreFs.exists(s"$r/${n.split('/').head}") }))
+    landed match {
+      case None =>
+        publish(root, tables.map { case (n, df) => n -> df() }.toMap)
+        ()
+      case Some(t) =>
+        check(t)
+        Overlap.settle(tables.map { case (n, df) =>
+          Overlap.run(df().write.mode(mode).parquet(s"$t/$n"))
+        }: _*)
+    }
+  }
 
   /** The directory holding generation `gen`'s tables — [[tableRoot]]'s
     * pinned counterpart, for readers that captured a pin and resolve

@@ -53,46 +53,65 @@ object RelayStream {
     * distributed job writes every segment: `repartitionByRange(scn)`
     * keys whole windows, so no transaction window ever splits across
     * files, and task k owns the k-th scn band. The file source lists
-    * oldest-mtime-first, so after the write the driver stamps mtimes in
-    * part-number order (part number == range-partition task == scn band) —
-    * a metadata-only loop over ≤ filesHint files, replacing the old
-    * sequential one-coalesced-job-per-chunk + `Thread.sleep` harness.
-    * (For strict-order serving prefer the graft-relay V2 source, whose
-    * offsets are scn bands and need no mtime convention at all.)
+    * oldest-mtime-first, so the driver stamps mtimes in part-number
+    * order (part number == range-partition task == scn band) — a
+    * metadata-only loop over ≤ filesHint files.
+    *
+    * Admission order: the job writes into an `_`-prefixed STAGING dir
+    * under the log, which the file source never lists. Parts are
+    * stamped there and only then renamed into the log, in part-number
+    * order, so a drain listing the log at any instant sees only parts
+    * that already carry their final stamp, and never a later band
+    * without the earlier ones (a part stamped after it entered the log
+    * could be admitted, under its write-time mtime, out of scn order).
+    * For strict-order serving prefer the graft-relay V2 source, whose
+    * offsets are scn bands and need no mtime convention at all.
     */
   def writeEventLog(envelope: DataFrame, dir: String, filesHint: Int = 8,
       partitionByTimeline: Boolean = false): Unit = {
-    // listing + stamping via the Hadoop FileSystem API (StoreFs), so
-    // logs on any URI scheme stamp their generations — a java.io.File
-    // walk sees nothing under file:/hdfs:/s3a: roots and would
-    // silently skip the stamp the source's admission order relies on
+    // listing, stamping and renames via the Hadoop FileSystem API
+    // (StoreFs), so logs on any URI scheme stamp their generations — a
+    // java.io.File walk sees nothing under file:/hdfs:/s3a: roots and
+    // would silently skip the stamp the source's admission order
+    // relies on
     import graft.pipeline.StoreFs
-    val before = StoreFs.listFileStatusesRecursive(dir)
-      .filter(_._2.startsWith("part-"))
-    val beforePaths = before.map(_._1).toSet
+    // stamps start strictly above every earlier generation's stamp —
+    // append batches stay ordered even when issued within the same
+    // millisecond
+    val base = math.max(System.currentTimeMillis(),
+      StoreFs.listFileStatusesRecursive(dir)
+        .filter(_.getPath.getName.startsWith("part-"))
+        .map(_.getModificationTime).foldLeft(0L)(math.max) + 2)
+    val staging = s"$dir/_staging-${java.util.UUID.randomUUID}"
     val w = envelope
       .repartitionByRange(filesHint, col("scn"))
       .sortWithinPartitions("partition_id", "scn", "seq")
-      .write.mode("append")
+      .write
     // hive-partition the log by physical partition: per-timeline
     // subscriptions then prune whole directories at the scan
     // (DbusEventBufferMult one-buffer-per-partition analog)
     (if (partitionByTimeline) w.partitionBy("partition_id") else w)
-      .parquet(dir)
-    // Stamp only this write's files, in part-number order, from a base
-    // strictly above every earlier generation's stamp — append batches
-    // stay ordered even when issued within the same millisecond.
-    val base = math.max(System.currentTimeMillis(),
-      before.map(_._3).foldLeft(0L)(math.max) + 2)
-    StoreFs.listFileStatusesRecursive(dir)
-      .filter(f => f._2.startsWith("part-") && !beforePaths.contains(f._1))
-      .foreach { case (path, name, _) =>
-        val k = name match { case PartNum(n) => n.toLong; case _ => 0L }
-        // StoreFs.setModificationTime throws on failure: silently
-        // keeping write-time mtimes would let the source admit parts
-        // out of sequence order
-        StoreFs.setModificationTime(path, base + k * 2)
-      }
+      .parquet(staging)
+    val (fs, sp) = StoreFs.fsPath(staging)
+    val prefix = fs.makeQualified(sp).toString + "/"
+    val parts = StoreFs.listFileStatusesRecursive(staging).map(_.getPath)
+      .flatMap(p => p.getName match {
+        case PartNum(k) => Some((k.toLong, p.toString.stripPrefix(prefix)))
+        case _ => None
+      }).sortBy(identity)
+    // StoreFs.setModificationTime throws on failure: silently keeping
+    // write-time mtimes would let the source admit parts out of
+    // sequence order
+    parts.foreach { case (k, rel) =>
+      StoreFs.setModificationTime(s"$staging/$rel", base + k * 2)
+    }
+    parts.foreach { case (_, rel) =>
+      val slash = rel.lastIndexOf('/')
+      if (slash > 0) StoreFs.mkdirs(s"$dir/${rel.take(slash)}")
+      require(StoreFs.rename(s"$staging/$rel", s"$dir/$rel"),
+        s"writeEventLog: cannot move staged $rel into $dir")
+    }
+    StoreFs.deleteRecursive(staging)
   }
 
   private val PartNum = """part-(\d+)-.*""".r

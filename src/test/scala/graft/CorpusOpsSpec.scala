@@ -608,8 +608,10 @@ class CorpusOpsSpec extends SparkSpec {
     val d = (0L until 20L).map(i => (i, s"tok$i common x")).toDF("doc_id", "text")
     (0 until 5).foreach(i =>
       Retrieval.appendToPostingsIndex(d.where($"doc_id" % 5 === i), dir))
-    def files() = new java.io.File(s"$dir/postings").listFiles()
-      .count(_.getName.startsWith("part-"))
+    // the append-born store is versioned: resolve the live generation
+    def files() = new java.io.File(
+        s"${graft.pipeline.VersionedStore.tableRoot(dir)}/postings")
+      .listFiles().count(_.getName.startsWith("part-"))
     val before = files()
     assert(before >= 5, s"expected >=5 trickle files, got $before")
     val rows = Retrieval.readPostingsIndex(spark, dir)

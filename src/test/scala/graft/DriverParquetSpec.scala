@@ -45,6 +45,22 @@ class DriverParquetSpec extends SparkSpec {
     assert(names.contains("_SUCCESS"), names.toString)
   }
 
+  test("the _SUCCESS marker follows the committer's marksuccessfuljobs switch") {
+    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    spark.conf.set(key, "false")
+    try {
+      val root = s"${tmp("dpq")}/nomarker"
+      VersionedStore.publish(root, Map("meta" -> localDf.coalesce(1)))
+      val ref = s"${tmp("dpq")}/nomarkerref"
+      localDf.coalesce(1).write.parquet(ref)
+      // the distributed writer drops the marker under the same conf
+      assert(!StoreFs.listNames(ref).contains("_SUCCESS"))
+      val names = StoreFs.listNames(s"${VersionedStore.tableRoot(root)}/meta")
+      assert(!names.contains("_SUCCESS"), names.toString)
+      assert(names.exists(_.startsWith("part-00000-")), names.toString)
+    } finally spark.conf.unset(key)
+  }
+
   test("a distributed frame still takes the distributed writer") {
     val root = s"${tmp("dpq")}/store2"
     val dist = spark.range(100)

@@ -74,6 +74,28 @@ class MemoFreshnessSpec extends SparkSpec {
         " in-place corpus rewrite")
   }
 
+  test("a same-name rewrite with its mtime reset still changes the salt") {
+    val dir = s"${tmp("memo")}/t"
+    (0L until 4L).toDF("id").coalesce(1).write.parquet(dir)
+    def part(d: String) = new java.io.File(d).listFiles()
+      .find(_.getName.startsWith("part-")).get
+    val target = part(dir)
+    val mtime = target.lastModified
+    val salt = PlanCache.fileSalt(spark.read.parquet(dir))
+    // other bytes of another length under the SAME file name, with the
+    // original mtime put back: only the length tells the files apart
+    val other = s"${tmp("memo")}/o"
+    (0L until 400L).toDF("id").coalesce(1).write.parquet(other)
+    assert(part(other).length != target.length)
+    java.nio.file.Files.copy(part(other).toPath, target.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    new java.io.File(dir, s".${target.getName}.crc").delete()
+    graft.pipeline.StoreFs.setModificationTime(target.getPath, mtime)
+    assert(target.lastModified == mtime)
+    assert(PlanCache.fileSalt(spark.read.parquet(dir)) != salt,
+      "a same-name, same-mtime rewrite kept the stale content salt")
+  }
+
   test("PlanCache.clear clears the quantizer memos too") {
     val dir = s"${tmp("memo")}/pqclear"
     val base = (0L until 12L).map(i => (i, vec(i))).toDF("id", "vec")

@@ -51,6 +51,50 @@ class StreamingSpec extends SparkSpec {
     assert(Collector.events.size == before.size)
   }
 
+  test("a listing racing appends sees only final-stamped parts, in part order") {
+    import graft.pipeline.StoreFs
+    val logDir = tmp("stagedlog")
+    val rootPath = new java.io.File(logDir).toURI.getPath
+    // what the file source lists: part files outside `_`-prefixed dirs
+    def listed(): Seq[(String, Long)] =
+      StoreFs.listFileStatusesRecursive(logDir).flatMap { st =>
+        val rel = st.getPath.toUri.getPath.stripPrefix(rootPath)
+        if (st.getPath.getName.startsWith("part-") &&
+            !rel.split('/').exists(_.startsWith("_")))
+          Some((rel, st.getModificationTime))
+        else None
+      }
+    @volatile var done = false
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, Long)]]()
+    val lister = new Thread(() =>
+      while (!done) {
+        // a dir the writer removes mid-walk fails the walk; the drain
+        // would simply list again
+        try seen.add(listed())
+        catch { case _: java.io.IOException => () }
+      })
+    lister.start()
+    try (0 until 6).foreach { g =>
+      RelayStream.writeEventLog(
+        envelope.where(pmod($"scn", lit(6)) === g), logDir, filesHint = 4)
+    } finally { done = true; lister.join() }
+    val finalStamps = listed().toMap
+    // stamps are distinct and ordered append-then-part: the admission
+    // order the file source derives from them
+    val order = finalStamps.toSeq.sortBy(_._2).map(_._1)
+    assert(order.size == finalStamps.values.toSet.size)
+    assert(!seen.isEmpty)
+    seen.forEach { snap =>
+      snap.foreach { case (rel, m) =>
+        assert(finalStamps.get(rel).contains(m),
+          s"$rel was listed at mtime $m before its final stamp" +
+            s" ${finalStamps.get(rel)}")
+      }
+      assert(snap.map(_._1).toSet == order.take(snap.size).toSet,
+        s"a listing saw parts out of part order: ${snap.map(_._1)}")
+    }
+  }
+
   test("event log is window-aligned and serves ordered windowed delivery") {
     val logDir = tmp("eventlog")
     val cpDir = tmp("streamcp")

@@ -77,7 +77,10 @@ class TombstoneSpec extends SparkSpec {
       docsDf.where(col("doc_id") >= 4), streamDir, batchId = 1)
     Retrieval.tombstoneDocs(spark, streamDir, Seq(1L))
     Retrieval.compactPostingsIndex(spark, streamDir)
-    val raw = spark.read.parquet(s"$streamDir/postings")
+    // the stream-born store is versioned: raw reads resolve the live
+    // generation
+    val streamGen = VersionedStore.tableRoot(streamDir)
+    val raw = spark.read.parquet(s"$streamGen/postings")
     assert(raw.columns.contains("batch"),
       "compaction must preserve the batch-addressed layout")
     assert(raw.where(col("doc_id") === 1L).isEmpty,
@@ -87,7 +90,7 @@ class TombstoneSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((0L, 0L), (2L, 0L), (3L, 0L), (4L, 1L), (5L, 1L), (6L, 1L)),
       "surviving rows keep their original batch identity")
-    assert(Tombstones.readOpt(spark, streamDir).isEmpty)
+    assert(Tombstones.readOpt(spark, streamGen).isEmpty)
     // post-compaction appends land under their own batch as before, and
     // the as-of pin still cuts exactly at the batch boundary
     Retrieval.appendToPostingsIndexBatch(

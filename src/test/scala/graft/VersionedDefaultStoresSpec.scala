@@ -189,11 +189,16 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     }
     assert(stale.getMessage.contains("outlived retention"),
       stale.getMessage)
-    // pinPostings on an unversioned root refuses — flat stores carry no
-    // pinnable generation coordinate
+    // pinPostings on an unversioned root refuses — legacy flat stores
+    // carry no pinnable generation coordinate. A stream-born store is
+    // published from its first batch, so only a hand-planted legacy
+    // root is flat
     val flat = s"${tmp("vdef")}/flat"
-    R.appendToPostingsIndexBatch(docsDf, flat, 0L)
+    R.positionalPostings(docsDf).write.parquet(s"$flat/postings/batch=0")
     intercept[IllegalStateException] { R.pinPostings(flat) }
+    val born = s"${tmp("vdef")}/born"
+    R.appendToPostingsIndexBatch(docsDf, born, 0L)
+    assert(R.pinPostings(born) == R.RetrievalPin(1L, Some(0L)))
   }
 
   test("dedup pin: one (gen, maxBatch) token replays across later appends AND a later publish") {
@@ -263,11 +268,17 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     }
     assert(stale.getMessage.contains("outlived retention"),
       stale.getMessage)
-    // a flat (unversioned, batch-addressed) root carries no pinnable
-    // generation; a FLAT-LAYOUT store refuses the batch append outright
+    // a legacy flat (unversioned, batch-addressed) root carries no
+    // pinnable generation — only a hand-planted one is flat, since a
+    // stream-born store publishes its first batch; a FLAT-LAYOUT store
+    // refuses the batch append outright
     val flat = s"${tmp("vdef")}/dflat"
-    D.appendToSignatureStoreBatch(twins, flat, 0L)
+    D.minhashSignatures(twins, "text", "doc_id", 3, 64)
+      .write.parquet(s"$flat/sigs/batch=0")
     intercept[IllegalStateException] { D.pinSignatureStore(flat) }
+    val born = s"${tmp("vdef")}/dborn"
+    D.appendToSignatureStoreBatch(twins, born, 0L)
+    assert(D.pinSignatureStore(born) == D.DedupPin(1L, Some(0L)))
     val plain = s"${tmp("vdef")}/dplain"
     D.writeSignatureStore(docsDf, plain)
     intercept[IllegalArgumentException] {
