@@ -1,36 +1,257 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
-/** Dev scratch probe for perf investigations (not part of the contract). */
+import scala.collection.mutable
+
+import graft.pipeline.Dedup
+
+/** Dev measurement tooling behind one entry point (not part of the driver
+  * contract): `runMain graft.Probe <mode> [args]`. Every mode runs in
+  * Bench's session (SPARK_GRAFT_CPUS cores) and times with `Bench.force`;
+  * `time`, `jobs` and `plan` read SPARK_GRAFT_SF_DIR (default sf0.1).
+  *
+  *   time [query ...]    cold and warm seconds per query (all queries by
+  *                       default): separates JIT/codegen warm-up from real
+  *                       cost when hunting bench regressions
+  *   jobs <query ...>    one warm run per query with a job listener: every
+  *                       Spark job's wall and the driver-side gaps between
+  *                       jobs, for harness-heavy queries spread over dozens
+  *   plan [query ...]    warm seconds plus the executed plan as
+  *                       `explain("formatted")` (all queries by default)
+  *   drain               the fixed cost of one AvailableNow foreachBatch
+  *                       drain over a trivial feed: the floor under every
+  *                       *_stream query
+  *   cold [sfDir]        cold-start versus warm cost of the store-backed
+  *                       families
+  *   contract [dataDir]  the two corpus-dependent contract bounds a new
+  *                       corpus must re-measure (COVERAGE.md)
+  *   scale [leg ...]     the decade scaling probes of SCALING.md
+  *                       ([[ScaleProbe.run]])
+  */
 object Probe {
+
+  private val Modes = Seq("time", "jobs", "plan", "drain", "cold", "contract",
+    "scale")
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // pair recall of the LSH-blocked within-cell search on the banded
-    // near-dup corpus — the measurement behind q_semdedup_recall's floor
-    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-        "/root/testdata/sf0.1")) {
-      val corpus = graft.sources.WireFixtures.nearDupBandCorpus(spark, dir)
-      val t = 0.95
-      val exact = graft.pipeline.Semantic.withinCellDupPairs(
-        corpus, k = 8, iters = 3, cosineThreshold = t).count()
-      val lsh = graft.pipeline.Semantic.withinCellDupPairs(
-        corpus, k = 8, iters = 3, cosineThreshold = t,
-        intraCellPlanes = 8, intraCellTables = 4).count()
-      val lo = graft.pipeline.Semantic.withinCellDupPairs(
-        corpus, k = 8, iters = 3, cosineThreshold = t,
-        intraCellPlanes = 16, intraCellTables = 1).count()
-      println(f"[pairs] dir=$dir t=$t exact=$exact lsh=$lsh " +
-        f"recall=${if (exact > 0) lsh.toDouble / exact else -1.0}%.4f " +
-        f"starved=$lo starvedRecall=${
-          if (exact > 0) lo.toDouble / exact else -1.0}%.4f")
+    val mode = args.headOption.getOrElse("")
+    if (!Modes.contains(mode)) {
+      System.err.println("usage: graft.Probe <mode> [args]; modes: " +
+        Modes.mkString(", "))
+      sys.exit(2)
+    }
+    val rest = args.toSeq.drop(1)
+    val spark = Bench.session()
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    def named(names: Seq[String]): Seq[String] =
+      if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names
+    mode match {
+      case "time" => time(spark, dir, named(rest))
+      case "jobs" => jobs(spark, dir, rest)
+      case "plan" => plan(spark, dir, named(rest))
+      case "drain" => drain(spark)
+      case "cold" =>
+        cold(spark, rest.headOption.getOrElse("/root/testdata/sf0.1"))
+      case "contract" =>
+        contract(spark, rest.headOption.getOrElse(ScaleProbe.DerivedDir))
+      case "scale" => ScaleProbe.run(spark, rest)
     }
     spark.stop()
+  }
+
+  private def time(spark: SparkSession, dir: String,
+      names: Seq[String]): Unit = {
+    spark.range(100000).selectExpr("sum(id)").collect()
+    names.foreach { n =>
+      val fn = SparkEntry.queries(n)
+      val cold = Bench.seconds(Bench.force(fn(spark, dir)))
+      val warm = Bench.seconds(Bench.force(fn(spark, dir)))
+      println(f"$n%-24s cold=$cold%7.2f warm=$warm%7.2f")
+    }
+  }
+
+  private def jobs(spark: SparkSession, dir: String,
+      names: Seq[String]): Unit =
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      Bench.force(fn(spark, dir)) // warm pass: JIT + fixture onboarding
+      val jobs = mutable.ArrayBuffer[(Int, Long, Long, String)]()
+      val starts = mutable.Map[Int, (Long, String)]()
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          starts(js.jobId) = (js.time,
+            Option(js.properties)
+              .flatMap(p => Option(p.getProperty("callSite.short")))
+              .getOrElse(""))
+        override def onJobEnd(je: SparkListenerJobEnd): Unit =
+          starts.remove(je.jobId).foreach { case (t0, d) =>
+            jobs.synchronized { jobs += ((je.jobId, t0, je.time, d)) }
+          }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val wall = Bench.seconds(Bench.force(fn(spark, dir)))
+      spark.sparkContext.removeSparkListener(listener)
+      Thread.sleep(200) // let the listener bus drain
+      val sorted = jobs.sortBy(_._2).toSeq
+      println(f"== $name wall=$wall%.2f s, jobs=${sorted.size}")
+      var prevEnd = 0L
+      var jobSum = 0.0
+      sorted.foreach { case (id, s, e, d) =>
+        val gap = if (prevEnd == 0) 0.0 else (s - prevEnd) / 1e3
+        prevEnd = math.max(prevEnd, e)
+        jobSum += (e - s) / 1e3
+        val desc = if (d.length > 60) d.take(60) else d
+        println(f"  job $id%4d ${(e - s) / 1e3}%7.3f s  gap=$gap%7.3f s  $desc")
+      }
+      println(f"  jobs total=$jobSum%.2f s, driver-side = ${wall - jobSum}%.2f s")
+    }
+
+  private def plan(spark: SparkSession, dir: String,
+      names: Seq[String]): Unit =
+    names.foreach { n =>
+      println(s"\n========== $n ==========")
+      try {
+        val fn = SparkEntry.queries(n)
+        Bench.force(fn(spark, dir)) // warm pass: JIT + fixture onboarding
+        val q = fn(spark, dir)
+        val warm = Bench.seconds(Bench.force(q))
+        println(f"warm $warm%.2f s")
+        q.explain("formatted")
+      } catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+    }
+
+  private def drain(spark: SparkSession): Unit = {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("streamprobe").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$root/feed")
+    def once(cp: String): Double = Bench.seconds {
+      spark.readStream.schema("id LONG, v STRING")
+        .parquet(s"$root/feed")
+        .writeStream
+        .foreachBatch { (b: DataFrame, _: Long) => b.count(); () }
+        .option("checkpointLocation", cp)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    (1 to 6).foreach { i =>
+      val t = once(s"$root/cp$i")
+      println(f"drain $i (fresh cp): $t%.3f s")
+    }
+    // resumed drains off one checkpoint (the harness pattern)
+    val cp = s"$root/cpR"
+    (1 to 3).foreach { i =>
+      val t = once(cp)
+      println(f"drain resume $i:    $t%.3f s")
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
+  /** (store-dir suffix under WireFixtures' per-SF root, serving query) */
+  private val ColdFamilies = Seq(
+    "ann_index_k8i3g" -> "q_ann_store",
+    "ann_index_incr_k8i3g" -> "q_ann_store_incr",
+    "postings_index_g" -> "q_postings_incr",
+    "winnow_fp_k8w8" -> "q_winnow_incr",
+    "cdc_chunks_k8d32" -> "q_cdc_incr",
+    "image_sigs_dhash9x8" -> "q_image_incr",
+    "lm_bigram_t80g" -> "q_lm_store",
+    // takedown stores: cold = index build + tombstone write + first
+    // tombstone-filtered serve — the fresh-deployment path of the
+    // takedown wave
+    "postings_takedown_m7r2g" -> "q_phrase_delete",
+    "ann_takedown_k8i3g" -> "q_ann_delete",
+    "minhash_takedown_m7r2g" -> "q_dedup_delete")
+
+  /** COLD-START cost of the store-backed families (SCALING.md's min-of-2
+    * measures the warm steady state; this puts the first-touch cost on
+    * record). Per family the persisted store dir is deleted and the plan
+    * cache cleared, then the serving query is timed COLD (store onboarding
+    * + first serve in one number — what a fresh deployment pays) and
+    * again WARM (store on disk, plan cache populated). JVM/codegen
+    * warm-up runs first at sf0.001 (the Bench methodology) so the first
+    * measured family doesn't absorb Janino/JIT costs. */
+  private def cold(spark: SparkSession, sfDir: String): Unit = {
+    def run(name: String, dir: String): Double =
+      Bench.seconds(Bench.force(SparkEntry.queries(name)(spark, dir)))
+    ColdFamilies.foreach { case (_, q) =>
+      Bench.warmUp(q)(run(q, "/root/testdata/sf0.001"))
+    }
+    println(f"${"family"}%-22s ${"cold(build+serve)"}%18s ${"warm"}%8s")
+    ColdFamilies.foreach { case (suffix, q) =>
+      val storeDir = graft.sources.WireFixtures.storePath(sfDir, suffix)
+      // Demote-then-delete under the SAME ProcessLock writeOnce's
+      // promotion protocol uses ("a promoted dir is never deleted"):
+      // the _SUCCESS marker drops first, so a concurrent builder
+      // waiting on the lock sees an unpromoted partial and rebuilds
+      // rather than reading a dir mid-delete or re-promoting over it.
+      // (A reader already PAST writeOnce can still race the delete —
+      // the probe assumes no concurrent servers, which is its dev-only
+      // contract; the lock closes the builder race, the real one.)
+      // ProcessLock's contract: hold a JVM-local monitor around it —
+      // FileChannel.lock throws OverlappingFileLockException on
+      // same-JVM contention. writeOnce synchronizes on WireFixtures,
+      // so the probe takes the SAME monitor to serialize with any
+      // in-JVM builder before taking the cross-process lock.
+      graft.sources.WireFixtures.synchronized {
+        graft.sources.ProcessLock.exclusive(s"$storeDir.lock") {
+          if (graft.pipeline.StoreFs.isDirectory(storeDir)) {
+            graft.pipeline.StoreFs.deleteRecursive(s"$storeDir/_SUCCESS")
+            graft.pipeline.StoreFs.deleteRecursive(storeDir)
+          }
+        }
+      }
+      graft.pipeline.PlanCache.clear()
+      val cold = run(q, sfDir)
+      val warm = run(q, sfDir)
+      println(f"$suffix%-22s $cold%18.2f $warm%8.2f")
+    }
+  }
+
+  /** Re-measures the two CORPUS-DEPENDENT contract bounds (COVERAGE.md
+    * caveat) on a dataset dir — the validation a new corpus must run
+    * before trusting q_dedup_simhash's hamming bound and
+    * q_dedup_embedding's "no natural ≥0.99 cosine pair" assumption:
+    *
+    *   1. simhash: distribution of hamming(sig_a, sig_b) over the
+    *      exact-Jaccard ≥ 0.9 ground-truth pair set (same LSH-candidates →
+    *      n-gram-verify derivation as the driver contract query);
+    *   2. embeddings: census of natural (distinct-id) cosine ≥ 0.99 pairs
+    *      by exhaustive scan — brute force on purpose: the validation must
+    *      not depend on the recall of the structure it validates.
+    */
+  private def contract(spark: SparkSession, dir: String): Unit = {
+    // --- simhash hamming bound over exact-Jaccard ≥ 0.9 pairs ---
+    val d = spark.read.parquet(s"$dir/documents.parquet")
+      .select("doc_id", "text")
+    val corpus = d.unionByName(
+      d.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+    val cand = Dedup.minhashLshPairs(corpus, jaccardThreshold = 0.5)
+    val truth = Dedup.ngramJaccardVerify(corpus, cand.select("id_a", "id_b"))
+      .where(col("jaccard") >= 0.9)
+    val sigs = Dedup.simhashSignatures(corpus)
+    val ham = truth
+      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
+      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
+      .select(bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("h"))
+    val st = ham.agg(count(lit(1)).as("pairs"), max(col("h")).as("max_h"),
+      expr("percentile(h, 0.99)").as("p99"),
+      sum(when(col("h") > 16, 1L).otherwise(0L)).as("over_16")).head()
+    println(s"[contract] simhash dir=$dir pairs=${st.getLong(0)} " +
+      s"max_hamming=${st.get(1)} p99=${st.get(2)} over_bound_16=${st.getLong(3)}")
+
+    // --- natural near-twin embedding census (brute force) ---
+    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"))
+    val cos = graft.functions.VectorFunctions.cosine(col("vec"), col("cvec"))
+    val near = e.join(
+        broadcast(e.select(col("id").as("cid"), col("vec").as("cvec"))),
+        col("id") < col("cid") && cos >= 0.99)
+      .agg(count(lit(1)).as("n")).head().getLong(0)
+    println(s"[contract] embeddings dir=$dir natural_pairs_ge_0.99=$near")
   }
 }

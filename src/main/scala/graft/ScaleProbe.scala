@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   *  - orders/lineitem/customer: key-shifted copies (join fan-out per key
   *    unchanged).
   *
-  * Run: `sbt "runMain graft.ScaleProbe"` (optionally SPARK_GRAFT_CPUS).
+  * Run: `sbt "runMain graft.Probe scale [leg ...]"` (optionally
+  * SPARK_GRAFT_CPUS); [[run]] lists the legs.
   */
 object ScaleProbe {
 
@@ -257,20 +258,16 @@ object ScaleProbe {
     java.nio.file.Files.createFile(java.nio.file.Paths.get(dest, "_SUCCESS"))
   }
 
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Derives the sf1 set, then runs the legs `args` select: `annprune`,
+    * `annbatch [int8|ivfpq|ivfpq10|pinned ...]`, `zstd`, `heaps`,
+    * `relay [curve]`, `sf10 [name ...]`, `sf100 [leg ...]`, `cc` (the
+    * distributed-CC leg), `pr` (the distributed PageRank leg) or `media`
+    * (the perceptual near-dup legs). Any other args are query names to
+    * probe alone (local iteration on a new family); no args runs the
+    * exhaustive sf0.1 → sf1 sweep plus the cc, pr and semdedup legs. */
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
     val base = "/root/testdata/sf0.1"
     derive(spark, base, DerivedDir)
-    // `runMain graft.ScaleProbe cc` probes only the distributed-CC leg;
-    // `... media` only the perceptual near-dup legs; any other args =
-    // probe only those query names (local iteration on a new family)
     val ccOnly = args.contains("cc")
     val mediaOnly = args.contains("media")
     val prOnly = args.contains("pr")
@@ -308,7 +305,7 @@ object ScaleProbe {
       }
       probePrune(base)
       probePrune(DerivedDir)
-      spark.stop(); return
+      return
     }
 
     if (args.contains("annbatch")) {
@@ -328,24 +325,17 @@ object ScaleProbe {
       // path is a coarse-over-coarse hierarchy, stated in SCALING.md.
       def vecsOf(dir: String) = spark.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      def minOf2(run: () => Unit): Double = {
-        def once(): Double = {
-          val t0 = System.nanoTime(); run()
-          (System.nanoTime() - t0) / 1e9
-        }
-        math.min(once(), once())
-      }
       def annBatchLeg(dir: String, k: Int): Double = {
         val store =
           graft.sources.WireFixtures.annOrganicIndexDir(spark, dir, k = k)
         val all = vecsOf(dir)
-        minOf2(() => Bench.force(
+        Bench.minOf2(Bench.seconds(Bench.force(
           graft.pipeline.Ann.ivfQuantizedTopKFromStoreBatch(
-            all, all, store, k = 10, nProbe = 2)))
+            all, all, store, k = 10, nProbe = 2))))
       }
       // extra args filter the legs (int8 / ivfpq / pinned) so each can
       // run in its own JVM — the sf100 probe-hygiene rule applied here
-      val legSel = args.toSeq.filterNot(_ == "annbatch")
+      val legSel = args.filterNot(_ == "annbatch")
       val legKnown = Seq("int8", "ivfpq", "ivfpq10", "pinned")
       require(legSel.forall(legKnown.contains),
         s"not an annbatch leg: ${legSel.filterNot(legKnown.contains)
@@ -366,8 +356,9 @@ object ScaleProbe {
         val store = graft.sources.WireFixtures.ivfPqOrganicIndexDir(
           spark, dir, k = k, m = 8)
         val all = vecsOf(dir)
-        minOf2(() => Bench.force(graft.pipeline.Ann.ivfPqTopKFromStoreBatch(
-          all, all, store, k = 10, nProbe = 2)))
+        Bench.minOf2(Bench.seconds(Bench.force(
+          graft.pipeline.Ann.ivfPqTopKFromStoreBatch(
+            all, all, store, k = 10, nProbe = 2))))
       }
       if (wantLeg("ivfpq")) {
         val a = ivfPqBatchLeg(base, 80)
@@ -397,12 +388,12 @@ object ScaleProbe {
             graft.sources.WireFixtures.annOrganicIndexDir(spark, dir, k = k)
           val pin = graft.pipeline.Ann.pinIndex(store)
           val all = vecsOf(dir)
-          val head = minOf2(() => Bench.force(
+          val head = Bench.minOf2(Bench.seconds(Bench.force(
             graft.pipeline.Ann.ivfQuantizedTopKFromStoreBatch(
-              all, all, store, k = 10, nProbe = 2)))
-          val pinned = minOf2(() => Bench.force(
+              all, all, store, k = 10, nProbe = 2))))
+          val pinned = Bench.minOf2(Bench.seconds(Bench.force(
             graft.pipeline.Ann.ivfQuantizedTopKFromStoreBatchPinned(
-              all, all, store, k = 10, pin, nProbe = 2)))
+              all, all, store, k = 10, pin, nProbe = 2))))
           (head, pinned)
         }
         val (ha, pa) = pinnedBatchLeg(base, 80)
@@ -410,7 +401,7 @@ object ScaleProbe {
         println(f"${"q_ann_batch_pinned"}%-22s $pa%8.2f $pb%8.2f  ${pb / pa}%5.1f×" +
           f"  (head $ha%.2f/$hb%.2f, pinned/head ${pa / ha}%.2f/${pb / hb}%.2f)")
       }
-      spark.stop(); return
+      return
     }
 
     if (args.contains("zstd")) {
@@ -428,13 +419,7 @@ object ScaleProbe {
       def du(dir: String): Long =
         graft.pipeline.StoreFs.listFileStatusesRecursive(dir)
           .map(_.getLen).sum
-      def minOf2(run: () => Unit): Double = {
-        def once(): Double = {
-          val t0 = System.nanoTime(); run()
-          (System.nanoTime() - t0) / 1e9
-        }
-        math.min(once(), once())
-      }
+      def minOf2(run: => Unit): Double = Bench.minOf2(Bench.seconds(run))
       def leg(dir: String, label: String): Unit = {
         val docs = spark.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), col("text"))
@@ -443,7 +428,7 @@ object ScaleProbe {
           // signature-store build: the engine's write-dominant shape
           var n = 0
           val sigDirs = scala.collection.mutable.ArrayBuffer.empty[String]
-          val tSig = minOf2 { () =>
+          val tSig = minOf2 {
             val out = s"/tmp/graft_zstdleg/$label-$codec-sig-$n"; n += 1
             sigDirs += out
             graft.pipeline.Dedup.writeSignatureStore(docs, out,
@@ -452,7 +437,7 @@ object ScaleProbe {
           val sigDir = sigDirs.last
           val sigBytes = du(sigDir)
           val t = graft.pipeline.VersionedStore.tableRoot(sigDir)
-          val tSigRead = minOf2 { () =>
+          val tSigRead = minOf2 {
             spark.read.parquet(s"$t/sigs")
               .write.format("noop").mode("overwrite").save()
             spark.read.parquet(s"$t/banded")
@@ -461,13 +446,13 @@ object ScaleProbe {
           // raw text passthrough: how the codec behaves on documents
           var m = 0
           val docDirs = scala.collection.mutable.ArrayBuffer.empty[String]
-          val tDoc = minOf2 { () =>
+          val tDoc = minOf2 {
             val out = s"/tmp/graft_zstdleg/$label-$codec-docs-$m"; m += 1
             docDirs += out
             docs.write.mode("overwrite").parquet(out)
           }
           val docBytes = du(docDirs.last)
-          val tDocRead = minOf2 { () =>
+          val tDocRead = minOf2 {
             spark.read.parquet(docDirs.last)
               .write.format("noop").mode("overwrite").save()
           }
@@ -482,53 +467,7 @@ object ScaleProbe {
       }
       leg(DerivedDir, "sf1")
       leg(Derived10Dir, "sf10")
-      spark.stop(); return
-    }
-
-    if (args.contains("kndiag")) {
-      // diagnostic: stage walls of the semdedup kN shape (train /
-      // assign / pairs+verify) per dir+k, for root-causing ratio moves
-      deriveNext(spark, DerivedDir, Derived10Dir, level = 2)
-      def withDupsOf(dir: String) = {
-        val e = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        e.unionByName(
-          e.select((col("id") + 100000000L).as("id"), col("vec")))
-      }
-      def diag(dir: String, k: Int): Unit = {
-        val base = withDupsOf(dir)
-        def t[T](label: String)(f: => T): T = {
-          val t0 = System.nanoTime(); val r = f
-          println(f"[kndiag] $dir%-20s k=$k%-5d $label%-12s" +
-            f" ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-          r
-        }
-        val (cb, _) = t("train")(graft.pipeline.Ann.trainCentroids(
-          base, k, 3))
-        t("train_memo")(graft.pipeline.Ann.trainCentroids(base, k, 3))
-        val assigned = t("assign")(base.withColumn("cell_id",
-          graft.pipeline.Ann.nearestCellExpr(cb, col("vec")))
-          .localCheckpoint(true))
-        // Lloyd's stats aggregate alone (the round-16 vec_sum kernel)
-        val dim = cb(0)._2.length
-        t("stats_agg") {
-          assigned.groupBy(col("cell_id"))
-            .agg(count(lit(1)).as("n"),
-              graft.functions.GraftFunctions.vec_sum(col("vec"), dim).as("s"))
-            .collect()
-        }
-        val sizes = assigned.groupBy("cell_id").count()
-          .agg(max("count").as("mx"), avg("count").as("av"),
-            sum(col("count") * col("count")).as("pairs2")).head()
-        println(f"[kndiag] $dir%-20s k=$k%-5d balance " +
-          f" max=${sizes.getLong(0)} mean=${sizes.getDouble(1)}%.1f" +
-          f" sumsq=${sizes.getLong(2)}")
-        t("full")(Bench.force(graft.pipeline.Semantic.semanticDedup(
-          base, k = k, iters = 3)))
-      }
-      diag(DerivedDir, 80)
-      diag(Derived10Dir, 800)
-      spark.stop(); return
+      return
     }
 
     if (args.contains("heaps")) {
@@ -571,17 +510,10 @@ object ScaleProbe {
       val v3 = "/tmp/graft_sf10_heaps3"
       heapsDocs(v1, 1)
       heapsDocs(v3, 3)
-      try Bench.force(SparkEntry.queries("q_gopher_rules")(
-        spark, "/root/testdata/sf0.001"))
-      catch { case scala.util.control.NonFatal(_) => () }
-      def tq(dir: String): Double = {
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          Bench.force(SparkEntry.queries("q_gopher_rules")(spark, dir))
-          (System.nanoTime() - t0) / 1e9
-        }
-        math.min(once(), once())
-      }
+      Bench.warmUp("q_gopher_rules")(Bench.force(
+        SparkEntry.queries("q_gopher_rules")(spark, "/root/testdata/sf0.001")))
+      def tq(dir: String): Double = Bench.minOf2(Bench.seconds(
+        Bench.force(SparkEntry.queries("q_gopher_rules")(spark, dir))))
       val a = tq(DerivedDir)
       println(f"${"q_gopher_rules sf1"}%-26s $a%8.2f s")
       Seq(("sf10 vocab x1", v1), ("sf10 vocab x3 (Heaps)", v3),
@@ -589,7 +521,7 @@ object ScaleProbe {
         val b = tq(dir)
         println(f"$label%-26s $b%8.2f s  ${b / a}%5.1f×")
       }
-      spark.stop(); return
+      return
     }
 
     if (relayOnly) {
@@ -599,27 +531,17 @@ object ScaleProbe {
       // best-of-2). The sf1 row puts the 10×-feed events/s on record:
       // the pipeline is a narrow codegen'd map over a partitioned scan,
       // so events/s should hold roughly flat as the feed grows.
-      import graft.operators.{DbusKeyFilter, KeyModFilter}
-      def leg(consume: () => Long): (Long, Double) = {
-        def once(): (Long, Double) = {
-          val t0 = System.nanoTime()
-          val n = consume()
-          val sec = (System.nanoTime() - t0) / 1e9
-          (n, if (sec > 0) n / sec else 0.0)
-        }
-        val a = once(); val b = once()
-        if (b._2 > a._2) b else a
-      }
+      import graft.operators.{DbusKeyFilter, KeyModFilter, Relay}
       val f = DbusKeyFilter("MOD", Seq(KeyModFilter(4, 0, 3)))
       def probe(dir: String): Unit = {
-        val (n, eps) = leg(() => graft.operators.Relay.streamOrdered(
+        val (n, eps) = Bench.throughput(() => Relay.streamOrdered(
           graft.sources.Store.eventLog(spark, dir), filter = f).count())
         val bin = graft.sources.WireFixtures.relayLogDir(spark, dir)
-        val (_, binEps) = leg(() => graft.operators.Relay.streamOrdered(
+        val (_, binEps) = Bench.throughput(() => Relay.streamOrdered(
           spark.read.format("graft-relay").option("path", bin).load(),
           filter = f).count())
         val wire = graft.sources.WireFixtures.dbusv2LogDir(spark, dir)
-        val (_, wireEps) = leg(() => graft.operators.Relay.streamOrdered(
+        val (_, wireEps) = Bench.throughput(() => Relay.streamOrdered(
           spark.read.format("graft-relay").option("path", wire).load(),
           filter = f).count())
         println(f"relay $dir%-18s events=$n%9d pipeline=${eps.round}%9d/s" +
@@ -638,7 +560,7 @@ object ScaleProbe {
         probe(base)
         probe(DerivedDir)
       }
-      spark.stop(); return
+      return
     }
 
     val all = AllProbes
@@ -648,11 +570,11 @@ object ScaleProbe {
       else {
         // fail loudly on a typo'd or unprobed name — silently filtering
         // would print an empty "successful" run
-        val unknown = args.toSeq.filterNot(all.contains)
+        val unknown = args.filterNot(all.contains)
         require(unknown.isEmpty,
           s"not in the probe list: ${unknown.mkString(", ")} " +
             s"(known: ${all.mkString(", ")})")
-        args.toSeq
+        args
       }
 
     if (mediaOnly) {
@@ -675,8 +597,7 @@ object ScaleProbe {
           else graft.pipeline.Multimodal.gainHalvedAudio(orig))
           .select((col("doc_id") + 10000000L).as("doc_id"), col("payload"))
         val media = orig.unionByName(deriv).localCheckpoint(true)
-        def once(): Double = {
-          val t0 = System.nanoTime()
+        def once(): Double = Bench.seconds {
           val sigs = media
             .as[graft.pipeline.Multimodal.ImageRow]
             .mapPartitions(_.map(r => (r.doc_id,
@@ -685,10 +606,9 @@ object ScaleProbe {
             .toDF("id", "sig")
           Bench.force(graft.pipeline.Dedup.hammingPairsFromSignatures(
             sigs, if (image) 7 else 3, if (image) 8 else 4))
-          (System.nanoTime() - t0) / 1e9
         }
         once() // JIT/codegen warm pass on this leg's kernels
-        math.min(once(), once())
+        Bench.minOf2(once())
       }
       Seq(("image_neardup", true), ("audio_neardup", false)).foreach {
         case (name, img) =>
@@ -696,7 +616,7 @@ object ScaleProbe {
           val b = mediaProbe(DerivedDir, img)
           println(f"$name%-22s $a%8.2f $b%8.2f  ${b / a}%5.1f×")
       }
-      spark.stop(); return
+      return
     }
 
     // warm codegen/JIT on the tiny SF first (same rationale as Bench).
@@ -704,19 +624,12 @@ object ScaleProbe {
     // exactly the families they time (inline in their blocks), and with
     // the one-JVM-per-leg hygiene rule a ~250-query warm pass per leg
     // would be minutes of dead preamble multiplied by the leg count.
-    if (!ccOnly && !prOnly && !sf10Only && !sf100Only) probes.foreach { q =>
-      try Bench.force(SparkEntry.queries(q)(spark, "/root/testdata/sf0.001"))
-      catch { case _: Throwable => () }
-    }
+    def warm(q: String): Unit = Bench.warmUp(q)(
+      Bench.force(SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")))
+    if (!ccOnly && !prOnly && !sf10Only && !sf100Only) probes.foreach(warm)
 
-    def time(q: String, dir: String): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        Bench.force(SparkEntry.queries(q)(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      }
-      math.min(once(), once())
-    }
+    def time(q: String, dir: String): Double = Bench.minOf2(
+      Bench.seconds(Bench.force(SparkEntry.queries(q)(spark, dir))))
 
     if (sf100Only) {
       // THIRD-DECADE spot probe (round 14): sf10 → sf100 for the top-3
@@ -729,23 +642,20 @@ object ScaleProbe {
       deriveNext(spark, DerivedDir, Derived10Dir, level = 2)
       deriveNext(spark, Derived10Dir, Derived100Dir, level = 3)
       def one(label: String)(run: String => Unit): Unit = try {
-        def t(dir: String): Double = {
-          val t0 = System.nanoTime(); run(dir)
-          (System.nanoTime() - t0) / 1e9
-        }
-        val a = t(Derived10Dir); val b = t(Derived100Dir)
+        val a = Bench.seconds(run(Derived10Dir))
+        val b = Bench.seconds(run(Derived100Dir))
         println(f"$label%-22s $a%8.2f $b%8.2f  ${b / a}%5.1f×")
       } catch {
         case scala.util.control.NonFatal(e) =>
           println(f"$label%-22s FAILED ${e.getClass.getSimpleName}:" +
             s" ${Option(e.getMessage).getOrElse("").take(160)}")
       }
-      val sel100 = args.toSeq.filterNot(_ == "sf100")
+      val sel100 = args.filterNot(_ == "sf100")
       // fail loudly on a typo'd leg name (the AllProbes rule); the two
       // diagnostic legs (stages, logp) are OPT-IN ONLY — the default
       // sweep carries the three adjudicated families, and PROBE HYGIENE
       // (SCALING.md round 15): run each sf100 leg in its OWN JVM —
-      // `runMain graft.ScaleProbe sf100 <leg>` per leg — so one leg's
+      // `runMain graft.Probe scale sf100 <leg>` per leg — so one leg's
       // retained shuffle files can never exhaust the disk under a later
       // leg (the r15 q_semdedup_lsh64 failure shape)
       val known100 = Seq("q_ivfpq_cdc_stream", "q_gopher_rules",
@@ -760,10 +670,7 @@ object ScaleProbe {
       println(f"${"query"}%-22s ${"sf10"}%8s ${"sf100"}%8s  ratio")
       Seq("q_ivfpq_cdc_stream", "q_gopher_rules").foreach { q =>
         if (want(q)) {
-          // warm class-loading/codegen on the tiny set, as sf10 does
-          try Bench.force(
-            SparkEntry.queries(q)(spark, "/root/testdata/sf0.001"))
-          catch { case scala.util.control.NonFatal(_) => () }
+          warm(q) // class-loading/codegen on the tiny set, as sf10 does
           one(q)(dir => Bench.force(SparkEntry.queries(q)(spark, dir)))
         }
       }
@@ -778,10 +685,10 @@ object ScaleProbe {
       // replacement for the removed all-query preamble
       if (want("q_semdedup_lsh64") || want("q_semdedup_lsh64_logp") ||
         want("q_semdedup_stages") || want("q_semdedup_stages10"))
-        try Bench.force(graft.pipeline.Semantic.semanticDedup(
-          withDups100("/root/testdata/sf0.001"), k = 8, iters = 2,
-          intraCellPlanes = 12, intraCellTables = 4))
-        catch { case scala.util.control.NonFatal(_) => () }
+        Bench.warmUp("semanticDedup")(Bench.force(
+          graft.pipeline.Semantic.semanticDedup(
+            withDups100("/root/testdata/sf0.001"), k = 8, iters = 2,
+            intraCellPlanes = 12, intraCellTables = 4)))
       if (want("q_semdedup_lsh64")) one("q_semdedup_lsh64") { dir =>
         Bench.force(graft.pipeline.Semantic.semanticDedup(
           withDups100(dir), k = 64, iters = 3, intraCellPlanes = 12,
@@ -877,7 +784,7 @@ object ScaleProbe {
         // after a kernel change without paying the sf100 pass
         if (want("q_semdedup_stages10")) stages(Derived10Dir, 12)
       }
-      spark.stop(); return
+      return
     }
     if (sf10Only) {
       // SECOND-DECADE probe (round 13): sf1 → sf10 for the heaviest
@@ -911,7 +818,7 @@ object ScaleProbe {
         "q_ann_store_batch", "q_semdedup_recall")
       // extra args filter the list (resuming a partial sweep after an
       // environment-sized failure re-times only what is missing)
-      val sel = args.toSeq.filterNot(_ == "sf10")
+      val sel = args.filterNot(_ == "sf10")
       // fail loudly on a typo'd name — the AllProbes rule: silently
       // filtering would print an empty "successful" run an operator
       // reads as a completed re-time
@@ -923,10 +830,7 @@ object ScaleProbe {
           .mkString(", ")} (known: ${known.mkString(", ")})")
       val heavy =
         if (sel.isEmpty) heavyAll else heavyAll.filter(sel.contains)
-      heavy.foreach { q =>
-        try Bench.force(SparkEntry.queries(q)(spark, "/root/testdata/sf0.001"))
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+      heavy.foreach(warm)
       println(f"${"query"}%-22s ${"sf1"}%8s ${"sf10"}%8s  ratio")
       heavy.foreach { q =>
         try {
@@ -941,26 +845,21 @@ object ScaleProbe {
       }
       // semdedup at the deployment configuration (k ∝ N, constant cell
       // size — the sf1 adjudication's scale-honest shape, third point)
-      def semdedup10(dir: String, k: Int): Double = {
-        def once(): Double = {
-          val e = spark.read.parquet(s"$dir/embeddings.parquet")
-            .select(col("vec_id").as("id"), col("embedding").as("vec"))
-          val withDups = e.unionByName(
-            e.select((col("id") + 100000000L).as("id"), col("vec")))
-          val t0 = System.nanoTime()
-          Bench.force(graft.pipeline.Semantic.semanticDedup(
-            withDups, k = k, iters = 3))
-          (System.nanoTime() - t0) / 1e9
-        }
-        math.min(once(), once())
+      def semdedup10(dir: String, k: Int): Double = Bench.minOf2 {
+        val e = spark.read.parquet(s"$dir/embeddings.parquet")
+          .select(col("vec_id").as("id"), col("embedding").as("vec"))
+        val withDups = e.unionByName(
+          e.select((col("id") + 100000000L).as("id"), col("vec")))
+        Bench.seconds(Bench.force(graft.pipeline.Semantic.semanticDedup(
+          withDups, k = k, iters = 3)))
       }
       // warm the custom-leg kernels on the tiny corpus (the heavy list
       // above warms only the SparkEntry families)
-      try Bench.force(graft.pipeline.Semantic.semanticDedup(
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-          .select(col("vec_id").as("id"), col("embedding").as("vec")),
-        k = 8, iters = 2, intraCellPlanes = 12, intraCellTables = 4))
-      catch { case scala.util.control.NonFatal(_) => () }
+      Bench.warmUp("semanticDedup")(Bench.force(
+        graft.pipeline.Semantic.semanticDedup(
+          spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+            .select(col("vec_id").as("id"), col("embedding").as("vec")),
+          k = 8, iters = 2, intraCellPlanes = 12, intraCellTables = 4)))
       if (sel.isEmpty || sel.contains("q_semdedup_kN")) try {
         val sa = semdedup10(DerivedDir, 80)
         val sb = semdedup10(Derived10Dir, 800)
@@ -986,13 +885,7 @@ object ScaleProbe {
       }
       def leg(label: String)(run: String => Unit): Unit =
         if (sel.isEmpty || sel.contains(label)) try {
-          def one(dir: String): Double = {
-            def once(): Double = {
-              val t0 = System.nanoTime(); run(dir)
-              (System.nanoTime() - t0) / 1e9
-            }
-            math.min(once(), once())
-          }
+          def one(dir: String): Double = Bench.minOf2(Bench.seconds(run(dir)))
           val a = one(DerivedDir); val b = one(Derived10Dir)
           println(f"$label%-22s $a%8.2f $b%8.2f  ${b / a}%5.1f×")
         } catch {
@@ -1078,7 +971,7 @@ object ScaleProbe {
             s" deployment geometry (k=$k) — the quantized tier lost" +
             " organic retrieval quality at scale")
       }
-      spark.stop(); return
+      return
     }
     if (!ccOnly && !prOnly) {
       println(f"${"query"}%-22s ${"sf0.1"}%8s ${"sf1"}%8s  ratio")
@@ -1119,17 +1012,12 @@ object ScaleProbe {
         .where(col("jaccard") >= 0.8)
         .localCheckpoint(true)
       val nEdges = pairs.count()
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        Bench.force(graft.pipeline.Dedup.connectedComponents(
-          pairs, maxDriverEdges = 0))
-        (System.nanoTime() - t0) / 1e9
-      }
-      val best = math.min(once(), once())
+      val best = Bench.minOf2(Bench.seconds(Bench.force(
+        graft.pipeline.Dedup.connectedComponents(pairs, maxDriverEdges = 0))))
       System.err.println(s"[probe] cc_distributed $dir edges=$nEdges")
       best
     }
-    if (probes != all && !ccOnly && !prOnly) { spark.stop(); return }
+    if (probes != all && !ccOnly && !prOnly) { return }
     if (!prOnly) {
     val ca = ccDistributed(base)
     val cb = ccDistributed(DerivedDir)
@@ -1147,39 +1035,29 @@ object ScaleProbe {
           ((col("doc_id") * 31 + 7) % 100000).as("dst"))
         .unionByName(d.select(((col("doc_id") * 13 + 5) % 100000).as("src"),
           (col("doc_id") % 100000).as("dst")))
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        Bench.force(graft.pipeline.Graph.pageRank(edges, iters = 5,
-          maxDriverEdges = 0))
-        (System.nanoTime() - t0) / 1e9
-      }
-      math.min(once(), once())
+      Bench.minOf2(Bench.seconds(Bench.force(
+        graft.pipeline.Graph.pageRank(edges, iters = 5, maxDriverEdges = 0))))
     }
     if (!ccOnly) { // `cc` mode stays the quick cc-iteration loop
       val pa = prDistributed(base)
       val pb = prDistributed(DerivedDir)
       println(f"${"pagerank_distributed"}%-22s $pa%8.2f $pb%8.2f  ${pb / pa}%5.1f×")
     }
-    if (prOnly) { spark.stop(); return }
+    if (prOnly) { return }
     // semdedup probed with k ∝ N (the documented cell-size knob): fixed k
     // at 10× data means 10× cells → 100× within-cell pairs; scaling k
     // keeps expected cell size constant, so pair work scales linearly
-    if (ccOnly) { spark.stop(); return }
-    def semdedup(dir: String, k: Int): Double = {
-      def once(): Double = {
-        val e = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val withDups = e.unionByName(
-          e.select((col("id") + 1000000L).as("id"), col("vec")))
-        val t0 = System.nanoTime()
-        Bench.force(graft.pipeline.Semantic.semanticDedup(withDups, k = k, iters = 3))
-        (System.nanoTime() - t0) / 1e9
-      }
-      math.min(once(), once())
+    if (ccOnly) { return }
+    def semdedup(dir: String, k: Int): Double = Bench.minOf2 {
+      val e = spark.read.parquet(s"$dir/embeddings.parquet")
+        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val withDups = e.unionByName(
+        e.select((col("id") + 1000000L).as("id"), col("vec")))
+      Bench.seconds(Bench.force(
+        graft.pipeline.Semantic.semanticDedup(withDups, k = k, iters = 3)))
     }
     val sa = semdedup(base, 8)
     val sb = semdedup(DerivedDir, 80)
     println(f"${"q_semdedup (k∝N)"}%-22s $sa%8.2f $sb%8.2f  ${sb / sa}%5.1f×")
-    spark.stop()
   }
 }

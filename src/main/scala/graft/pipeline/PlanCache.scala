@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.storage.StorageLevel
 
 /** Idempotent persist for derived signature tables.
@@ -48,10 +49,47 @@ private[graft] object PlanCache {
     val hit = perSession.get(key)
     if (hit != null) hit
     else {
-      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
+      val built = build
+      uncacheStale(built)
+      val df = built.persist(StorageLevel.MEMORY_AND_DISK)
       perSession.put(key, df)
       df
     }
+  }
+
+  /** Spark's CacheManager serves a new persist (and any plan containing
+    * it) from cached data whose plan matches, and a file relation matches
+    * on its root paths alone. A Spark writer refreshes the cache of the
+    * paths it writes, but a rewrite by anything else (a file copy, another
+    * process) does not, so a content-salted rebuild would get the rows
+    * cached before the rewrite. Drops cached data for `df`'s plan that
+    * was listed from other files than `df` lists now. */
+  private def uncacheStale(df: DataFrame): Unit = {
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val spark: org.apache.spark.sql.classic.SparkSession = df.sparkSession
+    val cacheManager = spark.sharedState.cacheManager
+    val plan = df.queryExecution.analyzed
+    cacheManager.lookupCachedData(spark, plan).foreach { cached =>
+      if (listedFiles(cached.plan) != listedFiles(plan))
+        cacheManager.uncacheQuery(spark, cached.plan, cascade = true)
+    }
+  }
+
+  /** (path, mtime, length) of every file the plan's file relations listed
+    * when they were planned. */
+  private def listedFiles(plan: LogicalPlan): Seq[String] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    plan.collectLeaves().flatMap {
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation => fs.location match {
+          case index: PartitioningAwareFileIndex => index.allFiles().map(st =>
+            s"${st.getPath}@${st.getModificationTime}:${st.getLen}")
+          case index => index.inputFiles.toSeq
+        }
+        case _ => Seq.empty
+      }
+      case _ => Seq.empty
+    }.sorted
   }
 
   /** Identity key for a DataFrame's source data. Canonicalized plans are

@@ -39,7 +39,7 @@ object WireFixtures {
     * [[ProcessLock]], a promoted dir is never deleted, and only crashed
     * never-promoted partials are cleaned up while holding the lock. */
   /** Store path for a family `suffix` at an SF dir — exposed so dev
-    * probes (ColdProbe) address exactly the dirs the builders write,
+    * probes (`graft.Probe cold`) address exactly the dirs the builders write,
     * instead of re-deriving the sanitization and silently drifting. */
   private[graft] def storePath(sfDir: String, suffix: String): String =
     s"$Root/${key(sfDir)}/$suffix"

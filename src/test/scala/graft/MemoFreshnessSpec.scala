@@ -74,6 +74,34 @@ class MemoFreshnessSpec extends SparkSpec {
         " in-place corpus rewrite")
   }
 
+  test("an out-of-band corpus rewrite is not served from the stale cache") {
+    val root = tmp("memo")
+    val corpusPath = s"$root/corpus"
+    (0L until 12L).map(i => (i, vec(i))).toDF("id", "vec")
+      .coalesce(1).write.parquet(corpusPath)
+    val (book1, _) =
+      Ann.trainCentroids(spark.read.parquet(corpusPath), 2, 2)
+    // swap the corpus files with java.nio, not a Spark writer: a Spark
+    // writer refreshes the cache of the paths it writes, a file move
+    // does not, and the cache matches a file relation by its root path
+    val staged = s"$root/staged"
+    (0L until 12L).map(i => (i, vec(i).map(_ + 50.0f))).toDF("id", "vec")
+      .coalesce(1).write.parquet(staged)
+    val corpusDir = java.nio.file.Paths.get(corpusPath)
+    new java.io.File(corpusPath).listFiles()
+      .foreach(f => java.nio.file.Files.delete(f.toPath))
+    new java.io.File(staged).listFiles().foreach(f =>
+      java.nio.file.Files.move(f.toPath, corpusDir.resolve(f.getName)))
+    val (book2, _) =
+      Ann.trainCentroids(spark.read.parquet(corpusPath), 2, 2)
+    val b1 = book1.flatMap(_._2)
+    val b2 = book2.flatMap(_._2)
+    assert(b1.length == b2.length &&
+      b1.zip(b2).forall { case (x, y) => math.abs(y - x - 50.0f) < 1e-3 },
+      "trainCentroids trained on rows cached before an out-of-band" +
+        " corpus rewrite")
+  }
+
   test("a same-name rewrite with its mtime reset still changes the salt") {
     val dir = s"${tmp("memo")}/t"
     (0L until 4L).toDF("id").coalesce(1).write.parquet(dir)

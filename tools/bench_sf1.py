@@ -1,12 +1,12 @@
 #!/usr/bin/env python3
-"""Assemble BENCH_sf1_r{N}.json from a `runMain graft.ScaleProbe` log.
+"""Assemble BENCH_sf1_r{N}.json from a `runMain graft.Probe scale` log.
 
 Usage: python3 tools/bench_sf1.py <scaleprobe-log> <out-json> \
            [relay-probe-log]
 
 Parses the per-family `name  sf01  sf1  ratio` lines (min-of-2 per
-scale, printed by ScaleProbe's exhaustive sweep), the cc/pr distributed
-legs, and — when a `ScaleProbe relay` log is supplied — the sf1 relay
+scale, printed by the exhaustive `Probe scale` sweep), the cc/pr distributed
+legs, and — when a `Probe scale relay` log is supplied — the sf1 relay
 throughput legs. FAILED families are carried into a `failed` map so a
 broken fixture is a visible finding, never a silent hole in the
 artifact.

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Assemble BENCH_sf10_r{N}.json from a `runMain graft.ScaleProbe sf10` log.
+"""Assemble BENCH_sf10_r{N}.json from a `runMain graft.Probe scale sf10`
+log.
 
 Usage: python3 tools/bench_sf10.py <scaleprobe-sf10-log> <out-json>
 

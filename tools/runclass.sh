@@ -2,7 +2,7 @@
 # Run a graft main class straight from compiled classes (no sbt lock —
 # lets measurement runs proceed while sbt compiles elsewhere). Mirrors
 # build.sbt's forked-run JVM options. Usage:
-#   tools/runclass.sh [-cp <classesdir>] graft.Bench [args...]
+#   tools/runclass.sh [-cp <classesdir>] graft.<Bench|Verify|Probe> [args...]
 CLASSES="$(dirname "$0")/../target/scala-2.13/classes"
 if [ "$1" = "-cp" ]; then CLASSES="$2"; shift 2; fi
 ADD_OPENS=""
