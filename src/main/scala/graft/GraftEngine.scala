@@ -59,10 +59,14 @@ class GraftEngine(val spark: SparkSession, eventLogDir: String,
       cp, filter, maxEvents)
 
   /** `/stream`, live form: the continuous pull loop as a streaming frame
-    * (micro-batches aligned to transaction windows). */
+    * (micro-batches aligned to transaction windows). An AvailableNow
+    * drain takes every committed file in one batch; `Some(n)` opts into
+    * a per-trigger budget of n files (rate control A6), e.g. so the first
+    * drain after a long outage does not take the whole backlog at once
+    * ([[RelayStream.read]]). */
   def streamLive(cp: Checkpoint = Checkpoint.flexible,
       filter: DbusFilter = AllowAllFilter,
-      maxFilesPerTrigger: Int = 1): DataFrame =
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
     RelayStream.read(spark, eventLogDir, cp, filter, maxFilesPerTrigger)
 
   /** `/startSCN` — snapshot-consistent start for a bootstrap request. */
@@ -82,7 +86,9 @@ class GraftEngine(val spark: SparkSession, eventLogDir: String,
       : (Option[DataFrame], DataFrame, Checkpoint) =
     RelayStream.streamWithBootstrap(spark, eventLogDir, cp, filter)
 
-  /** Consumer registration + dispatch (the client library surface). */
+  /** Consumer registration + dispatch (the client library surface). Each
+    * AvailableNow drain is one micro-batch holding every committed file,
+    * delivered in per-partition (scn, seq) order ([[streamLive]]). */
   def consume(consumer: DatabusConsumer, checkpointDir: String,
       cp: Checkpoint = Checkpoint.flexible,
       filter: DbusFilter = AllowAllFilter)

@@ -350,9 +350,9 @@ object StoreFsck {
         names.count(_.startsWith("next-")).toLong),
       // crash before retire: the promote landed, backup is reclaimable
       ("orphan_old_generations", names.count(_.startsWith("old-")).toLong),
-      // crash between displace and promote: serving sees NO snapshot and
-      // the next apply would silently re-materialize from one batch —
-      // recovery is renaming the newest old-*/next-* back to current
+      // crash between displace and promote: serving sees NO snapshot
+      // until the next apply renames the newest old-* back to current
+      // (Applier.applyBatch; a next-* may be incomplete, never promoted)
       ("snapshot_missing_with_generations",
         if (!hasCurrent && names.exists(n =>
           n.startsWith("next-") || n.startsWith("old-"))) 1L

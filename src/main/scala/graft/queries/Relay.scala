@@ -168,7 +168,7 @@ object RelayQueries extends QueryFamily {
       }
       graft.streaming.Dispatcher.start(
         graft.streaming.RelayStream.read(s, s"$root/log",
-          maxFilesPerTrigger = 1),
+          maxFilesPerTrigger = Some(1)),
         consumer, s"$root/cp").awaitTermination()
       scala.jdk.CollectionConverters.IteratorHasAsScala(rec.iterator).asScala
         .toSeq.zipWithIndex
@@ -188,7 +188,7 @@ object RelayQueries extends QueryFamily {
       val logDir = graft.sources.Store.eventLogDir(s, dir)
       val root = tempQueryDir("filelog").toString
       graft.streaming.Dispatcher.fileLog(
-        graft.streaming.RelayStream.read(s, logDir, maxFilesPerTrigger = 8),
+        graft.streaming.RelayStream.read(s, logDir, maxFilesPerTrigger = Some(8)),
         s"$root/out", s"$root/cp").awaitTermination()
       s.read.schema(graft.streaming.RelayStream.schema).parquet(s"$root/out")
         .groupBy(col("source_id"))

@@ -38,27 +38,52 @@ object Applier {
     else None
   }
 
-  /** Apply one micro-batch of envelope changes into the snapshot. */
+  /** Apply one micro-batch of envelope changes into the snapshot.
+    *
+    * Generation protocol: write `next-<t>`, displace `current` to
+    * `old-<t>`, promote `next-<t>` to `current`, then retire every other
+    * stamped `old-*`/`next-*`. Stamps only grow (each is above every
+    * stamp already in the dir), so the newest `old-*` holds the last
+    * promoted state. A crash between displace and promote leaves no
+    * `current`; the next apply renames that `old-*` back before merging
+    * rather than rebuilding the state from its own batch alone. A
+    * `next-*` is never promoted here: it may be incomplete. One listing
+    * of `stateDir` per apply. */
   def applyBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
       keyCols: Seq[String] = Seq("key_long")): Unit = {
     import graft.pipeline.StoreFs
-    val merged = snapshot(spark, stateDir) match {
-      case Some(cur) =>
-        Bootstrap.applyLog(cur.unionByName(batch, allowMissingColumns = true), keyCols)
-      case None => Bootstrap.applyLog(batch, keyCols)
+    val names = StoreFs.listDirNames(stateDir)
+    val gens = names.collect {
+      case Generation(kind, t) => (kind, t.toLong, s"$stateDir/$kind-$t")
     }
-    val next = s"$stateDir/next-${System.nanoTime()}"
-    merged.write.mode("overwrite").parquet(next)
     val cur = s"$stateDir/current"
-    val old = s"$stateDir/old-${System.nanoTime()}"
-    if (StoreFs.exists(cur)) require(StoreFs.rename(cur, old),
+    val restored =
+      if (names.contains("current")) None
+      else gens.filter(_._1 == "old").maxByOption(_._2).map(_._3)
+    restored.foreach(o => require(StoreFs.rename(o, cur),
+      s"applyBatch: cannot restore $o to $cur"))
+    val hasCurrent = names.contains("current") || restored.isDefined
+    val merged =
+      if (hasCurrent) Bootstrap.applyLog(spark.read.parquet(cur)
+        .unionByName(batch, allowMissingColumns = true), keyCols)
+      else Bootstrap.applyLog(batch, keyCols)
+    val t = math.max(System.currentTimeMillis(),
+      gens.map(_._2).maxOption.fold(0L)(_ + 1))
+    val next = s"$stateDir/next-$t"
+    merged.write.mode("overwrite").parquet(next)
+    val old = s"$stateDir/old-$t"
+    if (hasCurrent) require(StoreFs.rename(cur, old),
       s"applyBatch: cannot displace $cur")
     require(StoreFs.rename(next, cur),
       s"applyBatch: cannot promote $next")
-    // retire the previous version (readers hold open handles in-flight;
-    // a real deployment keeps N versions — table formats do this natively)
-    StoreFs.deleteRecursive(old)
+    // retire the previous version and any crashed swap's leftovers
+    // (readers hold open handles in-flight; a real deployment keeps N
+    // versions — table formats do this natively)
+    (old +: gens.map(_._3).filterNot(restored.contains))
+      .foreach(StoreFs.deleteRecursive)
   }
+
+  private val Generation = """(old|next)-(\d{1,18})""".r
 
   /** Start the continuous materializer on a relay stream. */
   def start(stream: DataFrame, stateDir: String, checkpointDir: String,

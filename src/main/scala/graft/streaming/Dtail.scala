@@ -89,7 +89,7 @@ object Dtail {
       : StreamingQuery = {
     val cp = startCheckpoint(spark, logDir, parseScnSpec(scnSpec))
     val remaining = new AtomicLong(maxEvents)
-    RelayStream.read(spark, logDir, cp, maxFilesPerTrigger = maxFilesPerTrigger)
+    RelayStream.read(spark, logDir, cp, maxFilesPerTrigger = Some(maxFilesPerTrigger))
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val want = remaining.get()

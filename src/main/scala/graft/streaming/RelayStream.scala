@@ -193,20 +193,25 @@ object RelayStream {
   /** Open the streaming read of the event log after a checkpoint, with
     * server-side filters pushed into the scan.
     *
-    * `maxFilesPerTrigger` is the batch-size budget (the `size` param of
-    * `/stream`, §2.10; rate control A6). Each micro-batch = whole files =
-    * whole windows.
+    * An AvailableNow drain takes every committed file in one micro-batch,
+    * as `/stream` hands one append to a client in one response (K1), so a
+    * drain pays the per-trigger bookkeeping (offset WAL, planning,
+    * commit) once. A budget is opt-in: `maxFilesPerTrigger = Some(n)`
+    * caps each batch at n files (the `size` param of `/stream`, §2.10;
+    * rate control A6). Without one, the first drain after a long outage
+    * takes the whole backlog as one batch. Either way a micro-batch is
+    * whole files = whole windows.
     */
   def read(spark: SparkSession, dir: String,
       cp: Checkpoint = Checkpoint.flexible,
       filter: DbusFilter = AllowAllFilter,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val r = spark.readStream.schema(schema)
+    maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
       .parquet(dir)
       .where(graft.operators.Relay.afterCheckpoint(cp))
       .where(filter.toColumnFor(schema.fieldNames.toSeq))
+  }
 
   /** Event-time windowed stats with a watermark — the streaming analog of
     * the A3 totals for wall-clock dashboards (events/sec, per-source
@@ -263,7 +268,7 @@ object RelayStream {
     * Returns (bootstrapStateOrNone, onlineStream, resumeCheckpoint).
     */
   def streamWithBootstrap(spark: SparkSession, dir: String, cp: Checkpoint,
-      filter: DbusFilter = AllowAllFilter, maxFilesPerTrigger: Int = 1)
+      filter: DbusFilter = AllowAllFilter, maxFilesPerTrigger: Option[Int] = None)
       : (Option[DataFrame], DataFrame, Checkpoint) = {
     val (minScn, maxScn) = bufferInfo(spark, dir)
     val fellOff = !cp.isFlexible && cp.windowScn < minScn

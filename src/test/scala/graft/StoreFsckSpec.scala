@@ -332,6 +332,38 @@ class StoreFsckSpec extends SparkSpec {
     assert(bad2("snapshot_missing_with_generations") == 1L)
   }
 
+  test("applier: a crash between displace and promote is healed by the next apply") {
+    import graft.operators.Bootstrap
+    import graft.pipeline.StoreFs
+    import graft.streaming.Applier
+    val dir = s"${tmp("fsck")}/state"
+    StoreFs.mkdirs(dir)
+    val b1 = Seq((100L, 0L, 1L, "UPSERT", 10.0), (100L, 1L, 2L, "UPSERT", 20.0),
+      (101L, 2L, 4L, "UPSERT", 40.0))
+      .toDF("scn", "seq", "key_long", "opcode", "value")
+    val b2 = Seq((200L, 3L, 1L, "UPSERT", 11.0), (200L, 4L, 2L, "DELETE", 0.0),
+      (200L, 5L, 3L, "UPSERT", 30.0))
+      .toDF("scn", "seq", "key_long", "opcode", "value")
+    Applier.applyBatch(spark, b1, dir)
+    // plant the crash: current displaced to old-<t>, the promote never
+    // ran; an older retired-too-late backup and a half-written next-*
+    // from the same swap lie beside it
+    require(StoreFs.rename(s"$dir/current", s"$dir/old-2000"))
+    StoreFs.mkdirs(s"$dir/old-1000")
+    StoreFs.mkdirs(s"$dir/next-2000")
+    assert(findings(StoreFsck.applierState(spark, dir))(
+      "snapshot_missing_with_generations") == 1L)
+    Applier.applyBatch(spark, b2, dir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("key_long", "seq", "value").as[(Long, Long, Double)]
+        .collect().toSet
+    assert(rows(Applier.snapshot(spark, dir).get) ==
+      rows(Bootstrap.applyLog(b1.unionByName(b2))),
+      "the apply after the crash dropped keys of earlier batches")
+    assert(StoreFs.listDirNames(dir) == Seq("current"))
+    assert(findings(StoreFsck.applierState(spark, dir)).values.forall(_ == 0L))
+  }
+
   test("batch-partial store fsck: blind intra-batch append detected") {
     val dir = s"${tmp("fsck")}/sketch"
     val scored = Seq((10L, "a"), (20L, "a"), (80L, "b"))

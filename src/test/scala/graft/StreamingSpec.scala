@@ -46,7 +46,7 @@ class StreamingSpec extends SparkSpec {
     // a streaming reader still sees whole windows in order
     val cpDir = tmp("compactcp")
     Collector.clear()
-    Dispatcher.start(RelayStream.read(spark, logDir, maxFilesPerTrigger = 1),
+    Dispatcher.start(RelayStream.read(spark, logDir, maxFilesPerTrigger = Some(1)),
       new CollectingConsumer, cpDir).awaitTermination()
     assert(Collector.events.size == before.size)
   }
@@ -101,7 +101,7 @@ class StreamingSpec extends SparkSpec {
     RelayStream.writeEventLog(envelope, logDir, filesHint = 8)
 
     Collector.clear()
-    val stream = RelayStream.read(spark, logDir, maxFilesPerTrigger = 2)
+    val stream = RelayStream.read(spark, logDir, maxFilesPerTrigger = Some(2))
     val q = Dispatcher.start(stream, new CollectingConsumer, cpDir)
     q.awaitTermination()
 
@@ -192,7 +192,8 @@ class StreamingSpec extends SparkSpec {
       override def onRollback(cp: Checkpoint): Unit =
         StreamingSpec.rollbacks.incrementAndGet()
     }
-    Dispatcher.start(RelayStream.read(spark, logDir), consumer, tmp("cp6"))
+    Dispatcher.start(RelayStream.read(spark, logDir, maxFilesPerTrigger = Some(1)),
+      consumer, tmp("cp6"))
       .awaitTermination()
     assert(StreamingSpec.rollbacks.get() >= 1)
     // all events still delivered (replay, not loss)
@@ -205,7 +206,7 @@ class StreamingSpec extends SparkSpec {
     val cpDir = tmp("cp7")
     RelayStream.writeEventLog(envelope.where($"scn" < 500), logDir, filesHint = 2)
     graft.streaming.Applier.start(
-      RelayStream.read(spark, logDir, maxFilesPerTrigger = 1), stateDir, cpDir)
+      RelayStream.read(spark, logDir, maxFilesPerTrigger = Some(1)), stateDir, cpDir)
       .awaitTermination()
     val half = graft.streaming.Applier.snapshot(spark, stateDir).get
     val expectHalf = Bootstrap.applyLog(envelope.where($"scn" < 500))
@@ -216,7 +217,7 @@ class StreamingSpec extends SparkSpec {
     // more changes arrive; resume applies incrementally
     RelayStream.writeEventLog(envelope.where($"scn" >= 500), logDir, filesHint = 2)
     graft.streaming.Applier.start(
-      RelayStream.read(spark, logDir, maxFilesPerTrigger = 1), stateDir, cpDir)
+      RelayStream.read(spark, logDir, maxFilesPerTrigger = Some(1)), stateDir, cpDir)
       .awaitTermination()
     val full = graft.streaming.Applier.snapshot(spark, stateDir).get
     val expectFull = Bootstrap.applyLog(envelope)
@@ -250,7 +251,7 @@ class StreamingSpec extends SparkSpec {
     val logDir = tmp("eventlog_ws")
     val cpDir = tmp("streamcp_ws")
     RelayStream.writeEventLog(envelope, logDir, filesHint = 4)
-    val stream = RelayStream.read(spark, logDir, maxFilesPerTrigger = 1)
+    val stream = RelayStream.read(spark, logDir, maxFilesPerTrigger = Some(1))
     val q = RelayStream.windowedStats(stream, "1 minute", "30 seconds")
       .writeStream.format("memory").queryName("win_stats")
       .outputMode("complete")
@@ -274,7 +275,7 @@ class StreamingSpec extends SparkSpec {
     RelayStream.writeEventLog(envelope.where($"scn" < 200), logDir, filesHint = 2)
     RelayStream.writeEventLog(envelope.where($"scn" < 200), logDir, filesHint = 2)
     val q = RelayStream.dedupStream(
-        RelayStream.read(spark, logDir, maxFilesPerTrigger = 1))
+        RelayStream.read(spark, logDir, maxFilesPerTrigger = Some(1)))
       .writeStream.format("memory").queryName("dedup_stream")
       .outputMode("append")
       .option("checkpointLocation", cpDir)
