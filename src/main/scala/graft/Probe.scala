@@ -19,7 +19,10 @@ import graft.pipeline.Dedup
   *                       cost when hunting bench regressions
   *   jobs <query ...>    one warm run per query with a job listener: every
   *                       Spark job's wall and the driver-side gaps between
-  *                       jobs, for harness-heavy queries spread over dozens
+  *                       jobs, for harness-heavy queries spread over dozens;
+  *                       a job without a call site (an AQE stage job) is
+  *                       labelled by its last stage's name, and driver-side
+  *                       time is wall minus the union of job intervals
   *   plan [query ...]    warm seconds plus the executed plan as
   *                       `explain("formatted")` (all queries by default)
   *   drain               the fixed cost of one AvailableNow foreachBatch
@@ -86,6 +89,8 @@ object Probe {
           starts(js.jobId) = (js.time,
             Option(js.properties)
               .flatMap(p => Option(p.getProperty("callSite.short")))
+              .filter(_.nonEmpty)
+              .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name))
               .getOrElse(""))
         override def onJobEnd(je: SparkListenerJobEnd): Unit =
           starts.remove(je.jobId).foreach { case (t0, d) =>
@@ -100,14 +105,17 @@ object Probe {
       println(f"== $name wall=$wall%.2f s, jobs=${sorted.size}")
       var prevEnd = 0L
       var jobSum = 0.0
+      var busy = 0.0 // the union of job intervals: concurrent jobs overlap
       sorted.foreach { case (id, s, e, d) =>
         val gap = if (prevEnd == 0) 0.0 else (s - prevEnd) / 1e3
+        busy += math.max(0L, e - math.max(s, prevEnd)) / 1e3
         prevEnd = math.max(prevEnd, e)
         jobSum += (e - s) / 1e3
         val desc = if (d.length > 60) d.take(60) else d
         println(f"  job $id%4d ${(e - s) / 1e3}%7.3f s  gap=$gap%7.3f s  $desc")
       }
-      println(f"  jobs total=$jobSum%.2f s, driver-side = ${wall - jobSum}%.2f s")
+      println(f"  jobs total=$jobSum%.2f s, busy=$busy%.2f s," +
+        f" driver-side = ${wall - busy}%.2f s")
     }
 
   private def plan(spark: SparkSession, dir: String,

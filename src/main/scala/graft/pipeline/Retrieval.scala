@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Corpus relevance scoring (BM25): rank every document against a term
   * query with the Robertson/Okapi weighting — the retrieval primitive
@@ -52,20 +53,31 @@ object Retrieval {
     val aggs = sum(size(col("__t")).cast("long")).as("__sumdl") +: dfCols
     val stats = toked.agg(count(lit(1)).as("__n"), aggs: _*)
     val scored = toked.crossJoin(stats) // 1-row scalar, broadcast
-    val dl = size(col("__t")).cast("double")
-    val avgdl = col("__sumdl").cast("double") / col("__n").cast("double")
-    val termE4 = terms.zipWithIndex.map { case (t, i) =>
-      val tf = size(filter(col("__t"), x => x === t)).cast("double")
-      // single-log textbook form, mirrored verbatim by the SQL oracle
-      val idfExact = log(
-        ((col("__n") - col(s"__df_$i")).cast("double") + lit(0.5)) /
-          (col(s"__df_$i").cast("double") + lit(0.5)) + lit(1.0))
-      val score = idfExact * ((tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * (dl / avgdl))))
-      floor(score * lit(10000.0) + lit(1e-6)).cast("long")
+    val score = terms.zipWithIndex.map { case (t, i) =>
+      termE4(size(filter(col("__t"), x => x === t)), col(s"__df_$i"),
+        size(col("__t")), k1, b)
     }.reduce(_ + _)
     scored.select(col("doc_id"), size(col("__t")).cast("long").as("dl"),
-      termE4.as("score_e4"))
+      score.as("score_e4"))
+  }
+
+  /** One term's BM25 contribution in integer 1e-4 units, floored before
+    * any sum — the formula of the determinism contract above, written
+    * once for the corpus-scan and the index-served paths. Reads the
+    * corpus stats from the columns `__n` (document count) and `__sumdl`
+    * (total length). Long arithmetic runs before the double casts and
+    * the idf is the single-log textbook form, mirrored verbatim by the
+    * SQL oracle. */
+  private def termE4(tf: Column, df: Column, dl: Column, k1: Double,
+      b: Double): Column = {
+    val tfD = tf.cast("double")
+    val avgdl = col("__sumdl").cast("double") / col("__n").cast("double")
+    val idfExact = log(
+      ((col("__n") - df).cast("double") + lit(0.5)) /
+        (df.cast("double") + lit(0.5)) + lit(1.0))
+    floor(idfExact * ((tfD * lit(k1 + 1.0)) /
+      (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * (dl.cast("double") / avgdl)))) *
+      lit(10000.0) + lit(1e-6)).cast("long")
   }
 
   /** Top-k retrieval: BM25-score the corpus and keep the k best
@@ -282,14 +294,41 @@ object Retrieval {
       "overwrite")()
   }
 
+  /** Declared schema of the `postings` table ([[positionalPostings]]). */
+  val PostingsSchema: StructType =
+    StructType.fromDDL("token STRING, doc_id BIGINT, pos BIGINT")
+
+  /** Declared schema of the `doclens` table ([[docLengths]]). */
+  val DocLensSchema: StructType = StructType.fromDDL("doc_id BIGINT, dl BIGINT")
+
   /** The LIVE postings of a persisted index (feed to [[phraseSearch]] /
     * [[proximitySearch]] / [[bm25TopKFromIndex]]): the stored rows minus
     * any [[tombstoneDocs]] takedowns — no takedowns, no plan overhead;
-    * otherwise one broadcast anti-join on doc_id (request-sized set). */
+    * otherwise one broadcast anti-join on doc_id (request-sized set).
+    * Read with [[PostingsSchema]], so the read starts no Parquet
+    * schema-inference job; a batch-addressed store's `batch` column
+    * still comes from partition discovery. */
   def readPostingsIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
+      dir: String): DataFrame =
+    readLive(spark, dir, "postings", PostingsSchema, None)
+
+  /** The live rows of store table `table` read with its declared
+    * `schema` — every reader of this store goes through here, so no
+    * store read infers a schema (the tombstone set has its own,
+    * [[Tombstones.Schema]]). `asOf` = (max batch, caller) keeps only
+    * batches up to the pin and refuses a store without the
+    * batch-addressed layout. */
+  private def readLive(spark: org.apache.spark.sql.SparkSession,
+      dir: String, table: String, schema: StructType,
+      asOf: Option[(Long, String)]): DataFrame = {
     val t = VersionedStore.tableRoot(dir)
-    Tombstones.filterLive(spark.read.parquet(s"$t/postings"), t, "doc_id")
+    val stored = spark.read.schema(schema).parquet(s"$t/$table")
+    val rows = asOf.fold(stored) { case (maxBatch, who) =>
+      require(stored.columns.contains("batch"),
+        s"$who: $dir is not batch-addressed (flat store)")
+      stored.where(col("batch") <= maxBatch)
+    }
+    Tombstones.filterLive(rows, t, "doc_id")
   }
 
   /** Record a takedown against a [[writePostingsIndex]] store: the docs
@@ -323,26 +362,17 @@ object Retrieval {
     * resurrected deleted docs would defeat it — so as-of pins the
     * append history, never the delete history. */
   def readPostingsIndexAsOf(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(dir)
-    val stored = spark.read.parquet(s"$t/postings")
-    require(stored.columns.contains("batch"),
-      s"readPostingsIndexAsOf: $dir is not batch-addressed (flat store)")
-    Tombstones.filterLive(stored.where(col("batch") <= maxBatch),
-      t, "doc_id")
-  }
+      dir: String, maxBatch: Long): DataFrame =
+    readLive(spark, dir, "postings", PostingsSchema,
+      Some((maxBatch, "readPostingsIndexAsOf")))
 
   /** As-of twin of [[readDocLengths]] for batch-addressed stores —
-    * pins BM25's corpus statistics to the same snapshot. */
+    * pins BM25's corpus statistics to the same snapshot. Declared
+    * schema, like every store read here. */
   def readDocLengthsAsOf(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(dir)
-    val stored = spark.read.parquet(s"$t/doclens")
-    require(stored.columns.contains("batch"),
-      s"readDocLengthsAsOf: $dir is not batch-addressed (flat store)")
-    Tombstones.filterLive(stored.where(col("batch") <= maxBatch),
-      t, "doc_id")
-  }
+      dir: String, maxBatch: Long): DataFrame =
+    readLive(spark, dir, "doclens", DocLensSchema,
+      Some((maxBatch, "readDocLengthsAsOf")))
 
   /** ONE time-travel coordinate for a postings store — the retrieval
     * twin of [[Ann.AnnPin]]: `gen` is the [[VersionedStore]] generation
@@ -446,9 +476,9 @@ object Retrieval {
     // across the GC and post-compaction [[appendToPostingsIndexBatch]]
     // writes keep working. Batched files cluster by (batch, token) so
     // each batch dir keeps the token-range point-read discipline.
-    val batched = spark.read
-      .parquet(s"${VersionedStore.tableRoot(dir)}/postings")
-      .columns.contains("batch")
+    // (detected by listing the batch dirs: no read, no job)
+    val batched = VersionedStore.batchIdsOf(
+      s"${VersionedStore.tableRoot(dir)}/postings").nonEmpty
     def shaped(df: DataFrame): DataFrame =
       if (batched)
         df.repartitionByRange(numFiles, col("batch"), col("token"))
@@ -475,12 +505,11 @@ object Retrieval {
 
   /** The LIVE doc-length norms of a persisted index (tombstone-aware,
     * like [[readPostingsIndex]] — BM25's N/avgdl/df derive from this
-    * table, so takedowns shrink the corpus statistics too). */
+    * table, so takedowns shrink the corpus statistics too). Read with
+    * [[DocLensSchema]]: no schema-inference job. */
   def readDocLengths(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val t = VersionedStore.tableRoot(dir)
-    Tombstones.filterLive(spark.read.parquet(s"$t/doclens"), t, "doc_id")
-  }
+      dir: String): DataFrame =
+    readLive(spark, dir, "doclens", DocLensSchema, None)
 
   /** BM25 top-k served FROM a persisted [[writePostingsIndex]] store —
     * bit-identical scores to [[bm25TopK]] (same per-term floor-then-sum
@@ -488,34 +517,27 @@ object Retrieval {
     * text: term frequencies come from the token-pruned postings scan
     * (only the query terms' index rows are read — the high-QPS serving
     * path [[bm25]]'s documented per-query corpus scan is wrong for),
-    * document frequencies from a terms-sized aggregate over those same
+    * document frequencies from a one-row aggregate over those same
     * rows, and length norms from the doclens table (doc-count sized).
     * Reference analogue: serving reads off the maintained index, never
     * the source (ScnIndex.java:623 skip-scan vs full buffer scan).
     *
-    * Scale shape: the corpus-sized inputs are ONE pruned postings scan
-    * and one doclens scan; the (token, doc) aggregate and the per-doc
-    * score sum are map-side-combined; df is broadcast (≤ |terms| rows);
-    * N/avgdl is a broadcast scalar; the final top-k is
-    * TakeOrderedAndProject, never a global sort. */
+    * Scale shape ([[bm25IndexCore]]): the corpus-sized inputs are ONE
+    * pruned postings scan, aggregated per doc with map-side combine and
+    * shared by the df row and the scoring join, and the doclens table;
+    * df and N/avgdl are broadcast scalar rows; the final top-k is
+    * TakeOrderedAndProject, never a global sort. Store tables are read
+    * with their declared schemas ([[readPostingsIndex]],
+    * [[readDocLengths]]), so no read starts an inference job. */
   def bm25TopKFromIndex(postings: DataFrame, doclens: DataFrame,
       terms: Seq[String], k: Int, k1: Double = 1.2, b: Double = 0.75)
       : DataFrame = {
     require(terms.nonEmpty, "bm25TopKFromIndex needs at least one term")
     require(terms.distinct.size == terms.size, s"duplicate terms: $terms")
     require(k > 0, s"k must be positive: $k")
-    val (stats, tf, dfs, contrib) =
-      bm25IndexCore(postings, doclens, terms, k1, b)
-    val perDoc = tf.join(broadcast(dfs), "token")
-      .join(doclens, "doc_id")
-      .crossJoin(stats) // 1-row scalar, broadcast
-      .select(col("doc_id"), contrib.as("__c"))
-      .groupBy(col("doc_id")).agg(sum(col("__c")).as("__s"))
-    // membership stays intact: docs matching no term score 0, exactly
-    // as bm25 scores every document
-    doclens.join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dl"),
-        coalesce(col("__s"), lit(0L)).as("score_e4"))
+    val (scored, score) = bm25IndexCore(postings, doclens, terms, k1, b)
+    scored.select(col("doc_id"), col("dl"),
+        score(terms.indices).as("score_e4"))
       .orderBy(col("score_e4").desc, col("doc_id"))
       .limit(k)
       .withColumn("rank", Ranks.globalRowNumber(col("doc_id"),
@@ -680,15 +702,16 @@ object Retrieval {
     * norms are corpus properties, shared across the batch; per-term
     * contributions floored before the per-(query, doc) sum).
     *
-    * Scale shape: the union of the batch's terms prunes the postings
-    * scan once (the query batch is driver-sized by definition, so the
-    * probe is a pushed `IN` literal — the Ann-codebook pattern); the
-    * query⋈term map is broadcast; the per-(query, doc) aggregate is
-    * map-side combined; the top-k rank is a per-query window (hash
-    * shuffle on query_id — no global sort). The zero-score membership
-    * contract costs doclens × |batch| narrow rows — right for a batch
-    * of tens of queries; a thousand-query batch would drop membership
-    * and rank positive-score docs only. */
+    * Scale shape: the same [[bm25IndexCore]] as the single query, over
+    * the union of the batch's terms (the query batch is driver-sized by
+    * definition, so the probe is a pushed `IN` literal — the
+    * Ann-codebook pattern); each scored doc row fans out to one
+    * (query, score) row per query, and the top-k rank is a per-query
+    * window (hash shuffle on query_id — no global sort). The zero-score
+    * membership contract costs doclens × |batch| narrow rows — right
+    * for a batch of tens of queries; a thousand-query batch would drop
+    * membership and rank positive-score docs only. Declared-schema
+    * reads, as for the single query: no inference job. */
   def bm25TopKFromIndexBatch(postings: DataFrame, doclens: DataFrame,
       queries: Seq[(Long, Seq[String])], k: Int, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
@@ -700,58 +723,59 @@ object Retrieval {
         s"bm25TopKFromIndexBatch: query $qid terms must be non-empty, distinct")
     }
     require(k > 0, s"k must be positive: $k")
-    val spark = postings.sparkSession
-    import spark.implicits._
     val allTerms = queries.flatMap(_._2).distinct
-    val qt = queries.flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
-      .toDF("query_id", "token")
-    val qids = queries.map(_._1).toDF("query_id")
-    val (stats, tf, dfs, contrib) =
-      bm25IndexCore(postings, doclens, allTerms, k1, b)
-    val perDoc = tf.join(broadcast(qt), "token")
-      .join(broadcast(dfs), "token")
-      .join(doclens, "doc_id")
-      .crossJoin(stats)
-      .select(col("query_id"), col("doc_id"), contrib.as("__c"))
-      .groupBy(col("query_id"), col("doc_id")).agg(sum(col("__c")).as("__s"))
+    val (scored, score) = bm25IndexCore(postings, doclens, allTerms, k1, b)
+    val perQuery = queries.map { case (qid, ts) =>
+      struct(lit(qid).as("query_id"),
+        score(ts.map(allTerms.indexOf)).as("score_e4"))
+    }
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score_e4").desc, col("doc_id"))
-    doclens.crossJoin(broadcast(qids))
-      .join(perDoc, Seq("query_id", "doc_id"), "left")
-      .select(col("query_id"), col("doc_id"), col("dl"),
-        coalesce(col("__s"), lit(0L)).as("score_e4"))
+    scored.select(col("doc_id"), col("dl"), inline(array(perQuery: _*)))
+      .select(col("query_id"), col("doc_id"), col("dl"), col("score_e4"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
   }
 
-  /** Shared index-side BM25 scoring pieces: the 1-row corpus stats
-    * (N, Σdl), the token-pruned (token, doc) term frequencies, the
-    * per-token document frequencies, and the per-row integer score
-    * contribution. The bit-exactness contract — every factor mirrors
-    * [[bm25]]'s expression structure exactly (long arithmetic before
-    * the double casts, single-log idf, per-term floor BEFORE the sum),
-    * so libm/fp behavior cannot diverge — lives HERE once for both the
-    * single-query and batch serving paths. */
+  /** The index-side BM25 core both serving paths share. ONE token-pruned
+    * postings scan is aggregated per `doc_id` into one term-frequency
+    * column `__tf_i` per term (`count(when(token === t_i, 1))`); the
+    * document frequencies are a one-row aggregate of that same frame
+    * (its rows are unique per doc, so a doc with tf_i > 0 counts once
+    * toward df_i), and (N, Σdl) a one-row aggregate of `doclens`.
+    * Returns `doclens LEFT JOIN perDoc` crossed with both scalar rows,
+    * and the score of a subset of term indices over it: Σ_i
+    * [[termE4]](tf_i, df_i), 0 for a doc matching no term (membership
+    * stays intact, exactly as [[bm25]] scores every document). A term
+    * a matched doc lacks contributes floor(1e-6) = 0, as in the scan.
+    *
+    * Scale shape: the per-doc frame feeds the df row and the scoring
+    * join through one shuffle, which the executed plan reuses — the
+    * postings are scanned once. A doc indexed without its length norm
+    * (an interrupted flat append) counts toward df but is not scored;
+    * a null doc_id is no document (it has no norm to join) and counts
+    * toward nothing. */
   private def bm25IndexCore(postings: DataFrame, doclens: DataFrame,
       allTerms: Seq[String], k1: Double, b: Double)
-      : (DataFrame, DataFrame, DataFrame, org.apache.spark.sql.Column) = {
-    val stats = doclens.agg(count(lit(1)).as("__n"),
-      sum(col("dl")).as("__sumdl"))
-    val tf = postings.where(col("token").isin(allTerms: _*))
-      .groupBy(col("token"), col("doc_id"))
-      .agg(count(lit(1)).as("__tf"))
-    // tf rows are unique per (token, doc) ⇒ count = document frequency
-    val dfs = tf.groupBy(col("token")).agg(count(lit(1)).as("__df"))
-    val avgdl = col("__sumdl").cast("double") / col("__n").cast("double")
-    val tfD = col("__tf").cast("double")
-    val dlD = col("dl").cast("double")
-    val idfExact = log(
-      ((col("__n") - col("__df")).cast("double") + lit(0.5)) /
-        (col("__df").cast("double") + lit(0.5)) + lit(1.0))
-    val contrib = floor(idfExact * ((tfD * lit(k1 + 1.0)) /
-      (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * (dlD / avgdl)))) *
-      lit(10000.0) + lit(1e-6)).cast("long")
-    (stats, tf, dfs, contrib)
+      : (DataFrame, Seq[Int] => Column) = {
+    val tfs = allTerms.zipWithIndex.map { case (t, i) =>
+      count(when(col("token") === t, 1)).as(s"__tf_$i")
+    }
+    // the explicit not-null is the one the scoring join would infer on
+    // its side only: both consumers of perDoc must plan the same shuffle
+    val perDoc = postings
+      .where(col("token").isin(allTerms: _*) && col("doc_id").isNotNull)
+      .groupBy(col("doc_id")).agg(tfs.head, tfs.tail: _*)
+    val dfs = allTerms.indices.map(i =>
+      count(when(col(s"__tf_$i") > 0, 1)).as(s"__df_$i"))
+    val scored = doclens.join(perDoc, Seq("doc_id"), "left")
+      .crossJoin(broadcast(doclens.agg(count(lit(1)).as("__n"),
+        sum(col("dl")).as("__sumdl"))))
+      .crossJoin(broadcast(perDoc.agg(dfs.head, dfs.tail: _*)))
+    def score(terms: Seq[Int]): Column = coalesce(terms.map(i =>
+      termE4(col(s"__tf_$i"), col(s"__df_$i"), col("dl"), k1, b))
+      .reduce(_ + _), lit(0L))
+    (scored, score)
   }
 
   /** Reciprocal-rank fusion of N rankings — the standard hybrid-search

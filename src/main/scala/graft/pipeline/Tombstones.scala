@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Takedown (delete) discipline for the persisted append-only stores
   * (positional postings, ANN cells, signature tables): a store records
@@ -35,6 +36,11 @@ import org.apache.spark.sql.functions._
 object Tombstones {
 
   private def dirOf(storeDir: String) = s"$storeDir/tombstones"
+
+  /** Declared schema of a tombstone set — what [[writeSet]] writes and
+    * what every reader of the set passes, so reading it starts no
+    * Parquet schema-inference job. */
+  val Schema: StructType = StructType.fromDDL("id BIGINT")
 
   /** Record a takedown: append `ids` to the store's tombstone set.
     * Driver-sized form — legal/compliance requests arrive by the
@@ -168,10 +174,10 @@ object Tombstones {
     * a local-File probe would return None for a store that HAS recorded
     * takedowns — silently serving legally-erased docs as live, the
     * exact failure [[appendDf]]'s loud-failure contract exists to
-    * prevent. */
+    * prevent. Read with [[Schema]]. */
   def readOpt(spark: SparkSession, storeDir: String): Option[DataFrame] =
     if (StoreFs.hasFileWithSuffix(dirOf(storeDir), ".parquet"))
-      Some(spark.read.parquet(dirOf(storeDir)).select("id"))
+      Some(spark.read.schema(Schema).parquet(dirOf(storeDir)))
     else None
 
   /** The live rows of a store table: `rows` minus the tombstoned ids.

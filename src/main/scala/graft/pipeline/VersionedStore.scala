@@ -428,7 +428,8 @@ object VersionedStore {
       // would otherwise serve the erased ids
       val flatSet = s"$root/tombstones"
       if (StoreFs.hasFileWithSuffix(flatSet, ".parquet")) {
-        val flatIds = spark.read.parquet(flatSet).select("id").distinct()
+        val flatIds = spark.read.schema(Tombstones.Schema).parquet(flatSet)
+          .distinct()
         val all = listGens(root)
         val targets = (all.collect { case (g, true) => g } ++
           all.collect {

@@ -48,7 +48,12 @@ object Applier {
     * `current`; the next apply renames that `old-*` back before merging
     * rather than rebuilding the state from its own batch alone. A
     * `next-*` is never promoted here: it may be incomplete. One listing
-    * of `stateDir` per apply. */
+    * of `stateDir` per apply.
+    *
+    * `current` is read with `batch.schema`, the schema it was written
+    * with ([[Bootstrap.applyLog]] keeps the batch's columns), so the
+    * read starts no Parquet schema-inference job. A state written under
+    * a different stream schema is outside this contract. */
   def applyBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
       keyCols: Seq[String] = Seq("key_long")): Unit = {
     import graft.pipeline.StoreFs
@@ -64,8 +69,9 @@ object Applier {
       s"applyBatch: cannot restore $o to $cur"))
     val hasCurrent = names.contains("current") || restored.isDefined
     val merged =
-      if (hasCurrent) Bootstrap.applyLog(spark.read.parquet(cur)
-        .unionByName(batch, allowMissingColumns = true), keyCols)
+      if (hasCurrent) Bootstrap.applyLog(
+        spark.read.schema(batch.schema).parquet(cur).unionByName(batch),
+        keyCols)
       else Bootstrap.applyLog(batch, keyCols)
     val t = math.max(System.currentTimeMillis(),
       gens.map(_._2).maxOption.fold(0L)(_ + 1))

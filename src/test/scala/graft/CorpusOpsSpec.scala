@@ -627,22 +627,47 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("bm25TopKFromIndex is bit-identical to bm25TopK, zero-score docs kept") {
     import graft.pipeline.Retrieval
-    val dir = java.nio.file.Files.createTempDirectory("pidx2").toString
+    /** The index-served top-k of `docs` minus `takedowns`, asserted equal
+      * (rank order) to bm25TopK over the live docs' text. */
+    def same(docs: Seq[(Long, String)], takedowns: Seq[Long],
+        terms: Seq[String], k: Int): Seq[(Long, Long, Long, Long)] = {
+      val dir = java.nio.file.Files.createTempDirectory("pidx2").toString
+      Retrieval.writePostingsIndex(docs.toDF("doc_id", "text"), dir)
+      if (takedowns.nonEmpty) Retrieval.tombstoneDocs(spark, dir, takedowns)
+      val fromIndex = Retrieval.bm25TopKFromIndex(
+        Retrieval.readPostingsIndex(spark, dir),
+        Retrieval.readDocLengths(spark, dir), terms, k)
+        .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._4)
+      val live = docs.filterNot(d => takedowns.contains(d._1))
+      val fromScan = Retrieval.bm25TopK(live.toDF("doc_id", "text"), terms, k)
+        .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._4)
+      assert(fromIndex == fromScan, s"terms $terms, k $k, takedowns $takedowns")
+      fromIndex
+    }
     val docs = Seq((0L, "apple banana apple"), (1L, "banana cherry"),
-      (2L, "durian elderberry fig grape"), (3L, "apple")
-    ).toDF("doc_id", "text")
-    Retrieval.writePostingsIndex(docs, dir)
+      (2L, "durian elderberry fig grape"), (3L, "apple"))
     // k exceeds the positive-score docs, so membership (doc 2 at score
     // 0) must survive the index path exactly as the scan path keeps it
-    val fromIndex = Retrieval.bm25TopKFromIndex(
-      Retrieval.readPostingsIndex(spark, dir),
-      Retrieval.readDocLengths(spark, dir),
-      Seq("apple", "cherry"), k = 4)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val fromScan = Retrieval.bm25TopK(docs, Seq("apple", "cherry"), k = 4)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(fromIndex == fromScan)
-    assert(fromIndex.exists { case (id, _, score, _) => id == 2L && score == 0L })
+    val base = same(docs, Nil, Seq("apple", "cherry"), k = 4)
+    assert(base.exists { case (id, _, score, _) => id == 2L && score == 0L })
+    // a term absent from the store: df 0, contributes 0 everywhere
+    assert(same(docs, Nil, Seq("apple", "zebra"), k = 4).map(_._1) ==
+      same(docs, Nil, Seq("apple"), k = 4).map(_._1))
+    // k above the live count: every live doc, once
+    assert(same(docs, Seq(1L), Seq("banana"), k = 10).map(_._1).sorted ==
+      Seq(0L, 2L, 3L))
+    // takedowns leave N, avgdl and df: with doc 0 gone, "apple" is rarer
+    // and doc 3 scores higher than over the full store
+    val taken = same(docs, Seq(0L), Seq("apple", "cherry"), k = 4)
+    assert(!taken.exists(_._1 == 0L))
+    def scoreOf(rows: Seq[(Long, Long, Long, Long)], id: Long) =
+      rows.find(_._1 == id).get._3
+    assert(scoreOf(taken, 3L) > scoreOf(base, 3L))
+    // a head term in every doc of equal length: idf ≈ 0.5/N, so each
+    // contribution floors to 0 and the top-k fills by doc_id
+    val head = (0L until 6000L).map(i => (i, s"the w${i % 7}"))
+    assert(same(head, Nil, Seq("the"), k = 5) ==
+      (0L until 5L).map(i => (i, 2L, 0L, i + 1)))
   }
 
   test("contaminationAuditStreamBatch: cap decided on the RUNNING global df") {

@@ -317,6 +317,24 @@ class PlansSpec extends SparkSpec {
     assert(a == b, "index-served BM25 diverged from the corpus-scan path")
   }
 
+  test("index-served BM25 executes ONE postings scan, single query and batch") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+    // the per-doc term frequencies feed both the df row and the scoring
+    // join; the executed plan must reuse their shuffle, not scan twice
+    for (q <- Seq("q_bm25_index", "q_bm25_multi")) {
+      val out = SparkEntry.queries(q)(spark, sf())
+      out.collect()
+      val scans = Plans.collectWithSubqueries(out.queryExecution.executedPlan) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.getName == "postings") => s
+      }
+      assert(scans.size == 1,
+        s"$q: ${scans.size} postings scans in\n${out.queryExecution.executedPlan}")
+    }
+  }
+
   test("batch BM25 pushes the union of the batch's terms into one scan") {
     val out = SparkEntry.queries("q_bm25_multi")(spark, sf())
     val plan = out.queryExecution.executedPlan.toString

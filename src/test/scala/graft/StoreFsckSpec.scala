@@ -364,6 +364,35 @@ class StoreFsckSpec extends SparkSpec {
     assert(findings(StoreFsck.applierState(spark, dir)).values.forall(_ == 0L))
   }
 
+  test("applier: each batch applied over the existing state equals a full replay") {
+    import graft.operators.Bootstrap
+    import graft.pipeline.StoreFs
+    import graft.streaming.Applier
+    val dir = s"${tmp("apply")}/state"
+    StoreFs.mkdirs(dir)
+    // `current` is read back with the batch's own schema: nulls, strings
+    // and doubles must survive the round trip through the state files
+    val batches = Seq(
+      Seq((100L, 0L, 1L, "UPSERT", Some(10.0), "a"),
+        (100L, 1L, 2L, "UPSERT", None, "b"),
+        (101L, 2L, 4L, "UPSERT", Some(40.0), null)),
+      Seq((200L, 3L, 1L, "UPSERT", None, "a2"),
+        (200L, 4L, 2L, "DELETE", Some(0.0), "b"),
+        (200L, 5L, 3L, "UPSERT", Some(30.0), "c")),
+      Seq((300L, 6L, 2L, "UPSERT", Some(21.0), null),
+        (300L, 7L, 4L, "DELETE", None, null)))
+      .map(_.toDF("scn", "seq", "key_long", "opcode", "value", "tag"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("key_long", "seq", "value", "tag").collect().map(_.toSeq).toSet
+    batches.indices.foreach { i =>
+      Applier.applyBatch(spark, batches(i), dir)
+      assert(rows(Applier.snapshot(spark, dir).get) ==
+        rows(Bootstrap.applyLog(batches.take(i + 1).reduce(_ unionByName _))),
+        s"state after batch $i differs from a full replay")
+    }
+    assert(StoreFs.listDirNames(dir) == Seq("current"))
+  }
+
   test("batch-partial store fsck: blind intra-batch append detected") {
     val dir = s"${tmp("fsck")}/sketch"
     val scored = Seq((10L, "a"), (20L, "a"), (80L, "b"))
