@@ -930,7 +930,7 @@ object ScaleProbe {
           val (depth, ran) = L.reclusterIfNeeded(spark, out,
             "l_orderkey", "l_partkey", maxDepth = 2, numFiles = 2 * nf)
           require(ran, s"recluster did not trigger: depth $depth")
-          Bench.force(spark.read.parquet(out)
+          Bench.force(L.read(spark, out)
             .where(col("l_orderkey").between(100, 1200) &&
               col("l_partkey").between(20, 150))
             .select(col("l_orderkey"), col("l_partkey"),

@@ -882,8 +882,7 @@ object Ann {
     * cell probe keeps its pruning). The rewrite is one fresh-generation
     * [[VersionedStore.publish]] (codebook carried over unchanged, live
     * cells only) followed by [[VersionedStore.gc]] — atomic, the old
-    * overlay retired with its generation; a legacy flat root migrates
-    * here exactly as a rebuild migrates it. The codebook's CONTENT is
+    * overlay retired with its generation. The codebook's CONTENT is
     * untouched: centroids are corpus statistics, not memberships, and
     * drift only on a full [[writeIndex]] retrain. */
   def compactIndexCells(spark: org.apache.spark.sql.SparkSession,
@@ -926,8 +925,7 @@ object Ann {
     * GC exactly like [[compactIndexCells]]) land as ONE
     * [[VersionedStore.publish]] followed by [[VersionedStore.gc]] — the
     * one commit path of every store rewrite, with no intermediate state
-    * for a reader to see. A legacy flat root migrates here exactly as
-    * a rebuild migrates it.
+    * for a reader to see.
     *
     * Duplicate-heavy cells may refuse to split (identical vectors share
     * every argmin, so all members follow one sub-centroid); the returned
@@ -1047,10 +1045,9 @@ object Ann {
     *
     * Commit mirrors [[rebalanceCells]]: the survivor codebook and the
     * rewritten cells land as one [[VersionedStore.publish]] followed by
-    * [[VersionedStore.gc]], and a legacy flat root migrates on it. The
-    * rewrite keeps live rows only, so it subsumes takedown GC like every
-    * rewrite here. Like compaction, the pass assumes appends are
-    * quiesced.
+    * [[VersionedStore.gc]]. The rewrite keeps live rows only, so it
+    * subsumes takedown GC like every rewrite here. Like compaction, the
+    * pass assumes appends are quiesced.
     *
     * Loud floor guard: a `minCellSize` no cell reaches would absorb the
     * whole codebook into nothing — that is a retrain

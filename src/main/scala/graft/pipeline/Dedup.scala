@@ -639,8 +639,7 @@ object Dedup {
     * [[VersionedStore.publish]] of the live rows followed by
     * [[VersionedStore.gc]] — the one commit path of every store
     * rewrite; the old overlay stays behind in the retired generations
-    * the gc sweeps, and a legacy flat root migrates here exactly as a
-    * rebuild migrates it. A batch-addressed store keeps its FULL
+    * the gc sweeps. A batch-addressed store keeps its FULL
     * `batch=<id>` layout through the rewrite — the
     * [[Ann.compactIndexCells]] rule: a row's batch identity is
     * preserved, never rolled up, so as-of pins stay exact across the GC
@@ -887,6 +886,36 @@ object Dedup {
         (col("n_shared") * lit(10000L) / col("eval_grams"))
           .cast("long").as("leak_bp"))
 
+  /** Compact a [[contaminationAuditStreamBatch]] df store: a long
+    * stream leaves one (g, df_part) partial file per micro-batch, and
+    * every trigger re-aggregates all of them. Compaction rolls the
+    * partials up into their sums (one row per gram) under the RESERVED
+    * NUMERIC batch id -1 — post-compaction batches keep landing in their
+    * own subdirs and the read side stays a uniform partitioned scan (-1
+    * never collides with a foreachBatch id, which start at 0) — published
+    * as the next generation and followed by [[VersionedStore.gc]]. A
+    * ROLLUP compaction, unlike the postings store's pure re-partition:
+    * the merge is `sum(df_part)`, exact by associativity, so audits
+    * before and after are identical. Run it on the same cadence a
+    * deployment compacts its event log. */
+  def compactGramDfStore(spark: org.apache.spark.sql.SparkSession,
+      dir: String, numFiles: Int = 1): Unit = {
+    require(numFiles > 0, s"compactGramDfStore: numFiles $numFiles")
+    VersionedStore.publish(dir, Map(
+      s"${QuantileStore.PartialsTable}/batch=-1" -> readGramDf(spark, dir)
+        .groupBy("g").agg(sum(col("df_part")).as("df_part"))
+        .coalesce(numFiles)))
+    VersionedStore.gc(dir, keep = 0)
+  }
+
+  /** The (g, df_part) partials of the current generation, batch column
+    * dropped. */
+  private def readGramDf(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    spark.read.parquet(
+      s"${VersionedStore.tableRoot(dir)}/${QuantileStore.PartialsTable}")
+      .select("g", "df_part")
+
   /** One trigger of a CAPPED streaming contamination audit, with the df
     * cap decided on the RUNNING GLOBAL train-side document frequency —
     * the semantics a per-batch cap cannot have (a batch-local df
@@ -896,7 +925,9 @@ object Dedup {
     *   1. the batch is shingled ONCE (plan-cached — both consumers
     *      below share the kernel pass) and its per-gram document
     *      counts APPEND to `dfStoreDir` (narrow (g, df_part) rows —
-    *      the store is the running df sketch of everything streamed);
+    *      the store is the running df sketch of everything streamed,
+    *      a one-table [[VersionedStore]] in the batch-partial layout
+    *      [[QuantileStore]] shares);
     *   2. global df = the store aggregated (batch included); grams
     *      over `maxGramDf` are excluded from this batch's pairing by
     *      an anti-join;
@@ -908,71 +939,11 @@ object Dedup {
     * that crosses it onward — deterministic given batch order, which
     * checkpointed streaming guarantees. `batchId` (foreachBatch hands
     * it over) makes the append IDEMPOTENT under at-least-once replay:
-    * each batch's partial lands in its own `batch=<id>` subdir with
-    * overwrite semantics, so a retried trigger rewrites rather than
-    * double-counts. Same append-listener store discipline as the
-    * minhash/postings families (reference: ScnIndex.java:94 maintained
-    * on append). */
-  /** Compact a [[contaminationAuditStreamBatch]] df store: a long
-    * stream leaves one (g, df_part) partial file per micro-batch, and
-    * every trigger re-aggregates all of them. Compaction rolls the
-    * partials up into their sums (one row per gram) and swaps the
-    * result in atomically — a ROLLUP compaction, unlike the postings
-    * store's pure re-partition: the merge is `sum(df_part)`, exact by
-    * associativity, so audits before and after are identical. Run it
-    * on the same cadence a deployment compacts its event log. */
-  def compactGramDfStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, numFiles: Int = 1): Unit = {
-    require(numFiles > 0, s"compactGramDfStore: numFiles $numFiles")
-    // MIGRATION (one-time): stores compacted by the pre-r10 code rolled
-    // up under the STRING id `batch=compacted`; mixing it with numeric
-    // ids flips partition discovery's inferred type (or fails the read
-    // outright), so the legacy dir renames to the reserved -1 here —
-    // before the rollup read — and can never coexist with a real -1
-    // (only old code wrote the string form, and old code never wrote -1)
-    if (StoreFs.exists(s"$dir/batch=compacted")) {
-      require(!StoreFs.exists(s"$dir/batch=-1"),
-        s"compactGramDfStore: $dir carries BOTH batch=compacted and" +
-          " batch=-1 — mixed-era compactions; merge them manually")
-      require(StoreFs.rename(s"$dir/batch=compacted", s"$dir/batch=-1"),
-        s"compactGramDfStore: cannot migrate $dir/batch=compacted")
-    }
-    val tmp = s"$dir.compact.${ProcessHandle.current.pid}"
-    // the rolled-up partial keeps the batch=<value> layout under the
-    // RESERVED NUMERIC id -1: post-compaction batches keep landing in
-    // their own subdirs and the read side stays a uniform partitioned
-    // scan. The value must stay numeric — a string like "compacted"
-    // would flip the discovered `batch` partition column from long to
-    // string for every subsequent read, breaking (or silently
-    // lexicographic-ordering) any batch-pinned `col("batch") <= n`
-    // read. -1 can never collide with a real batch id (foreachBatch
-    // ids start at 0).
-    spark.read.parquet(dir)
-      .select("g", "df_part")
-      .groupBy("g").agg(sum(col("df_part")).as("df_part"))
-      .coalesce(numFiles).write.parquet(s"$tmp/batch=-1")
-    swapDir(dir, tmp)
-  }
-
-  /** Two-rename directory swap with failure restore: dir moves aside,
-    * tmp promotes; if the promote fails the original is moved back, so
-    * the live path is never left missing (true multi-file atomicity
-    * needs a table format — this is the honest filesystem analog).
-    * Renames go through the Hadoop FileSystem API ([[StoreFs.rename]])
-    * so compaction works on any store URI scheme Spark can write, not
-    * just a POSIX-local path — `java.io.File.renameTo` on hdfs://
-    * or s3a:// would fail (or worse, silently no-op) and strand the
-    * compaction tmp. */
-  private[graft] def swapDir(dir: String, tmp: String): Unit = {
-    val bak = s"$dir.old.${ProcessHandle.current.pid}"
-    require(StoreFs.rename(dir, bak), s"compact: cannot displace $dir")
-    if (!StoreFs.rename(tmp, dir)) {
-      StoreFs.rename(bak, dir) // restore — leave the store serving its old state
-      throw new IllegalStateException(s"compact: cannot promote $tmp")
-    }
-    StoreFs.deleteRecursive(bak)
-  }
-
+    * each batch's partial lands in its own `partials/batch=<id>` delta
+    * with overwrite semantics ([[VersionedStore.append]]), so a retried
+    * trigger rewrites rather than double-counts. Same append-listener
+    * store discipline as the minhash/postings families (reference:
+    * ScnIndex.java:94 maintained on append). */
   def contaminationAuditStreamBatch(batch: DataFrame, evalGrams: DataFrame,
       dfStoreDir: String, maxGramDf: Int, batchId: Long, shingleN: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
@@ -987,11 +958,11 @@ object Dedup {
     // a retried trigger must REWRITE its own partial, not append a
     // second copy (a blind append would double the replayed grams'
     // global df and suppress still-rare grams forever)
-    tg.groupBy("g").agg(count(lit(1)).as("df_part"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dfStoreDir/batch=$batchId")
-    val overCap = spark.read.parquet(dfStoreDir)
-      .select("g", "df_part") // drop the batch partition column
+    VersionedStore.append(dfStoreDir,
+      Seq(s"${QuantileStore.PartialsTable}/batch=$batchId" -> (() =>
+        tg.groupBy("g").agg(count(lit(1)).as("df_part")).coalesce(1))),
+      "overwrite")()
+    val overCap = readGramDf(spark, dfStoreDir)
       .groupBy("g").agg(sum(col("df_part")).as("__df"))
       .where(col("__df") > maxGramDf).select("g")
     val tgKept = tg.join(overCap, Seq("g"), "left_anti")

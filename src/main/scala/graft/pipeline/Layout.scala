@@ -22,10 +22,26 @@ import org.apache.spark.sql.functions._
   *
   * Same discipline as every layout op here (the Store rewrite, postings
   * compaction): rewrite ONCE on the cluster key, serve many scans.
+  * A layout is a one-table [[VersionedStore]]: a full write or a
+  * recluster publishes the next generation (then gc), an append lands
+  * in the current one, and every reader resolves the generation through
+  * [[read]] / [[footerBounds]] — callers never see the generation dir.
   * Reference analogue: the buffer's two-level (scn, index) access
   * discipline, ScnIndex.java:94 — re-expressed as lake file layout.
   */
 object Layout {
+
+  /** The layout's one table inside its generation. */
+  private val Table = "rows"
+
+  /** The layout's rows at its current generation — the one reader every
+    * serve path uses (the generation dir stays hidden). */
+  def read(spark: org.apache.spark.sql.SparkSession, dir: String)
+      : DataFrame =
+    spark.read.parquet(tablePath(dir))
+
+  private def tablePath(dir: String): String =
+    s"${VersionedStore.tableRoot(dir)}/$Table"
 
   /** The 62-bit Morton key of two non-negative LONG columns (loud
     * failure outside [0, 2^31) — see [[graft.functions.ZorderKey]]). */
@@ -35,13 +51,26 @@ object Layout {
   /** The one clustered-write discipline every layout op here shares:
     * range-partition on the (dropped-before-write) key, sort within
     * each file so row-group stats are tight too. */
-  private def clusteredWrite(df: DataFrame, key: Column, dir: String,
-      numFiles: Int, mode: String): Unit =
+  private def clustered(df: DataFrame, key: Column, numFiles: Int)
+      : DataFrame =
     df.withColumn("__zkey", key)
       .repartitionByRange(numFiles, col("__zkey"))
       .sortWithinPartitions("__zkey")
       .drop("__zkey")
-      .write.mode(mode).parquet(dir)
+
+  /** Publish `df` clustered on `key` as the layout's next generation and
+    * retire the previous one — a full write and a recluster alike. */
+  private def rewrite(df: DataFrame, key: Column, dir: String,
+      numFiles: Int): Unit = {
+    VersionedStore.publish(dir, Map(Table -> clustered(df, key, numFiles)))
+    VersionedStore.gc(dir, keep = 0)
+  }
+
+  /** Append `df` clustered on `key` inside the current generation. */
+  private def appendClustered(df: DataFrame, key: Column, dir: String,
+      numFiles: Int): Unit =
+    VersionedStore.append(dir,
+      Seq(Table -> (() => clustered(df, key, numFiles))), "append")()
 
   /** Rewrite `df` into `numFiles` parquet files clustered on the
     * Z-curve of (`colA`, `colB`): range-partition by the Morton key
@@ -52,8 +81,7 @@ object Layout {
   def zorderWrite(df: DataFrame, dir: String, colA: String, colB: String,
       numFiles: Int = 8): Unit = {
     require(numFiles > 0, s"zorderWrite: numFiles $numFiles")
-    clusteredWrite(df, zorderKey(col(colA), col(colB)), dir, numFiles,
-      "overwrite")
+    rewrite(df, zorderKey(col(colA), col(colB)), dir, numFiles)
   }
 
   /** Per-file (min, max) bounding rectangles of a written layout in the
@@ -64,7 +92,7 @@ object Layout {
     * pass over the layout. */
   def fileBounds(spark: org.apache.spark.sql.SparkSession, dir: String,
       colA: String, colB: String): DataFrame =
-    spark.read.parquet(dir)
+    read(spark, dir)
       .select(input_file_name().as("file"), col(colA), col(colB))
       .groupBy("file")
       .agg(min(colA).as("a_min"), max(colA).as("a_max"),
@@ -73,8 +101,8 @@ object Layout {
   /** Append one batch to a Z-ordered layout WITHOUT rewriting the table:
     * the batch is clustered on the Morton key within itself and lands as
     * new files — O(batch) per append, the same discipline as every
-    * incremental store here. Each generation's files stay individually
-    * tight, but generations OVERLAP in key space (two appends covering
+    * incremental store here. Each append's files stay individually
+    * tight, but appends OVERLAP in key space (two appends covering
     * the same region both claim it), so a box query's pruning degrades
     * gradually as appends accumulate — measurable via
     * [[clusteringDepth]], repaired by [[reclusterIfNeeded]]. This is the
@@ -83,8 +111,7 @@ object Layout {
   def zorderAppend(df: DataFrame, dir: String, colA: String, colB: String,
       numFiles: Int = 1): Unit = {
     require(numFiles > 0, s"zorderAppend: numFiles $numFiles")
-    clusteredWrite(df, zorderKey(col(colA), col(colB)), dir, numFiles,
-      "append")
+    appendClustered(df, zorderKey(col(colA), col(colB)), dir, numFiles)
   }
 
   /** Per-file (min, max) bounds of the two layout columns read from
@@ -105,7 +132,7 @@ object Layout {
         s"footerBounds: column $c in $file has non-integral footer stats" +
           s" (${if (other == null) "none" else other.getClass.getName})")
     }
-    val (fs, root) = StoreFs.fsPath(dir)
+    val (fs, root) = StoreFs.fsPath(tablePath(dir))
     if (!fs.exists(root)) return Seq.empty
     val files = {
       val it = fs.listFiles(root, true)
@@ -156,7 +183,7 @@ object Layout {
     * O(files²·log) worst case, the planner-listing cost class; file
     * counts here are a maintenance pass's, not a corpus's). A freshly
     * [[zorderWrite]]-written layout tiles near-disjoint rectangles and
-    * measures ~1; every full-range [[zorderAppend]] generation stacks
+    * measures ~1; every full-range [[zorderAppend]] stacks
     * one more cover over the whole plane, so the measure rises by ~1
     * per append wave — the trigger [[reclusterIfNeeded]] reads. */
   def clusteringDepth(dir: String, colA: String, colB: String): Int = {
@@ -181,21 +208,18 @@ object Layout {
     * `maxDepth` — the maintenance pass that turns [[zorderAppend]]'s
     * accumulating debt back into a depth-1 layout. The decision reads
     * footers only; the rewrite (one table scan, range-partitioned on the
-    * key) lands via the atomic two-rename swap, so readers serve the old
-    * generation until the new one promotes and a crash leaves a
-    * fsck-visible artifact, never a half-table
-    * ([[StoreFsck.layoutArtifacts]]). Returns the measured depth and
-    * whether the rewrite ran. */
+    * key) is one [[VersionedStore.publish]] followed by
+    * [[VersionedStore.gc]], so readers serve the old generation until
+    * the pointer flips, and a crash before the flip leaves a generation
+    * [[StoreFsck.versionedStore]] names, never a half-table. Returns the
+    * measured depth and whether the rewrite ran. */
   def reclusterIfNeeded(spark: org.apache.spark.sql.SparkSession,
       dir: String, colA: String, colB: String, maxDepth: Int = 2,
       numFiles: Int = 8): (Int, Boolean) = {
     require(maxDepth >= 1, s"reclusterIfNeeded: maxDepth $maxDepth")
     val depth = clusteringDepth(dir, colA, colB)
     if (depth <= maxDepth) return (depth, false)
-    val tmp = s"$dir.compact.${ProcessHandle.current.pid}"
-    clusteredWrite(spark.read.parquet(dir),
-      zorderKey(col(colA), col(colB)), tmp, numFiles, "error")
-    Dedup.swapDir(dir, tmp)
+    rewrite(read(spark, dir), zorderKey(col(colA), col(colB)), dir, numFiles)
     (depth, true)
   }
 
@@ -218,13 +242,12 @@ object Layout {
     require(cols.size >= 3 && cols.size <= 4,
       s"zorderWriteN: 3 or 4 layout columns expected, got $cols" +
         " (use zorderWrite for 2)")
-    clusteredWrite(df, zorderKeyN(cols.map(col): _*), dir, numFiles,
-      "overwrite")
+    rewrite(df, zorderKeyN(cols.map(col): _*), dir, numFiles)
   }
 
   /** [[zorderAppend]] for an N-dim layout: O(batch) append, the batch
     * clustered on the N-ary Morton key within itself. Same debt model
-    * as 2-D: generations overlap in key space until
+    * as 2-D: appends overlap in key space until
     * [[reclusterIfNeededN]] repays them. */
   def zorderAppendN(df: DataFrame, dir: String, cols: Seq[String],
       numFiles: Int = 1): Unit = {
@@ -232,8 +255,7 @@ object Layout {
     require(cols.size >= 3 && cols.size <= 4,
       s"zorderAppendN: 3 or 4 layout columns expected, got $cols" +
         " (use zorderAppend for 2)")
-    clusteredWrite(df, zorderKeyN(cols.map(col): _*), dir, numFiles,
-      "append")
+    appendClustered(df, zorderKeyN(cols.map(col): _*), dir, numFiles)
   }
 
   /** [[clusteringDepth]] for an N-dim layout: max #files whose footer
@@ -287,17 +309,14 @@ object Layout {
   }
 
   /** [[reclusterIfNeeded]] for an N-dim layout: footer-only decision,
-    * atomic swap rewrite. Returns (measured depth, rewrote?). */
+    * the same publish + gc rewrite. Returns (measured depth, rewrote?). */
   def reclusterIfNeededN(spark: org.apache.spark.sql.SparkSession,
       dir: String, cols: Seq[String], maxDepth: Int = 2,
       numFiles: Int = 8): (Int, Boolean) = {
     require(maxDepth >= 1, s"reclusterIfNeededN: maxDepth $maxDepth")
     val depth = clusteringDepthN(dir, cols) // arity-checked there
     if (depth <= maxDepth) return (depth, false)
-    val tmp = s"$dir.compact.${ProcessHandle.current.pid}"
-    clusteredWrite(spark.read.parquet(dir),
-      zorderKeyN(cols.map(col): _*), tmp, numFiles, "error")
-    Dedup.swapDir(dir, tmp)
+    rewrite(read(spark, dir), zorderKeyN(cols.map(col): _*), dir, numFiles)
     (depth, true)
   }
 
@@ -308,7 +327,7 @@ object Layout {
       cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap(c =>
       Seq(min(c).as(s"${c}_min"), max(c).as(s"${c}_max")))
-    spark.read.parquet(dir)
+    read(spark, dir)
       .select((input_file_name().as("file") +: cols.map(col)): _*)
       .groupBy("file")
       .agg(aggs.head, aggs.tail: _*)

@@ -30,16 +30,25 @@ import org.apache.spark.sql.functions._
   * bucketWidth=1 degenerates to an EXACT count-by-value table when the
   * domain is small.
   *
-  * Store protocol (the gram-df-store discipline, [[Dedup]]): each batch
-  * lands in its own `batch=<id>` partition with OVERWRITE semantics, so
-  * an at-least-once foreachBatch replay rewrites rather than
-  * double-counts; serving re-aggregates the partials (merge-at-serve);
-  * [[compact]] rolls the partials into one summed generation under the
-  * reserved numeric batch id -1 via the atomic two-rename swap.
-  * Reference analogue: maintained-on-append summaries served without
-  * touching the source (databus-core/.../ScnIndex.java:94).
+  * Store protocol: a one-table [[VersionedStore]] (the BATCH-PARTIAL
+  * layout it shares with the gram-df store of
+  * [[Dedup.contaminationAuditStreamBatch]]): each batch lands as its own
+  * `partials/batch=<id>` delta through [[VersionedStore.append]] with
+  * OVERWRITE semantics, so an at-least-once foreachBatch replay rewrites
+  * rather than double-counts, and the delta becomes visible whole;
+  * serving re-aggregates the partials of the current generation
+  * (merge-at-serve); [[compact]] publishes the summed partials as the
+  * next generation under the reserved numeric batch id -1, then gc's —
+  * a crash before the pointer flip leaves every reader on the old
+  * generation. Reference analogue: maintained-on-append summaries served
+  * without touching the source (databus-core/.../ScnIndex.java:94).
   */
 object QuantileStore {
+
+  /** The one table of a batch-partial store (this sketch store and the
+    * gram-df store), `batch=<id>`-partitioned — shared with
+    * [[StoreFsck.batchPartialStore]]. */
+  private[graft] val PartialsTable = "partials"
 
   /** Record one micro-batch's score histogram. `scoreCol` must be an
     * INTEGRAL column (loudly enforced — a silently floored double score
@@ -64,18 +73,19 @@ object QuantileStore {
     // neighboring bucket — breaking the bit-reproducibility contract
     // and the oracle's integer `//` derivation
     val x = col(scoreCol).cast("long")
-    batch.select(col(stratumCol).as("stratum"),
-        call_function("div", x - pmod(x, lit(bucketWidth)), lit(bucketWidth))
-          .cast("long").as("bucket"))
-      .groupBy("stratum", "bucket")
-      .agg(count(lit(1)).as("cnt"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+    VersionedStore.append(dir, Seq(s"$PartialsTable/batch=$batchId" -> (() =>
+      batch.select(col(stratumCol).as("stratum"),
+          call_function("div", x - pmod(x, lit(bucketWidth)),
+            lit(bucketWidth)).cast("long").as("bucket"))
+        .groupBy("stratum", "bucket")
+        .agg(count(lit(1)).as("cnt"))
+        .coalesce(1))), "overwrite")()
   }
 
   /** The merged histogram: (stratum, bucket, cnt) summed across every
     * appended batch — #buckets × #strata rows, never corpus-sized. */
   def readHistogram(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    spark.read.parquet(s"${VersionedStore.tableRoot(dir)}/$PartialsTable")
       .select("stratum", "bucket", "cnt") // drop the batch partition col
       .groupBy("stratum", "bucket")
       .agg(sum(col("cnt")).as("cnt"))
@@ -140,17 +150,17 @@ object QuantileStore {
       .drop("cutoff")
   }
 
-  /** Roll the per-batch partials into one summed generation (reserved
-    * numeric batch id -1, atomic two-rename swap — exactly
+  /** Roll the per-batch partials into one summed partial under the
+    * reserved numeric batch id -1, published as the next generation and
+    * followed by [[VersionedStore.gc]] (exactly
     * [[Dedup.compactGramDfStore]]'s protocol): a long stream's
     * one-file-per-trigger tail folds to #buckets rows, and every
     * serve-side aggregate afterwards reads one partial. Sums are
     * associative, so cutoffs before and after are identical. */
   def compact(spark: SparkSession, dir: String, numFiles: Int = 1): Unit = {
     require(numFiles > 0, s"QuantileStore.compact: numFiles $numFiles")
-    val tmp = s"$dir.compact.${ProcessHandle.current.pid}"
-    readHistogram(spark, dir)
-      .coalesce(numFiles).write.parquet(s"$tmp/batch=-1")
-    Dedup.swapDir(dir, tmp)
+    VersionedStore.publish(dir, Map(s"$PartialsTable/batch=-1" ->
+      readHistogram(spark, dir).coalesce(numFiles)))
+    VersionedStore.gc(dir, keep = 0)
   }
 }

@@ -246,10 +246,9 @@ object Retrieval {
     * born by publish, so on a root with no generation yet this batch
     * becomes generation 1; later batches land INSIDE the current
     * generation (whole rebuilds are generations, increments are
-    * in-generation appends), and a legacy flat root keeps taking them
-    * in place until its next publish — rebuild or compaction —
-    * migrates it. Crash caveat (stated, not hidden): an in-generation
-    * APPEND is two file commits — a crash between them leaves the batch
+    * in-generation appends). Crash caveat (stated, not hidden): an
+    * in-generation APPEND lands its two tables one after the other — a
+    * crash between them leaves the batch
     * indexed without its length norms, recoverable by re-running the
     * batch or by the next [[compactPostingsIndex]]/rebuild publish; the
     * replay-safe form is [[appendToPostingsIndexBatch]]. */
@@ -452,9 +451,7 @@ object Retrieval {
     * followed by [[VersionedStore.gc]], the one commit path of every
     * store rewrite: the pair lands atomically, the new generation starts
     * with an empty tombstone overlay, and the gc is the physical purge.
-    * A legacy flat root migrates here exactly as a rebuild migrates it —
-    * the publish carries its pending flat takedowns and sweeps its flat
-    * dirs. The store-maintenance op every append-only layout needs;
+    * The store-maintenance op every append-only layout needs;
     * reference analogue: the bootstrap DB's applied-log compaction
     * (databus-bootstrap-producer/.../BootstrapDBCleaner.java:1).
     *

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Filesystem operations for STORE MAINTENANCE (tombstone probes,
-  * compaction swaps, fsck listings, codebook existence checks), routed
+  * pointer flips and staged renames, fsck listings, codebook existence checks), routed
   * through the Hadoop `FileSystem` API so they resolve the same URI
   * schemes Spark's data plane does.
   *
@@ -158,12 +158,12 @@ object StoreFs {
     }
   }
 
-  /** Directory rename, false on failure. Callers own the swap protocol
-    * (displace/promote/restore — see [[Dedup.swapDir]]); this is the
-    * single primitive. `dst` must not exist — Hadoop rename onto an
-    * existing directory nests the source inside it rather than
-    * replacing, which would corrupt a swap, so that case fails loudly
-    * here instead. */
+  /** Directory rename, false on failure — the single primitive under
+    * [[VersionedStore.append]]'s staged landing and the event log's
+    * compaction swap ([[graft.streaming.RelayStream.compactEventLog]]).
+    * `dst` must not exist — Hadoop rename onto an existing directory
+    * nests the source inside it rather than replacing, which would
+    * corrupt a swap, so that case fails loudly here instead. */
   def rename(src: String, dst: String): Boolean = {
     val (fs, s) = fsPath(src)
     val d = new Path(dst)

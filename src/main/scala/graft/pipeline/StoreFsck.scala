@@ -8,10 +8,16 @@ import org.apache.spark.sql.functions._
   * operational tool that turns each store's DOCUMENTED failure windows
   * into detectable findings instead of silent corruption.
   *
-  * Every check here corresponds to a real, stated hazard:
-  *   - `appendToPostingsIndex` commits postings and doclens as two
-  *     separate file jobs — a crash between them leaves docs indexed
-  *     without length norms (the scaladoc'd crash-consistency caveat);
+  * Two kinds of check. The COMMIT PROTOCOL has one vocabulary: every
+  * store commits through [[VersionedStore]], so [[versionedStore]] names
+  * every crash leftover of publish/append/gc on any store root (the
+  * Applier's state included — [[applierState]] is those rows plus the
+  * snapshot algebra). The event log keeps its own swap and its own rows
+  * ([[eventLogStore]] says why). The per-family checks audit the
+  * TABLES of the current generation against real, stated hazards:
+  *   - an in-generation `appendToPostingsIndex` commits postings and
+  *     doclens as two file jobs — a crash between them leaves docs
+  *     indexed without length norms;
   *   - a blind re-append after a foreachBatch retry double-counts a
   *     batch (the hazard the batch-addressed writes exist to prevent —
   *     fsck detects it when some other writer blind-appended anyway);
@@ -69,28 +75,6 @@ object StoreFsck {
         postings.where(col("pos") < 0)))
       .unionByName(finding("tombstones_of_absent_ids",
         tomb.join(dDocs, Seq("doc_id"), "left_anti")))
-  }
-
-  /** Filesystem-level layout artifacts a crashed maintenance pass
-    * leaves behind: `<table>.compact.<pid>` (compaction wrote its tmp,
-    * crashed before the swap — dead bytes, safe to delete) and
-    * `<table>.old.<pid>` (crashed between promote and backup delete —
-    * the swap SUCCEEDED, the backup is reclaimable space; if the live
-    * table is also missing, the crash hit between displace and
-    * promote, and recovery is renaming the backup back). One directory
-    * listing — store roots hold a handful of entries; this check runs
-    * even on a store whose tables no longer read. */
-  def layoutArtifacts(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // Hadoop-FS listing (StoreFs): fsck must audit stores on any URI
-    // scheme the maintenance passes write to, not just POSIX-local
-    val names = StoreFs.listDirNames(dir)
-    Seq(
-      ("orphan_compact_tmp_dirs",
-        names.count(_.matches(".*\\.compact\\.\\d+$")).toLong),
-      ("orphan_backup_dirs",
-        names.count(_.matches(".*\\.old\\.\\d+$")).toLong))
-      .toDF("check_name", "n_bad")
   }
 
   /** Audit the BATCH-ADDRESSED layout of a store's tables — pure
@@ -258,9 +242,14 @@ object StoreFsck {
         vocab.crossJoin(vActual).where(col("__v") =!= col("va"))))
   }
 
-  /** Audit a batch-addressed df/histogram partial store (the
-    * contamination gram-df and quantile-sketch layouts: `batch=<id>`
-    * partitions of (key..., count) rows):
+  /** Audit a BATCH-PARTIAL store (the contamination gram-df and
+    * quantile-sketch stores: one `partials` table of `batch=<id>`
+    * partitions of (key..., count) rows, [[QuantileStore.PartialsTable]]):
+    *   - `legacy_string_batch_dirs`: a `batch=` dir whose id is not a
+    *     number (pre-r10 compactions rolled up under a string id) — it
+    *     flips (or fails) partition discovery, so it is an FS-level
+    *     probe, checked FIRST; the table rows then report -1
+    *     (unauditable);
     *   - non-positive partial counts,
     *   - batch ids below the reserved compaction id -1,
     *   - duplicate key rows WITHIN one batch partition (each trigger
@@ -270,19 +259,16 @@ object StoreFsck {
   def batchPartialStore(spark: SparkSession, dir: String,
       keyCols: Seq[String], countCol: String): DataFrame = {
     import spark.implicits._
-    // pre-r10 compactions rolled up under the STRING id batch=compacted;
-    // mixed with numeric ids it flips (or fails) partition discovery —
-    // an FS-level probe, checked FIRST because the table read itself may
-    // not survive the mixed layout (compactGramDfStore migrates it)
-    val legacy =
-      StoreFs.listDirNames(dir).count(_ == "batch=compacted").toLong
+    val table = s"${VersionedStore.tableRoot(dir)}/${QuantileStore.PartialsTable}"
+    val legacy = StoreFs.listDirNames(table).count(n =>
+      n.startsWith("batch=") && n.drop(6).toLongOption.isEmpty).toLong
     val fsFindings = Seq(("legacy_string_batch_dirs", legacy))
       .toDF("check_name", "n_bad")
     if (legacy > 0) return fsFindings
       .unionByName(Seq(("nonpositive_partials", -1L),
         ("invalid_batch_ids", -1L), ("intra_batch_duplicates", -1L))
-        .toDF("check_name", "n_bad")) // -1 = unauditable until migrated
-    val t = spark.read.parquet(dir)
+        .toDF("check_name", "n_bad"))
+    val t = spark.read.parquet(table)
     fsFindings
       .unionByName(finding("nonpositive_partials", t.where(col(countCol) <= 0)))
       .unionByName(finding("invalid_batch_ids",
@@ -310,7 +296,12 @@ object StoreFsck {
     *     means some writer bypassed [[graft.streaming.RelayStream.writeEventLog]].
     *
     * Filesystem probes are one existence check each (StoreFs — any URI
-    * scheme); the two table checks are log-sized aggregates. */
+    * scheme); the two table checks are log-sized aggregates.
+    *
+    * Why the log keeps its own swap instead of [[VersionedStore]]: the
+    * relay's file source reads the log PATH itself, and a streaming file
+    * source cannot follow a pointer — the live log cannot move under a
+    * generation directory, so its compaction swaps the dir in place. */
   def eventLogStore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val fsFindings = Seq(
@@ -333,38 +324,30 @@ object StoreFsck {
           .groupBy("scn").agg(count(lit(1)).as("c")).where(col("c") > 1)))
   }
 
-  /** Audit an [[graft.streaming.Applier]] snapshot-state store. The
-    * applier's generation protocol (write `next-*` → displace `current`
-    * to `old-*` → promote → retire) has three documented crash windows,
-    * each a distinct finding; the snapshot itself carries the apply-log
-    * algebra's invariants (exactly one row per key, no DELETE rows —
-    * [[graft.operators.Bootstrap.applyLog]] take-latest semantics). */
+  /** Audit an [[graft.streaming.Applier]] state dir: the
+    * [[versionedStore]] rows of its root (a compaction that crashed
+    * before its pointer flip is an `incomplete_generations` or
+    * `unreferenced_complete_generations` finding, healed by the next
+    * apply's compaction + gc) plus the apply-log algebra's invariants on
+    * the stored `snapshot` table — exactly one row per key, no DELETE
+    * rows ([[graft.operators.Bootstrap.applyLog]] take-latest
+    * semantics). Before the first compaction there is no stored
+    * snapshot, and both algebra rows read 0. */
   def applierState(spark: SparkSession, dir: String,
       keyCols: Seq[String] = Seq("key_long")): DataFrame = {
     import spark.implicits._
-    val names = StoreFs.listDirNames(dir)
-    val hasCurrent = StoreFs.exists(s"$dir/current")
-    val fsFindings = Seq(
-      // crash before promote: dead bytes, safe to delete
-      ("orphan_next_generations",
-        names.count(_.startsWith("next-")).toLong),
-      // crash before retire: the promote landed, backup is reclaimable
-      ("orphan_old_generations", names.count(_.startsWith("old-")).toLong),
-      // crash between displace and promote: serving sees NO snapshot
-      // until the next apply renames the newest old-* back to current
-      // (Applier.applyBatch; a next-* may be incomplete, never promoted)
-      ("snapshot_missing_with_generations",
-        if (!hasCurrent && names.exists(n =>
-          n.startsWith("next-") || n.startsWith("old-"))) 1L
-        else 0L)).toDF("check_name", "n_bad")
-    if (!hasCurrent) return fsFindings
-    val snap = spark.read.parquet(s"$dir/current")
-    fsFindings
-      .unionByName(finding("duplicate_snapshot_keys",
-        snap.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("c"))
+    val snap = VersionedStore.publishedRoot(dir).map(t => s"$t/snapshot")
+      .filter(StoreFs.isDirectory)
+      .map(spark.read.parquet(_))
+    def algebra(name: String, bad: DataFrame => DataFrame) =
+      snap.fold(Seq((name, 0L)).toDF("check_name", "n_bad"))(t =>
+        finding(name, bad(t)))
+    versionedStore(spark, dir)
+      .unionByName(algebra("duplicate_snapshot_keys",
+        _.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("c"))
           .where(col("c") > 1)))
-      .unionByName(finding("delete_rows_in_snapshot",
-        snap.where(col("opcode") === "DELETE")))
+      .unionByName(algebra("delete_rows_in_snapshot",
+        _.where(col("opcode") === "DELETE")))
   }
 
   /** Audit a [[VersionedStore]] root. The protocol's crash windows are
@@ -386,10 +369,6 @@ object StoreFsck {
     *   - `pointer_to_missing_generation`: the pointer names a
     *     generation that is absent or incomplete (an over-eager manual
     *     delete — the one state that DOES break reads, loudly);
-    *   - `superseded_flat_dirs`: pre-migration FLAT layout dirs still
-    *     sitting beside the generations (a publish whose post-flip
-    *     cleanup crashed, or a migration by an older build) —
-    *     unreachable bytes, re-swept by the next publish;
     *   - `stale_reservations`: in-flight publish reservations whose
     *     same-host publisher is provably dead (crashed between reserve
     *     and commit) — gc retires them; a LIVE publisher mid-write is
@@ -432,10 +411,6 @@ object StoreFsck {
       ("corrupt_pointer", corrupt),
       ("pointer_to_missing_generation",
         if (cur.exists(c => !complete.contains(c))) 1L else 0L),
-      ("superseded_flat_dirs",
-        if (gens.isEmpty) 0L
-        else StoreFs.listDirNames(root)
-          .count(!_.startsWith("gen-")).toLong),
       // a COMPLETE-marked generation containing no table dirs (only
       // markers / the tombstone overlay): the torn state a publisher
       // swept mid-commit by a foreign lease gc could present — commit

@@ -4,15 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Takedown (delete) discipline for the persisted append-only stores
-  * (positional postings, ANN cells, signature tables): a store records
-  * deletions as TOMBSTONES — an id-set side table under
-  * `<store>/tombstones` — and every read anti-joins it, so a takedown
-  * is O(request) regardless of store size and never rewrites stored
-  * rows. Compaction is the GC: it physically drops tombstoned rows
-  * during its rewrite, which publishes a fresh [[VersionedStore]]
-  * generation whose overlay starts empty, resetting the read side to a
-  * plain scan.
+/** Takedown (delete) discipline for the persisted stores (positional
+  * postings, ANN cells, signature tables): a store records deletions as
+  * TOMBSTONES — an id-set side table under each retained generation's
+  * `gen-<id>/tombstones` ([[VersionedStore.takedownDf]]'s overlay) — and
+  * every read anti-joins it, so a takedown is O(request) regardless of
+  * store size and never rewrites stored rows. Compaction is the GC: it
+  * physically drops tombstoned rows during its rewrite, which publishes
+  * a fresh [[VersionedStore]] generation whose overlay starts empty,
+  * resetting the read side to a plain scan. A takedown against a root
+  * with no published generation fails loudly (it would record nothing a
+  * reader consults).
   *
   * This is the missing half of the append-only store protocol: append
   * handles growth, tombstones handle the takedown/right-to-be-forgotten
@@ -90,34 +92,20 @@ object Tombstones {
     (ids.select(asLong.as("id")), r.getLong(0))
   }
 
-  /** Raw set write under ONE store root (no validation, no layout
-    * dispatch) — the primitive [[appendValidated]] and
-    * [[VersionedStore.takedownValidated]] share. */
+  /** Raw set write under ONE generation dir (no validation) — the
+    * primitive [[VersionedStore.takedownValidated]] fans out. */
   private[pipeline] def writeSet(idsLong: DataFrame, storeDir: String): Unit =
     idsLong.coalesce(1).write.mode("append").parquet(dirOf(storeDir))
 
-  /** Shared validated append: validates once, writes only when there is
-    * something to record (an empty batch must not litter the
-    * one-listing-cheap set with empty files), and returns the number of
-    * ids recorded. LAYOUT DISPATCH lives here, and it runs UNDER the
-    * store's maintenance lock: a versioned root routes to the
-    * per-generation overlay ([[VersionedStore.takedownValidatedLocked]]
-    * — every retained generation, pinned reads AND in-flight
-    * reservations included), a flat root appends under
-    * `<store>/tombstones`. The lock (not just the dispatch) is what
-    * closes the migration race: without it, a takedown recorded while
-    * the store's FIRST publish is committing could dispatch flat, land
-    * around the superseded-flat sweep, and either be deleted or sit in
-    * a set no versioned reader consults — a silently-voided legal
-    * erasure. Either way every takedown entry point above stays
-    * O(request). */
+  /** Shared validated append: validates once, records only when there
+    * is something to record (an empty batch must not litter the
+    * one-listing-cheap set with empty files) into every retained
+    * generation's overlay ([[VersionedStore.takedownValidated]] — pinned
+    * reads AND in-flight reservations included), and returns the number
+    * of ids recorded. Every takedown entry point above stays O(request). */
   private def appendValidated(ids: DataFrame, storeDir: String): Long = {
     val (v, n) = validated(ids)
-    if (n > 0L) VersionedStore.withMaintenanceLock(storeDir) {
-      if (VersionedStore.isVersioned(storeDir))
-        VersionedStore.takedownValidatedLocked(v, storeDir)
-      else writeSet(v, storeDir)
-    }
+    if (n > 0L) VersionedStore.takedownValidated(v, storeDir)
     n
   }
 

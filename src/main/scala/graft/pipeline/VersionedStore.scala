@@ -3,19 +3,16 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Multi-table store GENERATIONS published by one atomic pointer flip —
-  * the protocol that ELIMINATES (not merely detects) the two-commit
-  * crash windows the per-table swap protocols document.
-  *
-  * The problem: several stores here are PAIRS of tables that only make
-  * sense together — postings + doclens ([[Retrieval.writePostingsIndex]]:
-  * "a crash between them leaves docs indexed without length norms"),
-  * sigs + banded (the minhash store's signed-but-never-banded window,
-  * [[StoreFsck.minhashStore]]), codebook + cells. Each table's own
-  * commit is atomic (Spark publishes files at job commit; the
-  * two-rename swap is atomic per rename), but nothing makes the PAIR
-  * atomic, so every multi-table update carries a stated fsck-detectable
-  * window. That is detection; this module is prevention.
+/** The ONE commit protocol of every persisted store here: immutable
+  * GENERATIONS published by one atomic pointer flip, plus staged
+  * in-generation appends. Paired stores (postings + doclens, sigs +
+  * banded, codebook + cells), the single-table stores (the z-order
+  * [[Layout]], [[QuantileStore]], the gram-df store of
+  * [[Dedup.compactGramDfStore]]) and the [[graft.streaming.Applier]]'s
+  * snapshot + log state all commit through it, so one set of crash
+  * windows and one fsck vocabulary ([[StoreFsck.versionedStore]]) cover
+  * them all. (The event log is the one exception — see
+  * [[StoreFsck.eventLogStore]].)
   *
   * Protocol (exactly how table formats version metadata, reduced to its
   * filesystem core):
@@ -32,11 +29,22 @@ import org.apache.spark.sql.functions.col
   *     leaves `_CURRENT` on the old generation: readers never see a
   *     torn store, and the partial/unreferenced generation is an
   *     [[StoreFsck.versionedStore]] finding plus [[gc]] fodder — dead
-  *     bytes, never wrong answers;
+  *     bytes, never wrong answers. Every rewrite (rebuild, compaction,
+  *     recluster, rebalance, merge) is the next publish followed by
+  *     [[gc]];
+  *   - an APPEND ([[append]]) stages its tables under a `_`-prefixed
+  *     dir of the current generation and renames them in, so a
+  *     batch-addressed delta (`<table>/batch=<n>`) becomes visible by
+  *     one rename, whole or not at all;
   *   - old generations stay readable until [[gc]] retires them, which
   *     gives snapshot pinning ([[readAsOf]]) for free — the
   *     reproducibility contract [[Retrieval.readPostingsIndexAsOf]]
   *     provides for batch-addressed appends, here for whole rebuilds.
+  *
+  * A root that holds tables but no published generation (the flat
+  * layout written before generations existed) is REFUSED by every read
+  * and write here, naming the rebuild: no writer produces one, and
+  * serving or extending it would bypass the protocol.
   *
   * Scale shape: the pointer is metadata (one file, a handful of bytes);
   * generation writes are the same distributed table writes the
@@ -57,11 +65,10 @@ import org.apache.spark.sql.functions.col
   * it, and the next [[publish]] — built from live rows — starts with an
   * empty set, making the eventual physical rewrite ride a publish that was
   * happening anyway instead of forcing an immediate corpus-sized republish.
-  * Generation TABLES stay immutable (the overlay is a side table, the same
-  * shape as the flat stores' [[Tombstones]] discipline); pinned reads
-  * filter too — legal erasure must not be resurrectable through time
-  * travel — and [[gc]]'s `keep` still bounds how long any pre-takedown
-  * bytes exist at all.
+  * Generation TABLES stay immutable (the overlay is a side table,
+  * [[Tombstones]]); pinned reads filter too — legal erasure must not be
+  * resurrectable through time travel — and [[gc]]'s `keep` still bounds
+  * how long any pre-takedown bytes exist at all.
   *
   * Reference analogue: the bootstrap's two-phase snapshot/catchup
   * apply, where consumers switch to a new consistent state only at the
@@ -279,25 +286,10 @@ object VersionedStore {
     * only after every table and the completeness marker are down; any
     * crash before it leaves readers on the previous generation.
     *
-    * This is the ONE commit path of every paired store (postings +
-    * doclens, sigs + banded, codebook + cells): a store is BORN by
-    * publish (its first build, or its first append — see [[append]]),
-    * and every later rewrite (rebuild, compaction, rebalance, merge) is
-    * the next publish followed by [[gc]].
-    *
-    * LEGACY-FLAT MIGRATION: a root written before generations existed
-    * (flat tables, and in particular a flat `tombstones/` set) migrates
-    * on its next publish, whether that is a rebuild or a compaction. A
-    * pending takedown recorded under the old layout must not stop
-    * filtering just because the store was rewritten: the flat id set is
-    * CARRIED into the new generation's overlay before the marker lands
-    * (a rebuilt table may re-index the erased ids; live-rows rewrites
-    * carry them redundantly, which an anti-join cannot observe). After
-    * the flip the superseded flat set and any flat dir shadowing a
-    * published table name are DELETED — they are unreferenced bytes no
-    * reader can reach and no gc would otherwise retire; a crash
-    * mid-cleanup leaves them for the next publish's idempotent re-sweep
-    * (fsck: `superseded_flat_dirs`).
+    * A store is BORN by publish (its first build, or its first append —
+    * see [[append]]), and every later rewrite is the next publish
+    * followed by [[gc]]. A root holding unpublished tables is refused
+    * ([[refuseFlat]]).
     *
     * Table names are slash-separable relative paths (a batch-addressed
     * bootstrap publishes `cells/batch=0`); the BASE segment must not
@@ -360,8 +352,7 @@ object VersionedStore {
       }
     }
     Overlap.settle(writes: _*)
-    commit(root, gen, token, tables.keys.map(_.split('/').head).toSet,
-      tables.head._2.sparkSession)
+    commit(root, gen, token)
   }
 
   /** Claim the next generation id under the maintenance lock and mark
@@ -373,6 +364,7 @@ object VersionedStore {
     * write-outside-the-lock protocol collision-free. */
   private[graft] def reserve(root: String): (Long, String) =
     maintenance(root) {
+      if (currentGen(root).isEmpty) refuseFlat(root)
       var gen = math.max(currentGen(root).getOrElse(0L),
         listGens(root).collect { case (g, true) => g }
           .maxOption.getOrElse(0L)) + 1L
@@ -403,8 +395,7 @@ object VersionedStore {
     * earlier reservation — a non-flipped commit stays readable via
     * [[readAsOf]] and is [[adopt]]/gc fodder like any unreferenced
     * complete generation. */
-  private[graft] def commit(root: String, gen: Long, token: String,
-      tableBases: Set[String], spark: SparkSession): Long =
+  private[graft] def commit(root: String, gen: Long, token: String): Long =
     maintenance(root) {
       val dir = genDir(root, gen)
       val held = StoreFs.readBytesOpt(s"$dir/$Reserved")
@@ -414,30 +405,6 @@ object VersionedStore {
           s" $root was ${held.fold("retired mid-write (stale-reservation" +
             " gc against a live publisher?)")(t => s"overwritten by '$t'")}" +
           " — refusing to commit")
-      // legacy-flat migration half 1 (see publish scaladoc): pending
-      // takedowns recorded under the superseded flat layout carry into
-      // this generation's overlay BEFORE the marker — commit-time, so a
-      // takedown recorded flat WHILE a first publish was writing its
-      // tables is carried too; a complete generation always already
-      // filters them (adopt() may flip to it later). The carry FANS OUT
-      // like takedownValidatedLocked: into every complete generation
-      // and every OTHER in-flight reservation as well — with two
-      // serialized-concurrent first publishes over a flat root, the
-      // commit landing second sees no flat set (this commit deletes it
-      // below), yet its complete generation is readAsOf-pinnable and
-      // would otherwise serve the erased ids
-      val flatSet = s"$root/tombstones"
-      if (StoreFs.hasFileWithSuffix(flatSet, ".parquet")) {
-        val flatIds = spark.read.schema(Tombstones.Schema).parquet(flatSet)
-          .distinct()
-        val all = listGens(root)
-        val targets = (all.collect { case (g, true) => g } ++
-          all.collect {
-            case (g, false) if g != gen && reservation(root, g).isDefined =>
-              g
-          } :+ gen).distinct
-        targets.foreach(g => Tombstones.writeSet(flatIds, genDir(root, g)))
-      }
       touch(s"$dir/$Marker")
       // FINAL token recheck after the marker, before the flip: a
       // lease-expired gc on another host (which holds a different
@@ -463,70 +430,103 @@ object VersionedStore {
       }
       StoreFs.deleteRecursive(s"$dir/$Reserved")
       if (currentGen(root).forall(_ < gen)) flipPointer(root, gen)
-      // half 2, after the flip: the flat layout is unreachable now
-      // (every reader resolves through the pointer) — retire it rather
-      // than leave unreferenced bytes no gc names. Idempotent: a crash
-      // mid-sweep leaves dirs the next publish re-deletes and fsck
-      // reports meanwhile
-      StoreFs.deleteRecursive(flatSet)
-      tableBases.foreach(base => StoreFs.deleteRecursive(s"$root/$base"))
       gen
     }
 
   /** Is `root` a versioned store? One pointer probe per protocol form.
-    * Every paired-store writer publishes, so a root they wrote is
-    * versioned from its first write; false means nothing was published
-    * yet, or a legacy flat root that its next publish migrates. */
+    * Every store writer publishes, so a root they wrote is versioned from
+    * its first write; false means nothing was published there yet. */
   def isVersioned(root: String): Boolean =
     StoreFs.exists(s"$root/$Pointer") || markerGens(root).nonEmpty
 
-  /** The current generation's directory, or None before the first
-    * publish — the one pointer resolution behind [[tableRoot]] and
-    * [[append]]. Loud on a dangling pointer (a generation someone
-    * hand-deleted): serving a missing dir as an empty store is the
-    * silent failure this module exists to prevent. */
-  private def publishedRoot(root: String): Option[String] =
-    currentGen(root).map { g =>
-      require(StoreFs.exists(s"${genDir(root, g)}/$Marker"),
-        s"VersionedStore.tableRoot: pointer at $root names generation $g" +
-          " which is absent or incomplete — repair with adopt() (fsck:" +
-          " pointer_to_missing_generation)")
-      genDir(root, g)
+  /** Fail loudly when `root` holds tables but no published generation:
+    * the flat layout written before generations existed. Nothing here
+    * reads, extends or migrates it any more — serving it would bypass
+    * the pointer, and a publish over it would leave its tables beside
+    * the generations. One root listing; only unpublished roots pay it. */
+  private def refuseFlat(root: String): Unit = {
+    val flat = StoreFs.listNames(root).filterNot(n =>
+      n.startsWith("gen-") || n.startsWith("_") || n.startsWith("."))
+    require(flat.isEmpty,
+      s"VersionedStore: $root holds tables (${flat.sorted.take(4)
+        .mkString(", ")}${if (flat.size > 4) ", …" else ""})" +
+        " but no published generation — a legacy flat store, which this" +
+        " build neither reads nor migrates. Rebuild it: delete the root" +
+        " and re-run the store's writer, which publishes generation 1")
+  }
+
+  /** The current generation's directory, or None when nothing is
+    * published and the root holds no tables (a store not yet born) — the
+    * one pointer resolution behind [[tableRoot]] and [[append]]. Loud on
+    * a dangling pointer (a generation someone hand-deleted): serving a
+    * missing dir as an empty store is the silent failure this module
+    * exists to prevent; loud on a flat root ([[refuseFlat]]). */
+  private[graft] def publishedRoot(root: String): Option[String] =
+    currentGen(root) match {
+      case None => refuseFlat(root); None
+      case Some(g) =>
+        require(StoreFs.exists(s"${genDir(root, g)}/$Marker"),
+          s"VersionedStore.tableRoot: pointer at $root names generation" +
+            s" $g which is absent or incomplete — repair with adopt()" +
+            " (fsck: pointer_to_missing_generation)")
+        Some(genDir(root, g))
     }
 
-  /** The directory holding `root`'s LIVE tables: the current generation,
-    * or `root` itself when nothing is published there — a legacy flat
-    * root, whose tables stay readable in place until its next publish
-    * (rebuild or compaction) migrates it. Loud on a dangling pointer,
-    * like [[publishedRoot]]. */
-  def tableRoot(root: String): String = publishedRoot(root).getOrElse(root)
+  /** The directory holding `root`'s LIVE tables: the current
+    * generation. Loud before the first publish, on a dangling pointer
+    * and on a flat root, like [[publishedRoot]]. */
+  def tableRoot(root: String): String = publishedRoot(root).getOrElse(
+    throw new IllegalStateException(
+      s"VersionedStore.tableRoot: no published generation at $root"))
 
   /** Land one APPEND's `tables` (relative names, as [[publish]] takes
-    * them, each frame built by its own write) with `mode` in the
-    * current generation, written concurrently and settled together so
-    * a retried batch never races an orphaned sibling write. A root
-    * with no generation and none of the tables is BORN instead: the
-    * same frames publish as its generation 1. A legacy flat root
-    * (tables present, no generation) keeps taking appends in place
-    * until its next publish migrates it — publishing the batch alone
-    * would sweep its flat tables. `check` sees the resolved table root
-    * before any write (layout guards). */
+    * them, each frame built by its own write) in the current generation.
+    * A root with no generation is BORN instead: the same frames publish
+    * as its generation 1. `check` sees the resolved table root before
+    * any write (layout guards).
+    *
+    * Visibility: the frames are written concurrently (settled together,
+    * so a retried batch never races an orphaned sibling write) under one
+    * `_`-prefixed staging dir of the generation — a path no reader lists
+    * — and then moved into place, the staged-then-rename move of
+    * [[graft.streaming.RelayStream.writeEventLog]]. A table that does not
+    * exist yet, which includes every batch-addressed delta
+    * (`<table>/batch=<n>`), lands by ONE directory rename: readers see
+    * the whole delta or none of it. `overwrite` first removes the
+    * destination (a replayed batch replaces its own partial); `append`
+    * into an existing table moves the staged files in one by one. A crash
+    * mid-append leaves the staging dir as dead bytes inside the
+    * generation, retired with it by the next publish + [[gc]]. */
   private[graft] def append(root: String,
       tables: Seq[(String, () => DataFrame)], mode: String)(
-      check: String => Unit = _ => ()): Unit = {
-    val landed = publishedRoot(root).orElse(Some(root).filter(r =>
-      tables.exists { case (n, _) =>
-        StoreFs.exists(s"$r/${n.split('/').head}") }))
-    landed match {
+      check: String => Unit = _ => ()): Unit =
+    publishedRoot(root) match {
       case None =>
         publish(root, tables.map { case (n, df) => n -> df() }.toMap)
         ()
       case Some(t) =>
         check(t)
+        val stage = s"$t/_staging-${java.util.UUID.randomUUID}"
         Overlap.settle(tables.map { case (n, df) =>
-          Overlap.run(df().write.mode(mode).parquet(s"$t/$n"))
+          Overlap.run(df().write.parquet(s"$stage/$n"))
         }: _*)
+        tables.foreach { case (n, _) => land(s"$stage/$n", s"$t/$n", mode) }
+        StoreFs.deleteRecursive(stage)
     }
+
+  /** Move one staged table dir to `dst` — see [[append]]. */
+  private def land(staged: String, dst: String, mode: String): Unit = {
+    if (mode == "overwrite") StoreFs.deleteRecursive(dst)
+    if (!StoreFs.exists(dst)) {
+      StoreFs.mkdirs(dst.take(dst.lastIndexOf('/')))
+      require(StoreFs.rename(staged, dst),
+        s"VersionedStore.append: cannot move staged $staged to $dst")
+    } else StoreFs.listNames(staged)
+      .filterNot(f => f.startsWith("_") || f.startsWith("."))
+      .foreach { f =>
+        require(StoreFs.rename(s"$staged/$f", s"$dst/$f"),
+          s"VersionedStore.append: cannot move staged $staged/$f into $dst")
+      }
   }
 
   /** The directory holding generation `gen`'s tables — [[tableRoot]]'s
@@ -751,30 +751,13 @@ object VersionedStore {
   }
 
   /** The post-validation half of [[takedownDf]] — also the landing
-    * point [[Tombstones.appendDf]] routes to when its store root turns
-    * out to be versioned, so every flat-store takedown entry point
-    * (tombstoneDocs/tombstoneVectors/tombstoneSignatures/the streaming
-    * sink) is generation-aware without per-family changes. */
-  /** [[Tombstones.appendValidated]]'s serialization point: the FLAT
-    * takedown route must also hold the maintenance lock, or a takedown
-    * recorded while a migration publish is committing can be destroyed
-    * by the superseded-flat sweep (recorded → swept → silently serving
-    * erased rows) or land after it in a flat set no versioned reader
-    * consults. The lock is NOT reentrant (ProcessLock throws on same-JVM
-    * re-acquisition), so the layout dispatch runs inside ONE hold and
-    * calls the unlocked bodies. */
-  private[pipeline] def withMaintenanceLock[T](root: String)(body: => T): T =
-    maintenance(root)(body)
-
+    * point of [[Tombstones.appendDf]] and the streaming takedown sink,
+    * so every takedown entry point (tombstoneDocs/tombstoneVectors/
+    * tombstoneSignatures/the streaming sink) records into the
+    * per-generation overlay. Runs under the maintenance lock. */
   private[pipeline] def takedownValidated(idsLong: DataFrame,
       root: String): Unit = maintenance(root) {
-    takedownValidatedLocked(idsLong, root)
-  }
-
-  /** The lock-free body of [[takedownValidated]] — callable only while
-    * the caller holds [[withMaintenanceLock]] for `root`. */
-  private[pipeline] def takedownValidatedLocked(idsLong: DataFrame,
-      root: String): Unit = {
+    if (currentGen(root).isEmpty) refuseFlat(root)
     val all = listGens(root)
     val complete = all.collect { case (g, true) => g }
     require(complete.nonEmpty,
@@ -816,7 +799,6 @@ object VersionedStore {
   def readLive(spark: SparkSession, root: String, table: String,
       idCol: String): DataFrame = {
     val t = tableRoot(root)
-    require(t != root, s"VersionedStore.readLive: $root has no pointer")
     Tombstones.filterLive(spark.read.parquet(s"$t/$table"), t, idCol)
   }
 

@@ -60,7 +60,7 @@ object LayoutQueries extends QueryFamily {
       graft.pipeline.Layout.zorderWrite(
         tbl(s, dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity"),
         out, "l_orderkey", "l_partkey", numFiles = 8)
-      s.read.parquet(out)
+      graft.pipeline.Layout.read(s, out)
         .where(col("l_orderkey").between(100, 1200) &&
           col("l_partkey").between(20, 150))
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
@@ -88,7 +88,7 @@ object LayoutQueries extends QueryFamily {
           col("l_quantity"))
       graft.pipeline.Layout.zorderWriteN(src, out,
         Seq("l_partkey", "l_suppkey", "ship_day"), numFiles = 8)
-      s.read.parquet(out)
+      graft.pipeline.Layout.read(s, out)
         .where(col("l_partkey").between(20, 150) &&
           col("l_suppkey").between(2, 60) &&
           col("ship_day").between(400, 1400))
@@ -112,10 +112,10 @@ object LayoutQueries extends QueryFamily {
         " AND ship_day BETWEEN 400 AND 1400"),
 
     // ---- INCREMENTAL Z-ORDER maintenance: the layout built once, two
-    // later generations APPENDED (O(batch) each — no table rewrite on
+    // later batches APPENDED (O(batch) each — no table rewrite on
     // the write path), the clustering debt then MEASURED from parquet
-    // footers only (zero rows scanned) and repaired by one swap-rewrite.
-    // Three full-range generations must stack past depth 2, so the
+    // footers only (zero rows scanned) and repaired by one publish.
+    // Three full-range writes must stack past depth 2, so the
     // recluster is require()d to have run — a silent no-op would serve
     // the degraded layout while claiming maintenance happened. Row
     // identity through append+recluster is the oracle (the box read is
@@ -135,7 +135,7 @@ object LayoutQueries extends QueryFamily {
       val (depth, ran) = L.reclusterIfNeeded(s, out,
         "l_orderkey", "l_partkey", maxDepth = 2, numFiles = 8)
       require(ran, s"recluster did not trigger: measured depth $depth")
-      s.read.parquet(out)
+      graft.pipeline.Layout.read(s, out)
         .where(col("l_orderkey").between(100, 1200) &&
           col("l_partkey").between(20, 150))
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),

@@ -45,11 +45,6 @@ object StoreQueries extends QueryFamily {
           graft.pipeline.Retrieval.docLengths(d.where(col("doc_id") === 2L)))
         .write.mode("append").parquet(s"$gen/doclens")
       graft.pipeline.Retrieval.tombstoneDocs(s, idx, Seq(999999L, 3L))
-      // crashed-maintenance leftovers: a compaction tmp that never
-      // swapped in and a backup that never got deleted (the single-table
-      // swaps still run the swap protocol — the artifact audit stays)
-      graft.pipeline.StoreFs.mkdirs(s"$gen/postings.compact.12345")
-      graft.pipeline.StoreFs.mkdirs(s"$gen/doclens.old.12345")
       // batch-layout audit (listing-sized, no rows read): plant by hand
       // the states the write guards refuse to create — a torn two-table
       // batch append (sigs/batch=2 landed, banded/batch=2 never did), a
@@ -68,7 +63,6 @@ object StoreQueries extends QueryFamily {
         .write.mode("append").parquet(s"$blGen/banded")
       graft.pipeline.StoreFs.mkdirs(s"$blGen/sigs/batch=abc")
       graft.pipeline.StoreFsck.postingsStore(s, idx)
-        .unionByName(graft.pipeline.StoreFsck.layoutArtifacts(s, gen))
         .unionByName(graft.pipeline.StoreFsck.annStore(s,
             graft.sources.WireFixtures.annIndexDir(s, dir))
           .select(concat(lit("ann_"), col("check_name")).as("check_name"),
@@ -97,8 +91,6 @@ object StoreQueries extends QueryFamily {
         " UNION ALL SELECT 'duplicate_doclens', 1" +
         " UNION ALL SELECT 'negative_positions', 1" +
         " UNION ALL SELECT 'tombstones_of_absent_ids', 1" +
-        " UNION ALL SELECT 'orphan_compact_tmp_dirs', 1" +
-        " UNION ALL SELECT 'orphan_backup_dirs', 1" +
         " UNION ALL SELECT 'ann_cells_with_unknown_centroid', 0" +
         " UNION ALL SELECT 'ann_vectors_in_multiple_cells', 0" +
         " UNION ALL SELECT 'ann_duplicate_cell_rows', 0" +
@@ -114,8 +106,8 @@ object StoreQueries extends QueryFamily {
     // hand into one root — an incomplete publish, a complete-but-
     // unreferenced flip casualty, a table-less COMPLETE remnant (what
     // a swept-mid-commit publisher under older code could leave), a
-    // crashed pointer flip's tmp, a superseded flat dir, and a dead-pid
-    // same-host reservation — and every count oracled exactly ----
+    // crashed pointer flip's tmp and a dead-pid same-host reservation —
+    // and every count oracled exactly ----
     QueryDef("q_store_fsck_versioned", (s, dir) => {
       import s.implicits._
       val V = graft.pipeline.VersionedStore
@@ -133,9 +125,8 @@ object StoreQueries extends QueryFamily {
       // table-less COMPLETE remnant (empty_complete_generations)
       F.mkdirs(s"$root/gen-9"); F.writeAtomic(s"$root/gen-9/_COMPLETE",
         Array.empty)
-      // crashed flip tmp + a superseded flat-layout dir
+      // crashed flip tmp
       F.writeAtomic(s"$root/${V.PointerTmpPrefix}12345", Array.empty)
-      F.mkdirs(s"$root/oldflat")
       // dead-pid SAME-HOST reservation (gc's provably-abandoned shape)
       F.mkdirs(s"$root/gen-5")
       F.writeAtomic(s"$root/gen-5/_RESERVED",
@@ -160,7 +151,6 @@ object StoreQueries extends QueryFamily {
         " UNION ALL SELECT 'missing_pointer_with_generations', 0" +
         " UNION ALL SELECT 'corrupt_pointer', 0" +
         " UNION ALL SELECT 'pointer_to_missing_generation', 0" +
-        " UNION ALL SELECT 'superseded_flat_dirs', 1" +
         " UNION ALL SELECT 'empty_complete_generations', 1" +
         " UNION ALL SELECT 'stale_reservations', 1" +
         " UNION ALL SELECT 'superseded_pointer_markers', 0" +
@@ -183,19 +173,12 @@ object StoreQueries extends QueryFamily {
         .toString + "/sketch"
       val scored = docs(s, dir).select(col("doc_id"), col("lang"),
         length(col("text")).cast("long").as("len"))
-      // the two batch appends land in disjoint batch=<id> partition dirs
-      // of a fresh store — independent writes, overlapped (guide §2.6)
-      locally {
-        val a = graft.pipeline.Overlap.run(
-          graft.pipeline.QuantileStore.appendBatch(
-            scored.where(col("doc_id") % 2 === 0), dfDir, 0L, "len", "lang",
-            50L))
-        val b = graft.pipeline.Overlap.run(
-          graft.pipeline.QuantileStore.appendBatch(
-            scored.where(col("doc_id") % 2 === 1), dfDir, 1L, "len", "lang",
-            50L))
-        graft.pipeline.Overlap.settle(a, b)
-      }
+      // two batch appends in order: the first publishes the store's
+      // generation 1, the second lands inside it
+      graft.pipeline.QuantileStore.appendBatch(
+        scored.where(col("doc_id") % 2 === 0), dfDir, 0L, "len", "lang", 50L)
+      graft.pipeline.QuantileStore.appendBatch(
+        scored.where(col("doc_id") % 2 === 1), dfDir, 1L, "len", "lang", 50L)
       // registry coverage: the digest-dispatch decode silently drops
       // rows whose schema_id no registered schema resolves — audit it
       // like every other store hazard. Healthy store (all digests
@@ -306,12 +289,12 @@ object StoreQueries extends QueryFamily {
         " UNION ALL SELECT 'reg_evo_digests_failing_latest_reader', 2"),
 
     // ---- fsck for the SERVING-STATE stores (event log + applier
-    // snapshot): the healthy protocols audit clean, and every injected
+    // state): the healthy protocols audit clean, and every injected
     // hazard — a blind re-append that bypassed the offset log (its
     // windows now span files AND duplicate their (scn, seq) identity), a
-    // compaction tmp whose swap never ran, applier generations stranded
-    // mid-promote — surfaces as a non-zero finding the oracle re-derives
-    // from the same envelope ----
+    // compaction tmp whose swap never ran, an applier compaction that
+    // crashed between its marker and its pointer flip — surfaces as a
+    // non-zero finding the oracle re-derives from the same envelope ----
     QueryDef("q_store_fsck_log", (s, dir) => {
       val F = graft.pipeline.StoreFsck
       def pfx(p: String, df: DataFrame) =
@@ -325,19 +308,24 @@ object StoreQueries extends QueryFamily {
       events.orderBy("scn", "seq").limit(5)
         .write.mode("append").parquet(s"$root/log")
       graft.pipeline.StoreFs.mkdirs(s"$root/log.compact-tmp")
-      // applier: two healthy generations, then swap leftovers injected
-      graft.pipeline.StoreFs.mkdirs(s"$root/state")
+      // applier: two healthy log deltas, then a crashed compaction — its
+      // generation complete but never flipped to, and its pointer tmp
       graft.streaming.Applier.applyBatch(s,
         events.where(col("scn") % 2 === 0), s"$root/state")
       graft.streaming.Applier.applyBatch(s,
         events.where(col("scn") % 2 =!= 0), s"$root/state")
-      graft.pipeline.StoreFs.mkdirs(s"$root/state/next-12345")
-      graft.pipeline.StoreFs.mkdirs(s"$root/state/old-12345")
+      graft.pipeline.StoreFs.mkdirs(s"$root/state/gen-2/snapshot")
+      graft.pipeline.StoreFs.writeAtomic(s"$root/state/gen-2/_COMPLETE",
+        Array.empty)
+      graft.pipeline.StoreFs.writeAtomic(
+        s"$root/state/${graft.pipeline.VersionedStore.PointerTmpPrefix}12345",
+        Array.empty)
       pfx("log_", F.eventLogStore(s, s"$root/log"))
         .unionByName(pfx("state_", F.applierState(s, s"$root/state")))
     },
       // serving-state fsck: the injected hazards are exact (5 re-appended
-      // events, one tmp dir, two stranded generations); the only
+      // events, one tmp dir, one unflipped generation and its pointer
+      // tmp); the only
       // data-dependent finding — how many WINDOWS the re-appended slice
       // spans — re-derives from the envelope itself
       oracle = s"$ENV SELECT 'log_orphan_compact_tmp' AS check_name," +
@@ -348,9 +336,17 @@ object StoreQueries extends QueryFamily {
         " UNION ALL SELECT 'log_windows_split_across_files'," +
         " (SELECT CAST(count(DISTINCT scn) AS BIGINT) FROM" +
         " (SELECT scn FROM envelope ORDER BY scn, seq LIMIT 5))" +
-        " UNION ALL SELECT 'state_orphan_next_generations', 1" +
-        " UNION ALL SELECT 'state_orphan_old_generations', 1" +
-        " UNION ALL SELECT 'state_snapshot_missing_with_generations', 0" +
+        " UNION ALL SELECT 'state_incomplete_generations', 0" +
+        " UNION ALL SELECT 'state_orphan_pointer_tmps', 1" +
+        " UNION ALL SELECT 'state_unreferenced_complete_generations', 1" +
+        " UNION ALL SELECT 'state_missing_pointer_with_generations', 0" +
+        " UNION ALL SELECT 'state_corrupt_pointer', 0" +
+        " UNION ALL SELECT 'state_pointer_to_missing_generation', 0" +
+        " UNION ALL SELECT 'state_empty_complete_generations', 0" +
+        " UNION ALL SELECT 'state_stale_reservations', 0" +
+        " UNION ALL SELECT 'state_superseded_pointer_markers', 0" +
+        " UNION ALL SELECT 'state_expired_pin_files', 0" +
+        " UNION ALL SELECT 'state_live_pin_files', 0" +
         " UNION ALL SELECT 'state_duplicate_snapshot_keys', 0" +
         " UNION ALL SELECT 'state_delete_rows_in_snapshot', 0"),
 

@@ -368,7 +368,7 @@ object StreamingQueries extends QueryFamily {
     // replay-safe) merge at serve into per-lang median cutoffs that are
     // BIT-REPRODUCIBLE (histogram merge is sum — order-free, unlike
     // GK), then gate the corpus through one broadcast join. The rollup
-    // compaction runs mid-query (reserved batch=-1, atomic swap) and
+    // compaction runs mid-query (reserved batch=-1, publish + gc) and
     // must not change a single served row ----
     QueryDef("q_quantile_stream", (s, dir) => {
       val root = tempQueryDir("qstore").toString

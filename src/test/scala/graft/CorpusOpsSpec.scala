@@ -698,7 +698,8 @@ class CorpusOpsSpec extends SparkSpec {
       .select("train_id", "n_shared", "leak_bp")
       .as[(Long, Long, Long)].collect().toSet
     assert(r1b == r1)
-    def dfState() = spark.read.parquet(s"$dir/df")
+    def partials = s"${graft.pipeline.VersionedStore.tableRoot(s"$dir/df")}/partials"
+    def dfState() = spark.read.parquet(partials)
       .groupBy("g").agg(sum($"df_part").as("d"))
       .as[(Long, Long)].collect().toSet
     val before = dfState()
@@ -709,15 +710,15 @@ class CorpusOpsSpec extends SparkSpec {
     // per gram; the global df a later batch sees is unchanged
     Dedup.compactGramDfStore(spark, s"$dir/df")
     assert(dfState() == before)
-    assert(new java.io.File(s"$dir/df/batch=-1").listFiles()
-      .count(_.getName.startsWith("part-")) == 1)
+    assert(graft.pipeline.StoreFs.listNames(s"$partials/batch=-1")
+      .count(_.startsWith("part-")) == 1)
     // the rollup partial's reserved id is NUMERIC, so the discovered
     // `batch` partition column keeps its integer type — a batch-pinned
     // col("batch") <= n read still compares numerically post-compaction
     assert(Set[org.apache.spark.sql.types.DataType](
         org.apache.spark.sql.types.IntegerType,
         org.apache.spark.sql.types.LongType)
-      .contains(spark.read.parquet(s"$dir/df").schema("batch").dataType))
+      .contains(spark.read.parquet(partials).schema("batch").dataType))
     val b2 = Seq((3L, "a b c z")).toDF("doc_id", "text")
     val r2 = Dedup.contaminationAuditStreamBatch(b2, eval, s"$dir/df",
         maxGramDf = 2, batchId = 2L)

@@ -67,15 +67,16 @@ class HadoopFsStoreSpec extends SparkSpec {
       "GC did not clear the tombstone overlay under a file: URI")
     sameLive()
 
-    // fsck's layout listing sees crashed-maintenance artifacts under
+    // fsck's generation listing sees crashed-maintenance leftovers under
     // the URI root (old code: empty listing, findings silently 0)
-    val gen = VersionedStore.tableRoot(dir)
-    StoreFs.mkdirs(s"$gen/postings.compact.12345")
-    StoreFs.mkdirs(s"$gen/doclens.old.12345")
-    val art = StoreFsck.layoutArtifacts(spark, gen)
+    val cur = VersionedStore.currentGen(dir).get
+    StoreFs.mkdirs(s"$dir/gen-${cur + 1}/postings")
+    StoreFs.writeAtomic(s"$dir/${VersionedStore.PointerTmpPrefix}12345",
+      Array.empty)
+    val art = StoreFsck.versionedStore(spark, dir)
       .as[(String, Long)].collect().toMap
-    assert(art("orphan_compact_tmp_dirs") == 1L)
-    assert(art("orphan_backup_dirs") == 1L)
+    assert(art("incomplete_generations") == 1L)
+    assert(art("orphan_pointer_tmps") == 1L)
     assert(StoreFsck.postingsStore(spark, dir)
       .as[(String, Long)].collect().forall(_._2 == 0L))
   }
@@ -119,11 +120,10 @@ class HadoopFsStoreSpec extends SparkSpec {
     assert(!StoreFs.exists(s"$logDir.compact-old") &&
       !StoreFs.exists(s"$logDir.compact-tmp"))
 
-    // applier: the snapshot probe + atomic generation swap under the
+    // applier: the pointer probe and the staged delta renames under the
     // URI root (old code: java.nio probe saw no snapshot and batch 2
     // would silently re-materialize from itself)
     val stateDir = s"${uriTmp("fsuri")}/state"
-    StoreFs.mkdirs(stateDir)
     val b1 = Seq((100L, 0L, 1L, "UPSERT", 10.0), (100L, 1L, 2L, "UPSERT", 20.0))
       .toDF("scn", "seq", "key_long", "opcode", "value")
     val b2 = Seq((200L, 2L, 1L, "UPSERT", 11.0), (200L, 3L, 2L, "DELETE", 0.0),
@@ -202,18 +202,21 @@ class HadoopFsStoreSpec extends SparkSpec {
     }
   }
 
-  test("swapDir restore: failed promote leaves the store serving") {
+  test("a publish that fails before its pointer flip leaves the store serving") {
     val dir = s"${uriTmp("fsuri")}/index"
     Retrieval.writePostingsIndex(docsDf, dir)
     val before = Retrieval.readPostingsIndex(spark, dir).count()
-    // promote fails (tmp never written) → displace must roll back
-    // (swapDir is the legacy-flat-root protocol; point it at the live
-    // generation's table to exercise the restore under a file: URI)
-    val gen = VersionedStore.tableRoot(dir)
-    intercept[IllegalStateException] {
-      graft.pipeline.Dedup.swapDir(s"$gen/postings",
-        s"$gen/postings.compact.0")
+    val gen = VersionedStore.currentGen(dir)
+    // the rewrite's table write fails mid-publish: no marker, no flip
+    intercept[Exception] {
+      VersionedStore.publish(dir, Map(
+        "postings" -> Retrieval.readPostingsIndex(spark, dir)
+          .withColumn("pos", raise_error(lit("disk gone")).cast("long")),
+        "doclens" -> Retrieval.readDocLengths(spark, dir)))
     }
+    assert(VersionedStore.currentGen(dir) == gen)
     assert(Retrieval.readPostingsIndex(spark, dir).count() == before)
+    assert(StoreFsck.versionedStore(spark, dir).as[(String, Long)]
+      .collect().toMap.apply("incomplete_generations") == 1L)
   }
 }

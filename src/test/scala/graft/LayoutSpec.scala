@@ -12,6 +12,16 @@ import graft.pipeline.Layout
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Per-file `<col>_min`/`<col>_max` of a PLAIN parquet dir — the
+    * single-column-sort baseline, which is not a layout store. */
+  private def plainBounds(dir: String, cols: Seq[String]) = {
+    val aggs = cols.flatMap(c => Seq(min(c).as(s"${c}_min"),
+      max(c).as(s"${c}_max")))
+    spark.read.parquet(dir)
+      .select((input_file_name().as("file") +: cols.map(col)): _*)
+      .groupBy("file").agg(aggs.head, aggs.tail: _*)
+  }
+
   private def refKey(a: Long, b: Long): Long = {
     var k = 0L
     var i = 0
@@ -52,16 +62,17 @@ class LayoutSpec extends SparkSpec {
     // the box is wide in `a`, narrow in `b` — the shape the a-sort is
     // blind to: its strips all span the full b domain, so only the
     // a-predicate prunes; z-order tiles prune on BOTH predicates
-    def hit(dir: String): Long = Layout.fileBounds(spark, dir, "a", "b")
+    def hit(bounds: org.apache.spark.sql.DataFrame): Long = bounds
       .where(col("a_max") >= 4 && col("a_min") <= 59 &&
         col("b_max") >= 24 && col("b_min") <= 39)
       .count()
-    val (zHit, linHit) = (hit(s"$root/z"), hit(s"$root/lin"))
+    val (zHit, linHit) = (hit(Layout.fileBounds(spark, s"$root/z", "a", "b")),
+      hit(plainBounds(s"$root/lin", Seq("a", "b"))))
     assert(zHit < linHit,
       s"z-order must prune better: z=$zHit linear=$linHit of 16 files")
 
     // the rewrite moves bytes, never rows
-    val back = spark.read.parquet(s"$root/z")
+    val back = Layout.read(spark, s"$root/z")
     assert(back.count() == 64L * 64L &&
       back.exceptAll(grid).isEmpty && grid.exceptAll(back).isEmpty)
   }
@@ -114,18 +125,19 @@ class LayoutSpec extends SparkSpec {
 
     // wide in `a`, narrow in `b` and `c` — the two dims the a-sort
     // cannot prune on at all
-    def hit(dir: String): Long = Layout.fileBoundsN(spark, dir,
-        Seq("a", "b", "c"))
+    def hit(bounds: org.apache.spark.sql.DataFrame): Long = bounds
       .where(col("a_max") >= 1 && col("a_min") <= 14 &&
         col("b_max") >= 6 && col("b_min") <= 9 &&
         col("c_max") >= 6 && col("c_min") <= 9)
       .count()
-    val (zHit, linHit) = (hit(s"$root/z"), hit(s"$root/lin"))
+    val dims = Seq("a", "b", "c")
+    val (zHit, linHit) = (hit(Layout.fileBoundsN(spark, s"$root/z", dims)),
+      hit(plainBounds(s"$root/lin", dims)))
     assert(zHit < linHit,
       s"3-D z-order must prune better: z=$zHit linear=$linHit of 16 files")
 
     // the rewrite moves bytes, never rows
-    val back = spark.read.parquet(s"$root/z")
+    val back = Layout.read(spark, s"$root/z")
     assert(back.count() == 16L * 16L * 16L &&
       back.exceptAll(grid).isEmpty && grid.exceptAll(back).isEmpty)
   }
@@ -176,7 +188,7 @@ class LayoutSpec extends SparkSpec {
       s"3 full-plane generations must stack depth: $freshDepth → $deepDepth")
 
     // box-query row identity is generation-independent
-    def box(d: String) = spark.read.parquet(d)
+    def box(d: String) = Layout.read(spark, d)
       .where($"a".between(4, 59) && $"b".between(24, 39))
     val before = box(dir).collect().toSet
 
@@ -184,7 +196,7 @@ class LayoutSpec extends SparkSpec {
     val (d1, ran1) = Layout.reclusterIfNeeded(spark, dir, "a", "b",
       maxDepth = deepDepth, numFiles = 4)
     assert(d1 == deepDepth && !ran1)
-    // over the threshold: one swap-rewrite restores the canonical measure
+    // over the threshold: one publish restores the canonical measure
     val (d2, ran2) = Layout.reclusterIfNeeded(spark, dir, "a", "b",
       maxDepth = freshDepth, numFiles = 4)
     assert(d2 == deepDepth && ran2)
@@ -193,13 +205,12 @@ class LayoutSpec extends SparkSpec {
       s"recluster must pay the append debt down to the from-scratch" +
         s" measure: canon=$canonDepth deep=$deepDepth after=$after")
     assert(box(dir).collect().toSet == before, "recluster changed rows")
-    val back = spark.read.parquet(dir)
+    val back = Layout.read(spark, dir)
     assert(back.count() == 64L * 64L && back.exceptAll(grid).isEmpty)
-    // the swap retired its tmp and backup
-    import graft.pipeline.StoreFs
-    val parent = dir.substring(0, dir.lastIndexOf('/'))
-    assert(!StoreFs.listDirNames(parent).exists(n =>
-      n.contains(".compact.") || n.contains(".old.")))
+    // the recluster published one generation and retired the old one
+    import graft.pipeline.{StoreFs, VersionedStore}
+    assert(StoreFs.listDirNames(dir) ==
+      Seq(s"gen-${VersionedStore.currentGen(dir).get}"))
   }
 
   test("the recluster DECISION is metadata-only: zero Spark jobs launched") {
@@ -258,7 +269,7 @@ class LayoutSpec extends SparkSpec {
     assert(d == deep && ran)
     val after = Layout.clusteringDepthN(dir, dims)
     assert(deep >= after + 2, s"recluster must repay: deep=$deep after=$after")
-    val back = spark.read.parquet(dir)
+    val back = Layout.read(spark, dir)
     assert(back.count() == 16L * 16L * 16L && back.exceptAll(grid).isEmpty)
   }
 

@@ -3,15 +3,14 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{Ann, Dedup, Retrieval, StoreFs, StoreFsck, Tombstones, VersionedStore}
+import graft.pipeline.{Ann, Dedup, Retrieval, StoreFs, VersionedStore}
 
 /** Census of every public paired-store writer (postings + doclens,
   * sigs + banded, codebook + cells): started from an absent root where
   * the writer can create a store, and from a versioned root, each call
   * must leave a VERSIONED store — a store is born by publish, and every
-  * rewrite commits through publish + gc — with no superseded flat dir
-  * and no table dir outside `gen-*`. A legacy flat root migrates on its
-  * next compaction exactly as a rebuild migrates it. */
+  * rewrite commits through publish + gc — with no table dir outside
+  * `gen-*`. A legacy flat root is refused by every compaction. */
 class PairedStoreCensusSpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,9 +29,6 @@ class PairedStoreCensusSpec extends SparkSpec {
 
   private def versionedOnly(root: String, who: String): Unit = {
     assert(VersionedStore.isVersioned(root), s"$who left $root unversioned")
-    val vf = StoreFsck.versionedStore(spark, root)
-      .as[(String, Long)].collect().toMap
-    assert(vf("superseded_flat_dirs") == 0L, s"$who: $vf")
     val outside = StoreFs.listDirNames(root).filterNot(_.startsWith("gen-"))
     assert(outside.isEmpty, s"$who left table dirs outside gen-*: $outside")
   }
@@ -164,38 +160,36 @@ class PairedStoreCensusSpec extends SparkSpec {
     assert(Ann.readCells(spark, stream).count() == 8L)
   }
 
-  test("compacting a legacy flat root migrates it: same live rows, takedown kept") {
-    val dir = fresh("census")
-    // a LEGACY store: flat tables at the root (the pre-generation
-    // layout), plus a pending takedown recorded under it
-    Retrieval.positionalPostings(docs).coalesce(1)
-      .write.parquet(s"$dir/postings")
-    Retrieval.docLengths(docs).coalesce(1).write.parquet(s"$dir/doclens")
-    Tombstones.appendDf(Seq(1L).toDF("doc_id"), dir)
-    assert(!VersionedStore.isVersioned(dir))
-    val livePostings = Retrieval.readPostingsIndex(spark, dir)
-      .collect().toSeq.map(_.toSeq)
-    val liveDoclens = Retrieval.readDocLengths(spark, dir)
-      .collect().toSeq.map(_.toSeq)
-    assert(!livePostings.exists(_(1) == 1L))
-
-    Retrieval.compactPostingsIndex(spark, dir)
-    versionedOnly(dir, "compactPostingsIndex (legacy flat)")
-    assert(Retrieval.readPostingsIndex(spark, dir).collect().toSeq
-      .map(_.toSeq).sortBy(_.toString) == livePostings.sortBy(_.toString))
-    assert(Retrieval.readDocLengths(spark, dir).collect().toSeq
-      .map(_.toSeq).sortBy(_.toString) == liveDoclens.sortBy(_.toString))
-    // the pending flat takedown was carried into the new generation's
-    // overlay: a later append that re-indexes the erased id stays
-    // filtered
-    val gen = VersionedStore.tableRoot(dir)
-    assert(Tombstones.readOpt(spark, gen).map(_.as[Long].collect().toSet)
-      .contains(Set(1L)))
-    Retrieval.appendToPostingsIndex(docs.where(col("doc_id") === 1L), dir)
-    assert(!Retrieval.readDocLengths(spark, dir)
-      .select("doc_id").as[Long].collect().contains(1L))
-    assert(Retrieval.phraseSearch(Retrieval.readPostingsIndex(spark, dir),
-        Seq("table", "value")).select("doc_id").as[Long].collect().toSet ==
-      Set(0L, 2L, 4L, 6L))
+  test("compacting a legacy flat root refuses loudly, naming the rebuild") {
+    // a LEGACY store of each compacting family: its table(s) flat at the
+    // root, the layout written before generations existed
+    val flat = Seq[(String, String => Unit, String => Unit)](
+      ("compactPostingsIndex", { dir =>
+        Retrieval.positionalPostings(docs).write.parquet(s"$dir/postings")
+        Retrieval.docLengths(docs).write.parquet(s"$dir/doclens")
+      }, Retrieval.compactPostingsIndex(spark, _)),
+      ("QuantileStore.compact", { dir =>
+        Seq(("a", 1L, 2L)).toDF("stratum", "bucket", "cnt")
+          .write.parquet(s"$dir/batch=0")
+      }, graft.pipeline.QuantileStore.compact(spark, _)),
+      ("compactGramDfStore", { dir =>
+        Seq(("g", 1L)).toDF("g", "df_part").write.parquet(s"$dir/batch=0")
+      }, Dedup.compactGramDfStore(spark, _)),
+      ("reclusterIfNeeded", { dir =>
+        Seq((1L, 2L)).toDF("a", "b").write.parquet(dir)
+      }, graft.pipeline.Layout.reclusterIfNeeded(spark, _, "a", "b",
+        maxDepth = 1)))
+    flat.foreach { case (who, plant, compact) =>
+      val dir = fresh("census")
+      plant(dir)
+      val before = StoreFs.listFileStatusesRecursive(dir)
+        .map(_.getPath.toString).toSet
+      val e = intercept[IllegalArgumentException](compact(dir))
+      assert(e.getMessage.contains("Rebuild it"), s"$who: ${e.getMessage}")
+      assert(!VersionedStore.isVersioned(dir), who)
+      assert(StoreFs.listFileStatusesRecursive(dir).map(_.getPath.toString)
+        .filterNot(_.endsWith("_MAINTENANCE.lock")).toSet == before,
+        s"$who touched the flat root")
+    }
   }
 }

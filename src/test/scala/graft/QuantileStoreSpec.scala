@@ -41,8 +41,41 @@ class QuantileStoreSpec extends SparkSpec {
     assert(QuantileStore.cutoffs(spark, dir, 7500, 10L)
       .as[(String, Long, Long, Long, Long)].collect().toSet == cutsBefore)
     // compaction folded the partials into ONE batch=-1 generation
-    assert(spark.read.parquet(dir).select("batch").distinct()
+    assert(spark.read.parquet(
+        s"${graft.pipeline.VersionedStore.tableRoot(dir)}/partials")
+      .select("batch").distinct()
       .as[Long].collect().toSeq == Seq(-1L))
+  }
+
+  test("a compact that crashed before its pointer flip serves unchanged cutoffs") {
+    import graft.pipeline.{StoreFs, StoreFsck, VersionedStore}
+    val dir = s"${tmp("qs")}/sketch"
+    (0 until 3).foreach(b => QuantileStore.appendBatch(
+      scored.where($"id" % 3 === b), dir, b.toLong, "score", "stratum", 10L))
+    def cuts = QuantileStore.cutoffs(spark, dir, 7500, 10L)
+      .as[(String, Long, Long, Long, Long)].collect().toSet
+    val before = cuts
+    val gen = VersionedStore.currentGen(dir).get
+    // two crashed compactions: one died writing its rollup (a dead
+    // publisher's reservation), one after its marker but before the flip
+    // — both rolled up a WRONG histogram, which no reader may see
+    val wrong = Seq(("a", 0L, 1000000L), ("b", 0L, 1000000L))
+      .toDF("stratum", "bucket", "cnt")
+    wrong.write.parquet(s"$dir/gen-${gen + 1}/partials/batch=-1")
+    StoreFs.writeAtomic(s"$dir/gen-${gen + 1}/_COMPLETE", Array.empty)
+    StoreFs.writeAtomic(s"$dir/gen-${gen + 2}/_RESERVED",
+      s"${VersionedStore.hostId} 2147483647 1".getBytes("UTF-8"))
+    wrong.write.parquet(s"$dir/gen-${gen + 2}/partials/batch=-1")
+    assert(cuts == before)
+    val fsck = StoreFsck.versionedStore(spark, dir).as[(String, Long)]
+      .collect().toMap
+    assert(fsck("unreferenced_complete_generations") == 1L &&
+      fsck("stale_reservations") == 1L, s"$fsck")
+    // the next compact publishes past both and its gc retires them
+    QuantileStore.compact(spark, dir)
+    assert(cuts == before)
+    assert(StoreFs.listDirNames(dir) ==
+      Seq(s"gen-${VersionedStore.currentGen(dir).get}"))
   }
 
   test("rank bound holds vs the exact gate, after every append") {

@@ -67,16 +67,15 @@ class StoreFsckSpec extends SparkSpec {
     val dir = s"${tmp("fsck")}/mh"
     val sigs = Dedup.minhashSignatures(
       train.select("doc_id", "text"), "text", "doc_id", shingleN = 2, k = 8)
-    sigs.write.parquet(s"$dir/sigs")
-    // crash window: doc 4's banded rows never committed; doc 99 banded
-    // without a signature (the reverse impossibility); doc 3 lost half
-    // its bands
-    Dedup.bandedBucketsFromSignatures(sigs, k = 8, bands = 4)
-      .where(!(col("id") === 4L) &&
-        !(col("id") === 3L && col("band") >= 2))
-      .write.parquet(s"$dir/banded")
-    Seq((99L, 0, 123L)).toDF("id", "band", "bucket")
-      .write.mode("append").parquet(s"$dir/banded")
+    // crash window, planted inside the published generation: doc 4's
+    // banded rows never committed; doc 99 banded without a signature
+    // (the reverse impossibility); doc 3 lost half its bands
+    graft.pipeline.VersionedStore.publish(dir, Map("sigs" -> sigs,
+      "banded" -> Dedup.bandedBucketsFromSignatures(sigs, k = 8, bands = 4)
+        .where(!(col("id") === 4L) &&
+          !(col("id") === 3L && col("band") >= 2))))
+    Seq((99L, 0, 123L)).toDF("id", "band", "bucket").write.mode("append")
+      .parquet(s"${graft.pipeline.VersionedStore.tableRoot(dir)}/banded")
     Tombstones.append(spark, dir, Seq(777L)) // names an unsigned id
     val bad = findings(StoreFsck.minhashStore(spark, dir, k = 8, bands = 4))
     assert(bad("signed_without_banding") == 1L)
@@ -301,77 +300,152 @@ class StoreFsckSpec extends SparkSpec {
     assert(bad("missing_with_backup") == 0L)
   }
 
-  test("applier-state fsck: crashed generation swaps and snapshot algebra violations") {
+  private def change(scn: Long, seq: Long, key: Long, op: String,
+      value: Double) = (scn, seq, key, op, value)
+
+  private def envelopeDf(rows: Seq[(Long, Long, Long, String, Double)]) =
+    rows.toDF("scn", "seq", "key_long", "opcode", "value")
+
+  /** Batch `i` of a deterministic change stream over keys 0-5: upserts,
+    * and a DELETE of key `i % 6` every third batch. */
+  private def streamBatch(i: Int) = envelopeDf(Seq(
+    change(100L * (i + 1), 10L * i, i % 6, "UPSERT", i.toDouble),
+    change(100L * (i + 1), 10L * i + 1, (i + 3) % 6,
+      if (i % 3 == 2) "DELETE" else "UPSERT", 10.0 * i)))
+
+  private def applierRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("key_long", "seq", "value").as[(Long, Long, Double)]
+      .collect().toSet
+
+  /** Apply stream batches from `from` on until a compaction publishes a
+    * new generation (the first apply to an empty dir only publishes
+    * generation 1); returns the next batch index. */
+  private def applyUntilCompacted(dir: String, from: Int): Int = {
+    import graft.pipeline.VersionedStore
     import graft.streaming.Applier
-    val dir = s"${tmp("fsck")}/state"
-    graft.pipeline.StoreFs.mkdirs(dir)
-    val b1 = Seq((100L, 0L, 1L, "UPSERT", 10.0), (100L, 1L, 2L, "UPSERT", 20.0))
-      .toDF("scn", "seq", "key_long", "opcode", "value")
-    Applier.applyBatch(spark, b1, dir)
-    assert(findings(StoreFsck.applierState(spark, dir))
-      .values.forall(_ == 0L))
-    // plant: a next-* generation that never promoted, an old-* backup
-    // that never retired, and snapshot rows violating the apply-log
-    // algebra (a second row for key 1, a DELETE row that take-latest
-    // should have dropped)
-    graft.pipeline.StoreFs.mkdirs(s"$dir/next-123")
-    graft.pipeline.StoreFs.mkdirs(s"$dir/old-456")
-    Seq((90L, 9L, 1L, "UPSERT", 9.0), (101L, 2L, 3L, "DELETE", 0.0))
-      .toDF("scn", "seq", "key_long", "opcode", "value")
-      .write.mode("append").parquet(s"$dir/current")
-    val bad = findings(StoreFsck.applierState(spark, dir))
-    assert(bad("orphan_next_generations") == 1L)
-    assert(bad("orphan_old_generations") == 1L)
-    assert(bad("snapshot_missing_with_generations") == 0L)
-    assert(bad("duplicate_snapshot_keys") == 1L)
-    assert(bad("delete_rows_in_snapshot") == 1L)
-    // the displaced-current crash window: current gone, generations left
-    val dir2 = s"${tmp("fsck")}/state2"
-    graft.pipeline.StoreFs.mkdirs(s"$dir2/old-1")
-    val bad2 = findings(StoreFsck.applierState(spark, dir2))
-    assert(bad2("snapshot_missing_with_generations") == 1L)
+    var i = from
+    def apply(): Unit = {
+      require(i < from + 64, "no compaction within 64 applies")
+      Applier.applyBatch(spark, streamBatch(i), dir)
+      i += 1
+    }
+    if (VersionedStore.currentGen(dir).isEmpty) apply()
+    val gen = VersionedStore.currentGen(dir)
+    while (VersionedStore.currentGen(dir) == gen) apply()
+    i
   }
 
-  test("applier: a crash between displace and promote is healed by the next apply") {
-    import graft.operators.Bootstrap
-    import graft.pipeline.StoreFs
+  test("applier-state fsck: versioned-store rows plus snapshot algebra violations") {
+    import graft.pipeline.{StoreFs, VersionedStore}
     import graft.streaming.Applier
     val dir = s"${tmp("fsck")}/state"
-    StoreFs.mkdirs(dir)
-    val b1 = Seq((100L, 0L, 1L, "UPSERT", 10.0), (100L, 1L, 2L, "UPSERT", 20.0),
-      (101L, 2L, 4L, "UPSERT", 40.0))
-      .toDF("scn", "seq", "key_long", "opcode", "value")
-    val b2 = Seq((200L, 3L, 1L, "UPSERT", 11.0), (200L, 4L, 2L, "DELETE", 0.0),
-      (200L, 5L, 3L, "UPSERT", 30.0))
-      .toDF("scn", "seq", "key_long", "opcode", "value")
-    Applier.applyBatch(spark, b1, dir)
-    // plant the crash: current displaced to old-<t>, the promote never
-    // ran; an older retired-too-late backup and a half-written next-*
-    // from the same swap lie beside it
-    require(StoreFs.rename(s"$dir/current", s"$dir/old-2000"))
-    StoreFs.mkdirs(s"$dir/old-1000")
-    StoreFs.mkdirs(s"$dir/next-2000")
-    assert(findings(StoreFsck.applierState(spark, dir))(
-      "snapshot_missing_with_generations") == 1L)
-    Applier.applyBatch(spark, b2, dir)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("key_long", "seq", "value").as[(Long, Long, Double)]
-        .collect().toSet
-    assert(rows(Applier.snapshot(spark, dir).get) ==
-      rows(Bootstrap.applyLog(b1.unionByName(b2))),
-      "the apply after the crash dropped keys of earlier batches")
-    assert(StoreFs.listDirNames(dir) == Seq("current"))
+    Applier.applyBatch(spark, streamBatch(0), dir)
+    val clean = findings(StoreFsck.applierState(spark, dir))
+    assert(clean.values.forall(_ == 0L), s"$clean")
+    // one vocabulary: the state dir audits with the versioned-store rows
+    assert(findings(StoreFsck.versionedStore(spark, dir)).keySet
+      .subsetOf(clean.keySet))
+    assert(clean.keySet -- findings(StoreFsck.versionedStore(spark, dir))
+      .keySet == Set("duplicate_snapshot_keys", "delete_rows_in_snapshot"))
+    applyUntilCompacted(dir, 1)
+    val t = VersionedStore.tableRoot(dir)
+    assert(StoreFs.isDirectory(s"$t/snapshot"))
     assert(findings(StoreFsck.applierState(spark, dir)).values.forall(_ == 0L))
+    // plant: stored-snapshot rows violating the apply-log algebra (a
+    // second row for a stored key, a DELETE row take-latest should have
+    // dropped), a compaction that crashed before its marker, and a flip
+    // that crashed before its rename
+    val key = spark.read.parquet(s"$t/snapshot").select("key_long")
+      .as[Long].head()
+    envelopeDf(Seq(change(1L, 1L, key, "UPSERT", 9.0),
+        change(2L, 2L, 99L, "DELETE", 0.0)))
+      .write.mode("append").parquet(s"$t/snapshot")
+    val cur = VersionedStore.currentGen(dir).get
+    envelopeDf(Seq(change(1L, 1L, 1L, "UPSERT", 1.0)))
+      .write.parquet(s"$dir/gen-${cur + 1}/snapshot")
+    StoreFs.writeAtomic(s"$dir/${VersionedStore.PointerTmpPrefix}7",
+      Array.empty)
+    val bad = findings(StoreFsck.applierState(spark, dir))
+    assert(bad("duplicate_snapshot_keys") == 1L, s"$bad")
+    assert(bad("delete_rows_in_snapshot") == 1L, s"$bad")
+    assert(bad("incomplete_generations") == 1L, s"$bad")
+    assert(bad("orphan_pointer_tmps") == 1L, s"$bad")
+    assert(bad.values.sum == 4L, s"$bad")
+  }
+
+  test("applier: a compaction crashed before its flip is named by fsck and healed by the next apply") {
+    import graft.operators.Bootstrap
+    import graft.pipeline.{StoreFs, VersionedStore}
+    import graft.streaming.Applier
+    val dir = s"${tmp("fsck")}/state"
+    // the first compaction measures the cadence: it ran on the apply
+    // that brought the log to `every` deltas
+    val every = applyUntilCompacted(dir, 0)
+    (every until 2 * every - 1).foreach(i =>
+      Applier.applyBatch(spark, streamBatch(i), dir))
+    val gen = VersionedStore.currentGen(dir).get
+    // the crash: apply `crashed` landed its delta, then its compaction
+    // wrote a COMPLETE generation and died before the pointer flip, and
+    // an older attempt died mid-write under a dead publisher's token
+    val crashed = 2 * every - 1
+    val t = VersionedStore.tableRoot(dir)
+    streamBatch(crashed).write.parquet(s"$t/log/batch=${every - 1}")
+    envelopeDf(Seq(change(1L, 1L, 1L, "UPSERT", -1.0)))
+      .write.parquet(s"$dir/gen-${gen + 1}/snapshot")
+    StoreFs.writeAtomic(s"$dir/gen-${gen + 1}/_COMPLETE", Array.empty)
+    StoreFs.writeAtomic(s"$dir/gen-${gen + 2}/_RESERVED",
+      s"${VersionedStore.hostId} 2147483647 1".getBytes("UTF-8"))
+    val replay = (0 to crashed).map(streamBatch).reduce(_ unionByName _)
+    // readers stay on the old generation: its snapshot + log, whole
+    assert(VersionedStore.currentGen(dir).contains(gen))
+    assert(applierRows(Applier.snapshot(spark, dir).get) ==
+      applierRows(Bootstrap.applyLog(replay)))
+    val bad = findings(StoreFsck.applierState(spark, dir))
+    assert(bad("unreferenced_complete_generations") == 1L, s"$bad")
+    assert(bad("stale_reservations") == 1L, s"$bad")
+    // the stream re-delivers the crashed batch (its checkpoint never
+    // committed): the replay appends a duplicate delta, compacts past
+    // the leftovers, and its gc retires them
+    Applier.applyBatch(spark, streamBatch(crashed), dir)
+    assert(VersionedStore.currentGen(dir).exists(_ > gen + 2))
+    assert(applierRows(Applier.snapshot(spark, dir).get) ==
+      applierRows(Bootstrap.applyLog(replay)))
+    assert(findings(StoreFsck.applierState(spark, dir)).values.forall(_ == 0L))
+    assert(StoreFs.listDirNames(dir) ==
+      Seq(s"gen-${VersionedStore.currentGen(dir).get}"))
+  }
+
+  test("applier: an apply replayed before its checkpoint commit leaves a harmless duplicate delta") {
+    import graft.operators.Bootstrap
+    import graft.pipeline.VersionedStore
+    import graft.streaming.Applier
+    val dir = s"${tmp("apply")}/state"
+    // every batch is applied twice — the at-least-once replay of a crash
+    // between the log write and the checkpoint commit — across at least
+    // one compaction; the served state always equals a full replay
+    var deltas = 0
+    (0 until 12).foreach { i =>
+      Applier.applyBatch(spark, streamBatch(i), dir)
+      Applier.applyBatch(spark, streamBatch(i), dir)
+      assert(applierRows(Applier.snapshot(spark, dir).get) == applierRows(
+        Bootstrap.applyLog((0 to i).map(streamBatch).reduce(_ unionByName _))),
+        s"state after replayed batch $i differs from a full replay")
+      deltas = math.max(deltas, VersionedStore.batchIdsOf(
+        s"${VersionedStore.tableRoot(dir)}/log").size)
+    }
+    assert(VersionedStore.currentGen(dir).exists(_ > 1L),
+      "no compaction ran within 24 applies")
+    assert(deltas >= 2, "the replayed batch left no duplicate delta")
   }
 
   test("applier: each batch applied over the existing state equals a full replay") {
     import graft.operators.Bootstrap
-    import graft.pipeline.StoreFs
+    import graft.pipeline.VersionedStore
     import graft.streaming.Applier
     val dir = s"${tmp("apply")}/state"
-    StoreFs.mkdirs(dir)
-    // `current` is read back with the batch's own schema: nulls, strings
-    // and doubles must survive the round trip through the state files
+    // the log and the snapshot are read back with the batch's own
+    // schema: nulls, strings and doubles must survive the round trip
+    // through the state files, before and after a compaction
     val batches = Seq(
       Seq((100L, 0L, 1L, "UPSERT", Some(10.0), "a"),
         (100L, 1L, 2L, "UPSERT", None, "b"),
@@ -382,15 +456,25 @@ class StoreFsckSpec extends SparkSpec {
       Seq((300L, 6L, 2L, "UPSERT", Some(21.0), null),
         (300L, 7L, 4L, "DELETE", None, null)))
       .map(_.toDF("scn", "seq", "key_long", "opcode", "value", "tag"))
+    val stream = (0 until 4).flatMap(r => batches.map(
+      _.withColumn("scn", $"scn" + r * 1000L)
+        .withColumn("seq", $"seq" + r * 100L)))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("key_long", "seq", "value", "tag").collect().map(_.toSeq).toSet
-    batches.indices.foreach { i =>
-      Applier.applyBatch(spark, batches(i), dir)
+    stream.indices.foreach { i =>
+      Applier.applyBatch(spark, stream(i), dir)
       assert(rows(Applier.snapshot(spark, dir).get) ==
-        rows(Bootstrap.applyLog(batches.take(i + 1).reduce(_ unionByName _))),
+        rows(Bootstrap.applyLog(stream.take(i + 1).reduce(_ unionByName _))),
         s"state after batch $i differs from a full replay")
     }
-    assert(StoreFs.listDirNames(dir) == Seq("current"))
+    assert(VersionedStore.currentGen(dir).exists(_ > 1L),
+      "no compaction ran within 12 applies")
+    // an empty micro-batch writes nothing
+    val before = graft.pipeline.StoreFs.listFileStatusesRecursive(dir)
+      .map(_.getPath.toString).toSet
+    Applier.applyBatch(spark, stream.head.limit(0), dir)
+    assert(graft.pipeline.StoreFs.listFileStatusesRecursive(dir)
+      .map(_.getPath.toString).toSet == before)
   }
 
   test("batch-partial store fsck: blind intra-batch append detected") {
@@ -403,10 +487,11 @@ class StoreFsckSpec extends SparkSpec {
     // plant: a blind append into batch 0's partition (the replay hazard
     // batch-addressed OVERWRITE exists to prevent) and a partial under
     // a batch id below the reserved compaction id
+    val t = s"${graft.pipeline.VersionedStore.tableRoot(dir)}/partials"
     Seq(("a", 1L, 1L), ("zz", 0L, 0L)).toDF("stratum", "bucket", "cnt")
-      .write.mode("append").parquet(s"$dir/batch=0")
+      .write.mode("append").parquet(s"$t/batch=0")
     Seq(("a", 1L, 1L)).toDF("stratum", "bucket", "cnt")
-      .write.parquet(s"$dir/batch=-7")
+      .write.parquet(s"$t/batch=-7")
     val bad = findings(StoreFsck.batchPartialStore(spark, dir,
       Seq("stratum", "bucket"), "cnt"))
     assert(bad("intra_batch_duplicates") == 1L) // ("a", bucket 1) twice in batch 0
@@ -415,30 +500,36 @@ class StoreFsckSpec extends SparkSpec {
     assert(bad("legacy_string_batch_dirs") == 0L)
   }
 
-  test("batch-partial fsck: legacy string-compacted layout flagged; compact migrates it") {
-    import graft.pipeline.{Dedup, StoreFs}
-    // a store compacted by pre-r10 code rolled up under the STRING id
-    // batch=compacted — mixed with numeric ids the partition column
-    // flips type (or the read fails), so fsck flags it at the FS level
-    // (the table checks report -1 = unauditable) and compactGramDfStore
-    // renames it one-time to the reserved numeric -1
-    val dir = s"${tmp("fsck")}/gramdf"
+  test("batch-partial fsck: a legacy flat store is refused; string batch dirs flagged") {
+    import graft.pipeline.{Dedup, StoreFs, VersionedStore}
+    // a store compacted by pre-r10 code, still FLAT at its root, rolled
+    // up under the STRING id batch=compacted: neither fsck nor the
+    // compaction reads or migrates it — both fail naming the rebuild
+    val flat = s"${tmp("fsck")}/gramdf"
     Seq(("g1", 2L), ("g2", 1L)).toDF("g", "df_part")
-      .write.parquet(s"$dir/batch=compacted")
-    Seq(("g1", 1L)).toDF("g", "df_part").write.parquet(s"$dir/batch=0")
+      .write.parquet(s"$flat/batch=compacted")
+    Seq(("g1", 1L)).toDF("g", "df_part").write.parquet(s"$flat/batch=0")
+    Seq[(String, () => Any)](
+      "fsck" -> (() => StoreFsck.batchPartialStore(spark, flat, Seq("g"),
+        "df_part")),
+      "compact" -> (() => Dedup.compactGramDfStore(spark, flat)))
+      .foreach { case (who, run) =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("Rebuild it"), s"$who: ${e.getMessage}")
+      }
+    assert(StoreFs.exists(s"$flat/batch=compacted"))
+    // a non-numeric batch dir inside a published generation flips
+    // partition discovery all the same: flagged at the FS level, the
+    // table rows unauditable (-1)
+    val dir = s"${tmp("fsck")}/sketch"
+    QuantileStore.appendBatch(Seq((10L, "a")).toDF("score", "stratum"), dir,
+      0L, "score", "stratum", 10L)
+    Seq(("a", 1L, 1L)).toDF("stratum", "bucket", "cnt").write.parquet(
+      s"${VersionedStore.tableRoot(dir)}/partials/batch=compacted")
     val bad = findings(StoreFsck.batchPartialStore(spark, dir,
-      Seq("g"), "df_part"))
-    assert(bad("legacy_string_batch_dirs") == 1L)
-    assert(bad("nonpositive_partials") == -1L) // unauditable until migrated
-    Dedup.compactGramDfStore(spark, dir)
-    assert(!StoreFs.exists(s"$dir/batch=compacted"))
-    val after = findings(StoreFsck.batchPartialStore(spark, dir,
-      Seq("g"), "df_part"))
-    assert(after.values.forall(_ == 0L), s"$after")
-    // the migrated rollup preserved the sums
-    assert(spark.read.parquet(dir).groupBy("g")
-      .agg(sum($"df_part").as("s")).as[(String, Long)].collect().toMap ==
-      Map("g1" -> 3L, "g2" -> 1L))
+      Seq("stratum", "bucket"), "cnt"))
+    assert(bad("legacy_string_batch_dirs") == 1L, s"$bad")
+    assert(bad("nonpositive_partials") == -1L, s"$bad")
   }
 
   test("batch-layout fsck: torn appends, mixed layouts and invalid subdirs from listings alone") {

@@ -54,12 +54,8 @@ class StoreSchemaSpec extends SparkSpec {
       assert(inferred(s"$batchedRoot/$t/batch=1") == fields(declared), t)
     }
 
-    // takedowns: the flat set of a root with no generation, and the
-    // per-generation overlay of a versioned root
-    val bare = tmp("schema")
-    Retrieval.tombstoneDocs(spark, bare, Seq(1L, 2L))
-    assert(!VersionedStore.isVersioned(bare))
-    assert(inferred(s"$bare/tombstones") == fields(Tombstones.Schema))
+    // takedowns: the per-generation overlay of a versioned root (the
+    // only place a takedown records)
     Retrieval.tombstoneDocs(spark, batched, Seq(3L))
     assert(inferred(s"$batchedRoot/tombstones") == fields(Tombstones.Schema))
   }

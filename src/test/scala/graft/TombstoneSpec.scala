@@ -248,9 +248,7 @@ class TombstoneSpec extends SparkSpec {
       (2L, "unrelated third document mentioning tombstone discipline")
     ).toDF("doc_id", "text")
     val store = s"${tmp("sigstore")}/store"
-    val sigs = Dedup.minhashSignatures(corpus, "text", "doc_id", 3, 64)
-    sigs.write.parquet(s"$store/sigs")
-    Dedup.bandedBucketsFromSignatures(sigs).write.parquet(s"$store/banded")
+    Dedup.writeSignatureStore(corpus, store)
     // a twin of doc 0 arrives; with doc 0 live it pairs at jaccard 1
     val twin = corpus.where(col("doc_id") === 0L)
       .select((col("doc_id") + 100L).as("doc_id"), col("text"))
@@ -275,16 +273,6 @@ class TombstoneSpec extends SparkSpec {
     Retrieval.tombstoneDocs(spark, pDir, Seq(1L))
     assert(StoreFsck.postingsStore(spark, pDir)
       .where(col("n_bad") > 0).isEmpty)
-    // crashed-maintenance artifacts: clean store has none; a leftover
-    // compaction tmp is detected and the check runs without reading
-    // any table (it must survive a store whose tables no longer read)
-    assert(StoreFsck.layoutArtifacts(spark, pDir)
-      .where(col("n_bad") > 0).isEmpty)
-    new java.io.File(s"$pDir/postings.compact.42").mkdirs()
-    assert(StoreFsck.layoutArtifacts(spark, pDir)
-      .as[(String, Long)].collect().toMap
-      .apply("orphan_compact_tmp_dirs") == 1L)
-
     val aDir = s"${tmp("fsck")}/ann"
     val vecs = Seq((0L, Seq(1f, 0f)), (1L, Seq(0f, 1f))).toDF("id", "vec")
     Ann.writeIndex(vecs, aDir, k = 2, iters = 2)

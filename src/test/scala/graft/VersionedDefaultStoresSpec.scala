@@ -324,72 +324,58 @@ class VersionedDefaultStoresSpec extends SparkSpec {
       Set(0L, 2L, 3L, 5L, 6L)) // gen 2 serving, both takedowns filtered
   }
 
-  test("rebuilding over a legacy flat root carries its pending takedowns and retires the flat tables") {
-    import graft.pipeline.StoreFs
+  /** A LEGACY store: flat postings + doclens at the root, the layout
+    * written before generations existed. */
+  private def legacyFlatRoot(): String = {
     val dir = s"${tmp("vdef")}/index"
-    // a LEGACY store: flat tables at the root (the pre-generation
-    // layout), plus a pending takedown recorded under it
     Retrieval.positionalPostings(docsDf).coalesce(1)
       .write.parquet(s"$dir/postings")
     Retrieval.docLengths(docsDf).coalesce(1).write.parquet(s"$dir/doclens")
-    Tombstones.appendDf(Seq(1L).toDF("doc_id"), dir)
-    assert(!VersionedStore.isVersioned(dir))
-    assert(!Retrieval.phraseSearch(Retrieval.readPostingsIndex(spark, dir),
-      Seq("table", "value")).select("doc_id").as[Long]
-      .collect().contains(1L))
-
-    // the REBUILD publishes gen-1 over the flat root: the erased id must
-    // keep filtering (the rebuilt tables re-index it!) and the
-    // superseded flat layout must not remain as unreferenced bytes
-    Retrieval.writePostingsIndex(docsDf, dir)
-    assert(VersionedStore.isVersioned(dir))
-    val served = Retrieval.phraseSearch(
-        Retrieval.readPostingsIndex(spark, dir), Seq("table", "value"))
-      .select("doc_id").as[Long].collect().toSet
-    assert(served == Set(0L, 2L, 4L, 6L),
-      s"pending flat takedown must survive the rebuild (got $served)")
-    // pinned reads filter too (erasure is never resurrectable)
-    val gen = VersionedStore.currentGen(dir).get
-    assert(!VersionedStore.readAsOfLive(spark, dir, "doclens", gen, "doc_id")
-      .select("doc_id").as[Long].collect().contains(1L))
-    // the flat tables and the flat set are gone; fsck audits clean
-    assert(StoreFs.listDirNames(dir).forall(_.startsWith("gen-")),
-      StoreFs.listDirNames(dir).toString)
-    val vf = StoreFsck.versionedStore(spark, dir)
-      .as[(String, Long)].collect().toMap
-    assert(vf("superseded_flat_dirs") == 0L, vf.toString)
-    // a crashed cleanup's leftover IS the fsck finding
-    StoreFs.mkdirs(s"$dir/postings")
-    assert(StoreFsck.versionedStore(spark, dir)
-      .as[(String, Long)].collect().toMap.apply("superseded_flat_dirs") == 1L)
-    StoreFs.deleteRecursive(s"$dir/postings")
+    dir
   }
 
-  test("a takedown racing the migration publish is never lost") {
-    // the flat takedown route serializes under the same maintenance
-    // lock as publish's commit, so an erasure recorded around the
-    // migration lands EITHER in the flat set before the carry (and is
-    // carried) OR in the versioned overlay after the flip — never in a
-    // flat set the sweep deletes or no versioned reader consults
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    (1 to 3).foreach { i =>
-      val dir = s"${tmp("vdef")}/race$i"
-      Retrieval.positionalPostings(docsDf).coalesce(1)
-        .write.parquet(s"$dir/postings")
-      Retrieval.docLengths(docsDf).coalesce(1)
-        .write.parquet(s"$dir/doclens")
-      val takedown = Future {
-        Tombstones.appendDf(Seq(2L).toDF("doc_id"), dir)
-      }
-      val rebuild = Future { Retrieval.writePostingsIndex(docsDf, dir) }
-      Await.result(takedown, 120.seconds)
-      Await.result(rebuild, 120.seconds)
-      assert(!Retrieval.readDocLengths(spark, dir)
-        .select("doc_id").as[Long].collect().contains(2L),
-        s"iteration $i: the racing takedown was lost")
-    }
+  /** `body` fails naming the rebuild, and leaves the flat root's data
+    * as it was (the maintenance lock file aside). */
+  private def refusesFlat(dir: String, what: String)(body: => Any): Unit = {
+    def data = graft.pipeline.StoreFs.listFileStatusesRecursive(dir)
+      .map(_.getPath.toString).filterNot(_.endsWith("_MAINTENANCE.lock"))
+      .toSet
+    val before = data
+    val e = intercept[IllegalArgumentException](body)
+    assert(e.getMessage.contains("no published generation") &&
+      e.getMessage.contains("Rebuild it"), s"$what: ${e.getMessage}")
+    assert(data == before, s"$what touched the flat root")
+  }
+
+  test("rebuilding over a legacy flat root is refused, naming the rebuild") {
+    val dir = legacyFlatRoot()
+    assert(!VersionedStore.isVersioned(dir))
+    refusesFlat(dir, "writePostingsIndex")(
+      Retrieval.writePostingsIndex(docsDf, dir))
+    refusesFlat(dir, "appendToPostingsIndex")(
+      Retrieval.appendToPostingsIndex(docsDf, dir))
+    refusesFlat(dir, "readPostingsIndex")(
+      Retrieval.readPostingsIndex(spark, dir))
+    refusesFlat(dir, "tableRoot")(VersionedStore.tableRoot(dir))
+    refusesFlat(dir, "postings fsck")(StoreFsck.postingsStore(spark, dir))
+    // the named remedy works: delete the root, run the writer again
+    graft.pipeline.StoreFs.deleteRecursive(dir)
+    Retrieval.writePostingsIndex(docsDf, dir)
+    assert(VersionedStore.isVersioned(dir))
+    assert(Retrieval.readDocLengths(spark, dir).count() == corpus.size)
+  }
+
+  test("a takedown on a legacy flat root is refused, naming the rebuild") {
+    val dir = legacyFlatRoot()
+    refusesFlat(dir, "Tombstones.appendDf")(
+      Tombstones.appendDf(Seq(2L).toDF("doc_id"), dir))
+    refusesFlat(dir, "tombstoneDocs")(
+      Retrieval.tombstoneDocs(spark, dir, Seq(2L)))
+    refusesFlat(dir, "takedownDf")(
+      VersionedStore.takedownDf(Seq(2L).toDF("doc_id"), dir))
+    refusesFlat(dir, "takedownStreamBatch")(Tombstones.takedownStreamBatch(
+      Seq((2L, "DELETE")).toDF("id", "opcode"), dir))
+    assert(!graft.pipeline.StoreFs.exists(s"$dir/tombstones"))
   }
 
   test("takedown against an unpublished versioned root fails loudly") {

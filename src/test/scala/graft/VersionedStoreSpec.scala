@@ -168,7 +168,7 @@ class VersionedStoreSpec extends SparkSpec {
     // must reach the in-flight generation too, because its tables were
     // built from rows read BEFORE the erasure
     VersionedStore.takedownDf(Seq(2L).toDF("id"), root)
-    VersionedStore.commit(root, gen, token, Set("t"), spark)
+    VersionedStore.commit(root, gen, token)
     assert(VersionedStore.currentGen(root).contains(gen))
     assert(VersionedStore.readLive(spark, root, "t", "id")
       .select("v").as[String].collect().toSeq == Seq("a2"),
@@ -212,7 +212,7 @@ class VersionedStoreSpec extends SparkSpec {
     StoreFs.writeAtomic(s"$root/gen-${gen2}/_RESERVED",
       "thief 99 1".getBytes("UTF-8"))
     intercept[IllegalArgumentException] {
-      VersionedStore.commit(root, gen2, token2, Set("t"), spark)
+      VersionedStore.commit(root, gen2, token2)
     }
     assert(!StoreFs.exists(s"$root/gen-$gen2/_COMPLETE"),
       "a refused commit must not mark the generation complete")
@@ -298,32 +298,6 @@ class VersionedStoreSpec extends SparkSpec {
     spark.conf.set("graft.store.pinLeaseMs", "0")
     try assert(VersionedStore.gc(root, keep = 0).isEmpty)
     finally spark.conf.unset("graft.store.pinLeaseMs")
-  }
-
-  test("a flat tombstone set fans into EVERY in-flight reservation at migration commit") {
-    val root = tmp()
-    // legacy FLAT store with a pending takedown recorded under it
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$root/t")
-    graft.pipeline.Tombstones.appendDf(Seq(2L).toDF("id"), root)
-    // two serialized-concurrent FIRST publishes over the flat root: B
-    // reserves and writes; A publishes completely while B is mid-write
-    val (genB, tokenB) = VersionedStore.reserve(root)
-    Seq((1L, "a2"), (2L, "b2")).toDF("id", "v")
-      .write.parquet(s"$root/gen-$genB/t")
-    val genA = VersionedStore.publish(root,
-      Map("t" -> Seq((1L, "a1"), (2L, "b1")).toDF("id", "v")))
-    assert(genA != genB)
-    // A's commit consumed (and deleted) the flat set — B's own commit
-    // sees none, so without the fan-out B's complete, readAsOf-pinnable
-    // generation would serve the erased id
-    VersionedStore.commit(root, genB, tokenB, Set("t"), spark)
-    Seq(genA, genB).foreach { g =>
-      assert(!VersionedStore.readAsOfLive(spark, root, "t", g, "id")
-        .select("id").as[Long].collect().contains(2L),
-        s"generation $g serves the id erased under the flat layout")
-    }
-    assert(!VersionedStore.readLive(spark, root, "t", "id")
-      .select("id").as[Long].collect().contains(2L))
   }
 
   test("exclusive pointer protocol: create-exclusive markers, max-resolution, protocol migration") {
