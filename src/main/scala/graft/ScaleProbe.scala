@@ -386,14 +386,14 @@ object ScaleProbe {
         def pinnedBatchLeg(dir: String, k: Int): (Double, Double) = {
           val store =
             graft.sources.WireFixtures.annOrganicIndexDir(spark, dir, k = k)
-          val pin = graft.pipeline.Ann.pinIndex(store)
+          val pin = graft.pipeline.VersionedStore.pin(store)
           val all = vecsOf(dir)
           val head = Bench.minOf2(Bench.seconds(Bench.force(
             graft.pipeline.Ann.ivfQuantizedTopKFromStoreBatch(
               all, all, store, k = 10, nProbe = 2))))
           val pinned = Bench.minOf2(Bench.seconds(Bench.force(
-            graft.pipeline.Ann.ivfQuantizedTopKFromStoreBatchPinned(
-              all, all, store, k = 10, pin, nProbe = 2))))
+            graft.pipeline.Ann.ivfQuantizedTopKFromStoreBatch(
+              all, all, store, k = 10, nProbe = 2, at = Some(pin)))))
           (head, pinned)
         }
         val (ha, pa) = pinnedBatchLeg(base, 80)

@@ -523,9 +523,9 @@ object Ann {
     * finding DETECTS that after the fact; this form PREVENTS it, the
     * engine's standard). Encoding is deterministic under the frozen
     * codebook, so a replay reproduces the exact rows it overwrites.
-    * The `batch` partition column is LAYOUT, not data — every reader
-    * drops it ([[readCells]]). A stream-maintained store uses this form
-    * for every write from its first batch
+    * The `batch` partition column is LAYOUT, not data — every serving
+    * reader drops it ([[readCells]]). A stream-maintained store uses this
+    * form for every write from its first batch
     * ([[writeIndex]]'s `batchId`): partition discovery rejects a layout
     * that mixes flat files with batch subdirs. Reference analogue: the
     * dispatcher's rollback/replay contract assumes idempotent
@@ -544,15 +544,24 @@ object Ann {
     * re-training — the r6 gap where every new session re-trained the
     * memoized codebook), approximate scoring reads the stored int8 tier,
     * and only `queries × rerank` survivors fetch float vectors from
-    * `corpus` (an id-keyed join into the lake). */
+    * `corpus` (an id-keyed join into the lake).
+    *
+    * `at` replays a captured [[VersionedStore.Pin]] instead of the head
+    * — the time-travel argument of every store server here: codebook
+    * AND cells resolve from the pinned generation (ONE pointer
+    * resolution per serve, so quantizers and coded rows always come
+    * from the same training), cells additionally cut at the pinned
+    * append batch (later batches partition-prune out of the plan;
+    * tombstones still apply). */
   def ivfQuantizedTopKFromStore(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2, rerank: Int = 50): DataFrame = {
+      storeDir: String, k: Int, nProbe: Int = 2, rerank: Int = 50,
+      at: Option[VersionedStore.Pin] = None): DataFrame = {
     val spark = corpus.sparkSession
-    val centroids =
-      spark.read.parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook")
-    val cells = readCells(spark, storeDir)
-      .withColumnRenamed("id", "neighbor_id")
-    ivfQuantizedCore(queries, cells, centroids, corpus, k, nProbe, rerank)
+    val v = VersionedStore.resolve(storeDir, at,
+      "Ann.ivfQuantizedTopKFromStore")
+    ivfQuantizedCore(queries,
+      servedRows(spark, v, "cells").withColumnRenamed("id", "neighbor_id"),
+      spark.read.parquet(s"${v.dir}/codebook"), corpus, k, nProbe, rerank)
   }
 
   /** SHUFFLE-regime [[ivfQuantizedTopKFromStore]] for CORPUS-SIZED query
@@ -571,54 +580,30 @@ object Ann {
     * when the probe set covers most cells anyway, which a corpus-sized
     * batch does by construction (a lake-annotation job probes every cell
     * many times over; pruning has nothing left to skip). Use the
-    * request-sized path for serving, this for batch annotation.
-    * Reference analogue: the bootstrap path vs the relay path — the
-    * same data served by a seek (ScnIndex) for tailing requests and by
-    * a full scan for whole-corpus consumers
+    * request-sized path for serving, this for batch annotation. A
+    * lake-annotation job is exactly the long-running consumer a pin
+    * exists for: `at` freezes the index under it like the request
+    * regime's. Reference analogue: the bootstrap path vs the relay
+    * path — the same data served by a seek (ScnIndex) for tailing
+    * requests and by a full scan for whole-corpus consumers
     * (BootstrapSrcDBEventReader.java). */
   def ivfQuantizedTopKFromStoreBatch(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    ivfQuantizedBatchCore(queries, corpus,
-      spark.read.parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook"),
-      readCells(spark, storeDir).withColumnRenamed("id", "neighbor_id"),
-      k, nProbe, rerank)
-  }
-
-  /** [[ivfQuantizedTopKFromStoreBatch]] at a captured [[AnnPin]] — the
-    * COMPOSITION of the two serving contracts: a lake-annotation job is
-    * exactly the long-running training-shaped consumer the pin exists
-    * for, so the shuffle regime must resolve the pinned generation's
-    * codebook and cells (batches past the pin partition-pruned,
-    * tombstones still applied) the same way the request-regime pinned
-    * server does — otherwise "annotate the whole lake against a frozen
-    * index" silently reads the head mid-job. */
-  def ivfQuantizedTopKFromStoreBatchPinned(queries: DataFrame,
-      corpus: DataFrame, storeDir: String, k: Int, pin: AnnPin,
-      nProbe: Int = 2, rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfQuantizedTopKFromStoreBatchPinned")
-    ivfQuantizedBatchCore(queries, corpus,
-      spark.read.parquet(s"$t/codebook"),
-      liveRowsAt(spark, t, "cells", pin.maxBatch)
-        .withColumnRenamed("id", "neighbor_id"),
-      k, nProbe, rerank)
-  }
-
-  private def ivfQuantizedBatchCore(queries: DataFrame, corpus: DataFrame,
-      centroids: DataFrame, cells: DataFrame, k: Int, nProbe: Int,
-      rerank: Int): DataFrame = {
+      storeDir: String, k: Int, nProbe: Int = 2, rerank: Int = 50,
+      at: Option[VersionedStore.Pin] = None): DataFrame = {
     import graft.functions.VectorFunctions.dequantizeInt8
+    val spark = corpus.sparkSession
+    val v = VersionedStore.resolve(storeDir, at,
+      "Ann.ivfQuantizedTopKFromStoreBatch")
     // probe ranking is probeCells verbatim — the centroid crossJoin
     // broadcast is codebook-sized and regime-independent; qvec rides the
     // probe rows so approx scoring needs no second corpus-sized join
-    val probes = probeCells(queries, centroids, nProbe)
+    val probes = probeCells(queries, spark.read.parquet(s"${v.dir}/codebook"),
+        nProbe)
       .select(col("cell_id"), col("query_id"), col("qvec"))
     val wApprox = Window.partitionBy(col("query_id"))
       .orderBy(col("approx").desc, col("neighbor_id").desc)
-    val survivors = cells
+    val survivors = servedRows(spark, v, "cells")
+      .withColumnRenamed("id", "neighbor_id")
       .join(probes, "cell_id")
       .where(col("neighbor_id") =!= col("query_id"))
       .dropDuplicates("query_id", "neighbor_id")
@@ -650,47 +635,19 @@ object Ann {
     * scoring, same tie-breaks); same stated trade as
     * [[ivfQuantizedTopKFromStoreBatch]]: no probed-cell literal, so the
     * assignment tier scans — correct economics when a corpus-sized
-    * batch probes every cell anyway. */
+    * batch probes every cell anyway. `at`: [[ivfQuantizedTopKFromStore]]. */
   def ivfTopKFromStoreBatch(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2): DataFrame = {
+      storeDir: String, k: Int, nProbe: Int = 2,
+      at: Option[VersionedStore.Pin] = None): DataFrame = {
     val spark = corpus.sparkSession
-    val centroids =
-      spark.read.parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook")
-    val cells = readCells(spark, storeDir)
-      .select(col("id").as("neighbor_id"), col("cell_id"))
-    ivfBatchCore(queries, corpus, centroids, cells, k, nProbe)
-  }
-
-  /** [[ivfTopKFromStoreBatch]] at a captured [[AnnPin]] — the last cell
-    * of the serving matrix: 3 quantizer families × {request, batch} ×
-    * {head, pinned}. A lake-annotation job that reranks on the
-    * float-precision tier pins it exactly like the coded tiers
-    * ([[ivfQuantizedTopKFromStoreBatchPinned]]'s rationale); codebook
-    * and cells resolve from the pinned generation, cells additionally
-    * pinned at the recorded append batch, tombstones still apply. */
-  def ivfTopKFromStoreBatchPinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, nProbe: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfTopKFromStoreBatchPinned")
-    val centroids = spark.read.parquet(s"$t/codebook")
-    val cells = liveRowsAt(spark, t, "cells", pin.maxBatch)
-      .select(col("id").as("neighbor_id"), col("cell_id"))
-    ivfBatchCore(queries, corpus, centroids, cells, k, nProbe)
-  }
-
-  /** Shuffle-regime float-precision serve against an already-resolved
-    * (centroids, cells) pair — shared by the head and pinned batch
-    * readers, the same one-core discipline as [[ivfExactCore]] /
-    * [[ivfQuantizedBatchCore]] / [[ivfPqBatchCore]]. */
-  private def ivfBatchCore(queries: DataFrame, corpus: DataFrame,
-      centroids: DataFrame, cells: DataFrame, k: Int,
-      nProbe: Int): DataFrame = {
-    val probes = probeCells(queries, centroids, nProbe)
+    val v = VersionedStore.resolve(storeDir, at, "Ann.ivfTopKFromStoreBatch")
+    val probes = probeCells(queries, spark.read.parquet(s"${v.dir}/codebook"),
+        nProbe)
       .select(col("cell_id"), col("query_id"), col("qvec"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
-    cells
+    servedRows(spark, v, "cells")
+      .select(col("id").as("neighbor_id"), col("cell_id"))
       .join(probes, "cell_id")
       .where(col("neighbor_id") =!= col("query_id"))
       .dropDuplicates("query_id", "neighbor_id")
@@ -707,136 +664,23 @@ object Ann {
     * minus any [[tombstoneVectors]] takedowns — candidate generation is
     * the only place a vector exists in the serving path, so the
     * anti-join here removes it from every retrieval at once. No
-    * takedowns, no plan overhead. On a batch-addressed store
-    * ([[appendToIndexBatch]]) the discovered `batch` partition column
-    * is LAYOUT, not data — dropped here so every consumer (serving,
-    * fsck, maintenance rewrites) sees one schema either way. */
-  def readCells(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    Tombstones.filterLive(
-      spark.read.parquet(s"$t/cells").drop("batch"), t, "id")
-  }
+    * takedowns, no plan overhead. `at` reads a captured
+    * [[VersionedStore.Pin]] instead of the head; an as-of-batch read of
+    * the head is `Pin(currentGen, Some(b))`, refused loudly on a store
+    * without the batch-addressed layout. */
+  def readCells(spark: org.apache.spark.sql.SparkSession, storeDir: String,
+      at: Option[VersionedStore.Pin] = None): DataFrame =
+    servedRows(spark, VersionedStore.resolve(storeDir, at, "Ann.readCells"),
+      "cells")
 
-  /** [[readCells]] PINNED at append batch `maxBatch` — snapshot
-    * reproducibility for a batch-addressed store
-    * ([[appendToIndexBatch]], whose `batch=` partition column IS the
-    * append history): only batches ≤ `maxBatch` scan (partition
-    * pruning — later batches' files never enter the plan), so a
-    * training run can pin the exact index state it retrieved against
-    * and replay it after any number of later appends —
-    * [[Retrieval.readPostingsIndexAsOf]]'s contract on the ANN store.
-    * Same deliberate asymmetry: TOMBSTONES STILL APPLY — a takedown is
-    * legal erasure, and a time-travel read that resurrected deleted
-    * vectors would defeat it, so as-of pins the append history, never
-    * the delete history. The PQ-family tables pin identically (their
-    * `batch` column is the same layout); the IVF reader carries the
-    * serving variant ([[ivfQuantizedTopKFromStoreAsOf]]) as the
-    * representative. */
-  def readCellsAsOf(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    val raw = spark.read.parquet(s"$t/cells")
-    require(raw.columns.contains("batch"),
-      s"readCellsAsOf: $storeDir is not batch-addressed — only" +
-        " appendToIndexBatch stores carry a pinnable append history")
-    Tombstones.filterLive(
-      raw.where(col("batch") <= maxBatch).drop("batch"), t, "id")
-  }
-
-  /** [[ivfQuantizedTopKFromStore]] against the [[readCellsAsOf]] pin:
-    * candidates come only from batches ≤ `maxBatch` (the codebook is
-    * frozen across appends, so the pinned state is exactly what the
-    * store served when batch `maxBatch` was its head). */
-  def ivfQuantizedTopKFromStoreAsOf(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, maxBatch: Long, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val centroids =
-      spark.read.parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook")
-    val cells = readCellsAsOf(spark, storeDir, maxBatch)
-      .withColumnRenamed("id", "neighbor_id")
-    ivfQuantizedCore(queries, cells, centroids, corpus, k, nProbe, rerank)
-  }
-
-  /** ONE time-travel coordinate for an ANN store — the unified pin the
-    * two as-of axes compose into: `gen` is the [[VersionedStore]]
-    * generation (whole rebuilds/compactions), `maxBatch` the append
-    * batch WITHIN it (`None` on a store without the batch-addressed
-    * layout). A training job captures this at read time ([[pinIndex]])
-    * and records a single token; replaying through the `*FromStorePinned`
-    * servers then reproduces the exact store state it retrieved against
-    * — across any number of later appends AND later publishes — without
-    * knowing which axis moved. Tombstones deliberately still apply
-    * (takedowns fan into every retained generation's overlay): a pin
-    * reproduces the append history, never resurrects erasure. The pin
-    * dies when [[VersionedStore.gc]] retires its generation — retention
-    * is the caller's policy, and a dead pin fails LOUDLY
-    * ([[VersionedStore.pinnedGenerationRoot]]), never serves a substitute. */
-  final case class AnnPin(gen: Long, maxBatch: Option[Long])
-
-  /** Capture the CURRENT pin of a versioned ANN-family store (IVF, PQ,
-    * or IVF-PQ — the coded table is `cells/` or `codes/`): the flipped
-    * generation plus the highest append batch inside it. Metadata-only:
-    * one pointer resolution + one directory listing (the `batch=<id>`
-    * partition dirs), never a table scan. */
-  def pinIndex(storeDir: String): AnnPin = {
-    val gen = VersionedStore.currentGen(storeDir).getOrElse(
-      throw new IllegalStateException(s"Ann.pinIndex: $storeDir has no" +
-        " published generation — only versioned stores carry a pinnable" +
-        " coordinate"))
-    val t = VersionedStore.generationRoot(storeDir, gen)
-    val table = if (StoreFs.listDirNames(t).contains("cells")) "cells"
-      else "codes"
-    AnnPin(gen, VersionedStore.batchIdsOf(s"$t/$table").maxOption)
-  }
-
-  /** [[VersionedStore.liveRowsAt]] on the ANN id column — the one read
-    * every pinned server here shares. */
-  private def liveRowsAt(spark: org.apache.spark.sql.SparkSession,
-      genRoot: String, table: String, maxBatch: Option[Long]): DataFrame =
-    VersionedStore.liveRowsAt(spark, genRoot, table, maxBatch, "id")
-
-  /** [[ivfQuantizedTopKFromStore]] at a captured [[AnnPin]]: codebook
-    * AND cells resolve from the pinned generation (not the head), cells
-    * additionally pin at the recorded append batch. */
-  def ivfQuantizedTopKFromStorePinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfQuantizedTopKFromStorePinned")
-    val centroids = spark.read.parquet(s"$t/codebook")
-    val cells = liveRowsAt(spark, t, "cells", pin.maxBatch)
-      .withColumnRenamed("id", "neighbor_id")
-    ivfQuantizedCore(queries, cells, centroids, corpus, k, nProbe, rerank)
-  }
-
-  /** [[pqTopKFromStore]] at a captured [[AnnPin]] — the books load from
-    * the pinned generation too (a later retrain publishes new books; a
-    * pin must never score old codes under them). */
-  def pqTopKFromStorePinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.pqTopKFromStorePinned")
-    val books = readPqBooksAt(spark, t)
-    val codes = liveRowsAt(spark, t, "codes", pin.maxBatch)
-      .select(col("id").as("neighbor_id"), col("codes"))
-    pqCore(queries, codes, books, corpus, k, rerank)
-  }
-
-  /** [[ivfPqTopKFromStore]] at a captured [[AnnPin]] — all three tables
-    * (codebook, books, cells) resolve from the pinned generation. */
-  def ivfPqTopKFromStorePinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfPqTopKFromStorePinned")
-    ivfPqServeAt(queries, corpus, t,
-      liveRowsAt(spark, t, "cells", pin.maxBatch), k, nProbe, rerank)
-  }
+  /** The live rows of coded table `table` (`cells` or `codes`) at a
+    * resolved view ([[VersionedStore.liveRows]]) — the one serving read
+    * of every store reader and server here. The `batch` partition column
+    * of a batch-addressed store ([[appendToIndexBatch]]) is LAYOUT, not
+    * data — dropped, so every consumer sees one schema either way. */
+  private def servedRows(spark: org.apache.spark.sql.SparkSession,
+      v: VersionedStore.View, table: String): DataFrame =
+    VersionedStore.liveRows(spark, v, table, "id").drop("batch")
 
   /** Mean recall@k of an approximate top-k frame against the exact one
     * (both in the (query_id, neighbor_id, rank, cosine) serving shape,
@@ -888,18 +732,19 @@ object Ann {
   def compactIndexCells(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, numFiles: Int = 4, keepGenerations: Int = 0): Unit = {
     require(numFiles > 0, s"compactIndexCells: numFiles $numFiles")
-    val t0 = VersionedStore.tableRoot(storeDir)
-    val batched = hasBatchLayout(s"$t0/cells")
+    val v = VersionedStore.resolve(storeDir)
+    val batched = hasBatchLayout(s"${v.dir}/cells")
     // a batch-addressed store keeps its FULL batch=<id> layout through
-    // the rewrite (a row's batch identity is preserved, not rolled up):
-    // compaction drops tombstoned rows only, so the as-of pin
-    // ([[readCellsAsOf]]) stays exact across the GC — a rollup would
-    // silently pull later batches under every earlier pin — and
-    // post-compaction [[appendToIndexBatch]] writes keep working
-    val liveCells = shapeByCell(Tombstones.filterLive(
-      spark.read.parquet(s"$t0/cells"), t0, "id"), numFiles)
+    // the rewrite (a row's batch identity is preserved, not rolled up —
+    // [[VersionedStore.liveRows]] keeps the `batch` column): compaction
+    // drops tombstoned rows only, so a [[VersionedStore.Pin]] stays
+    // exact across the GC — a rollup would silently pull later batches
+    // under every earlier pin — and post-compaction
+    // [[appendToIndexBatch]] writes keep working
+    val liveCells = shapeByCell(
+      VersionedStore.liveRows(spark, v, "cells", "id"), numFiles)
     VersionedStore.publish(storeDir, Map(
-      "codebook" -> spark.read.parquet(s"$t0/codebook"),
+      "codebook" -> spark.read.parquet(s"${v.dir}/codebook"),
       "cells" -> liveCells),
       partitionBy =
         if (batched) Map("cells" -> Seq("batch")) else Map.empty)
@@ -948,15 +793,16 @@ object Ann {
     // pinned read retrieves. Their maintenance op is store ROTATION
     // (writeIndex of the live rows to a fresh root — the periodic
     // retrain a frozen-codebook regime schedules anyway)
-    require(!hasBatchLayout(s"${VersionedStore.tableRoot(storeDir)}/cells"),
+    val v = VersionedStore.resolve(storeDir)
+    require(!hasBatchLayout(s"${v.dir}/cells"),
       s"rebalanceCells: $storeDir is batch-addressed (stream-maintained)" +
         " — an assignment rewrite would invalidate the append history" +
-        " as-of reads pin; rotate the store (writeIndex to a fresh root)" +
+        " that pins read; rotate the store (writeIndex to a fresh root)" +
         " instead")
     // persisted once: the pass reads the cell table 2×#oversized times
     // (member slices, counts) before the rewrite — each read must not
     // re-scan the store
-    val live = readCells(spark, storeDir).persist()
+    val live = servedRows(spark, v, "cells").persist()
     try {
     // codebook-bounded rows (one per cell) — driver-collectable by the
     // same construction as every codebook collect here
@@ -964,8 +810,7 @@ object Ann {
       .where(col("n") > maxCellSize)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     if (oversized.isEmpty) return Seq.empty
-    val book = spark.read
-      .parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook").collect()
+    val book = spark.read.parquet(s"${v.dir}/codebook").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toSeq)).sortBy(_._1)
     require(book.nonEmpty, s"rebalanceCells: empty codebook in $storeDir")
     val baseId = book.map(_._1).max + 1
@@ -1065,18 +910,18 @@ object Ann {
     require(numFiles > 0, s"mergeCells: numFiles $numFiles")
     // assignment rewrite — refuses batch-addressed stores for the same
     // reason as [[rebalanceCells]] (rotation is their maintenance op)
-    require(!hasBatchLayout(s"${VersionedStore.tableRoot(storeDir)}/cells"),
+    val v = VersionedStore.resolve(storeDir)
+    require(!hasBatchLayout(s"${v.dir}/cells"),
       s"mergeCells: $storeDir is batch-addressed (stream-maintained) —" +
         " an assignment rewrite would invalidate the append history" +
-        " as-of reads pin; rotate the store (writeIndex to a fresh root)" +
+        " that pins read; rotate the store (writeIndex to a fresh root)" +
         " instead")
-    val live = readCells(spark, storeDir).persist()
+    val live = servedRows(spark, v, "cells").persist()
     try {
       // codebook-bounded rows (one per cell) — driver-collectable
       val counts = live.groupBy("cell_id").agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val book = spark.read
-        .parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook").collect()
+      val book = spark.read.parquet(s"${v.dir}/codebook").collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toSeq)).sortBy(_._1)
       require(book.nonEmpty, s"mergeCells: empty codebook in $storeDir")
       val sized = book.map { case (id, _) => (id, counts.getOrElse(id, 0L)) }
@@ -1117,42 +962,16 @@ object Ann {
   /** Float-precision IVF retrieval against a [[writeIndex]] store: the
     * stored (id, cell_id) assignment bounds candidates per probed cell;
     * candidate ids join `corpus` for vectors (id-keyed, linear) — the
-    * int8 tier is bypassed, so scoring is exact without a re-rank pass. */
+    * int8 tier is bypassed, so scoring is exact without a re-rank pass.
+    * This is the tier a training job RERANKS against, so it pins like
+    * the coded tiers (`at`: [[ivfQuantizedTopKFromStore]]). */
   def ivfTopKFromStore(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2): DataFrame = {
+      storeDir: String, k: Int, nProbe: Int = 2,
+      at: Option[VersionedStore.Pin] = None): DataFrame = {
     val spark = corpus.sparkSession
-    val centroids =
-      spark.read.parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook")
-    val cells = readCells(spark, storeDir)
-      .select(col("id").as("neighbor_id"), col("cell_id"))
-    ivfExactCore(queries, corpus, centroids, cells, k, nProbe)
-  }
-
-  /** [[ivfTopKFromStore]] at a captured [[AnnPin]] — pin parity for the
-    * float-precision family: this is the tier a training job RERANKS
-    * against, so a job that pins its quantized retrieval but reranks on
-    * raw IVF must not see the head move mid-epoch. Codebook and cells
-    * resolve from the pinned generation, cells additionally pinned at
-    * the recorded append batch; tombstones still apply
-    * ([[ivfQuantizedTopKFromStorePinned]]'s contract). */
-  def ivfTopKFromStorePinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, nProbe: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfTopKFromStorePinned")
-    val centroids = spark.read.parquet(s"$t/codebook")
-    val cells = liveRowsAt(spark, t, "cells", pin.maxBatch)
-      .select(col("id").as("neighbor_id"), col("cell_id"))
-    ivfExactCore(queries, corpus, centroids, cells, k, nProbe)
-  }
-
-  /** Request-regime float-precision serve against an already-resolved
-    * (centroids, cells) pair — shared by the head and pinned readers so
-    * the two can never drift in probe ranking, pushdown, or tie-breaks. */
-  private def ivfExactCore(queries: DataFrame, corpus: DataFrame,
-      centroids: DataFrame, cells: DataFrame, k: Int,
-      nProbe: Int): DataFrame = {
-    val probes = probeCells(queries, centroids, nProbe)
+    val v = VersionedStore.resolve(storeDir, at, "Ann.ivfTopKFromStore")
+    val probes = probeCells(queries, spark.read.parquet(s"${v.dir}/codebook"),
+      nProbe)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
     // literal probed-cell pushdown ([[materializeProbes]]): the store
@@ -1160,7 +979,9 @@ object Ann {
     val (probedIds, probesL) =
       materializeProbes(probes, "ivfTopKFromStoreBatch",
         "cell_id", "query_id")
-    cells.where(col("cell_id").isin(probedIds: _*))
+    servedRows(spark, v, "cells")
+      .select(col("id").as("neighbor_id"), col("cell_id"))
+      .where(col("cell_id").isin(probedIds: _*))
       .join(broadcast(probesL), "cell_id")
       .where(col("neighbor_id") =!= col("query_id"))
       .dropDuplicates("query_id", "neighbor_id")
@@ -1424,11 +1245,11 @@ object Ann {
     readPqBooksAt(spark, VersionedStore.tableRoot(storeDir))
 
   /** [[readPqBooks]] against an ALREADY-RESOLVED table root (current
-    * generation, a pinned one, or a flat dir) — the pinned servers must
-    * load the books of the generation they serve, never the head's. */
+    * generation, a pinned one, or a flat dir) — a pinned serve must load
+    * the books of the generation it serves, never the head's. */
   private val pqBooksMemo = new java.util.concurrent.ConcurrentHashMap[
     String, Array[Array[(Long, Seq[Float])]]]()
-  private def readPqBooksAt(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def readPqBooksAt(spark: org.apache.spark.sql.SparkSession,
       t: String): Array[Array[(Long, Seq[Float])]] = {
     val storeDir = t // diagnostic naming below
     // memoized per books frame plan (the generation path rides
@@ -1476,15 +1297,12 @@ object Ann {
   }
 
   /** The LIVE code words of a [[writePqIndex]] store (tombstone-aware —
-    * candidate scoring is the only place a vector enters PQ retrieval).
-    * The `batch` partition column of a batch-addressed store is layout,
-    * not data — dropped here ([[readCells]]'s rule). */
-  def readPqCodes(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    Tombstones.filterLive(
-      spark.read.parquet(s"$t/codes").drop("batch"), t, "id")
-  }
+    * candidate scoring is the only place a vector enters PQ retrieval),
+    * `batch` layout column dropped; `at` as in [[readCells]]. */
+  def readPqCodes(spark: org.apache.spark.sql.SparkSession, storeDir: String,
+      at: Option[VersionedStore.Pin] = None): DataFrame =
+    servedRows(spark, VersionedStore.resolve(storeDir, at, "Ann.readPqCodes"),
+      "codes")
 
   /** Append a NEW vector batch to a [[writePqIndex]] store: the frozen
     * sub-codebooks load from the store (driver-sized), ONLY the batch
@@ -1529,48 +1347,24 @@ object Ann {
       .parquet(s"$t/codes/batch=$batchId")
   }
 
-  /** [[readPqCodes]] PINNED at append batch `maxBatch` —
-    * [[readCellsAsOf]]'s contract on the PQ code table (batches past
-    * the pin partition-prune out of the plan; tombstones STILL apply;
-    * flat stores refuse loudly). */
-  def readPqCodesAsOf(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    val raw = spark.read.parquet(s"$t/codes")
-    require(raw.columns.contains("batch"),
-      s"readPqCodesAsOf: $storeDir is not batch-addressed — only" +
-        " appendToPqIndexBatch stores carry a pinnable append history")
-    Tombstones.filterLive(
-      raw.where(col("batch") <= maxBatch).drop("batch"), t, "id")
-  }
-
   /** PQ retrieval served FROM a persisted [[writePqIndex]] store —
     * [[pqTopK]]'s exact frame (broadcast LUT queries, code-word scan,
     * bounded per-partition heap, exact re-rank) with training and
     * encoding replaced by store reads: the books load once
     * (driver-sized), the corpus-sized input is ONE scan of the m-entry
     * code words, and only `queries × rerank` survivors fetch float
-    * vectors from `corpus` (id-keyed join into the lake). */
+    * vectors from `corpus` (id-keyed join into the lake). `at`: books
+    * and codes resolve from the pinned generation (a later retrain
+    * publishes new books; a pin must never score old codes under them),
+    * as in [[ivfQuantizedTopKFromStore]]. */
   def pqTopKFromStore(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, rerank: Int = 50): DataFrame = {
+      storeDir: String, k: Int, rerank: Int = 50,
+      at: Option[VersionedStore.Pin] = None): DataFrame = {
     val spark = corpus.sparkSession
-    val books = readPqBooks(spark, storeDir)
-    val codes = readPqCodes(spark, storeDir)
+    val v = VersionedStore.resolve(storeDir, at, "Ann.pqTopKFromStore")
+    val codes = servedRows(spark, v, "codes")
       .select(col("id").as("neighbor_id"), col("codes"))
-    pqCore(queries, codes, books, corpus, k, rerank)
-  }
-
-  /** [[pqTopKFromStore]] against the [[readPqCodesAsOf]] pin — the
-    * books are frozen across appends, so the pinned state is exactly
-    * what the store served at batch `maxBatch`. */
-  def pqTopKFromStoreAsOf(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, maxBatch: Long, rerank: Int = 50)
-      : DataFrame = {
-    val spark = corpus.sparkSession
-    val books = readPqBooks(spark, storeDir)
-    val codes = readPqCodesAsOf(spark, storeDir, maxBatch)
-      .select(col("id").as("neighbor_id"), col("codes"))
-    pqCore(queries, codes, books, corpus, k, rerank)
+    pqCore(queries, codes, readPqBooksAt(spark, v.dir), corpus, k, rerank)
   }
 
   /** Write a PERSISTED IVF-PQ index for `corpus` into `dir` — the
@@ -1704,56 +1498,20 @@ object Ann {
     * code words restricted to probed cells (broadcast hash join on
     * cell_id — the cells table is clustered by it); the LUT side is
     * queries × nProbe rows of m·ksub doubles, broadcast; the rerank cut
-    * is a per-query window; the exact pass is id-keyed into the lake. */
+    * is a per-query window; the exact pass is id-keyed into the lake.
+    * `at`: all three tables (codebook, books, cells) resolve from the
+    * pinned generation, as in [[ivfQuantizedTopKFromStore]]. */
   def ivfPqTopKFromStore(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2, rerank: Int = 50)
-      : DataFrame = {
+      storeDir: String, k: Int, nProbe: Int = 2, rerank: Int = 50,
+      at: Option[VersionedStore.Pin] = None): DataFrame = {
     val spark = corpus.sparkSession
-    val t = VersionedStore.tableRoot(storeDir)
-    ivfPqServe(queries, corpus, storeDir,
-      Tombstones.filterLive(
-        spark.read.parquet(s"$t/cells").drop("batch"), t, "id"),
-      k, nProbe, rerank)
-  }
-
-  /** [[ivfPqTopKFromStore]] PINNED at append batch `maxBatch`
-    * ([[readCellsAsOf]]'s contract on the coded-cells table: both
-    * quantizers are frozen across appends, so the pinned state is
-    * exactly what the store served at batch `maxBatch`; tombstones
-    * still apply; flat stores refuse loudly). */
-  def ivfPqTopKFromStoreAsOf(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, maxBatch: Long, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.tableRoot(storeDir)
-    val raw = spark.read.parquet(s"$t/cells")
-    require(raw.columns.contains("batch"),
-      s"ivfPqTopKFromStoreAsOf: $storeDir is not batch-addressed — only" +
-        " appendToIvfPqIndexBatch stores carry a pinnable append history")
-    ivfPqServe(queries, corpus, storeDir,
-      Tombstones.filterLive(
-        raw.where(col("batch") <= maxBatch).drop("batch"), t, "id"),
-      k, nProbe, rerank)
-  }
-
-  private def ivfPqServe(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, liveCells: DataFrame, k: Int, nProbe: Int,
-      rerank: Int): DataFrame =
-    ivfPqServeAt(queries, corpus, VersionedStore.tableRoot(storeDir),
-      liveCells, k, nProbe, rerank)
-
-  /** [[ivfPqServe]] against an already-resolved table root ([[
-    * readPqBooksAt]]'s rationale: a pinned serve loads ITS generation's
-    * quantizers). */
-  private def ivfPqServeAt(queries: DataFrame, corpus: DataFrame,
-      t: String, liveCells: DataFrame, k: Int, nProbe: Int,
-      rerank: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    val centroids = spark.read.parquet(s"$t/codebook")
-    val books = readPqBooksAt(spark, t)
+    val v = VersionedStore.resolve(storeDir, at, "Ann.ivfPqTopKFromStore")
+    val centroids = spark.read.parquet(s"${v.dir}/codebook")
+    val books = readPqBooksAt(spark, v.dir)
     val m = books.length
     val ksub = books(0).length
-    val cells = liveCells.withColumnRenamed("id", "neighbor_id")
+    val cells = servedRows(spark, v, "cells")
+      .withColumnRenamed("id", "neighbor_id")
     val probes = probeCells(queries, centroids, nProbe)
       .withColumn("lut", adcLutExpr(books,
         zip_with(col("qvec"), col("cent"), (a, b) => a - b)))
@@ -1810,43 +1568,22 @@ object Ann {
     * cell_id, and every later join is unhinted so AQE sizes it from
     * measurements. Same stated trade as the int8 batch regime: the
     * coded tier scans, which a corpus-sized batch makes moot (it
-    * probes every cell many times over). */
+    * probes every cell many times over). `at`: the pinned
+    * lake-annotation path on the compressed tier
+    * ([[ivfQuantizedTopKFromStoreBatch]]). */
   def ivfPqTopKFromStoreBatch(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
+      storeDir: String, k: Int, nProbe: Int = 2, rerank: Int = 50,
+      at: Option[VersionedStore.Pin] = None): DataFrame = {
     val spark = corpus.sparkSession
-    val t = VersionedStore.tableRoot(storeDir)
-    ivfPqBatchCore(queries, corpus, t,
-      Tombstones.filterLive(
-        spark.read.parquet(s"$t/cells").drop("batch"), t, "id"),
-      k, nProbe, rerank)
-  }
-
-  /** [[ivfPqTopKFromStoreBatch]] at a captured [[AnnPin]] — the pinned
-    * lake-annotation path on the compressed tier: all three tables
-    * (codebook, books, cells) resolve from the pinned generation, the
-    * cells additionally pinned at the recorded append batch
-    * ([[ivfQuantizedTopKFromStoreBatchPinned]]'s rationale). */
-  def ivfPqTopKFromStoreBatchPinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfPqTopKFromStoreBatchPinned")
-    ivfPqBatchCore(queries, corpus, t,
-      liveRowsAt(spark, t, "cells", pin.maxBatch), k, nProbe, rerank)
-  }
-
-  private def ivfPqBatchCore(queries: DataFrame, corpus: DataFrame,
-      t: String, liveCells: DataFrame, k: Int, nProbe: Int,
-      rerank: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    val centroids = spark.read.parquet(s"$t/codebook")
-    val books = readPqBooksAt(spark, t)
+    val v = VersionedStore.resolve(storeDir, at,
+      "Ann.ivfPqTopKFromStoreBatch")
+    val centroids = spark.read.parquet(s"${v.dir}/codebook")
+    val books = readPqBooksAt(spark, v.dir)
     val m = books.length
     val ksub = books(0).length
-    val cells = liveCells.withColumnRenamed("id", "neighbor_id")
-    // per-(query, cell) residual LUT — ivfPqServeAt's expression
+    val cells = servedRows(spark, v, "cells")
+      .withColumnRenamed("id", "neighbor_id")
+    // per-(query, cell) residual LUT — ivfPqTopKFromStore's expression
     // verbatim, but COMPUTED ON THE DISTRIBUTED probe frame (queries ×
     // nProbe rows of m·ksub doubles) instead of collected rows: the
     // LUT build is a projection, so it parallelizes with the frame
@@ -1893,16 +1630,15 @@ object Ann {
     require(numFiles > 0, s"compactPqIndex: numFiles $numFiles")
     require(VersionedStore.isVersioned(dir),
       s"compactPqIndex: $dir is not a versioned PQ store")
-    val t = VersionedStore.tableRoot(dir)
+    val v = VersionedStore.resolve(dir)
     // batch-addressed stores keep their full batch=<id> history through
     // the rewrite (compactIndexCells' rationale: a row drop must not
-    // move rows under earlier as-of pins)
-    val batched = hasBatchLayout(s"$t/codes")
+    // move rows under earlier pins)
+    val batched = hasBatchLayout(s"${v.dir}/codes")
     VersionedStore.publish(dir, Map(
-      "books" -> spark.read.parquet(s"$t/books"),
-      "codes" -> Tombstones.filterLive(
-          spark.read.parquet(s"$t/codes"), t, "id")
-        .coalesce(numFiles)) ++ quantStats(spark, t),
+      "books" -> spark.read.parquet(s"${v.dir}/books"),
+      "codes" -> VersionedStore.liveRows(spark, v, "codes", "id")
+        .coalesce(numFiles)) ++ quantStats(spark, v.dir),
       partitionBy =
         if (batched) Map("codes" -> Seq("batch")) else Map.empty)
     VersionedStore.gc(dir, keep = keepGenerations)
@@ -1926,15 +1662,14 @@ object Ann {
     require(numFiles > 0, s"compactIvfPqIndex: numFiles $numFiles")
     require(VersionedStore.isVersioned(dir),
       s"compactIvfPqIndex: $dir is not a versioned IVF-PQ store")
-    val t = VersionedStore.tableRoot(dir)
-    val batched = hasBatchLayout(s"$t/cells")
+    val v = VersionedStore.resolve(dir)
+    val batched = hasBatchLayout(s"${v.dir}/cells")
     // batch history preserved through the rewrite (compactIndexCells)
-    val live = Tombstones.filterLive(
-      spark.read.parquet(s"$t/cells"), t, "id")
+    val live = VersionedStore.liveRows(spark, v, "cells", "id")
     VersionedStore.publish(dir, Map(
-      "codebook" -> spark.read.parquet(s"$t/codebook"),
-      "books" -> spark.read.parquet(s"$t/books"),
-      "cells" -> shapeByCell(live, numFiles)) ++ quantStats(spark, t),
+      "codebook" -> spark.read.parquet(s"${v.dir}/codebook"),
+      "books" -> spark.read.parquet(s"${v.dir}/books"),
+      "cells" -> shapeByCell(live, numFiles)) ++ quantStats(spark, v.dir),
       partitionBy =
         if (batched) Map("cells" -> Seq("batch")) else Map.empty)
     VersionedStore.gc(dir, keep = keepGenerations)

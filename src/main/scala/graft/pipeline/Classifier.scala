@@ -72,7 +72,7 @@ object Classifier {
     * [[unlearn]] followed by save to the same root physically deletes
     * the pre-unlearn counts (the forgotten training data), matching the
     * old overwrite-in-place semantics; raising it trades that deadline
-    * for [[VersionedStore.readAsOf]] pinning of recent model versions.
+    * for [[loadPinned]] pinning of recent model versions.
     * Note the model frames may lazily READ the same root (unlearn does):
     * publish executes them while the old generation still exists, and
     * only then does gc retire it. */

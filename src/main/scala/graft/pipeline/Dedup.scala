@@ -428,22 +428,29 @@ object Dedup {
     * table is the only place it enters candidate generation. On a
     * batch-addressed store ([[appendToSignatureStoreBatch]]) the
     * discovered `batch` partition column is LAYOUT, not data — dropped
-    * here so every consumer sees one schema either way. */
+    * here so every consumer sees one schema either way. `at` replays a
+    * captured [[VersionedStore.Pin]] (an as-of-batch read of the head is
+    * `Pin(currentGen, Some(b))`): a curation run replays the exact dedup
+    * decision set it was made under after any number of later appends
+    * and publishes; tombstones still apply — time travel must never
+    * resurrect a deleted doc's candidate pairs. */
   def readSignatureStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    Tombstones.filterLive(
-      spark.read.parquet(s"$t/sigs").drop("batch"), t, "id")
-  }
+      storeDir: String, at: Option[VersionedStore.Pin] = None): DataFrame =
+    servedRows(spark, VersionedStore.resolve(storeDir, at,
+      "Dedup.readSignatureStore"), "sigs")
 
   /** The LIVE banded blocking rows of a persisted signature store
-    * (tombstone-aware like [[readSignatureStore]]). */
+    * (tombstone-aware like [[readSignatureStore]], `at` likewise). */
   def readBandedStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    Tombstones.filterLive(
-      spark.read.parquet(s"$t/banded").drop("batch"), t, "id")
-  }
+      storeDir: String, at: Option[VersionedStore.Pin] = None): DataFrame =
+    servedRows(spark, VersionedStore.resolve(storeDir, at,
+      "Dedup.readBandedStore"), "banded")
+
+  /** The live rows of `table` at a resolved view, `batch` layout column
+    * dropped ([[VersionedStore.liveRows]]) — the one serving read here. */
+  private def servedRows(spark: org.apache.spark.sql.SparkSession,
+      v: VersionedStore.View, table: String): DataFrame =
+    VersionedStore.liveRows(spark, v, table, "id").drop("batch")
 
   /** Render a PERSISTED minhash signature store for `docs` into `dir` —
     * the one-time corpus onboarding of the signature-store dedup
@@ -463,8 +470,7 @@ object Dedup {
     * `batch=<id>` partition dirs, so the store is maintained by
     * [[appendToSignatureStoreBatch]] for life — partition discovery
     * rejects a layout that mixes flat files with batch subdirs, and the
-    * batch history is what [[readSignatureStoreAsOf]] /
-    * [[pinSignatureStore]] pin. */
+    * batch history is what a [[VersionedStore.Pin]] pins. */
   def writeSignatureStore(docs: DataFrame, dir: String,
       textCol: String = "text", idCol: String = "doc_id",
       shingleN: Int = 3, k: Int = 64, bands: Int = 16,
@@ -539,98 +545,24 @@ object Dedup {
     finally sigs.unpersist()
   }
 
-  /** [[readSignatureStore]] PINNED at append batch `maxBatch` —
-    * snapshot reproducibility for a batch-addressed signature store:
-    * only batches ≤ `maxBatch` scan (partition pruning — later batches'
-    * files never enter the plan), so a training run can replay the
-    * exact dedup decision set it was curated under after any number of
-    * later appends. Same deliberate asymmetry as every as-of read here:
-    * TOMBSTONES STILL APPLY — a takedown is legal erasure, and time
-    * travel must never resurrect a deleted doc's candidate pairs. */
-  def readSignatureStoreAsOf(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    val raw = spark.read.parquet(s"$t/sigs")
-    require(raw.columns.contains("batch"),
-      s"readSignatureStoreAsOf: $storeDir is not batch-addressed — only" +
-        " appendToSignatureStoreBatch stores carry a pinnable append" +
-        " history")
-    Tombstones.filterLive(
-      raw.where(col("batch") <= maxBatch).drop("batch"), t, "id")
-  }
-
-  /** As-of twin of [[readBandedStore]] — candidate generation pins to
-    * the same snapshot as the signature estimate. */
-  def readBandedStoreAsOf(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    val raw = spark.read.parquet(s"$t/banded")
-    require(raw.columns.contains("batch"),
-      s"readBandedStoreAsOf: $storeDir is not batch-addressed — only" +
-        " appendToSignatureStoreBatch stores carry a pinnable append" +
-        " history")
-    Tombstones.filterLive(
-      raw.where(col("batch") <= maxBatch).drop("batch"), t, "id")
-  }
-
-  /** ONE time-travel coordinate for a signature store — the dedup twin
-    * of [[Ann.AnnPin]] / [[Retrieval.RetrievalPin]]: `gen` is the
-    * [[VersionedStore]] generation (whole rebuilds/compactions),
-    * `maxBatch` the append batch WITHIN it (`None` on a store without
-    * the batch-addressed layout). A curation job captures this at read
-    * time ([[pinSignatureStore]]) and records a single token; the
-    * `*Pinned` readers then reproduce the exact store state its dedup
-    * decisions were made against — across later appends AND later
-    * publishes — without knowing which axis moved. Tombstones
-    * deliberately still apply; a gc-retired pin fails LOUDLY
-    * ([[VersionedStore.pinnedGenerationRoot]]), never serves a substitute. */
-  final case class DedupPin(gen: Long, maxBatch: Option[Long])
-
-  /** Capture the CURRENT pin of a versioned signature store: the
-    * flipped generation plus the highest append batch inside it.
-    * Metadata-only: one pointer resolution + one directory listing. */
-  def pinSignatureStore(storeDir: String): DedupPin = {
-    val (gen, maxBatch) = VersionedStore.pinCoordinate(storeDir, "sigs",
-      "Dedup.pinSignatureStore")
-    DedupPin(gen, maxBatch)
-  }
-
-  /** The live rows of `table` under an already-resolved generation dir,
-    * optionally pinned at a max append batch — [[Ann]]'s `liveRowsAt`
-    * discipline on the dedup tables. */
-  private def liveSigRowsAt(spark: org.apache.spark.sql.SparkSession,
-      genRoot: String, table: String, maxBatch: Option[Long]): DataFrame =
-    VersionedStore.liveRowsAt(spark, genRoot, table, maxBatch, "id")
-
-  /** [[readSignatureStore]] at a captured [[DedupPin]]. */
-  def readSignatureStorePinned(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, pin: DedupPin): DataFrame =
-    liveSigRowsAt(spark, VersionedStore.pinnedGenerationRoot(storeDir,
-      pin.gen, pin.maxBatch, "Dedup.readSignatureStorePinned"),
-      "sigs", pin.maxBatch)
-
-  /** [[readBandedStore]] at a captured [[DedupPin]]. */
-  def readBandedStorePinned(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, pin: DedupPin): DataFrame =
-    liveSigRowsAt(spark, VersionedStore.pinnedGenerationRoot(storeDir,
-      pin.gen, pin.maxBatch, "Dedup.readBandedStorePinned"),
-      "banded", pin.maxBatch)
-
   /** The store's full near-dup candidate pair set (estimate stage) at a
-    * captured [[DedupPin]]: banding, candidate generation AND the
-    * signature-match estimate all resolve from the pinned snapshot, so
-    * the pairs are exactly the ones the store would have served when
-    * the pin was captured (modulo takedowns, which always apply). Feed
-    * the result to [[ngramJaccardVerify]] for the exact-verify stage —
-    * document text lives in the lake, not the store, and verification
-    * is collision-bounded either way. */
+    * captured [[VersionedStore.Pin]]: banding, candidate generation AND
+    * the signature-match estimate all resolve from the pinned snapshot
+    * (one resolution for both tables), so the pairs are exactly the
+    * ones the store would have served when the pin was captured (modulo
+    * takedowns, which always apply). Feed the result to
+    * [[ngramJaccardVerify]] for the exact-verify stage — document text
+    * lives in the lake, not the store, and verification is
+    * collision-bounded either way. */
   def nearDupPairsFromStorePinned(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, pin: DedupPin, k: Int = 64,
+      storeDir: String, pin: VersionedStore.Pin, k: Int = 64,
       jaccardThreshold: Double = 0.5): DataFrame = {
-    val banded = readBandedStorePinned(spark, storeDir, pin)
+    val v = VersionedStore.resolve(storeDir, Some(pin),
+      "Dedup.nearDupPairsFromStorePinned")
+    val banded = servedRows(spark, v, "banded")
     estimatePairsFromSignatures(
       incrementalCandidatesFromBanded(banded, banded),
-      readSignatureStorePinned(spark, storeDir, pin), k, jaccardThreshold)
+      servedRows(spark, v, "sigs"), k, jaccardThreshold)
   }
 
   /** Compact a [[writeSignatureStore]] store — the takedown GC
@@ -642,19 +574,19 @@ object Dedup {
     * the gc sweeps. A batch-addressed store keeps its FULL
     * `batch=<id>` layout through the rewrite — the
     * [[Ann.compactIndexCells]] rule: a row's batch identity is
-    * preserved, never rolled up, so as-of pins stay exact across the GC
-    * and post-compaction [[appendToSignatureStoreBatch]] writes keep
+    * preserved, never rolled up, so pins stay exact across the GC and
+    * post-compaction [[appendToSignatureStoreBatch]] writes keep
     * working. */
   def compactSignatureStore(spark: org.apache.spark.sql.SparkSession,
       dir: String, numFiles: Int = 4, keepGenerations: Int = 0): Unit = {
     require(numFiles > 0, s"compactSignatureStore: numFiles $numFiles")
-    val t0 = VersionedStore.tableRoot(dir)
-    val batched = StoreFs.listDirNames(s"$t0/sigs")
+    val v = VersionedStore.resolve(dir)
+    val batched = StoreFs.listDirNames(s"${v.dir}/sigs")
       .exists(_.startsWith("batch="))
-    // raw reads keep the discovered batch column (the public readers
+    // liveRows keeps the discovered batch column (the serving readers
     // drop it — layout, not data — but the rewrite must preserve it)
-    def live(table: String): DataFrame = Tombstones.filterLive(
-      spark.read.parquet(s"$t0/$table"), t0, "id").coalesce(numFiles)
+    def live(table: String): DataFrame =
+      VersionedStore.liveRows(spark, v, table, "id").coalesce(numFiles)
     val sigsLive = live("sigs")
     val bandedLive = live("banded")
     VersionedStore.publish(dir, Map(

@@ -90,7 +90,7 @@ object LangModel {
     * [[unlearn]] path (the pre-unlearn counts — the forgotten training
     * data — are physically deleted, the old overwrite semantics);
     * raising it keeps recent model versions pinnable via
-    * [[VersionedStore.readAsOf]] at the documented retention cost. */
+    * [[loadPinned]] at the documented retention cost. */
   def save(model: Model, dir: String, keepGenerations: Int = 0): Unit = {
     // one atomic generation for the triple ([[Classifier.save]]'s
     // rationale: a torn uni/bi/vocab set silently mis-scores)

@@ -209,8 +209,7 @@ object Retrieval {
     * born as `batch=<id>` partition dirs, so the store is maintained by
     * [[appendToPostingsIndexBatch]] for life — partition discovery
     * rejects a layout that mixes flat files with batch subdirs, and the
-    * batch history is what [[readPostingsIndexAsOf]]/[[pinPostings]]
-    * pin. */
+    * batch history is what a [[VersionedStore.Pin]] pins. */
   def writePostingsIndex(docs: DataFrame, dir: String, numFiles: Int = 4,
       idCol: String = "doc_id", textCol: String = "text",
       batchId: Option[Long] = None): Unit = {
@@ -279,7 +278,7 @@ object Retrieval {
     * delivery) rewrites the same partial instead of appending a second
     * copy — a blind append would silently double the replayed docs'
     * tf/df/n_hits. The store reads like any postings index (the batch
-    * partition column rides along and every consumer ignores it); a
+    * partition column is layout, and every serving reader drops it); a
     * stream-maintained store uses THIS form for every write from its
     * first batch, which publishes generation 1 with the batch-addressed
     * layout (partition discovery rejects a layout that mixes flat files
@@ -305,30 +304,28 @@ object Retrieval {
     * any [[tombstoneDocs]] takedowns — no takedowns, no plan overhead;
     * otherwise one broadcast anti-join on doc_id (request-sized set).
     * Read with [[PostingsSchema]], so the read starts no Parquet
-    * schema-inference job; a batch-addressed store's `batch` column
-    * still comes from partition discovery. */
+    * schema-inference job; the `batch` layout column of a
+    * batch-addressed store is dropped. `at` replays a captured
+    * [[VersionedStore.Pin]] instead of the head: only batches up to the
+    * pin scan (later batches' files never enter the plan), so a training
+    * run reproduces the exact index state it was built against after
+    * any number of later appends and publishes. An as-of-batch read of
+    * the head is `Pin(currentGen, Some(b))`, refused loudly on a flat
+    * store. Deliberate asymmetry: TOMBSTONES STILL APPLY — a takedown is
+    * legal erasure, and time travel must never resurrect deleted docs. */
   def readPostingsIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    readLive(spark, dir, "postings", PostingsSchema, None)
+      dir: String, at: Option[VersionedStore.Pin] = None): DataFrame =
+    servedRows(spark, VersionedStore.resolve(dir, at,
+      "Retrieval.readPostingsIndex"), "postings", PostingsSchema)
 
-  /** The live rows of store table `table` read with its declared
-    * `schema` — every reader of this store goes through here, so no
-    * store read infers a schema (the tombstone set has its own,
-    * [[Tombstones.Schema]]). `asOf` = (max batch, caller) keeps only
-    * batches up to the pin and refuses a store without the
-    * batch-addressed layout. */
-  private def readLive(spark: org.apache.spark.sql.SparkSession,
-      dir: String, table: String, schema: StructType,
-      asOf: Option[(Long, String)]): DataFrame = {
-    val t = VersionedStore.tableRoot(dir)
-    val stored = spark.read.schema(schema).parquet(s"$t/$table")
-    val rows = asOf.fold(stored) { case (maxBatch, who) =>
-      require(stored.columns.contains("batch"),
-        s"$who: $dir is not batch-addressed (flat store)")
-      stored.where(col("batch") <= maxBatch)
-    }
-    Tombstones.filterLive(rows, t, "doc_id")
-  }
+  /** The live rows of store table `table` at a resolved view, read with
+    * its declared `schema` ([[VersionedStore.liveRows]]) and with the
+    * `batch` layout column dropped — the one serving read of this store,
+    * so no store read here infers a schema. */
+  private def servedRows(spark: org.apache.spark.sql.SparkSession,
+      v: VersionedStore.View, table: String, schema: StructType): DataFrame =
+    VersionedStore.liveRows(spark, v, table, "doc_id", Some(schema))
+      .drop("batch")
 
   /** Record a takedown against a [[writePostingsIndex]] store: the docs
     * leave every serving surface AT ONCE — phrase/proximity hits, KWIC
@@ -350,92 +347,19 @@ object Retrieval {
   def tombstoneDocsDf(ids: DataFrame, dir: String): Unit =
     Tombstones.appendDf(ids, dir)
 
-  /** SNAPSHOT-PINNED read of a stream-maintained postings store (one
-    * built by [[appendToPostingsIndexBatch]], whose `batch=` partition
-    * column is the append history): only batches ≤ `maxBatch` are
-    * scanned (partition pruning — later batches' files are never
-    * listed into the plan), so a training run can pin the exact index
-    * state it was built against and reproduce it after any number of
-    * later appends. Deliberate asymmetry: TOMBSTONES STILL APPLY.
-    * A takedown is legal erasure, and a time-travel read that
-    * resurrected deleted docs would defeat it — so as-of pins the
-    * append history, never the delete history. */
-  def readPostingsIndexAsOf(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxBatch: Long): DataFrame =
-    readLive(spark, dir, "postings", PostingsSchema,
-      Some((maxBatch, "readPostingsIndexAsOf")))
-
-  /** As-of twin of [[readDocLengths]] for batch-addressed stores —
-    * pins BM25's corpus statistics to the same snapshot. Declared
-    * schema, like every store read here. */
-  def readDocLengthsAsOf(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxBatch: Long): DataFrame =
-    readLive(spark, dir, "doclens", DocLensSchema,
-      Some((maxBatch, "readDocLengthsAsOf")))
-
-  /** ONE time-travel coordinate for a postings store — the retrieval
-    * twin of [[Ann.AnnPin]]: `gen` is the [[VersionedStore]] generation
-    * (whole rebuilds/compactions), `maxBatch` the append batch WITHIN
-    * it (`None` on a store without the batch-addressed layout). A
-    * training job captures this at read time ([[pinPostings]]) and
-    * records a single token; the `*Pinned` readers then reproduce the
-    * exact index state it retrieved against — across any number of
-    * later appends AND later publishes — without knowing which axis
-    * moved. Tombstones deliberately still apply (takedowns fan into
-    * every retained generation's overlay): a pin reproduces the append
-    * history, never resurrects erasure. The pin dies when
-    * [[VersionedStore.gc]] retires its generation — retention is the
-    * caller's policy, and a dead pin fails LOUDLY
-    * ([[VersionedStore.pinnedGenerationRoot]]), never serves a substitute. */
-  final case class RetrievalPin(gen: Long, maxBatch: Option[Long])
-
-  /** Capture the CURRENT pin of a versioned postings store: the flipped
-    * generation plus the highest append batch inside it. Metadata-only:
-    * one pointer resolution + one directory listing (the `batch=<id>`
-    * partition dirs), never a table scan. */
-  def pinPostings(dir: String): RetrievalPin = {
-    val (gen, maxBatch) = VersionedStore.pinCoordinate(dir, "postings",
-      "Retrieval.pinPostings")
-    RetrievalPin(gen, maxBatch)
-  }
-
-  /** The live rows of `table` under an already-resolved generation dir,
-    * optionally pinned at a max append batch — [[Ann]]'s `liveRowsAt`
-    * discipline on the doc_id-keyed tables: batches past the pin
-    * partition-prune out of the plan, the generation's own tombstone
-    * overlay still applies (erasure holds under time travel), and the
-    * layout `batch` column never reaches a consumer. */
-  private def liveDocsAt(spark: org.apache.spark.sql.SparkSession,
-      genRoot: String, table: String, maxBatch: Option[Long]): DataFrame =
-    VersionedStore.liveRowsAt(spark, genRoot, table, maxBatch, "doc_id")
-
-  /** [[readPostingsIndex]] at a captured [[RetrievalPin]] — feed to
-    * [[phraseSearch]]/[[proximitySearch]]/[[bm25TopKFromIndex]] to
-    * replay any retrieval surface at the pinned snapshot. */
-  def readPostingsIndexPinned(spark: org.apache.spark.sql.SparkSession,
-      dir: String, pin: RetrievalPin): DataFrame =
-    liveDocsAt(spark, VersionedStore.pinnedGenerationRoot(dir, pin.gen,
-      pin.maxBatch, "Retrieval.readPostingsIndexPinned"),
-      "postings", pin.maxBatch)
-
-  /** [[readDocLengths]] at a captured [[RetrievalPin]] — BM25's corpus
-    * statistics (N, avgdl, df) pin to the same snapshot, which is what
-    * makes a pinned score bit-identical to the score served then. */
-  def readDocLengthsPinned(spark: org.apache.spark.sql.SparkSession,
-      dir: String, pin: RetrievalPin): DataFrame =
-    liveDocsAt(spark, VersionedStore.pinnedGenerationRoot(dir, pin.gen,
-      pin.maxBatch, "Retrieval.readDocLengthsPinned"),
-      "doclens", pin.maxBatch)
-
-  /** [[bm25TopKFromIndex]] at a captured [[RetrievalPin]]: postings AND
-    * length norms resolve from the pinned generation at the pinned
-    * append batch, so the scores are the ones the store served when the
-    * pin was captured (modulo takedowns, which always apply). */
+  /** [[bm25TopKFromIndex]] at a captured [[VersionedStore.Pin]]:
+    * postings AND length norms resolve from the pinned generation at the
+    * pinned append batch (one resolution for both), so the scores are
+    * the ones the store served when the pin was captured (modulo
+    * takedowns, which always apply). */
   def bm25TopKFromStorePinned(spark: org.apache.spark.sql.SparkSession,
-      dir: String, pin: RetrievalPin, terms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25TopKFromIndex(readPostingsIndexPinned(spark, dir, pin),
-      readDocLengthsPinned(spark, dir, pin), terms, k, k1, b)
+      dir: String, pin: VersionedStore.Pin, terms: Seq[String], k: Int,
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val v = VersionedStore.resolve(dir, Some(pin),
+      "Retrieval.bm25TopKFromStorePinned")
+    bm25TopKFromIndex(servedRows(spark, v, "postings", PostingsSchema),
+      servedRows(spark, v, "doclens", DocLensSchema), terms, k, k1, b)
+  }
 
   /** Compact a [[writePostingsIndex]] store: a long trickle of
     * single-file [[appendToPostingsIndex]] batches accumulates many
@@ -468,23 +392,24 @@ object Retrieval {
     // A batch-addressed (stream-maintained) store keeps its FULL
     // batch=<id> layout through the rewrite — the [[Ann.compactIndexCells]]
     // rule: compaction drops tombstoned rows only, a row's batch
-    // identity is preserved, never rolled up — so as-of reads
-    // ([[readPostingsIndexAsOf]]) and pins ([[pinPostings]]) stay exact
-    // across the GC and post-compaction [[appendToPostingsIndexBatch]]
-    // writes keep working. Batched files cluster by (batch, token) so
-    // each batch dir keeps the token-range point-read discipline.
-    // (detected by listing the batch dirs: no read, no job)
-    val batched = VersionedStore.batchIdsOf(
-      s"${VersionedStore.tableRoot(dir)}/postings").nonEmpty
+    // identity is preserved, never rolled up ([[VersionedStore.liveRows]]
+    // keeps the `batch` column) — so pins stay exact across the GC and
+    // post-compaction [[appendToPostingsIndexBatch]] writes keep working.
+    // Batched files cluster by (batch, token) so each batch dir keeps the
+    // token-range point-read discipline. (detected by listing the batch
+    // dirs: no read, no job)
+    val v = VersionedStore.resolve(dir)
+    val batched = VersionedStore.batchIdsOf(s"${v.dir}/postings").nonEmpty
     def shaped(df: DataFrame): DataFrame =
       if (batched)
         df.repartitionByRange(numFiles, col("batch"), col("token"))
           .sortWithinPartitions("batch", "token", "doc_id", "pos")
       else df.repartitionByRange(numFiles, col("token"))
         .sortWithinPartitions("token", "doc_id", "pos")
-    val postingsLive = shaped(readPostingsIndex(spark, dir)) // takedown GC
-    val doclensLive = readDocLengths(spark, dir)
-      .coalesce(math.min(numFiles, 2))
+    val postingsLive = shaped(VersionedStore.liveRows(spark, v, "postings",
+      "doc_id", Some(PostingsSchema))) // takedown GC
+    val doclensLive = VersionedStore.liveRows(spark, v, "doclens", "doc_id",
+      Some(DocLensSchema)).coalesce(math.min(numFiles, 2))
     // live reads above are lazy plans over the OLD generation; publish
     // writes them into the new one, then gc retires everything the
     // pointer no longer references — including the purged rows and the
@@ -503,10 +428,12 @@ object Retrieval {
   /** The LIVE doc-length norms of a persisted index (tombstone-aware,
     * like [[readPostingsIndex]] — BM25's N/avgdl/df derive from this
     * table, so takedowns shrink the corpus statistics too). Read with
-    * [[DocLensSchema]]: no schema-inference job. */
+    * [[DocLensSchema]]: no schema-inference job. `at` pins BM25's corpus
+    * statistics to the same snapshot as [[readPostingsIndex]]'s. */
   def readDocLengths(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    readLive(spark, dir, "doclens", DocLensSchema, None)
+      dir: String, at: Option[VersionedStore.Pin] = None): DataFrame =
+    servedRows(spark, VersionedStore.resolve(dir, at,
+      "Retrieval.readDocLengths"), "doclens", DocLensSchema)
 
   /** BM25 top-k served FROM a persisted [[writePostingsIndex]] store —
     * bit-identical scores to [[bm25TopK]] (same per-term floor-then-sum

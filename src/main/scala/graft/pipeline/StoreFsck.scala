@@ -416,7 +416,8 @@ object StoreFsck {
       // swept mid-commit by a foreign lease gc could present — commit
       // now removes its marker before refusing (prevention), this row
       // DETECTS stores older code or an external writer left behind,
-      // because adopt()/readAsOf against it fails on every table path
+      // because adopt() or a pinned read against it fails on every
+      // table path
       ("empty_complete_generations",
         complete.count { g =>
           !StoreFs.listDirNames(s"$root/gen-$g")
@@ -616,7 +617,8 @@ object StoreFsck {
     import spark.implicits._
     require(threshold > 0, s"pqDrift: threshold $threshold")
     require(sampleMod > 0, s"pqDrift: sampleMod $sampleMod")
-    val t = VersionedStore.tableRoot(storeDir)
+    val v = VersionedStore.resolve(storeDir)
+    val t = v.dir
     val statsMissing =
       !StoreFs.hasFileWithSuffix(s"$t/quant_stats", ".parquet")
     def rows(binding: Long, unmeasurable: Long, drift: Long) =
@@ -659,9 +661,8 @@ object StoreFsck {
       else 0L // grown lake: count floor passed, checksum unverifiable
     }
     if (binding > 0) return rows(1L, 0L, 0L)
-    val books = Ann.readPqBooks(spark, storeDir)
-    val live = Tombstones.filterLive(
-      spark.read.parquet(s"$t/$codesTable").drop("batch"), t, "id")
+    val books = Ann.readPqBooksAt(spark, t)
+    val live = VersionedStore.liveRows(spark, v, codesTable, "id")
     def measure(codesFrame: DataFrame): Option[Double] = {
       val withVec = codesFrame.join(idCorpus, "id")
       // IVF-PQ stores code RESIDUALS — measure in the coded space

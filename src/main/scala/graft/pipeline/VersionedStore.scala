@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** The ONE commit protocol of every persisted store here: immutable
   * GENERATIONS published by one atomic pointer flip, plus staged
@@ -37,9 +38,9 @@ import org.apache.spark.sql.functions.col
   *     batch-addressed delta (`<table>/batch=<n>`) becomes visible by
   *     one rename, whole or not at all;
   *   - old generations stay readable until [[gc]] retires them, which
-  *     gives snapshot pinning ([[readAsOf]]) for free — the
-  *     reproducibility contract [[Retrieval.readPostingsIndexAsOf]]
-  *     provides for batch-addressed appends, here for whole rebuilds.
+  *     gives snapshot pinning for free: one [[Pin]] (generation plus
+  *     append batch inside it) is the read coordinate of every store,
+  *     resolved by [[resolve]] and read by [[liveRows]].
   *
   * A root that holds tables but no published generation (the flat
   * layout written before generations existed) is REFUSED by every read
@@ -61,7 +62,7 @@ import org.apache.spark.sql.functions.col
   * Takedowns are an O(request) PER-GENERATION TOMBSTONE OVERLAY
   * ([[takedownDf]]): the id set appends under every retained complete
   * generation's own `gen-<id>/tombstones`, live reads
-  * ([[readLive]]/[[readAsOfLive]] and every store-family reader) anti-join
+  * (every read goes through [[liveRows]]) anti-join
   * it, and the next [[publish]] — built from live rows — starts with an
   * empty set, making the eventual physical rewrite ride a publish that was
   * happening anyway instead of forcing an immediate corpus-sized republish.
@@ -377,7 +378,8 @@ object VersionedStore {
       // a crashed publish may have left a PARTIAL dir under this id;
       // wipe it whole rather than per-table overwrite — otherwise a
       // stale table the new publish doesn't carry would ride inside the
-      // completed generation and readAsOf would serve it as if published
+      // completed generation and a pinned read would serve it as if
+      // published
       StoreFs.deleteRecursive(dir)
       val token = s"$hostId ${ProcessHandle.current.pid}" +
         s" ${reserveNonce.incrementAndGet()}"
@@ -393,7 +395,7 @@ object VersionedStore {
     * single-writer contract, but serialized per-step here) commit in
     * write-finish order, and the pointer must never move BACKWARD to an
     * earlier reservation — a non-flipped commit stays readable via
-    * [[readAsOf]] and is [[adopt]]/gc fodder like any unreferenced
+    * a [[Pin]] and is [[adopt]]/gc fodder like any unreferenced
     * complete generation. */
   private[graft] def commit(root: String, gen: Long, token: String): Long =
     maintenance(root) {
@@ -414,7 +416,7 @@ object VersionedStore {
       // concurrently deleting. The marker just written comes back OUT
       // first — touch() may have resurrected the swept dir (fs.create
       // makes parents), and a table-less generation presenting as
-      // COMPLETE would be exactly what adopt()/readAsOf must never
+      // COMPLETE would be exactly what adopt() or a pinned read must never
       // see. The residual window is the milliseconds between this
       // probe and the flip — versus a lease measured in days; full
       // cross-host publish mutual exclusion remains the external
@@ -464,13 +466,18 @@ object VersionedStore {
   private[graft] def publishedRoot(root: String): Option[String] =
     currentGen(root) match {
       case None => refuseFlat(root); None
-      case Some(g) =>
-        require(StoreFs.exists(s"${genDir(root, g)}/$Marker"),
-          s"VersionedStore.tableRoot: pointer at $root names generation" +
-            s" $g which is absent or incomplete — repair with adopt()" +
-            " (fsck: pointer_to_missing_generation)")
-        Some(genDir(root, g))
+      case Some(g) => Some(currentDir(root, g))
     }
+
+  /** The directory of generation `gen`, which the pointer names — loud
+    * when it is absent or incomplete (a dangling pointer). */
+  private def currentDir(root: String, gen: Long): String = {
+    require(StoreFs.exists(s"${genDir(root, gen)}/$Marker"),
+      s"VersionedStore: pointer at $root names generation $gen which is" +
+        " absent or incomplete — repair with adopt() (fsck:" +
+        " pointer_to_missing_generation)")
+    genDir(root, gen)
+  }
 
   /** The directory holding `root`'s LIVE tables: the current
     * generation. Loud before the first publish, on a dangling pointer
@@ -529,22 +536,8 @@ object VersionedStore {
       }
   }
 
-  /** The directory holding generation `gen`'s tables — [[tableRoot]]'s
-    * pinned counterpart, for readers that captured a pin and resolve
-    * every table of one consistent generation from it (e.g.
-    * [[graft.pipeline.Ann]]'s pinned servers, whose codebook/books and
-    * coded rows must come from the SAME training). Loud on an absent or
-    * incomplete generation, like [[readAsOf]]. */
-  def generationRoot(root: String, gen: Long): String = {
-    require(StoreFs.exists(s"${genDir(root, gen)}/$Marker"),
-      s"VersionedStore.generationRoot: generation $gen at $root is absent" +
-        " or incomplete (crashed publish, or gc'd past the retention you" +
-        " need)")
-    genDir(root, gen)
-  }
-
-  /** [[generationRoot]] for a PIN resolve — every `*FromStorePinned` /
-    * `loadPinned` server's first step, so a pin that outlived retention
+  /** The directory of a PINNED generation — [[resolve]]'s pin arm and
+    * `loadPinned`'s first step, so a pin that outlived retention
     * fails with a NAMED, actionable error (which pin, which store, what
     * the retention rule is, how to hold a generation) instead of the
     * raw path-not-found a gc'd generation would otherwise surface from
@@ -687,7 +680,7 @@ object VersionedStore {
     pinStates(root, gen).exists(_._2)
 
   /** The `batch=<id>` append-partition ids under one table dir — the
-    * shared parse behind every store family's pin capture. STRICT
+    * parse behind [[pin]] and the compactions' layout checks. STRICT
     * numeric: a malformed name (`batch=`, `batch=1-2`) is not an id —
     * [[StoreFsck.batchLayout]] reports those as `invalid_batch_subdirs`;
     * a pin simply does not count them (and must not crash on them: the
@@ -697,47 +690,84 @@ object VersionedStore {
       case n if n.startsWith("batch=") => n.drop(6)
     }.flatMap(v => scala.util.Try(v.toLong).toOption)
 
-  /** ONE (generation, maxBatch) time-travel coordinate of a versioned
-    * store — the shared capture behind [[Ann.pinIndex]] /
-    * [[Retrieval.pinPostings]] / [[Dedup.pinSignatureStore]] (each
-    * wraps it in its typed pin). Metadata-only: one pointer resolution
-    * plus one directory listing of the batch-carrying `table`, never a
-    * table scan. `maxBatch` is None on a store without the
-    * batch-addressed layout (generation is then the whole coordinate). */
-  private[graft] def pinCoordinate(storeDir: String, table: String,
-      who: String): (Long, Option[Long]) = {
-    val gen = currentGen(storeDir).getOrElse(
-      throw new IllegalStateException(s"$who: $storeDir has no published" +
-        " generation — only versioned stores carry a pinnable coordinate"))
-    (gen, batchIdsOf(s"${generationRoot(storeDir, gen)}/$table").maxOption)
+  /** ONE time-travel coordinate of a versioned store, the same two axes
+    * for every store family: `gen` is the generation (whole rebuilds,
+    * compactions), `maxBatch` the append batch WITHIN it (`None` on a
+    * store without the batch-addressed layout, and for a read of the
+    * whole generation). A job captures it at read time ([[pin]]) and
+    * records a single token; every store reader takes it as
+    * `at = Some(pin)` and replays the exact state it saw, across any
+    * number of later appends AND later publishes, without knowing which
+    * axis moved. An as-of-batch read of the head is
+    * `Pin(currentGen, Some(b))`. Tombstones still apply (takedowns fan
+    * into every retained generation's overlay): a pin reproduces the
+    * append history, never resurrects erasure. The pin dies when [[gc]]
+    * retires its generation; a dead pin fails LOUDLY
+    * ([[pinnedGenerationRoot]]), never serves a substitute. */
+  final case class Pin(gen: Long, maxBatch: Option[Long])
+
+  /** A resolved read coordinate: one generation directory plus the
+    * highest append batch to read (`None` = all of them) — what
+    * [[resolve]] returns and [[liveRows]] reads. A reader that needs
+    * several tables of one store resolves once and reads them all from
+    * this one view, so a publish between two reads can never pair one
+    * generation's rows with another generation's quantizers. */
+  final case class View(dir: String, maxBatch: Option[Long])
+
+  /** Capture the CURRENT [[Pin]] of a versioned store: the flipped
+    * generation plus the highest `batch=<id>` append partition over its
+    * tables. Metadata-only: one pointer resolution plus one listing per
+    * table, never a table scan. Loud on a root with no published
+    * generation — only versioned stores carry a pinnable coordinate. */
+  def pin(root: String): Pin = {
+    val gen = currentGen(root).getOrElse(
+      throw new IllegalStateException(s"VersionedStore.pin: $root has no" +
+        " published generation — only versioned stores carry a pinnable" +
+        " coordinate"))
+    val dir = currentDir(root, gen)
+    Pin(gen, StoreFs.listDirNames(dir).filterNot(_.startsWith("_"))
+      .flatMap(t => batchIdsOf(s"$dir/$t")).maxOption)
   }
 
-  /** The live rows of `table` under an already-resolved generation dir,
-    * optionally pinned at a max append batch — the ONE read every
-    * family's pinned server shares: batches past the pin
-    * partition-prune out of the plan, the generation's own tombstone
-    * overlay still applies (erasure holds under time travel), and the
-    * layout `batch` column never reaches a consumer. */
-  private[graft] def liveRowsAt(spark: SparkSession, genRoot: String,
-      table: String, maxBatch: Option[Long], idCol: String): DataFrame = {
-    val raw = spark.read.parquet(s"$genRoot/$table")
-    val pinned = maxBatch match {
-      case None => raw
-      case Some(mb) =>
-        require(raw.columns.contains("batch"),
-          s"VersionedStore: $genRoot/$table carries no batch-addressed" +
-            s" layout but the pin names append batch $mb — pin and store" +
-            " disagree (a compaction that dropped the layout would be" +
-            " exactly this, and it never does)")
-        raw.where(col("batch") <= mb)
+  /** The one pointer resolution of a store read: the head ([[tableRoot]])
+    * when `at` is None, else the pinned generation, checked by
+    * [[pinnedGenerationRoot]] so a pin that outlived retention fails with
+    * the named error (`who` names the reader in it). */
+  def resolve(root: String, at: Option[Pin] = None,
+      who: String = "VersionedStore.resolve"): View = at match {
+    case None => View(tableRoot(root), None)
+    case Some(p) =>
+      View(pinnedGenerationRoot(root, p.gen, p.maxBatch, who), p.maxBatch)
+  }
+
+  /** The live rows of `table` at a resolved [[View]] — the ONE read of a
+    * store table: batches past `view.maxBatch` partition-prune out of the
+    * plan, and that generation's tombstone overlay applies (erasure
+    * holds under time travel). The `batch` layout column of a
+    * batch-addressed table is KEPT, so a compaction rewrite can
+    * partition by it; serving readers drop it. `schema` is the table's
+    * declared schema where its module has one (no inference job); a
+    * batch-addressed table's `batch` column still comes from partition
+    * discovery. Loud when the view names an append batch but the table
+    * has no batch-addressed layout. */
+  def liveRows(spark: SparkSession, view: View, table: String,
+      idCol: String, schema: Option[StructType] = None): DataFrame = {
+    val raw = schema.fold(spark.read)(spark.read.schema(_))
+      .parquet(s"${view.dir}/$table")
+    val rows = view.maxBatch.fold(raw) { mb =>
+      require(raw.columns.contains("batch"),
+        s"VersionedStore: ${view.dir}/$table is not batch-addressed but" +
+          s" the read names append batch $mb — only stores bootstrapped" +
+          " with a batchId carry a pinnable append history")
+      raw.where(col("batch") <= mb)
     }
-    Tombstones.filterLive(pinned.drop("batch"), genRoot, idCol)
+    Tombstones.filterLive(rows, view.dir, idCol)
   }
 
   /** O(request) takedown for a versioned store: append `ids` (one
     * LONG-castable column, [[Tombstones.appendDf]]'s contract) to the
     * tombstone overlay of EVERY retained complete generation — current
-    * AND pinned, because erasure must hold under [[readAsOfLive]] too
+    * AND pinned, because erasure must hold under a pinned [[liveRows]] too
     * (time travel never resurrects deleted rows). Request-sized × a
     * handful of generations; stored tables are never read or rewritten.
     * Serialized with publish/gc under the maintenance lock so a
@@ -783,47 +813,6 @@ object VersionedStore {
     import spark.implicits._
     val pinned = idsLong.as[Long].collect().toSeq.toDF("id")
     gens.foreach(g => Tombstones.writeSet(pinned, genDir(root, g)))
-  }
-
-  /** Read `table` at the CURRENT generation (loud when the store has
-    * never published — an empty frame would silently serve nothing). */
-  def read(spark: SparkSession, root: String, table: String): DataFrame =
-    readAsOf(spark, root, table, currentGen(root).getOrElse(
-      throw new IllegalStateException(
-        s"VersionedStore.read: no published generation at $root")))
-
-  /** [[read]] minus the current generation's tombstone overlay — the
-    * serving view of a versioned store table whose rows are keyed by
-    * `idCol`. No takedowns, no plan overhead; otherwise one broadcast
-    * anti-join ([[Tombstones.filterLive]]). */
-  def readLive(spark: SparkSession, root: String, table: String,
-      idCol: String): DataFrame = {
-    val t = tableRoot(root)
-    Tombstones.filterLive(spark.read.parquet(s"$t/$table"), t, idCol)
-  }
-
-  /** [[readAsOf]] minus generation `gen`'s tombstone overlay: pinned
-    * reproducibility for the APPEND history only — takedowns recorded
-    * after the pin still erase from it ([[takedownDf]] writes every
-    * retained generation), the same non-resurrection rule as
-    * [[Retrieval.readPostingsIndexAsOf]]. */
-  def readAsOfLive(spark: SparkSession, root: String, table: String,
-      gen: Long, idCol: String): DataFrame =
-    Tombstones.filterLive(readAsOf(spark, root, table, gen),
-      genDir(root, gen), idCol)
-
-  /** Read `table` PINNED at generation `gen` — the whole-rebuild form
-    * of snapshot reproducibility: a generation is immutable once
-    * complete, so any consumer that records `gen` can replay the exact
-    * store state it saw, regardless of later publishes (until [[gc]]
-    * retires it, which is the caller's retention policy). */
-  def readAsOf(spark: SparkSession, root: String, table: String,
-      gen: Long): DataFrame = {
-    require(StoreFs.exists(s"${genDir(root, gen)}/$Marker"),
-      s"VersionedStore.readAsOf: generation $gen at $root is absent or" +
-        " incomplete (crashed publish, or gc'd past the retention you" +
-        " need)")
-    spark.read.parquet(s"${genDir(root, gen)}/$table")
   }
 
   /** RECOVERY for the crashed-flip states [[StoreFsck.versionedStore]]

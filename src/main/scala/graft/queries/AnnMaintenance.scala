@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators._
-import graft.pipeline.Ann
+import graft.pipeline.{Ann, VersionedStore}
 
 import Fixtures._
 
@@ -35,7 +35,7 @@ object AnnMaintenanceQueries extends QueryFamily {
       Ann.appendToIndexBatch(
         all.select((col("id") + 1000000L).as("id"), col("vec")),
         s"$root/index", 1L)
-      val pin = Ann.pinIndex(s"$root/index")
+      val pin = VersionedStore.pin(s"$root/index")
       Ann.appendToIndexBatch(
         all.select((col("id") + 500000L).as("id"), col("vec")),
         s"$root/index", 2L)
@@ -44,8 +44,8 @@ object AnnMaintenanceQueries extends QueryFamily {
         .unionByName(all.select((col("id") + 1000000L).as("id"), col("vec")))
         .unionByName(all.select((col("id") + 500000L).as("id"), col("vec")))
       val q = all.where(col("id") < 15)
-      Ann.ivfQuantizedTopKFromStoreBatchPinned(q, corpus, s"$root/index",
-          k = 5, pin, nProbe = 8)
+      Ann.ivfQuantizedTopKFromStoreBatch(q, corpus, s"$root/index",
+          k = 5, nProbe = 8, at = Some(pin))
         .where(col("rank") === 1)
         .select(col("query_id"), col("neighbor_id"),
           lit("pinned").as("probe_view"))
@@ -77,7 +77,7 @@ object AnnMaintenanceQueries extends QueryFamily {
       Ann.appendToIndexBatch(
         all.select((col("id") + 1000000L).as("id"), col("vec")),
         s"$root/index", 1L)
-      val pin = Ann.pinIndex(s"$root/index")
+      val pin = VersionedStore.pin(s"$root/index")
       Ann.appendToIndexBatch(
         all.select((col("id") + 500000L).as("id"), col("vec")),
         s"$root/index", 2L)
@@ -90,12 +90,12 @@ object AnnMaintenanceQueries extends QueryFamily {
         df.where(col("rank") === 1)
           .select(col("query_id"), col("neighbor_id"),
             lit(v).as("probe_view"))
-      view(Ann.ivfTopKFromStorePinned(q, corpus, s"$root/index", k = 5,
-          pin, nProbe = 8), "pinned")
+      view(Ann.ivfTopKFromStore(q, corpus, s"$root/index", k = 5,
+          nProbe = 8, at = Some(pin)), "pinned")
         .unionByName(view(Ann.ivfTopKFromStore(q, corpus, s"$root/index",
           k = 5, nProbe = 8), "head"))
-        .unionByName(view(Ann.ivfTopKFromStoreBatchPinned(q, corpus,
-          s"$root/index", k = 5, pin, nProbe = 8), "pinned_batch"))
+        .unionByName(view(Ann.ivfTopKFromStoreBatch(q, corpus,
+          s"$root/index", k = 5, nProbe = 8, at = Some(pin)), "pinned_batch"))
         .unionByName(view(Ann.ivfTopKFromStoreBatch(q, corpus,
           s"$root/index", k = 5, nProbe = 8), "head_batch"))
     },
@@ -220,8 +220,10 @@ object AnnMaintenanceQueries extends QueryFamily {
         .unionByName(all.select((col("id") + 1000000L).as("id"), col("vec")))
         .unionByName(all.select((col("id") + 500000L).as("id"), col("vec")))
       val q = all.where(col("id") < 15)
-      Ann.ivfQuantizedTopKFromStoreAsOf(q, corpus, s"$root/index", k = 5,
-          maxBatch = 1L, nProbe = 8)
+      val asOf1 = VersionedStore.Pin(
+        VersionedStore.currentGen(s"$root/index").get, Some(1L))
+      Ann.ivfQuantizedTopKFromStore(q, corpus, s"$root/index", k = 5,
+          nProbe = 8, at = Some(asOf1))
         .where(col("rank") === 1)
         .select(col("query_id"), col("neighbor_id"),
           lit("pinned").as("probe_view"))
@@ -240,7 +242,7 @@ object AnnMaintenanceQueries extends QueryFamily {
     // ---- UNIFIED TIME-TRAVEL PIN: as-of has two axes — generation
     // (whole rebuilds) and append batch (within a generation) — and a
     // reader wanting "the store as served at T" must otherwise know
-    // both. Ann.pinIndex captures ONE (gen, maxBatch) token; the pinned
+    // both. VersionedStore.pin captures ONE (gen, maxBatch) token; the pinned
     // server replays it across a later APPEND (batch 2, lower-id twins
     // that would win the cosine tie) AND a later PUBLISH (compaction →
     // fresh generation): pinned serves the +1e6 twin, head the +5e5 —
@@ -253,7 +255,7 @@ object AnnMaintenanceQueries extends QueryFamily {
       Ann.appendToIndexBatch(
         all.select((col("id") + 1000000L).as("id"), col("vec")),
         s"$root/index", 1L)
-      val pin = Ann.pinIndex(s"$root/index")
+      val pin = VersionedStore.pin(s"$root/index")
       // BOTH axes move after the capture: one more append batch, then a
       // compaction that publishes a fresh generation (keepGenerations=1
       // is the retention policy that keeps the pin alive)
@@ -265,8 +267,8 @@ object AnnMaintenanceQueries extends QueryFamily {
         .unionByName(all.select((col("id") + 1000000L).as("id"), col("vec")))
         .unionByName(all.select((col("id") + 500000L).as("id"), col("vec")))
       val q = all.where(col("id") < 15)
-      Ann.ivfQuantizedTopKFromStorePinned(q, corpus, s"$root/index", k = 5,
-          pin, nProbe = 8)
+      Ann.ivfQuantizedTopKFromStore(q, corpus, s"$root/index", k = 5,
+          nProbe = 8, at = Some(pin))
         .where(col("rank") === 1)
         .select(col("query_id"), col("neighbor_id"),
           lit("pinned").as("probe_view"))

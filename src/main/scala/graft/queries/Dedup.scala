@@ -202,7 +202,7 @@ object DedupQueries extends QueryFamily {
       val store = s"$root/store"
       Dedup.writeSignatureStore(slice(0), store, batchId = Some(0L))
       Dedup.appendToSignatureStoreBatch(slice(1), store, 1L)
-      val pin = Dedup.pinSignatureStore(store)
+      val pin = graft.pipeline.VersionedStore.pin(store)
       Dedup.appendToSignatureStoreBatch(slice(2), store, 2L)
       Dedup.compactSignatureStore(s, store, keepGenerations = 1)
       def verified(pairs: org.apache.spark.sql.DataFrame) =

@@ -496,9 +496,11 @@ object RetrievalQueries extends QueryFamily {
       (0 until 3).foreach(b =>
         graft.pipeline.Retrieval.appendToPostingsIndexBatch(
           d.where(col("doc_id") % 3 === b), s"$root/index", b))
-      graft.pipeline.Retrieval.bm25TopKFromIndex(
-        graft.pipeline.Retrieval.readPostingsIndexAsOf(s, s"$root/index", 1L),
-        graft.pipeline.Retrieval.readDocLengthsAsOf(s, s"$root/index", 1L),
+      val R = graft.pipeline.Retrieval
+      val V = graft.pipeline.VersionedStore
+      val asOf1 = Some(V.Pin(V.currentGen(s"$root/index").get, Some(1L)))
+      R.bm25TopKFromIndex(R.readPostingsIndex(s, s"$root/index", asOf1),
+        R.readDocLengths(s, s"$root/index", asOf1),
         Seq("the", "of", "data"), k = 20)
     },
       // snapshot-pinned serving: the as-of-batch-1 state is exactly the
@@ -521,7 +523,7 @@ object RetrievalQueries extends QueryFamily {
         batchId = Some(0L))
       R.appendToPostingsIndexBatch(
         d.where(col("doc_id") % 3 === 1), s"$root/index", 1L)
-      val pin = R.pinPostings(s"$root/index")
+      val pin = graft.pipeline.VersionedStore.pin(s"$root/index")
       R.appendToPostingsIndexBatch(
         d.where(col("doc_id") % 3 === 2), s"$root/index", 2L)
       R.compactPostingsIndex(s, s"$root/index", keepGenerations = 1)
@@ -568,12 +570,13 @@ object RetrievalQueries extends QueryFamily {
       // torn pair: tables down, marker missing, pointer unmoved
       R.docLengths(d.limit(3)).write.parquet(s"$root/gen-9/doclens")
       val terms = Seq("the", "of", "data")
-      R.bm25TopKFromIndex(V.read(s, root, "postings"),
-          V.read(s, root, "doclens"), terms, k = 20)
+      val at1 = Some(V.Pin(g1, None))
+      R.bm25TopKFromIndex(R.readPostingsIndex(s, root),
+          R.readDocLengths(s, root), terms, k = 20)
         .withColumn("gen", lit(g2))
         .unionByName(R.bm25TopKFromIndex(
-            V.readAsOf(s, root, "postings", g1),
-            V.readAsOf(s, root, "doclens", g1), terms, k = 20)
+            R.readPostingsIndex(s, root, at1),
+            R.readDocLengths(s, root, at1), terms, k = 20)
           .withColumn("gen", lit(g1)))
     },
       // versioned index: the current generation is the full corpus, the
@@ -611,8 +614,8 @@ object RetrievalQueries extends QueryFamily {
           R.readDocLengths(s, root), terms, k = 20)
         .withColumn("gen", lit(2L))
         .unionByName(R.bm25TopKFromIndex(
-            V.readAsOfLive(s, root, "postings", 1L, "doc_id"),
-            V.readAsOfLive(s, root, "doclens", 1L, "doc_id"), terms, k = 20)
+            R.readPostingsIndex(s, root, Some(V.Pin(1L, None))),
+            R.readDocLengths(s, root, Some(V.Pin(1L, None))), terms, k = 20)
           .withColumn("gen", lit(1L)))
     },
       // versioned takedown: the erased ids (doc_id % 7 = 2) leave BOTH

@@ -69,7 +69,8 @@ class AnnBatchStoreSpec extends SparkSpec {
     // the rewrite preserved each row's batch identity (NOT a rollup):
     // an as-of pin recorded before the GC still reads exactly the
     // batch-0 state — a rollup would silently pull batch 1 under it
-    assert(Ann.readCellsAsOf(spark, dir, 0L).select("id").as[Long]
+    assert(Ann.readCells(spark, dir, asOfBatch(dir, 0L))
+      .select("id").as[Long]
       .collect().toSet == (0L until 11L).toSet,
       "compaction must not move rows under earlier as-of pins")
     // later batches keep landing in their own subdirs; replay is still
@@ -177,27 +178,29 @@ class AnnBatchStoreSpec extends SparkSpec {
     Ann.writeIndex(base, dir, k = 4, iters = 2, batchId = Some(0L))
     Ann.appendToIndexBatch(twins, dir, batchId = 1L)
     // pin at batch 0: the later twins' files are partition-pruned out
-    assert(Ann.readCellsAsOf(spark, dir, 0L).select("id").as[Long]
+    assert(Ann.readCells(spark, dir, asOfBatch(dir, 0L))
+      .select("id").as[Long]
       .collect().toSet == (0L until 12L).toSet)
-    assert(Ann.readCellsAsOf(spark, dir, 1L).count() == 18L)
+    assert(Ann.readCells(spark, dir, asOfBatch(dir, 1L)).count() == 18L)
     // the pinned retrieval ignores the later batch: rank-1 for query 0
     // is a real neighbor, not its (batch-1) twin
-    val pinned = Ann.ivfQuantizedTopKFromStoreAsOf(queries, corpus, dir,
-        k = 3, maxBatch = 0L, nProbe = 4)
+    val pinned = Ann.ivfQuantizedTopKFromStore(queries, corpus, dir,
+        k = 3, nProbe = 4, at = asOfBatch(dir, 0L))
       .where(col("rank") === 1).select("neighbor_id").as[Long]
       .collect().toSet
     assert(pinned.forall(_ < 1000L), pinned.toString)
     // a takedown recorded AFTER the pin still erases from it — as-of
     // pins appends, never deletes (legal erasure is not resurrectable)
     Ann.tombstoneVectors(spark, dir, Seq(2L))
-    assert(!Ann.readCellsAsOf(spark, dir, 0L).select("id").as[Long]
+    assert(!Ann.readCells(spark, dir, asOfBatch(dir, 0L))
+      .select("id").as[Long]
       .collect().contains(2L))
     // a flat (non-batch-addressed) store has no pinnable history and
     // must refuse loudly, not silently serve everything
     val flat = s"${tmp("annb")}/asofflat"
     Ann.writeIndex(base, flat, k = 4, iters = 2)
     intercept[IllegalArgumentException] {
-      Ann.readCellsAsOf(spark, flat, 0L)
+      Ann.readCells(spark, flat, asOfBatch(flat, 0L))
     }
 
     // the PQ families pin identically (frozen quantizers: the pinned
@@ -206,17 +209,17 @@ class AnnBatchStoreSpec extends SparkSpec {
     Ann.writePqIndex(base, pq, m = 4, ksub = 4, iters = 2,
       batchId = Some(0L))
     Ann.appendToPqIndexBatch(twins, pq, batchId = 1L)
-    assert(Ann.readPqCodesAsOf(spark, pq, 0L).count() == 12L)
-    assert(Ann.pqTopKFromStoreAsOf(queries, corpus, pq, k = 3,
-        maxBatch = 0L)
+    assert(Ann.readPqCodes(spark, pq, asOfBatch(pq, 0L)).count() == 12L)
+    assert(Ann.pqTopKFromStore(queries, corpus, pq, k = 3,
+        at = asOfBatch(pq, 0L))
       .where(col("rank") === 1).select("neighbor_id").as[Long]
       .collect().forall(_ < 1000L))
     val ivfpq = s"${tmp("annb")}/ivfpqasof"
     Ann.writeIvfPqIndex(base, ivfpq, k = 3, m = 4, ksub = 4, iters = 2,
       batchId = Some(0L))
     Ann.appendToIvfPqIndexBatch(twins, ivfpq, batchId = 1L)
-    assert(Ann.ivfPqTopKFromStoreAsOf(queries, corpus, ivfpq, k = 3,
-        maxBatch = 0L, nProbe = 3)
+    assert(Ann.ivfPqTopKFromStore(queries, corpus, ivfpq, k = 3,
+        nProbe = 3, at = asOfBatch(ivfpq, 0L))
       .where(col("rank") === 1).select("neighbor_id").as[Long]
       .collect().forall(_ < 1000L))
     assert(Ann.ivfPqTopKFromStore(queries, corpus, ivfpq, k = 3,
@@ -230,26 +233,28 @@ class AnnBatchStoreSpec extends SparkSpec {
     val dir = s"${tmp("annb")}/pin"
     Ann.writeIndex(base, dir, k = 4, iters = 2, batchId = Some(0L))
     Ann.appendToIndexBatch(twins, dir, batchId = 1L)
-    val pin = Ann.pinIndex(dir)
+    val pin = VersionedStore.pin(dir)
     assert(pin.maxBatch.contains(1L), pin.toString)
     val laterTwins =
       (0L until 6L).map(i => (i + 500L, vec(i))).toDF("id", "vec")
     val corpus3 = corpus.unionByName(laterTwins)
-    val pinnedBefore = Ann.ivfQuantizedTopKFromStorePinned(
-      queries, corpus3, dir, k = 3, pin, nProbe = 4).collect().toSet
+    val pinnedBefore = Ann.ivfQuantizedTopKFromStore(
+      queries, corpus3, dir, k = 3, nProbe = 4, at = Some(pin))
+      .collect().toSet
     // BOTH axes move: a later append batch (lower-id twins that win the
     // cosine tie at head) and a later PUBLISH (compaction → fresh gen)
     Ann.appendToIndexBatch(laterTwins, dir, batchId = 2L)
     Ann.compactIndexCells(spark, dir, keepGenerations = 1)
     assert(VersionedStore.currentGen(dir).exists(_ > pin.gen),
       "compaction must have published past the pinned generation")
-    val pinnedAfter = Ann.ivfQuantizedTopKFromStorePinned(
-      queries, corpus3, dir, k = 3, pin, nProbe = 4).collect().toSet
+    val pinnedAfter = Ann.ivfQuantizedTopKFromStore(
+      queries, corpus3, dir, k = 3, nProbe = 4, at = Some(pin))
+      .collect().toSet
     assert(pinnedAfter == pinnedBefore,
       "the pin must replay the exact retrieval it captured")
     // pinned rank-1 = the +1000 twin; head rank-1 = the +500 tie-winner
-    Ann.ivfQuantizedTopKFromStorePinned(queries, corpus3, dir, k = 3, pin,
-        nProbe = 4)
+    Ann.ivfQuantizedTopKFromStore(queries, corpus3, dir, k = 3, nProbe = 4,
+        at = Some(pin))
       .where(col("rank") === 1)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
       .foreach { case (q, n) => assert(n == q + 1000L, s"pinned query $q") }
@@ -260,8 +265,8 @@ class AnnBatchStoreSpec extends SparkSpec {
     // erasure recorded AFTER the pin still holds under it (takedowns fan
     // into every retained generation — time travel never resurrects)
     Ann.tombstoneVectors(spark, dir, Seq(1000L))
-    assert(!Ann.ivfQuantizedTopKFromStorePinned(queries, corpus3, dir,
-        k = 3, pin, nProbe = 4)
+    assert(!Ann.ivfQuantizedTopKFromStore(queries, corpus3, dir,
+        k = 3, nProbe = 4, at = Some(pin))
       .select("neighbor_id").as[Long].collect().contains(1000L),
       "a takedown after the pin must still erase from the pinned read")
     // a pin whose generation gc retired fails LOUDLY with the NAMED
@@ -269,8 +274,8 @@ class AnnBatchStoreSpec extends SparkSpec {
     // path-not-found from inside a scan, never a substitute
     VersionedStore.gc(dir, keep = 0)
     val e = intercept[IllegalStateException] {
-      Ann.ivfQuantizedTopKFromStorePinned(queries, corpus3, dir, k = 3,
-        pin, nProbe = 4)
+      Ann.ivfQuantizedTopKFromStore(queries, corpus3, dir, k = 3,
+        nProbe = 4, at = Some(pin))
     }
     assert(e.getMessage.contains("outlived retention"), e.getMessage)
     assert(e.getMessage.contains(s"gen=${pin.gen}"), e.getMessage)
@@ -284,16 +289,16 @@ class AnnBatchStoreSpec extends SparkSpec {
     val dir = s"${tmp("annb")}/pinpq"
     Ann.writePqIndex(base, dir, m = 4, ksub = 4, iters = 2,
       batchId = Some(0L))
-    val pin = Ann.pinIndex(dir)
+    val pin = VersionedStore.pin(dir)
     assert(pin.maxBatch.contains(0L), pin.toString)
-    val before = Ann.pqTopKFromStorePinned(queries, base, dir, k = 3, pin)
+    val before = Ann.pqTopKFromStore(queries, base, dir, k = 3, at = Some(pin))
       .collect().toSet
     val shifted = (0L until 12L)
       .map(i => (i + 5000L, vec(i).map(_ + 500f))).toDF("id", "vec")
     Ann.writePqIndex(base.unionByName(shifted), dir, m = 4, ksub = 4,
       iters = 2, batchId = Some(0L))
     assert(VersionedStore.currentGen(dir).exists(_ > pin.gen))
-    assert(Ann.pqTopKFromStorePinned(queries, base, dir, k = 3, pin)
+    assert(Ann.pqTopKFromStore(queries, base, dir, k = 3, at = Some(pin))
       .collect().toSet == before,
       "the PQ pin must replay under its own generation's books")
     // IVF-PQ: pin before a later append batch; pinned excludes it
@@ -301,13 +306,13 @@ class AnnBatchStoreSpec extends SparkSpec {
     Ann.writeIvfPqIndex(base, idir, k = 3, m = 4, ksub = 4, iters = 2,
       batchId = Some(0L))
     Ann.appendToIvfPqIndexBatch(twins, idir, batchId = 1L)
-    val ipin = Ann.pinIndex(idir)
+    val ipin = VersionedStore.pin(idir)
     val laterTwins =
       (0L until 6L).map(i => (i + 500L, vec(i))).toDF("id", "vec")
     Ann.appendToIvfPqIndexBatch(laterTwins, idir, batchId = 2L)
     val corpus3 = corpus.unionByName(laterTwins)
-    Ann.ivfPqTopKFromStorePinned(queries, corpus3, idir, k = 3, ipin,
-        nProbe = 3)
+    Ann.ivfPqTopKFromStore(queries, corpus3, idir, k = 3, nProbe = 3,
+        at = Some(ipin))
       .where(col("rank") === 1)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
       .foreach { case (q, n) => assert(n == q + 1000L, s"pinned query $q") }
@@ -616,21 +621,24 @@ class AnnBatchStoreSpec extends SparkSpec {
     val dir = s"${tmp("annb")}/batchpin"
     Ann.writeIndex(base, dir, k = 4, iters = 2, batchId = Some(0L))
     Ann.appendToIndexBatch(twins, dir, batchId = 1L)
-    val pin = Ann.pinIndex(dir)
+    val pin = VersionedStore.pin(dir)
     val laterTwins =
       (0L until 6L).map(i => (i + 500L, vec(i))).toDF("id", "vec")
     val corpus3 = corpus.unionByName(laterTwins)
-    val before = Ann.ivfQuantizedTopKFromStoreBatchPinned(
-      queries, corpus3, dir, k = 3, pin, nProbe = 4).collect().toSet
+    val before = Ann.ivfQuantizedTopKFromStoreBatch(
+      queries, corpus3, dir, k = 3, nProbe = 4, at = Some(pin))
+      .collect().toSet
     // regime-identity under the pin too: pinned-batch == pinned-request
-    assert(before == Ann.ivfQuantizedTopKFromStorePinned(
-      queries, corpus3, dir, k = 3, pin, nProbe = 4).collect().toSet,
+    assert(before == Ann.ivfQuantizedTopKFromStore(
+      queries, corpus3, dir, k = 3, nProbe = 4, at = Some(pin))
+      .collect().toSet,
       "pinned shuffle and pinned request regimes must answer identically")
     // BOTH time-travel axes move: a later append, then a publish
     Ann.appendToIndexBatch(laterTwins, dir, batchId = 2L)
     Ann.compactIndexCells(spark, dir, keepGenerations = 1)
-    assert(Ann.ivfQuantizedTopKFromStoreBatchPinned(
-      queries, corpus3, dir, k = 3, pin, nProbe = 4).collect().toSet
+    assert(Ann.ivfQuantizedTopKFromStoreBatch(
+      queries, corpus3, dir, k = 3, nProbe = 4, at = Some(pin))
+      .collect().toSet
       == before, "the pinned batch read must replay exactly")
     // pinned rank-1 = the +1000 twin; the HEAD batch read serves the
     // +500 tie-winner (lowest cosine-1.0 id)
@@ -644,12 +652,13 @@ class AnnBatchStoreSpec extends SparkSpec {
     Ann.writeIvfPqIndex(base, idir, k = 3, m = 4, ksub = 4, iters = 2,
       batchId = Some(0L))
     Ann.appendToIvfPqIndexBatch(twins, idir, batchId = 1L)
-    val ipin = Ann.pinIndex(idir)
+    val ipin = VersionedStore.pin(idir)
     Ann.appendToIvfPqIndexBatch(laterTwins, idir, batchId = 2L)
-    val ipinned = Ann.ivfPqTopKFromStoreBatchPinned(
-      queries, corpus3, idir, k = 3, ipin, nProbe = 3)
-    assert(ipinned.collect().toSet == Ann.ivfPqTopKFromStorePinned(
-      queries, corpus3, idir, k = 3, ipin, nProbe = 3).collect().toSet)
+    val ipinned = Ann.ivfPqTopKFromStoreBatch(
+      queries, corpus3, idir, k = 3, nProbe = 3, at = Some(ipin))
+    assert(ipinned.collect().toSet == Ann.ivfPqTopKFromStore(
+      queries, corpus3, idir, k = 3, nProbe = 3, at = Some(ipin))
+      .collect().toSet)
     ipinned.where(col("rank") === 1)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
       .foreach { case (q, n) => assert(n == q + 1000L, s"pinned query $q") }
@@ -661,11 +670,11 @@ class AnnBatchStoreSpec extends SparkSpec {
     // retention error as the request path
     VersionedStore.gc(dir, keep = 0)
     val e = intercept[IllegalStateException] {
-      Ann.ivfQuantizedTopKFromStoreBatchPinned(queries, corpus3, dir,
-        k = 3, pin, nProbe = 4)
+      Ann.ivfQuantizedTopKFromStoreBatch(queries, corpus3, dir,
+        k = 3, nProbe = 4, at = Some(pin))
     }
     assert(e.getMessage.contains("outlived retention"), e.getMessage)
-    assert(e.getMessage.contains("ivfQuantizedTopKFromStoreBatchPinned"),
+    assert(e.getMessage.contains("Ann.ivfQuantizedTopKFromStoreBatch:"),
       e.getMessage)
   }
 
@@ -677,24 +686,28 @@ class AnnBatchStoreSpec extends SparkSpec {
     val dir = s"${tmp("annb")}/rawpin"
     Ann.writeIndex(base, dir, k = 4, iters = 2, batchId = Some(0L))
     Ann.appendToIndexBatch(twins, dir, batchId = 1L)
-    val pin = Ann.pinIndex(dir)
+    val pin = VersionedStore.pin(dir)
     val laterTwins =
       (0L until 6L).map(i => (i + 500L, vec(i))).toDF("id", "vec")
     val corpus3 = corpus.unionByName(laterTwins)
-    val reqBefore = Ann.ivfTopKFromStorePinned(
-      queries, corpus3, dir, k = 3, pin, nProbe = 4).collect().toSet
-    val batchBefore = Ann.ivfTopKFromStoreBatchPinned(
-      queries, corpus3, dir, k = 3, pin, nProbe = 4).collect().toSet
+    val reqBefore = Ann.ivfTopKFromStore(
+      queries, corpus3, dir, k = 3, nProbe = 4, at = Some(pin))
+      .collect().toSet
+    val batchBefore = Ann.ivfTopKFromStoreBatch(
+      queries, corpus3, dir, k = 3, nProbe = 4, at = Some(pin))
+      .collect().toSet
     assert(reqBefore == batchBefore,
       "pinned request and pinned shuffle regimes must answer identically")
     // BOTH time-travel axes move: a later append, then a publish
     Ann.appendToIndexBatch(laterTwins, dir, batchId = 2L)
     Ann.compactIndexCells(spark, dir, keepGenerations = 1)
-    assert(Ann.ivfTopKFromStorePinned(
-      queries, corpus3, dir, k = 3, pin, nProbe = 4).collect().toSet
+    assert(Ann.ivfTopKFromStore(
+      queries, corpus3, dir, k = 3, nProbe = 4, at = Some(pin))
+      .collect().toSet
       == reqBefore, "the pinned request read must replay exactly")
-    assert(Ann.ivfTopKFromStoreBatchPinned(
-      queries, corpus3, dir, k = 3, pin, nProbe = 4).collect().toSet
+    assert(Ann.ivfTopKFromStoreBatch(
+      queries, corpus3, dir, k = 3, nProbe = 4, at = Some(pin))
+      .collect().toSet
       == batchBefore, "the pinned batch read must replay exactly")
     // pinned rank-1 = the +1000 twin (batch 2 pruned); head rank-1 =
     // the +500 tie-winner (exact tie-break keeps the smallest id)
@@ -711,11 +724,11 @@ class AnnBatchStoreSpec extends SparkSpec {
     // a retired pin fails with the NAMED retention error in both regimes
     VersionedStore.gc(dir, keep = 0)
     Seq(
-      ("ivfTopKFromStorePinned", () => Ann.ivfTopKFromStorePinned(
-        queries, corpus3, dir, k = 3, pin, nProbe = 4)),
-      ("ivfTopKFromStoreBatchPinned",
-        () => Ann.ivfTopKFromStoreBatchPinned(
-          queries, corpus3, dir, k = 3, pin, nProbe = 4)))
+      ("Ann.ivfTopKFromStore:", () => Ann.ivfTopKFromStore(
+        queries, corpus3, dir, k = 3, nProbe = 4, at = Some(pin))),
+      ("Ann.ivfTopKFromStoreBatch:",
+        () => Ann.ivfTopKFromStoreBatch(
+          queries, corpus3, dir, k = 3, nProbe = 4, at = Some(pin))))
       .foreach { case (who, serve) =>
         val e = intercept[IllegalStateException] { serve() }
         assert(e.getMessage.contains("outlived retention"), e.getMessage)

@@ -149,9 +149,10 @@ class HadoopFsStoreSpec extends SparkSpec {
       Map("t" -> Seq((1L, "g2")).toDF("id", "v")))
     assert(g1 == 1L && g2 == 2L)
     assert(VersionedStore.currentGen(root).contains(2L))
-    assert(VersionedStore.read(spark, root, "t")
-      .as[(Long, String)].head() == ((1L, "g2")))
-    assert(VersionedStore.readAsOf(spark, root, "t", 1L)
+    def rows(at: Option[VersionedStore.Pin]) = VersionedStore.liveRows(
+      spark, VersionedStore.resolve(root, at), "t", "id")
+    assert(rows(None).as[(Long, String)].head() == ((1L, "g2")))
+    assert(rows(Some(VersionedStore.Pin(1L, None)))
       .as[(Long, String)].head() == ((1L, "g1")))
     assert(VersionedStore.gc(root, keep = 0) == Seq(1L))
   }

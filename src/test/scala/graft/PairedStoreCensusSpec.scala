@@ -79,13 +79,13 @@ class PairedStoreCensusSpec extends SparkSpec {
     versionedOnly(stream, "appendToPostingsIndexBatch (versioned)")
     // the born generation carries the batch-addressed layout the append
     // writes, so the as-of pin cuts at the batch boundary
-    assert(Retrieval.readPostingsIndexAsOf(spark, stream, 0L)
+    assert(Retrieval.readPostingsIndex(spark, stream, asOfBatch(stream, 0L))
       .select("doc_id").distinct().as[Long].collect().toSet ==
       Set(0L, 1L, 2L, 3L))
     Retrieval.tombstoneDocs(spark, stream, Seq(1L))
     Retrieval.compactPostingsIndex(spark, stream)
     versionedOnly(stream, "compactPostingsIndex (batch-addressed)")
-    assert(Retrieval.readPostingsIndexAsOf(spark, stream, 0L)
+    assert(Retrieval.readPostingsIndex(spark, stream, asOfBatch(stream, 0L))
       .select("doc_id").distinct().as[Long].collect().toSet ==
       Set(0L, 2L, 3L))
   }
@@ -115,7 +115,7 @@ class PairedStoreCensusSpec extends SparkSpec {
       Dedup.readSignatureStore(spark, built)))
     assert(sameRows(Dedup.readBandedStore(spark, stream),
       Dedup.readBandedStore(spark, built)))
-    assert(Dedup.readSignatureStoreAsOf(spark, stream, 0L)
+    assert(Dedup.readSignatureStore(spark, stream, asOfBatch(stream, 0L))
       .select("id").as[Long].collect().toSet == Set(0L, 1L, 2L, 3L))
     Dedup.compactSignatureStore(spark, stream)
     versionedOnly(stream, "compactSignatureStore (batch-addressed)")

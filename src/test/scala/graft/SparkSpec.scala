@@ -7,6 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** The `at` of an as-of-batch read of a store's head: the current
+    * generation cut at append batch `b`. */
+  def asOfBatch(root: String,
+      b: Long): Option[graft.pipeline.VersionedStore.Pin] = {
+    import graft.pipeline.VersionedStore
+    Some(VersionedStore.Pin(VersionedStore.currentGen(root).get, Some(b)))
+  }
 }
 
 object SparkSpec {

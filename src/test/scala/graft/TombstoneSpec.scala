@@ -96,7 +96,8 @@ class TombstoneSpec extends SparkSpec {
     Retrieval.appendToPostingsIndexBatch(
       docsDf.select((col("doc_id") + 100L).as("doc_id"), col("text")),
       streamDir, batchId = 2)
-    val pinned = Retrieval.readPostingsIndexAsOf(spark, streamDir, 1L)
+    val pinned = Retrieval.readPostingsIndex(spark, streamDir,
+        asOfBatch(streamDir, 1L))
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(pinned == Set(0L, 2L, 3L, 4L, 5L, 6L))
   }
@@ -220,7 +221,7 @@ class TombstoneSpec extends SparkSpec {
       docsDf.where(col("doc_id") < 3), dir, batchId = 0)
     Retrieval.appendToPostingsIndexBatch(
       docsDf.where(col("doc_id") >= 3), dir, batchId = 1)
-    def asOf0 = Retrieval.readPostingsIndexAsOf(spark, dir, 0L)
+    def asOf0 = Retrieval.readPostingsIndex(spark, dir, asOfBatch(dir, 0L))
     // batch 1's docs are invisible at the pinned snapshot
     assert(asOf0.select("doc_id").as[Long].collect().toSet == Set(0L, 1L, 2L))
     // the pruning is PARTITION pruning: batch 1's files never enter the
@@ -236,7 +237,7 @@ class TombstoneSpec extends SparkSpec {
     val flat = s"${tmp("asof")}/flat"
     Retrieval.writePostingsIndex(docsDf, flat)
     intercept[IllegalArgumentException] {
-      Retrieval.readPostingsIndexAsOf(spark, flat, 0L)
+      Retrieval.readPostingsIndex(spark, flat, asOfBatch(flat, 0L))
     }
   }
 

@@ -128,10 +128,11 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     R.tombstoneDocs(spark, dir, Seq(1L))
     assert(!R.readPostingsIndex(spark, dir)
       .select("doc_id").as[Long].collect().toSet.contains(1L))
-    assert(VersionedStore.readAsOfLive(spark, dir, "doclens", g1, "doc_id")
+    val at1 = Some(VersionedStore.Pin(g1, None))
+    assert(R.readDocLengths(spark, dir, at1)
       .select("doc_id").as[Long].collect().toSet == Set(0L, 2L, 3L))
     // ... while the overlay stays request-sized: stored tables untouched
-    assert(VersionedStore.readAsOf(spark, dir, "doclens", g1).count() == 4L)
+    assert(spark.read.parquet(s"$dir/gen-$g1/doclens").count() == 4L)
     // physical purge rides the next live-row publish (compaction):
     // fresh generation, no overlay, erased rows gone from raw bytes
     R.compactPostingsIndex(spark, dir)
@@ -141,9 +142,9 @@ class VersionedDefaultStoresSpec extends SparkSpec {
       .where(col("doc_id") === 1L).isEmpty)
     // and the retired generations (including the pinned one) are gone —
     // gc bounds how long any pre-takedown bytes exist
-    intercept[IllegalArgumentException] {
-      VersionedStore.readAsOf(spark, dir, "doclens", g1)
-    }
+    assert(intercept[IllegalStateException] {
+      R.readDocLengths(spark, dir, at1)
+    }.getMessage.contains("outlived retention"))
   }
 
   test("retrieval pin: one (gen, maxBatch) token replays across later appends AND a later publish") {
@@ -156,7 +157,7 @@ class VersionedDefaultStoresSpec extends SparkSpec {
       "batchId must bootstrap the batch-addressed layout at publish")
     R.appendToPostingsIndexBatch(
       docsDf.where(col("doc_id") % 3 === 1), dir, 1L)
-    val pin = R.pinPostings(dir)
+    val pin = VersionedStore.pin(dir)
     assert(pin.maxBatch.contains(1L), pin.toString)
     val terms = Seq("the", "of", "data")
     val before = R.bm25TopKFromStorePinned(spark, dir, pin, terms, k = 10)
@@ -172,13 +173,13 @@ class VersionedDefaultStoresSpec extends SparkSpec {
       "the pin must replay the exact scores it captured")
     // pinned membership is the two pinned batches' docs — BM25's N and
     // avgdl come from the pinned norms (corpus statistics pin too)
-    assert(R.readDocLengthsPinned(spark, dir, pin)
+    assert(R.readDocLengths(spark, dir, Some(pin))
       .select("doc_id").as[Long].collect().toSet ==
       corpus.map(_._1).filter(_ % 3 != 2).toSet)
     // erasure recorded AFTER the pin still holds under it (takedowns fan
     // into every retained generation — time travel never resurrects)
     R.tombstoneDocs(spark, dir, Seq(0L))
-    assert(!R.readPostingsIndexPinned(spark, dir, pin)
+    assert(!R.readPostingsIndex(spark, dir, Some(pin))
       .select("doc_id").as[Long].collect().toSet.contains(0L),
       "a takedown after the pin must still erase from the pinned read")
     // a pin whose generation gc retired fails LOUDLY with the NAMED
@@ -189,16 +190,16 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     }
     assert(stale.getMessage.contains("outlived retention"),
       stale.getMessage)
-    // pinPostings on an unversioned root refuses — legacy flat stores
+    // VersionedStore.pin on an unversioned root refuses — legacy flat stores
     // carry no pinnable generation coordinate. A stream-born store is
     // published from its first batch, so only a hand-planted legacy
     // root is flat
     val flat = s"${tmp("vdef")}/flat"
     R.positionalPostings(docsDf).write.parquet(s"$flat/postings/batch=0")
-    intercept[IllegalStateException] { R.pinPostings(flat) }
+    intercept[IllegalStateException] { VersionedStore.pin(flat) }
     val born = s"${tmp("vdef")}/born"
     R.appendToPostingsIndexBatch(docsDf, born, 0L)
-    assert(R.pinPostings(born) == R.RetrievalPin(1L, Some(0L)))
+    assert(VersionedStore.pin(born) == VersionedStore.Pin(1L, Some(0L)))
   }
 
   test("dedup pin: one (gen, maxBatch) token replays across later appends AND a later publish") {
@@ -223,7 +224,7 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     assert(StoreFsck.minhashStore(spark, dir).as[(String, Long)]
       .collect().toMap.forall(_._2 == 0L),
       "a replayed batch append must leave zero fsck findings")
-    val pin = D.pinSignatureStore(dir)
+    val pin = VersionedStore.pin(dir)
     assert(pin.maxBatch.contains(1L), pin.toString)
     // pinned slice {batch 0, 1} = ids %3 ∈ {0,1}: twin pairs survive
     // only for bases d%3==0 (their twins land in slice 1)
@@ -244,7 +245,7 @@ class VersionedDefaultStoresSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet == before,
       "the pin must replay the exact pair set it captured")
     // the raw as-of read cuts at the same boundary post-compaction
-    assert(D.readSignatureStoreAsOf(spark, dir, 1L)
+    assert(D.readSignatureStore(spark, dir, asOfBatch(dir, 1L))
       .select("id").as[Long].collect().toSet ==
       corpus.map(_._1).flatMap(d => Seq(d, d + 100L))
         .filter(_ % 3 != 2).toSet)
@@ -257,7 +258,7 @@ class VersionedDefaultStoresSpec extends SparkSpec {
       corpus.map(_._1).map(d => (d, d + 100L)).toSet)
     // erasure recorded AFTER the pin still holds under it
     D.tombstoneSignatures(spark, dir, Seq(0L))
-    assert(!D.readSignatureStorePinned(spark, dir, pin)
+    assert(!D.readSignatureStore(spark, dir, Some(pin))
       .select("id").as[Long].collect().toSet.contains(0L),
       "a takedown after the pin must still erase from the pinned read")
     // a pin whose generation gc retired fails LOUDLY with the NAMED
@@ -275,10 +276,10 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     val flat = s"${tmp("vdef")}/dflat"
     D.minhashSignatures(twins, "text", "doc_id", 3, 64)
       .write.parquet(s"$flat/sigs/batch=0")
-    intercept[IllegalStateException] { D.pinSignatureStore(flat) }
+    intercept[IllegalStateException] { VersionedStore.pin(flat) }
     val born = s"${tmp("vdef")}/dborn"
     D.appendToSignatureStoreBatch(twins, born, 0L)
-    assert(D.pinSignatureStore(born) == D.DedupPin(1L, Some(0L)))
+    assert(VersionedStore.pin(born) == VersionedStore.Pin(1L, Some(0L)))
     val plain = s"${tmp("vdef")}/dplain"
     D.writeSignatureStore(docsDf, plain)
     intercept[IllegalArgumentException] {
@@ -298,12 +299,12 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     // bytes, never serving)
     R.compactPostingsIndex(spark, dir, keepGenerations = 1)
     assert(VersionedStore.listGens(dir).map(_._1).sorted == Seq(2L, 3L))
-    assert(VersionedStore.readAsOfLive(spark, dir, "doclens", 2L, "doc_id")
+    assert(R.readDocLengths(spark, dir, Some(VersionedStore.Pin(2L, None)))
       .select("doc_id").as[Long].collect().toSet ==
       Set(0L, 2L, 3L, 4L, 5L, 6L))
     // a takedown recorded NOW lands in both retained generations
     R.tombstoneDocs(spark, dir, Seq(4L))
-    assert(VersionedStore.readAsOfLive(spark, dir, "doclens", 2L, "doc_id")
+    assert(R.readDocLengths(spark, dir, Some(VersionedStore.Pin(2L, None)))
       .select("doc_id").as[Long].collect().toSet ==
       Set(0L, 2L, 3L, 5L, 6L))
     assert(!R.readDocLengths(spark, dir)

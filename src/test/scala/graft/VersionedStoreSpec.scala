@@ -14,6 +14,11 @@ class VersionedStoreSpec extends SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("vstore").toString + "/store"
 
+  /** The live rows of `table` at the head, or at generation `gen`. */
+  private def rows(root: String, table: String, gen: Option[Long] = None) =
+    VersionedStore.liveRows(spark, VersionedStore.resolve(root,
+      gen.map(VersionedStore.Pin(_, None))), table, "id")
+
   private def fsck(root: String): Map[String, Long] =
     StoreFsck.versionedStore(spark, root)
       .as[(String, Long)].collect().toMap
@@ -22,7 +27,7 @@ class VersionedStoreSpec extends SparkSpec {
     val root = tmp()
     assert(VersionedStore.currentGen(root).isEmpty)
     intercept[IllegalStateException] {
-      VersionedStore.read(spark, root, "a")
+      rows(root, "a")
     }
     val g1 = VersionedStore.publish(root, Map(
       "a" -> Seq((1L, "g1")).toDF("id", "v"),
@@ -33,13 +38,13 @@ class VersionedStoreSpec extends SparkSpec {
       "b" -> Seq((1L, 20L), (2L, 21L)).toDF("id", "n")))
     assert(g2 == 2L)
     // current = generation 2 on BOTH tables — never a mix
-    assert(VersionedStore.read(spark, root, "a").count() == 2)
-    assert(VersionedStore.read(spark, root, "b")
+    assert(rows(root, "a").count() == 2)
+    assert(rows(root, "b")
       .where($"n" >= 20L).count() == 2)
     // pinning: generation 1 replays exactly, both tables
-    assert(VersionedStore.readAsOf(spark, root, "a", 1L)
+    assert(rows(root, "a", Some(1L))
       .as[(Long, String)].collect().toSeq == Seq((1L, "g1")))
-    assert(VersionedStore.readAsOf(spark, root, "b", 1L)
+    assert(rows(root, "b", Some(1L))
       .as[(Long, Long)].collect().toSeq == Seq((1L, 10L)))
     assert(fsck(root).values.forall(_ == 0L))
   }
@@ -51,10 +56,10 @@ class VersionedStoreSpec extends SparkSpec {
     Seq((9L, "crash")).toDF("id", "v").write.parquet(s"$root/gen-3/t")
     // the plan's input set is the generation dir, never a root glob —
     // a "clever" multi-generation scan would read crashed bytes
-    val files = VersionedStore.read(spark, root, "t").inputFiles
+    val files = rows(root, "t").inputFiles
     assert(files.nonEmpty && files.forall(_.contains("/gen-2/")),
       files.mkString(", "))
-    val pinned = VersionedStore.readAsOf(spark, root, "t", 1L).inputFiles
+    val pinned = rows(root, "t", Some(1L)).inputFiles
     assert(pinned.nonEmpty && pinned.forall(_.contains("/gen-1/")))
   }
 
@@ -72,7 +77,7 @@ class VersionedStoreSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$root/gen-4/_COMPLETE"))
     // serving is untouched by either crash shape
     assert(VersionedStore.currentGen(root).contains(2L))
-    assert(VersionedStore.read(spark, root, "a")
+    assert(rows(root, "a")
       .as[(Long, String)].head() == ((1L, "g2")))
     // torn remnant an OLD swept-mid-commit publisher could leave (the
     // commit recheck now deletes its marker before refusing — this is
@@ -89,20 +94,20 @@ class VersionedStoreSpec extends SparkSpec {
     assert(bad("corrupt_pointer") == 0L)
     assert(bad("pointer_to_missing_generation") == 0L)
     // an incomplete generation cannot be pinned — loudly
-    intercept[IllegalArgumentException] {
-      VersionedStore.readAsOf(spark, root, "a", 3L)
-    }
+    assert(intercept[IllegalStateException] {
+      rows(root, "a", Some(3L))
+    }.getMessage.contains("pin (gen=3)"))
     // gc: keeps current, retires the old complete gen and the
     // unreferenced complete gens ABOVE current (the torn empty one
     // included — it is dead bytes like any other); the incomplete gen
     // above current is left alone (it may be a publish in flight)
     val dead = VersionedStore.gc(root, keep = 0)
     assert(dead == Seq(1L, 4L, 9L), s"gc retired $dead")
-    assert(VersionedStore.read(spark, root, "a")
+    assert(rows(root, "a")
       .as[(Long, String)].head() == ((1L, "g2")))
-    intercept[IllegalArgumentException] {
-      VersionedStore.readAsOf(spark, root, "a", 1L)
-    }
+    assert(intercept[IllegalStateException] {
+      rows(root, "a", Some(1L))
+    }.getMessage.contains("pin (gen=1)"))
     assert(fsck(root)("incomplete_generations") == 1L)
     // the next publish ADOPTS the numbering past the crashed dirs? No:
     // publish refuses to overwrite a COMPLETE generation id and walks
@@ -111,14 +116,14 @@ class VersionedStoreSpec extends SparkSpec {
     val g3 = VersionedStore.publish(root,
       Map("a" -> Seq((1L, "g3")).toDF("id", "v")))
     assert(g3 == 3L)
-    assert(VersionedStore.read(spark, root, "a")
+    assert(rows(root, "a")
       .as[(Long, String)].head() == ((1L, "g3")))
     assert(fsck(root)("incomplete_generations") == 0L)
     // the crashed gen-3 dir ALSO held a table the re-publish does not
     // carry — publish wipes the partial whole, so the stale table must
     // not ride inside the completed generation
     intercept[Exception] {
-      VersionedStore.readAsOf(spark, root, "zombie", 3L).collect()
+      rows(root, "zombie", Some(3L)).collect()
     }
     // a publish that crashed AFTER its marker but BEFORE its flip: the
     // next publish must number past the unreferenced complete
@@ -129,7 +134,7 @@ class VersionedStoreSpec extends SparkSpec {
     val g8 = VersionedStore.publish(root,
       Map("a" -> Seq((1L, "g8")).toDF("id", "v")))
     assert(g8 == 8L, s"publish must walk past the crashed marker, got $g8")
-    assert(VersionedStore.read(spark, root, "a")
+    assert(rows(root, "a")
       .as[(Long, String)].head() == ((1L, "g8")))
   }
 
@@ -148,7 +153,7 @@ class VersionedStoreSpec extends SparkSpec {
     assert(gens == Seq(1L, 2L, 3L, 4L), gens.toString)
     assert(VersionedStore.currentGen(root).contains(4L))
     gens.foreach { g =>
-      assert(VersionedStore.readAsOf(spark, root, "t", g).count() == 1L)
+      assert(rows(root, "t", Some(g)).count() == 1L)
     }
     assert(StoreFsck.versionedStore(spark, root)
       .as[(String, Long)].collect().toMap.values.forall(_ == 0L))
@@ -170,11 +175,11 @@ class VersionedStoreSpec extends SparkSpec {
     VersionedStore.takedownDf(Seq(2L).toDF("id"), root)
     VersionedStore.commit(root, gen, token)
     assert(VersionedStore.currentGen(root).contains(gen))
-    assert(VersionedStore.readLive(spark, root, "t", "id")
+    assert(rows(root, "t")
       .select("v").as[String].collect().toSeq == Seq("a2"),
       "the erased id must not serve from the generation published around" +
         " the takedown")
-    assert(VersionedStore.readAsOfLive(spark, root, "t", 1L, "id")
+    assert(rows(root, "t", Some(1L))
       .select("v").as[String].collect().toSeq == Seq("a"))
   }
 
@@ -314,7 +319,7 @@ class VersionedStoreSpec extends SparkSpec {
         "exclusive protocol writes flip markers, never a mutable pointer")
       assert(StoreFs.exists(s"$root/_POINTER.1"))
       assert(VersionedStore.isVersioned(root))
-      assert(VersionedStore.readLive(spark, root, "t", "id").count() == 1L)
+      assert(rows(root, "t").count() == 1L)
       val g2 = VersionedStore.publish(root,
         Map("t" -> Seq((2L, "b")).toDF("id", "v")))
       assert(g2 == 2L && VersionedStore.currentGen(root).contains(2L))
@@ -327,7 +332,7 @@ class VersionedStoreSpec extends SparkSpec {
       assert(!StoreFs.exists(s"$root/_POINTER.1") &&
         StoreFs.exists(s"$root/_POINTER.2"))
       assert(fsck(root)("superseded_pointer_markers") == 0L)
-      assert(VersionedStore.readAsOf(spark, root, "t", 1L).count() == 1L,
+      assert(rows(root, "t", Some(1L)).count() == 1L,
         "gc keep=1 retains the pinned generation; only the marker retired")
 
       // PROTOCOL MIGRATION: a store born under rename keeps working
@@ -340,7 +345,7 @@ class VersionedStoreSpec extends SparkSpec {
       VersionedStore.publish(r2, Map("t" -> Seq((2L, "b")).toDF("id", "v")))
       assert(VersionedStore.currentGen(r2).contains(2L),
         "the marker record must out-resolve the older _CURRENT content")
-      assert(VersionedStore.read(spark, r2, "t")
+      assert(rows(r2, "t")
         .select("v").as[String].collect().toSeq == Seq("b"))
       // and back: a rename flip above the marker wins by max again
       spark.conf.set("graft.store.pointerProtocol", "rename")
@@ -358,7 +363,7 @@ class VersionedStoreSpec extends SparkSpec {
       intercept[IllegalArgumentException] { VersionedStore.tableRoot(r3) }
       assert(VersionedStore.adopt(r3).contains(1L))
       assert(!StoreFs.exists(s"$r3/_POINTER.2"))
-      assert(VersionedStore.read(spark, r3, "t")
+      assert(rows(r3, "t")
         .select("v").as[String].collect().toSeq == Seq("a"))
     } finally spark.conf.unset("graft.store.pointerProtocol")
   }
@@ -403,12 +408,12 @@ class VersionedStoreSpec extends SparkSpec {
         // invariants, every step
         assert(VersionedStore.currentGen(root) == pointer, s"seed $seed step $step")
         pointer.foreach { cur =>
-          assert(VersionedStore.read(spark, root, "t")
+          assert(rows(root, "t")
             .as[(Long, String)].collect().sorted.toSeq ==
             complete(cur).sorted, s"seed $seed step $step")
         }
         complete.foreach { case (g, c) =>
-          assert(VersionedStore.readAsOf(spark, root, "t", g)
+          assert(rows(root, "t", Some(g))
             .as[(Long, String)].collect().sorted.toSeq == c.sorted,
             s"seed $seed step $step gen $g")
         }
@@ -426,7 +431,7 @@ class VersionedStoreSpec extends SparkSpec {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$root/_CURRENT"), "not-a-gen")
     intercept[IllegalStateException] {
-      VersionedStore.read(spark, root, "a")
+      rows(root, "a")
     }
     assert(fsck(root)("corrupt_pointer") == 1L)
     // first-publish crash at the flip: generations exist, no pointer —
@@ -442,7 +447,7 @@ class VersionedStoreSpec extends SparkSpec {
     // adopt = the recovery those findings hint at: flip to the newest
     // complete generation; gc reclaims the crashed flip's tmp pointer
     assert(VersionedStore.adopt(root).contains(1L))
-    assert(VersionedStore.read(spark, root, "a")
+    assert(rows(root, "a")
       .as[(Long, String)].head() == ((1L, "x")))
     VersionedStore.gc(root, keep = 0)
     assert(fsck(root).values.forall(_ == 0L))
@@ -465,10 +470,10 @@ class VersionedStoreSpec extends SparkSpec {
     graft.pipeline.StoreFs.deleteRecursive(s"$root/gen-2")
     assert(fsck(root)("pointer_to_missing_generation") == 1L)
     intercept[Exception] {
-      VersionedStore.read(spark, root, "a").collect()
+      rows(root, "a").collect()
     }
     assert(VersionedStore.adopt(root).contains(1L))
-    assert(VersionedStore.read(spark, root, "a")
+    assert(rows(root, "a")
       .as[(Long, String)].head() == ((1L, "x")))
     assert(fsck(root).values.forall(_ == 0L))
   }
