@@ -477,20 +477,19 @@ object Ann {
     (t, quantizedCells(newVectors, codebook))
   }
 
-  /** Cell-CLUSTERED write shape: contiguous cell ranges per file
-    * (repartitionByRange) and rows sorted by cell_id within each — the
-    * layout that makes every parquet footer's cell_id min/max TIGHT, so
-    * the serving paths' literal probed-cell filter
+  /** Cell-CLUSTERED write shape ([[VersionedStore.clustered]] by
+    * cell_id): contiguous cell ranges per file and rows sorted by cell_id
+    * within each — the layout that makes every parquet footer's cell_id
+    * min/max TIGHT, so the serving paths' literal probed-cell filter
     * ([[materializeProbes]]) skips whole files and, at production file
     * sizes (many row groups per 128 MB file), whole row groups inside
     * them. A hash repartition co-locates a cell's rows just as well but
     * smears each file's min/max across the id space, and footer stats
-    * can never prune a wide box. The sort is per-task over its own
-    * slice — no extra shuffle beyond the range exchange. */
-  private def shapeByCell(df: DataFrame, numFiles: Int): DataFrame =
-    (if (numFiles == 1) df.coalesce(1)
-     else df.repartitionByRange(numFiles, col("cell_id")))
-      .sortWithinPartitions("cell_id")
+    * can never prune a wide box. `batched` is the batch-preserving
+    * compaction's narrow arm: (batch, cell_id)-sorted scan partitions. */
+  private def shapeByCell(df: DataFrame, numFiles: Int,
+      batched: Boolean = false): DataFrame =
+    VersionedStore.clustered(df, numFiles, batched, "cell_id")
 
   /** WRITE-TIME layout guard: the blind append forms require a FLAT
     * table, the batch-addressed forms a batch-partitioned one — a write
@@ -728,7 +727,13 @@ object Ann {
     * cells only) followed by [[VersionedStore.gc]] — atomic, the old
     * overlay retired with its generation. The codebook's CONTENT is
     * untouched: centroids are corpus statistics, not memberships, and
-    * drift only on a full [[writeIndex]] retrain. */
+    * drift only on a full [[writeIndex]] retrain.
+    *
+    * `numFiles` applies to FLAT stores only (cell ranges per file). A
+    * batch-addressed store's rewrite is NARROW
+    * ([[VersionedStore.clustered]]): each batch dir keeps its own files,
+    * never more than it had, each sorted by cell_id, with no sampling
+    * job and no shuffle. */
   def compactIndexCells(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, numFiles: Int = 4, keepGenerations: Int = 0): Unit = {
     require(numFiles > 0, s"compactIndexCells: numFiles $numFiles")
@@ -742,7 +747,7 @@ object Ann {
     // under every earlier pin — and post-compaction
     // [[appendToIndexBatch]] writes keep working
     val liveCells = shapeByCell(
-      VersionedStore.liveRows(spark, v, "cells", "id"), numFiles)
+      VersionedStore.liveRows(spark, v, "cells", "id"), numFiles, batched)
     VersionedStore.publish(storeDir, Map(
       "codebook" -> spark.read.parquet(s"${v.dir}/codebook"),
       "cells" -> liveCells),
@@ -1321,13 +1326,16 @@ object Ann {
   }
 
   /** Frozen-books encode shared by both PQ append forms
-    * ([[encodedCells]]'s rationale). */
+    * ([[encodedCells]]'s rationale). `_CURRENT` resolves ONCE: the books
+    * load from the same generation the codes are written into, so a
+    * publish landing mid-append cannot pair one generation's books with
+    * another generation's code table. */
   private def encodedPqCodes(newVectors: DataFrame,
       dir: String): (String, DataFrame) = {
-    val books = readPqBooks(newVectors.sparkSession, dir)
-    (VersionedStore.tableRoot(dir),
-      newVectors.select(col("id").cast("long").as("id"),
-        pqCodesExpr(books, col("vec")).as("codes")))
+    val t = VersionedStore.tableRoot(dir)
+    val books = readPqBooksAt(newVectors.sparkSession, t)
+    (t, newVectors.select(col("id").cast("long").as("id"),
+      pqCodesExpr(books, col("vec")).as("codes")))
   }
 
   /** STREAMING-append form of [[appendToPqIndex]] —
@@ -1455,7 +1463,9 @@ object Ann {
   }
 
   /** Frozen coarse-codebook assignment + frozen-books residual encode
-    * shared by both IVF-PQ append forms ([[encodedCells]]'s rationale). */
+    * shared by both IVF-PQ append forms ([[encodedCells]]'s rationale).
+    * Codebook, books and the written cells share one resolved generation
+    * ([[encodedPqCodes]]'s rule). */
   private def encodedIvfPqCells(newVectors: DataFrame,
       dir: String): (String, DataFrame) = {
     val spark = newVectors.sparkSession
@@ -1464,7 +1474,7 @@ object Ann {
     val coarse =
       collectCentroids(spark.read.parquet(s"$t/codebook")).sortBy(_._1)
     require(coarse.nonEmpty, s"appendToIvfPqIndex: empty codebook in $dir")
-    val books = readPqBooks(spark, dir)
+    val books = readPqBooksAt(spark, t)
     (t, residualFrame(newVectors, spark, coarse)
       .select(col("id"), col("cell_id"),
         pqCodesExpr(books, col("res")).as("codes")))
@@ -1656,7 +1666,9 @@ object Ann {
     else Map.empty
 
   /** Takedown GC for a [[writeIvfPqIndex]] store — same shape, three
-    * tables (coarse codebook and books carried over, live cells only). */
+    * tables (coarse codebook and books carried over, live cells only),
+    * and the same rule for `numFiles`: flat stores only; a
+    * batch-addressed store's rewrite is narrow ([[compactIndexCells]]). */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, numFiles: Int = 4, keepGenerations: Int = 0): Unit = {
     require(numFiles > 0, s"compactIvfPqIndex: numFiles $numFiles")
@@ -1669,7 +1681,8 @@ object Ann {
     VersionedStore.publish(dir, Map(
       "codebook" -> spark.read.parquet(s"${v.dir}/codebook"),
       "books" -> spark.read.parquet(s"${v.dir}/books"),
-      "cells" -> shapeByCell(live, numFiles)) ++ quantStats(spark, v.dir),
+      "cells" -> shapeByCell(live, numFiles, batched)) ++
+        quantStats(spark, v.dir),
       partitionBy =
         if (batched) Map("cells" -> Seq("batch")) else Map.empty)
     VersionedStore.gc(dir, keep = keepGenerations)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Repartition}
 import org.apache.spark.sql.types.StructType
@@ -27,7 +27,9 @@ import org.apache.spark.sql.types.StructType
   * Scope: only frames whose OPTIMIZED plan collapses to a
   * [[LocalRelation]] (possibly under coalesce/repartition nodes — the
   * usual `Seq(...).toDF.coalesce(1)` shape). Anything touching
-  * distributed inputs returns None and takes the normal writer. */
+  * distributed inputs returns None and takes the normal writer. A
+  * caller already holding rows on the driver (a takedown's ids) skips
+  * the frame and the plan with [[write]]. */
 private[graft] object DriverParquet {
 
   /** The frame's driver-local rows, when the whole plan is one
@@ -53,38 +55,48 @@ private[graft] object DriverParquet {
     localRows(df) match {
       case None => false
       case Some((schema, rows)) =>
-        val spark = df.sparkSession
-        val sqlConf = spark.sessionState.conf
-        // Spark's OWN write preparation and writer factory — the exact
-        // code path a distributed parquet write runs per task, minus
-        // the job: prepareWrite stamps the session's write
-        // configuration (legacy format, timestamp type, rebase modes,
-        // field ids, codec) onto the job conf and returns the
-        // OutputWriterFactory whose instances the write tasks use
-        val job = org.apache.hadoop.mapreduce.Job.getInstance(
-          spark.sessionState.newHadoopConf())
-        val factory = org.apache.spark.sql.execution.datasources.parquet
-          .ParquetUtils.prepareWrite(sqlConf, job, schema,
-            new org.apache.spark.sql.execution.datasources.parquet
-              .ParquetOptions(Map.empty[String, String], sqlConf))
-        val attempt = new org.apache.hadoop.mapreduce.task
-          .TaskAttemptContextImpl(job.getConfiguration,
-            new org.apache.hadoop.mapreduce.TaskAttemptID(
-              new org.apache.hadoop.mapreduce.TaskID(
-                new org.apache.hadoop.mapreduce.JobID("graftdriver", 0),
-                org.apache.hadoop.mapreduce.TaskType.MAP, 0), 0))
-        StoreFs.mkdirs(dir)
-        val file = s"$dir/part-00000-${java.util.UUID.randomUUID}" +
-          s"-c000${factory.getFileExtension(attempt)}"
-        val writer = factory.newInstance(file, schema, attempt)
-        try rows.foreach(writer.write)
-        finally writer.close()
+        write(df.sparkSession, schema, rows, dir)
         // the distributed writer's commit marker — layout parity for
         // the fsck marker checks and human inspection, under the same
         // Hadoop switch its committer honors
-        if (job.getConfiguration.getBoolean(
+        if (df.sparkSession.sessionState.newHadoopConf().getBoolean(
             "mapreduce.fileoutputcommitter.marksuccessfuljobs", true))
           StoreFs.createExclusive(s"$dir/_SUCCESS")
         true
     }
+
+  /** Write driver-held `rows` of `schema` as ONE parquet part file under
+    * `dir` (created if absent), with no Spark job and no commit marker;
+    * returns the file's path. The takedown overlay writes its id sets
+    * this way ([[Tombstones.writeSet]]), staging the file and renaming
+    * it in itself. */
+  def write(spark: SparkSession, schema: StructType, rows: Seq[InternalRow],
+      dir: String): String = {
+    val sqlConf = spark.sessionState.conf
+    // Spark's OWN write preparation and writer factory — the exact
+    // code path a distributed parquet write runs per task, minus
+    // the job: prepareWrite stamps the session's write
+    // configuration (legacy format, timestamp type, rebase modes,
+    // field ids, codec) onto the job conf and returns the
+    // OutputWriterFactory whose instances the write tasks use
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    val factory = org.apache.spark.sql.execution.datasources.parquet
+      .ParquetUtils.prepareWrite(sqlConf, job, schema,
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetOptions(Map.empty[String, String], sqlConf))
+    val attempt = new org.apache.hadoop.mapreduce.task
+      .TaskAttemptContextImpl(job.getConfiguration,
+        new org.apache.hadoop.mapreduce.TaskAttemptID(
+          new org.apache.hadoop.mapreduce.TaskID(
+            new org.apache.hadoop.mapreduce.JobID("graftdriver", 0),
+            org.apache.hadoop.mapreduce.TaskType.MAP, 0), 0))
+    StoreFs.mkdirs(dir)
+    val file = s"$dir/part-00000-${java.util.UUID.randomUUID}" +
+      s"-c000${factory.getFileExtension(attempt)}"
+    val writer = factory.newInstance(file, schema, attempt)
+    try rows.foreach(writer.write)
+    finally writer.close()
+    file
+  }
 }

@@ -216,9 +216,8 @@ object Retrieval {
     require(numFiles > 0, s"writePostingsIndex: numFiles $numFiles")
     VersionedStore.publish(dir, Map(
       batchId.fold("postings")(b => s"postings/batch=$b") ->
-        positionalPostings(docs, idCol, textCol)
-          .repartitionByRange(numFiles, col("token"))
-          .sortWithinPartitions("token", "doc_id", "pos"),
+        postingsShape(positionalPostings(docs, idCol, textCol), numFiles,
+          batched = false),
       batchId.fold("doclens")(b => s"doclens/batch=$b") ->
         docLengths(docs, idCol, textCol)
           .coalesce(math.min(numFiles, 2))))
@@ -238,8 +237,11 @@ object Retrieval {
     * the relay's index maintained as an append listener, never rebuilt
     * (databus-core/.../ScnIndex.java:94, DbusEventBuffer.java:1705).
     * Caller owns id disjointness across batches, as with every id-keyed
-    * store here. `numFiles` defaults to 1 for the trickle regime; a
-    * bulk backfill raises it so the batch tokenize + write parallelize.
+    * store here. `numFiles` defaults to 1 for the trickle regime, which
+    * writes one sorted file per table with no exchange (two jobs, one
+    * per table: [[VersionedStore.clustered]]); a bulk backfill raises it
+    * so the batch tokenize + write parallelize over token ranges, at the
+    * price of a range-sampling job and a shuffle.
     *
     * One rule places the write ([[VersionedStore.append]]): a store is
     * born by publish, so on a root with no generation yet this batch
@@ -266,11 +268,16 @@ object Retrieval {
   private def batchTables(newDocs: DataFrame, suffix: String,
       numFiles: Int, idCol: String, textCol: String)
       : Seq[(String, () => DataFrame)] = Seq(
-    s"postings$suffix" -> (() => positionalPostings(newDocs, idCol, textCol)
-      .repartitionByRange(numFiles, col("token"))
-      .sortWithinPartitions("token", "doc_id", "pos")),
+    s"postings$suffix" -> (() => postingsShape(
+      positionalPostings(newDocs, idCol, textCol), numFiles, batched = false)),
     s"doclens$suffix" ->
       (() => docLengths(newDocs, idCol, textCol).coalesce(1)))
+
+  /** The postings write shape: [[VersionedStore.clustered]] by token, each
+    * file sorted (token, doc_id, pos). */
+  private def postingsShape(df: DataFrame, numFiles: Int,
+      batched: Boolean): DataFrame =
+    VersionedStore.clustered(df, numFiles, batched, "token", "doc_id", "pos")
 
   /** STREAMING-append form of [[appendToPostingsIndex]]: the batch's
     * postings and norms land in their own `batch=<id>` subdirs with
@@ -282,7 +289,8 @@ object Retrieval {
     * stream-maintained store uses THIS form for every write from its
     * first batch, which publishes generation 1 with the batch-addressed
     * layout (partition discovery rejects a layout that mixes flat files
-    * with batch subdirs). */
+    * with batch subdirs). `numFiles` as in [[appendToPostingsIndex]]: the
+    * default 1 writes the batch with two jobs and no exchange. */
   def appendToPostingsIndexBatch(newDocs: DataFrame, dir: String,
       batchId: Long, numFiles: Int = 1, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
@@ -371,6 +379,14 @@ object Retrieval {
     * [[tombstoneDocs]]'d rows are physically dropped. Live-row-identical
     * by construction (a re-partition of the live set — no merge logic).
     *
+    * `numFiles` applies to FLAT stores only: their rewrite range-
+    * partitions the live postings into `numFiles` token ranges. A
+    * batch-addressed store's rewrite is NARROW: each batch keeps its own
+    * files (never more than it had), each re-sorted (token, doc_id, pos),
+    * with no range-sampling job and no shuffle — dropping a few
+    * tombstoned docs does not need the whole store moved. Its token
+    * pruning therefore stays per batch file, as the appends wrote it.
+    *
     * The rewrite is one fresh-generation [[VersionedStore.publish]]
     * followed by [[VersionedStore.gc]], the one commit path of every
     * store rewrite: the pair lands atomically, the new generation starts
@@ -395,19 +411,14 @@ object Retrieval {
     // identity is preserved, never rolled up ([[VersionedStore.liveRows]]
     // keeps the `batch` column) — so pins stay exact across the GC and
     // post-compaction [[appendToPostingsIndexBatch]] writes keep working.
-    // Batched files cluster by (batch, token) so each batch dir keeps the
-    // token-range point-read discipline. (detected by listing the batch
-    // dirs: no read, no job)
+    // The batched rewrite is NARROW ([[VersionedStore.clustered]]): each
+    // batch keeps its own files, each sorted (token, doc_id, pos), with no
+    // sampling job and no exchange. (detected by listing the batch dirs:
+    // no read, no job)
     val v = VersionedStore.resolve(dir)
     val batched = VersionedStore.batchIdsOf(s"${v.dir}/postings").nonEmpty
-    def shaped(df: DataFrame): DataFrame =
-      if (batched)
-        df.repartitionByRange(numFiles, col("batch"), col("token"))
-          .sortWithinPartitions("batch", "token", "doc_id", "pos")
-      else df.repartitionByRange(numFiles, col("token"))
-        .sortWithinPartitions("token", "doc_id", "pos")
-    val postingsLive = shaped(VersionedStore.liveRows(spark, v, "postings",
-      "doc_id", Some(PostingsSchema))) // takedown GC
+    val postingsLive = postingsShape(VersionedStore.liveRows(spark, v,
+      "postings", "doc_id", Some(PostingsSchema)), numFiles, batched) // GC
     val doclensLive = VersionedStore.liveRows(spark, v, "doclens", "doc_id",
       Some(DocLensSchema)).coalesce(math.min(numFiles, 2))
     // live reads above are lazy plans over the OLD generation; publish

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -25,13 +26,17 @@ import org.apache.spark.sql.types.StructType
   * (databus-bootstrap-producer/.../BootstrapDBCleaner.java:1).
   *
   * Replay/idempotency: a tombstone set is a SEMANTIC SET — appending
-  * the same id twice changes nothing an anti-join can observe, so the
-  * blind `mode(append)` write is naturally replay-safe (unlike the
+  * the same id twice changes nothing an anti-join can observe, so a
+  * blind append of one more file is naturally replay-safe (unlike the
   * count-bearing stores, which need batch-addressed overwrite writes —
   * see `appendToPostingsIndexBatch`). GC deduplicates physically.
   *
   * Scale shape: takedown sets are request-sized (ids only, 8 bytes a
-  * row — a million-doc purge is megabytes), so the read-side anti-join
+  * row — a million-doc purge is megabytes), so the ids are held on the
+  * driver and each generation's overlay file is written there
+  * ([[writeSet]], [[DriverParquet.write]]): a takedown of driver-held
+  * ids runs NO Spark job, and a bulk or streaming one runs only the one
+  * job that validates and collects its ids. The read-side anti-join
   * broadcasts; a set grown too large to broadcast is exactly the signal
   * to run the compaction GC, which empties it.
   */
@@ -46,11 +51,13 @@ object Tombstones {
 
   /** Record a takedown: append `ids` to the store's tombstone set.
     * Driver-sized form — legal/compliance requests arrive by the
-    * handful; a bulk purge uses [[appendDf]]. */
+    * handful; a bulk purge uses [[appendDf]]. The ids are LONGs by type,
+    * so there is nothing to validate, and the request runs no Spark job:
+    * [[VersionedStore.takedownIds]] writes each retained generation's
+    * overlay file on the driver. */
   def append(spark: SparkSession, storeDir: String, ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "Tombstones.append: empty id set")
-    import spark.implicits._
-    appendDf(ids.toDF("id"), storeDir)
+    VersionedStore.takedownIds(spark, ids, storeDir)
   }
 
   /** Bulk takedown: `ids` must carry exactly one LONG-castable column
@@ -62,51 +69,66 @@ object Tombstones {
     * cast("long") → 42) would record it against the WRONG id — both
     * while the caller believes it succeeded. The round-trip check
     * (cast to long, cast back, compare) rejects nulls, non-numeric
-    * strings, and fractional values in one request-sized job. */
+    * strings, and fractional values in the one request-sized job that
+    * also collects the ids for the driver-side overlay write. */
   def appendDf(ids: DataFrame, storeDir: String): Unit = {
     appendValidated(ids, storeDir)
     ()
   }
 
-  /** Validate a takedown request: ONE request-sized job computes the
-    * row count and the invalid-id count, fails loudly on any invalid
-    * id. Returns the validated `(id LONG)` projection plus the row
-    * count. String ids must be CANONICAL decimal — the round-trip check
+  /** Validate a takedown request: ONE request-sized job collects each
+    * id with its validity, and the request fails loudly on any invalid
+    * id. Returns the validated ids, materialized once, so every
+    * generation's overlay records the same set even when the source is
+    * nondeterministic (a query over changing data, a sampled frame).
+    * String ids must be CANONICAL decimal — the round-trip check
     * (cast to long, cast back, compare) rejects lossless-but-cosmetic
     * forms like `"042"`/`" 42"`/`"+42"` alongside nulls, non-numeric
     * strings and fractional values; fail-safe by design, since a
     * silently-normalized id and a silently-dropped one are
     * indistinguishable to the requester. */
-  private[pipeline] def validated(ids: DataFrame): (DataFrame, Long) = {
+  private[pipeline] def validated(ids: DataFrame): Seq[Long] = {
     require(ids.columns.length == 1,
       s"Tombstones.appendDf: one id column expected, got ${ids.columns.toSeq}")
     val orig = col(ids.columns.head)
     val asLong = orig.cast("long")
     val bad = asLong.isNull || asLong.cast(ids.schema.head.dataType) =!= orig
-    val r = ids.agg(count(lit(1)).as("n"),
-      coalesce(sum(when(bad, 1L).otherwise(0L)), lit(0L)).as("n_bad")).head()
-    require(r.getLong(1) == 0L,
+    val rows = ids.select(asLong, bad).collect()
+    require(!rows.exists(_.getBoolean(1)),
       "Tombstones.appendDf: null, non-LONG-castable or fractional ids —" +
         " the takedown would silently no-op or hit the wrong id;" +
         " fix the id column before recording")
-    (ids.select(asLong.as("id")), r.getLong(0))
+    rows.toSeq.map(_.getLong(0))
   }
 
   /** Raw set write under ONE generation dir (no validation) — the
-    * primitive [[VersionedStore.takedownValidated]] fans out. */
-  private[pipeline] def writeSet(idsLong: DataFrame, storeDir: String): Unit =
-    idsLong.coalesce(1).write.mode("append").parquet(dirOf(storeDir))
+    * primitive [[VersionedStore.takedownIds]] fans out. The ids are
+    * written on the driver as one file under a `_`-prefixed staging dir
+    * of the generation, which no reader lists, and then renamed into
+    * `tombstones/`: a reader sees the whole file or none of it, the
+    * staged move of [[VersionedStore.append]]. */
+  private[pipeline] def writeSet(spark: SparkSession, ids: Seq[Long],
+      storeDir: String): Unit = {
+    val stage = s"$storeDir/_staging-${java.util.UUID.randomUUID}"
+    val file = DriverParquet.write(spark, Schema,
+      ids.map(id => InternalRow(id)), stage)
+    StoreFs.mkdirs(dirOf(storeDir))
+    val dst = s"${dirOf(storeDir)}/${file.drop(file.lastIndexOf('/') + 1)}"
+    require(StoreFs.rename(file, dst),
+      s"Tombstones: cannot move staged $file to $dst")
+    StoreFs.deleteRecursive(stage)
+  }
 
   /** Shared validated append: validates once, records only when there
     * is something to record (an empty batch must not litter the
     * one-listing-cheap set with empty files) into every retained
-    * generation's overlay ([[VersionedStore.takedownValidated]] — pinned
+    * generation's overlay ([[VersionedStore.takedownIds]] — pinned
     * reads AND in-flight reservations included), and returns the number
     * of ids recorded. Every takedown entry point above stays O(request). */
   private def appendValidated(ids: DataFrame, storeDir: String): Long = {
-    val (v, n) = validated(ids)
-    if (n > 0L) VersionedStore.takedownValidated(v, storeDir)
-    n
+    val v = validated(ids)
+    if (v.nonEmpty) VersionedStore.takedownIds(ids.sparkSession, v, storeDir)
+    v.size.toLong
   }
 
   /** One micro-batch of a STREAMING takedown: the `deleteOpcode` rows

@@ -322,7 +322,7 @@ object VersionedStore {
     // (including the compliance sink's foreachBatch) is no longer
     // blocked behind a corpus-sized rebuild on the same root — it
     // appends under the lock to every complete generation AND to this
-    // reservation's overlay ([[takedownValidated]]), which is exactly
+    // reservation's overlay ([[takedownIds]]), which is exactly
     // why the reservation must be visible before the first table byte
     val (gen, token) = reserve(root)
     val dir = genDir(root, gen)
@@ -740,6 +740,28 @@ object VersionedStore {
       View(pinnedGenerationRoot(root, p.gen, p.maxBatch, who), p.maxBatch)
   }
 
+  /** The ONE write shape of a store table clustered by `keys` (postings
+    * by token, ANN cells by cell_id): rows sorted by `keys` within each
+    * task, so every file's footer min/max on `keys.head` is tight and
+    * the serving scans' literal filters skip whole files. Three arms,
+    * each running only the jobs its data needs:
+    *   - `batched` — a batch-preserving rewrite, written
+    *     `partitionBy("batch")`: the scan's own partitions, sorted by
+    *     `batch` then `keys`. No sampling job and no exchange; each batch
+    *     dir keeps its own files, at most as many as it had, since a task
+    *     writes one file per batch it read. `numFiles` does not apply.
+    *   - `numFiles == 1` (trickle appends): one file by `coalesce(1)`,
+    *     no exchange.
+    *   - otherwise `numFiles` contiguous `keys.head` ranges
+    *     (repartitionByRange: one sampling job and one exchange), for
+    *     bulk builds and flat compactions. */
+  private[pipeline] def clustered(df: DataFrame, numFiles: Int,
+      batched: Boolean, keys: String*): DataFrame =
+    if (batched) df.sortWithinPartitions("batch", keys: _*)
+    else (if (numFiles == 1) df.coalesce(1)
+      else df.repartitionByRange(numFiles, col(keys.head)))
+      .sortWithinPartitions(keys.head, keys.tail: _*)
+
   /** The live rows of `table` at a resolved [[View]] — the ONE read of a
     * store table: batches past `view.maxBatch` partition-prune out of the
     * plan, and that generation's tombstone overlay applies (erasure
@@ -775,17 +797,20 @@ object VersionedStore {
     * append. Physical purge is the next live-row publish (e.g. the
     * store families' compaction paths), whose fresh generation starts
     * with an empty overlay. */
-  def takedownDf(ids: DataFrame, root: String): Unit = {
-    val (v, n) = Tombstones.validated(ids)
-    if (n > 0) takedownValidated(v, root)
-  }
+  def takedownDf(ids: DataFrame, root: String): Unit =
+    Tombstones.appendDf(ids, root)
 
   /** The post-validation half of [[takedownDf]] — also the landing
-    * point of [[Tombstones.appendDf]] and the streaming takedown sink,
-    * so every takedown entry point (tombstoneDocs/tombstoneVectors/
-    * tombstoneSignatures/the streaming sink) records into the
-    * per-generation overlay. Runs under the maintenance lock. */
-  private[pipeline] def takedownValidated(idsLong: DataFrame,
+    * point of [[Tombstones.append]], [[Tombstones.appendDf]] and the
+    * streaming takedown sink, so every takedown entry point
+    * (tombstoneDocs/tombstoneVectors/tombstoneSignatures/the streaming
+    * sink) records into the per-generation overlay. The ids are already
+    * on the driver (request-sized by the [[Tombstones]] contract, and
+    * materialized once, so every generation records the same set): each
+    * generation's overlay file is written there
+    * ([[Tombstones.writeSet]]), so this runs no Spark job. Runs under the
+    * maintenance lock. */
+  private[pipeline] def takedownIds(spark: SparkSession, ids: Seq[Long],
       root: String): Unit = maintenance(root) {
     if (currentGen(root).isEmpty) refuseFlat(root)
     val all = listGens(root)
@@ -802,17 +827,7 @@ object VersionedStore {
     val gens = complete ++ all.collect {
       case (g, false) if reservation(root, g).isDefined => g
     }
-    // materialize the id set ONCE before the per-generation fan-out: a
-    // nondeterministic ids source (a query over changing data, a sampled
-    // frame) re-executed per generation could record DIFFERENT sets in
-    // different generations' overlays, breaking the invariant the
-    // fan-out exists for (erasure holds under pinned reads too).
-    // Request-sized by the Tombstones contract, so the driver collect is
-    // bounded — the same bound the read-side broadcast anti-join relies on
-    val spark = idsLong.sparkSession
-    import spark.implicits._
-    val pinned = idsLong.as[Long].collect().toSeq.toDF("id")
-    gens.foreach(g => Tombstones.writeSet(pinned, genDir(root, g)))
+    gens.foreach(g => Tombstones.writeSet(spark, ids, genDir(root, g)))
   }
 
   /** RECOVERY for the crashed-flip states [[StoreFsck.versionedStore]]

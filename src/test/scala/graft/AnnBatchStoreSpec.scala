@@ -83,6 +83,54 @@ class AnnBatchStoreSpec extends SparkSpec {
     assert(fsck("vectors_in_multiple_cells") == 0L, fsck.toString)
   }
 
+  test("batched compactions are narrow: no batch dir gains files; live rows and a pinned answer hold") {
+    import graft.pipeline.StoreFs
+    for (ivfPq <- Seq(false, true)) {
+      val dir = s"${tmp("annb")}/narrow"
+      if (ivfPq) {
+        Ann.writeIvfPqIndex(base, dir, k = 3, m = 4, ksub = 4, iters = 2,
+          batchId = Some(0L))
+        Ann.appendToIvfPqIndexBatch(twins, dir, batchId = 1L)
+      } else {
+        Ann.writeIndex(base, dir, k = 4, iters = 2, batchId = Some(0L))
+        Ann.appendToIndexBatch(twins, dir, batchId = 1L)
+      }
+      Ann.tombstoneVectors(spark, dir, Seq(11L, 1002L))
+      def files(): Map[Long, Int] = {
+        val t = VersionedStore.tableRoot(dir)
+        VersionedStore.batchIdsOf(s"$t/cells").map(b => b ->
+          StoreFs.listNames(s"$t/cells/batch=$b")
+            .count(_.endsWith(".parquet"))).toMap
+      }
+      def served(at: Option[VersionedStore.Pin]) =
+        (if (ivfPq) Ann.ivfPqTopKFromStore(queries, corpus, dir, k = 3,
+          nProbe = 3, at = at)
+        else Ann.ivfQuantizedTopKFromStore(queries, corpus, dir, k = 3,
+          nProbe = 4, at = at)).collect().toSet
+      val before = files()
+      val cells = Ann.readCells(spark, dir).collect().toSet
+      val pin = VersionedStore.pin(dir)
+      val answer = served(Some(pin))
+      if (ivfPq) Ann.compactIvfPqIndex(spark, dir, keepGenerations = 1)
+      else Ann.compactIndexCells(spark, dir, keepGenerations = 1)
+      val after = files()
+      assert(after.keySet == before.keySet, s"ivfPq=$ivfPq: $after vs $before")
+      after.foreach { case (b, n) =>
+        assert(n <= before(b),
+          s"ivfPq=$ivfPq: batch=$b holds $n files, ${before(b)} before")
+      }
+      assert(Ann.readCells(spark, dir).collect().toSet == cells, s"ivfPq=$ivfPq")
+      assert(!Ann.readCells(spark, dir).select("id").as[Long].collect()
+        .exists(Set(11L, 1002L)), s"ivfPq=$ivfPq")
+      // the captured pin (its generation retained) and the same batch cut
+      // of the compacted head serve the same answer
+      assert(VersionedStore.currentGen(dir).exists(_ > pin.gen))
+      assert(served(Some(pin)) == answer, s"ivfPq=$ivfPq")
+      assert(served(Some(VersionedStore.Pin(VersionedStore.currentGen(dir).get,
+        pin.maxBatch))) == answer, s"ivfPq=$ivfPq")
+    }
+  }
+
   test("layout guards: mixed flat/batch writes and batch-store rewrites refuse loudly") {
     // a blind append into a batch-addressed store (or a batch append
     // into a flat one) would succeed and then break every later read at

@@ -11,11 +11,16 @@ a verdict, then the failed/attempted totals of each side. A gain holds
 when, over at least ten pairs, the change wins at least 9/10 of them
 and the medians differ by more than the base's quartile spread. A
 metric with a bound in BENCHMARK.json is flagged when the change's
-median is worse than the base's by more than that bound.
+median is worse than the base's by more than that bound. `--named` adds
+a second table, built the same way, over the `named` readings of each
+run's report line (per-op latencies such as `takedown_p50_ms`,
+`compact_p50_ms`, `search_p90_ms`), so an untraced pair shows which op
+moved.
 
     python3 tools/bench_pairs.py --base HEAD --workload relay-tail --seeds 401-410
     python3 tools/bench_pairs.py --base HEAD~1 --workload index-cdc --seeds 1-3 \\
         --trace 1 --raw /tmp/pairs.json
+    python3 tools/bench_pairs.py --base HEAD --workload index-cdc --seeds 1-10 --named
 """
 import argparse
 import json
@@ -46,7 +51,12 @@ def run(tree, command, workload, seed, seconds, trace):
     r = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, text=True)
     if r.returncode != 0:
         return None
-    return json.loads(r.stdout.strip().splitlines()[-1])
+    lines = r.stdout.strip().splitlines()
+    result = json.loads(lines[-1])
+    # run.py echoes the PERFBENCH_REPORT line as `report {...}`
+    reports = [l.split(" ", 1)[1] for l in lines if l.startswith("report ")]
+    result["named"] = json.loads(reports[-1]).get("named", {}) if reports else {}
+    return result
 
 
 def quartiles(vs):
@@ -56,20 +66,24 @@ def quartiles(vs):
     return q1, med, q3
 
 
-def report(bench, runs):
-    """runs: [(seed, base_result, change_result)] with both results present."""
+def report(bench, runs, section="metrics"):
+    """runs: [(seed, base_result, change_result)] with both results present;
+    section: "metrics" (the result line) or "named" (the report line)."""
     better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
-    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
-    names = sorted({k for _, b, c in runs for k in b["metrics"]} &
-                   {k for _, b, c in runs for k in c["metrics"]})
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]} if section == "metrics" else {}
+    names = sorted({k for _, b, c in runs for k in b[section]} &
+                   {k for _, b, c in runs for k in c[section]})
     print(f"{'metric':34s} {'base median [Q1, Q3]':>34s} {'change median [Q1, Q3]':>34s}"
           f" {'delta':>8s} {'wins':>6s} {'base IQR':>10s}  verdict")
     for k in names:
-        pairs = [(b["metrics"][k]["value"], c["metrics"][k]["value"]) for _, b, c in runs
-                 if k in b["metrics"] and k in c["metrics"]]
+        pairs = [(b[section][k]["value"], c[section][k]["value"]) for _, b, c in runs
+                 if k in b[section] and k in c[section]]
         if not any(b or c for b, c in pairs):
             continue  # a layer this workload never runs
-        lower = better.get(k.replace("trace.", "", 1), better.get(k, "lower")) == "lower"
+        # a named reading is a rate when its unit says so, else a cost
+        unit = runs[0][1][section][k].get("unit")
+        default = "higher" if unit == "1/s" else "lower"
+        lower = better.get(k.replace("trace.", "", 1), better.get(k, default)) == "lower"
         bq1, bmed, bq3 = quartiles([b for b, _ in pairs])
         cq1, cmed, cq3 = quartiles([c for _, c in pairs])
         wins = sum(1 for b, c in pairs if (c < b if lower else c > b))
@@ -95,6 +109,8 @@ def main():
     ap.add_argument("--seeds", required=True, help="A-B or a single seed")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--raw", help="also write every run's result to this JSON file")
+    ap.add_argument("--named", action="store_true",
+                    help="also tabulate each run's named per-op readings")
     a = ap.parse_args()
     seconds = bench["run_seconds"]
     tmp = tempfile.mkdtemp(prefix="bench-pairs-")
@@ -128,6 +144,9 @@ def main():
             print(f"\n{a.workload}, {len(runs)} pairs, base {a.base} vs working tree, "
                   f"{seconds}-s runs, trace {a.trace}")
             report(bench, runs)
+            if a.named:
+                print(f"\nnamed readings (report line), {len(runs)} pairs")
+                report(bench, runs, "named")
         for side in ("base", "change"):
             print(f"{side}: failed {failed.get(side, 0)} of {attempted.get(side, 0)} ops, "
                   f"{errors.get(side, 0)} runs that exited non-zero")
