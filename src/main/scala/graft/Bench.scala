@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{DbusKeyFilter, KeyModFilter}
-import graft.sources.ChangeFeed
+import graft.operators.{DbusKeyFilter, KeyModFilter, Relay}
+import graft.sources.{Store, WireFixtures}
 
 /** Per-round benchmark: every SparkEntry query timed at the given SF, plus
   * the relay-pipeline throughput (events/sec through source → filter →
@@ -78,6 +77,30 @@ object Bench {
       val sec = (System.nanoTime() - t0) / 1e9
       (n, if (sec > 0) n / sec else 0.0)
     } { case (_, eps) => -eps }
+
+  /** Relay pipeline throughput over `dir`'s feed: (events, envelope/s,
+    * binary/s, wire/s). Each leg is source → `KeyModFilter(4, 0, 3)` →
+    * per-partition ordered dispatch, fully consumed, best of 2
+    * ([[throughput]]); the source is built inside the timed pass. The
+    * legs' sources are the envelope event log, the engine's own segment
+    * format through the graft-relay DataSource V2, and segments in the
+    * reference's exact DbusEventV2 binary layout (CRC-validated decode +
+    * schema-by-digest Avro payload resolution per event). The segment
+    * fixtures are written outside the timer. */
+  private[graft] def relayThroughput(spark: SparkSession,
+      dir: String): (Long, Double, Double, Double) = {
+    val filter = DbusKeyFilter("MOD", Seq(KeyModFilter(4, 0, 3)))
+    def leg(src: => DataFrame): (Long, Double) =
+      throughput(() => Relay.streamOrdered(src, filter = filter).count())
+    def segments(path: String): DataFrame =
+      spark.read.format("graft-relay").option("path", path).load()
+    val (n, envelope) = leg(Store.eventLog(spark, dir))
+    val binDir = WireFixtures.relayLogDir(spark, dir)
+    val (_, binary) = leg(segments(binDir))
+    val wireDir = WireFixtures.dbusv2LogDir(spark, dir)
+    val (_, wire) = leg(segments(wireDir))
+    (n, envelope, binary, wire)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -153,30 +176,7 @@ object Bench {
       return
     }
 
-    // relay pipeline throughput: envelope → mod-filter → per-partition
-    // ordered scan, fully consumed
-    val (nEvents, eventsPerSec) = throughput(() =>
-      graft.operators.Relay.streamOrdered(
-        graft.sources.Store.eventLog(spark, sfDir),
-        filter = DbusKeyFilter("MOD", Seq(KeyModFilter(4, 0, 3)))).count())
-
-    // binary-source throughput: the same pipeline served by the custom
-    // DataSource V2 over the engine's own segment format (written in
-    // warm-up via the fixture; read + filter + full consume timed here)
-    val binDir = graft.sources.WireFixtures.relayLogDir(spark, sfDir)
-    val (_, binEps) = throughput(() =>
-      graft.operators.Relay.streamOrdered(
-        spark.read.format("graft-relay").option("path", binDir).load(),
-        filter = DbusKeyFilter("MOD", Seq(KeyModFilter(4, 0, 3)))).count())
-
-    // wire-format throughput: the same pipeline over segments in the
-    // reference's exact DbusEventV2 binary layout (CRC-validated decode +
-    // schema-by-digest Avro payload resolution per event)
-    val wireDir = graft.sources.WireFixtures.dbusv2LogDir(spark, sfDir)
-    val (_, wireEps) = throughput(() =>
-      graft.operators.Relay.streamOrdered(
-        spark.read.format("graft-relay").option("path", wireDir).load(),
-        filter = DbusKeyFilter("MOD", Seq(KeyModFilter(4, 0, 3)))).count())
+    val (nEvents, eventsPerSec, binEps, wireEps) = relayThroughput(spark, sfDir)
 
     // The driver keeps only the LAST ~2000 chars of stdout (sbt's
     // "[success] Total time" trailer included), so the final line must be

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import graft.pipeline.Dedup
 
@@ -32,8 +33,13 @@ import graft.pipeline.Dedup
   *                       families
   *   contract [dataDir]  the two corpus-dependent contract bounds a new
   *                       corpus must re-measure (COVERAGE.md)
-  *   scale [leg ...]     the decade scaling probes of SCALING.md
-  *                       ([[ScaleProbe.run]])
+  *   scale [leg]         the decade scaling probes of SCALING.md
+  *                       ([[ScaleProbe.run]]): no leg sweeps every query
+  *                       sf0.1 → sf1 plus `cc` and `pr`; `relay` (relay
+  *                       throughput), `sf10 [query ...]` (the heavy
+  *                       families sf1 → sf10), `cc` (distributed connected
+  *                       components), `pr` (distributed PageRank), or
+  *                       query names to probe alone
   */
 object Probe {
 
@@ -129,7 +135,7 @@ object Probe {
         val warm = Bench.seconds(Bench.force(q))
         println(f"warm $warm%.2f s")
         q.explain("formatted")
-      } catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+      } catch { case NonFatal(e) => println(s"failed: ${e.getMessage}") }
     }
 
   private def drain(spark: SparkSession): Unit = {

@@ -19,10 +19,10 @@ import sys
 def parse(path):
     q01, q1, failed = {}, {}, {}
     relay = {}
-    line_re = re.compile(
-        r"^(q[\w]+|cc_distributed|pagerank_distributed)\s+"
-        r"(\d+\.\d+)\s+(\d+\.\d+)")
-    fail_re = re.compile(r"^(q[\w]+)\s+FAILED\s*(.*)")
+    # the row names: every query family plus the two distributed legs
+    name = r"^(q[\w]+|cc_distributed|pagerank_distributed)"
+    line_re = re.compile(name + r"\s+(\d+\.\d+)\s+(\d+\.\d+)")
+    fail_re = re.compile(name + r"\s+FAILED\s*(.*)")
     relay_re = re.compile(
         r"^relay\s+(\S+)\s+events=\s*(\d+)\s+pipeline=\s*(\d+)/s"
         r"\s+binary=\s*(\d+)/s\s+wire=\s*(\d+)/s")
