@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{DbusKeyFilter, KeyModFilter, Relay}
@@ -42,7 +44,7 @@ object Bench {
     * run that follows reports its own failure. */
   private[graft] def warmUp(name: String)(body: => Any): Unit =
     try body
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] warm-up FAILED $name: $e")
     }
 
@@ -144,7 +146,7 @@ object Bench {
     // runs first — r6 charged q_cluster_keep_one 2.8s for a 1.0s plan.
     val tSetup = System.nanoTime()
     try SparkEntry.benchOnboard(spark, sfDir)
-    catch { case e: Throwable => failed("benchOnboard", e) }
+    catch { case NonFatal(e) => failed("benchOnboard", e) }
     val setupSec = (System.nanoTime() - tSetup) / 1e9
 
     // Two timed passes, min per query: a single local[32] JVM shows
@@ -154,7 +156,7 @@ object Bench {
       picked.toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
         try { force(fn(spark, sfDir)) }
-        catch { case e: Throwable => failed(name, e); -1L }
+        catch { case NonFatal(e) => failed(name, e); -1L }
         name -> (System.nanoTime() - t0) / 1e9
       }.toMap
     val p1 = pass(); val p2 = pass()
@@ -230,7 +232,7 @@ object Bench {
       java.nio.file.Paths.get("/tmp/graft_bench.json"),
       s"""{"metric":"total","value":$total,"unit":"sec","setup_sec":$setupSec,""" +
       s""""queries":$fullMap,"failed":$failedJson,"sf":"$sfDir"}""" + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     println(line)
     spark.stop()
   }

@@ -339,7 +339,7 @@ object ScaleProbe {
     val line = try {
       val a = secs(lo)
       val b = secs(hi)
-      f"$label%-22s $a%8.2f $b%8.2f  ${b / a}%5.1f×"
+      f"$label%-22s $a%8.2f $b%8.2f  ${b / a}%5.1fx"
     } catch {
       case NonFatal(e) =>
         f"$label%-22s FAILED ${e.getClass.getSimpleName}:" +

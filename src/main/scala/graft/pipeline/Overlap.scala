@@ -2,6 +2,7 @@ package graft.pipeline
 
 import scala.concurrent.{blocking, Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
 
 /** Driver-chain overlap, done safely (optimization guide §2.6 "overlap
   * independent jobs"): Spark's scheduler happily runs several jobs at
@@ -34,11 +35,19 @@ import scala.concurrent.duration.Duration
   */
 private[graft] object Overlap {
 
+  /** A fatal error (an OOM, say) thrown by a chain. A Scala future
+    * whose body throws a fatal error is never completed, so awaiting it
+    * would hang; [[run]] carries the error out in this box and
+    * [[settle]]/[[value]] rethrow the original on the caller's thread. */
+  private final case class Fatal(cause: Throwable) extends RuntimeException(cause)
+
   /** Spawn one independent driver chain on the shared pool, marked
     * blocking (see object doc). Thread-locals such as
     * `setJobDescription` are per-thread — label inside `body` if needed. */
   def run[A](body: => A): Future[A] =
-    Future(blocking(body))(ExecutionContext.global)
+    Future(blocking(
+      try body catch { case e: Throwable if !NonFatal(e) => throw Fatal(e) }
+    ))(ExecutionContext.global)
 
   /** Wait until EVERY future has terminated, then return — or rethrow
     * the FIRST failure in argument order (matching the sequential form's
@@ -46,11 +55,12 @@ private[graft] object Overlap {
     * [[value]]; by then each is an immediate read. */
   def settle(fs: Future[_]*): Unit = {
     fs.foreach(f => Await.ready(f, Duration.Inf))
-    fs.foreach(f => Await.result(f, Duration.Inf))
+    fs.foreach(value(_))
   }
 
   /** The settled value of `f` — only valid after [[settle]] returned. */
-  def value[A](f: Future[A]): A = Await.result(f, Duration.Inf)
+  def value[A](f: Future[A]): A =
+    try Await.result(f, Duration.Inf) catch { case Fatal(e) => throw e }
 
   /** Run two independent chains concurrently and return both values;
     * settles both before rethrowing on failure. */

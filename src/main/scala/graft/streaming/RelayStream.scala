@@ -1,6 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  InterpretedOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,7 +23,7 @@ import graft.operators.{AllowAllFilter, Bootstrap, DbusFilter}
   * WINDOW_AT_TIME mode guarantees a transaction window is never split
   * across deliveries (DbusEventBuffer.java:2199-2202). Spark-first
   * re-expression: encode the invariant in the *storage layout* — every
-  * file contains only whole SCN windows (writer range-partitions on scn),
+  * file contains only whole SCN windows (the writer cuts scn bands),
   * so any micro-batch (a set of files) contains only whole windows. No
   * custom source needed; the built-in file source's listing/offset log
   * provides the SCN-ordered replay + checkpointing.
@@ -49,17 +53,40 @@ object RelayStream {
 
   /** Persist an envelope DataFrame as a window-aligned event log.
     *
-    * `filesHint` controls granularity (≈ windows per file). ONE
-    * distributed job writes every segment: `repartitionByRange(scn)`
-    * keys whole windows, so no transaction window ever splits across
-    * files, and task k owns the k-th scn band. The file source lists
-    * oldest-mtime-first, so the driver stamps mtimes in part-number
-    * order (part number == range-partition task == scn band) — a
-    * metadata-only loop over ≤ filesHint files.
+    * `filesHint` controls granularity (≈ windows per file). Every file
+    * holds one contiguous scn band, whole windows only, sorted by
+    * (partition_id, scn, seq), and part number k is the k-th band. Two
+    * arms write the bands, selected by the input, not by an option:
     *
-    * Admission order: the job writes into an `_`-prefixed STAGING dir
-    * under the log, which the file source never lists. Parts are
-    * stamped there and only then renamed into the log, in part-number
+    *  - DRIVER-LOCAL envelopes (the optimized plan collapses to a
+    *    LocalRelation, [[graft.pipeline.DriverParquet.localRows]] — a
+    *    polled batch the producer already holds, as `loadDataEvents`
+    *    appends it) are written ON THE DRIVER with no Spark job: the
+    *    rows are sorted by scn and cut into `min(filesHint, distinct
+    *    scns)` contiguous bands of about equal event count, never
+    *    inside an scn, and the bands go through one
+    *    [[graft.pipeline.DriverParquet.writeParts]] call. This is the
+    *    reference producer's in-process `startEvents`/`appendEvent`/
+    *    `endEvents` (DbusEventBuffer.java:1982,2183). Its cost is
+    *    mostly the file creates, 15-19 ms each on a 4-vCPU host (over
+    *    half of it `chmod` forks when no native Hadoop library is
+    *    loaded), which the bands pay concurrently: there, an 8-band
+    *    10k-event append at local[2] takes ~90 ms (p50) against ~475 ms
+    *    for the 3-job distributed write.
+    *  - Anything else (a JDBC or binlog capture, a file-backed replay,
+    *    [[compactEventLog]]'s snapshot) is written by ONE distributed
+    *    job: `repartitionByRange(scn)` keys whole windows, so task k
+    *    owns the k-th scn band.
+    *
+    * An empty envelope writes what the distributed writer does: one
+    * schema-only `part-00000` file, or no file under
+    * `partitionByTimeline`.
+    *
+    * Admission order: both arms write into an `_`-prefixed STAGING dir
+    * under the log, which the file source never lists. The file source
+    * lists oldest-mtime-first, so the driver stamps part k with
+    * `base + 2k` there — a metadata-only loop over ≤ filesHint files —
+    * and only then renames the parts into the log, in part-number
     * order, so a drain listing the log at any instant sees only parts
     * that already carry their final stamp, and never a later band
     * without the earlier ones (a part stamped after it entered the log
@@ -74,7 +101,7 @@ object RelayStream {
     // java.io.File walk sees nothing under file:/hdfs:/s3a: roots and
     // would silently skip the stamp the source's admission order
     // relies on
-    import graft.pipeline.StoreFs
+    import graft.pipeline.{DriverParquet, StoreFs}
     // stamps start strictly above every earlier generation's stamp —
     // append batches stay ordered even when issued within the same
     // millisecond
@@ -83,15 +110,21 @@ object RelayStream {
         .filter(_.getPath.getName.startsWith("part-"))
         .map(_.getModificationTime).foldLeft(0L)(math.max) + 2)
     val staging = s"$dir/_staging-${java.util.UUID.randomUUID}"
-    val w = envelope
-      .repartitionByRange(filesHint, col("scn"))
-      .sortWithinPartitions("partition_id", "scn", "seq")
-      .write
-    // hive-partition the log by physical partition: per-timeline
-    // subscriptions then prune whole directories at the scan
-    // (DbusEventBufferMult one-buffer-per-partition analog)
-    (if (partitionByTimeline) w.partitionBy("partition_id") else w)
-      .parquet(staging)
+    DriverParquet.localRows(envelope) match {
+      case Some((schema, rows)) =>
+        writeBandsOnDriver(envelope.sparkSession, schema, rows, staging,
+          filesHint, partitionByTimeline)
+      case None =>
+        val w = envelope
+          .repartitionByRange(filesHint, col("scn"))
+          .sortWithinPartitions("partition_id", "scn", "seq")
+          .write
+        // hive-partition the log by physical partition: per-timeline
+        // subscriptions then prune whole directories at the scan
+        // (DbusEventBufferMult one-buffer-per-partition analog)
+        (if (partitionByTimeline) w.partitionBy("partition_id") else w)
+          .parquet(staging)
+    }
     val (fs, sp) = StoreFs.fsPath(staging)
     val prefix = fs.makeQualified(sp).toString + "/"
     val parts = StoreFs.listFileStatusesRecursive(staging).map(_.getPath)
@@ -112,6 +145,62 @@ object RelayStream {
         s"writeEventLog: cannot move staged $rel into $dir")
     }
     StoreFs.deleteRecursive(staging)
+  }
+
+  /** The driver arm of [[writeEventLog]]: `rows` of `schema` cut into
+    * scn bands and written under `staging` as the distributed arm's
+    * tasks would write them — part k is band k, sorted by
+    * (partition_id, scn, seq), and under `partitionByTimeline` one file
+    * per (band, partition) in `partition_id=<p>/` without that column. */
+  private def writeBandsOnDriver(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow], staging: String, filesHint: Int,
+      partitionByTimeline: Boolean): Unit = {
+    import graft.pipeline.DriverParquet.{Part, writeParts}
+    require(filesHint > 0, s"writeEventLog: filesHint $filesHint must be positive")
+    def ref(i: Int) = BoundReference(i, schema(i).dataType, schema(i).nullable)
+    def ordering(cols: String*) = new InterpretedOrdering(
+      cols.map(c => SortOrder(ref(schema.fieldIndex(c)), Ascending)))
+    val byScn = ordering("scn")
+    val byKey = ordering("partition_id", "scn", "seq")
+    val sorted = rows.toIndexedSeq.sorted(byScn)
+    val n = sorted.length
+    // first row of each scn: the only places a band may start
+    val starts = (0 until n).filter(i =>
+      i == 0 || byScn.compare(sorted(i - 1), sorted(i)) != 0)
+    val bands = math.min(filesHint, starts.length)
+    // band k starts at the first scn at or past k·n/bands events,
+    // clamped so that every band keeps at least one scn
+    val firstScn = (0 until bands).scanLeft(-1) { (prev, k) =>
+      val at = starts.indexWhere(_ >= k.toLong * n / bands) match {
+        case -1 => starts.length
+        case s => s
+      }
+      math.min(math.max(at, prev + 1), starts.length - (bands - k))
+    }.tail
+    val bounds = firstScn.map(starts) :+ n
+    val banded = (0 until bands).map(k =>
+      k -> sorted.slice(bounds(k), bounds(k + 1)).sorted(byKey))
+    if (!partitionByTimeline) {
+      // nothing to write still leaves one schema-only part, as a
+      // distributed write of nothing does
+      writeParts(spark, schema, staging,
+        if (n == 0) Seq(Part(0, "", Iterator.empty))
+        else banded.map { case (k, band) => Part(k, "", band.iterator) })
+    } else {
+      val pid = ref(schema.fieldIndex("partition_id"))
+      val kept = schema.fields.indices.filter(_ != pid.ordinal)
+      writeParts(spark, StructType(kept.map(i => schema(i))), staging,
+        banded.flatMap { case (k, band) =>
+          // one file per partition of the band, in partition order; a
+          // projection per file, since parts are written concurrently
+          band.groupBy(r => Option(pid.eval(r))).toSeq
+            .sortBy(_._2.head)(byKey).map { case (p, run) =>
+              Part(k, ExternalCatalogUtils.getPartitionPathString(
+                "partition_id", p.map(_.toString).orNull),
+                run.iterator.map(UnsafeProjection.create(kept.map(ref))))
+            }
+        })
+    }
   }
 
   private val PartNum = """part-(\d+)-.*""".r

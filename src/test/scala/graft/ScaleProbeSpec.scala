@@ -27,7 +27,7 @@ class ScaleProbeSpec extends AnyFunSuite {
       assert(m.map(m => (m.group(1), m.group(2), m.group(3))) ===
         Some(("q_zorder_kN", "1.25", "12.50")), line)
     }
-    assert(line.endsWith("10.0×"))
+    assert(line.endsWith("10.0x"))
     val cc = ScaleProbe.decade("cc_distributed", "lo", "hi")(secs(2, 3))
     assert(sf1Line.findPrefixMatchOf(cc.strip).map(_.group(1)) ===
       Some("cc_distributed"))
