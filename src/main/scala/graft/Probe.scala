@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -21,14 +22,16 @@ import graft.pipeline.Dedup
   *   jobs <query ...>    one warm run per query with a job listener: every
   *                       Spark job's wall and the driver-side gaps between
   *                       jobs, for harness-heavy queries spread over dozens;
-  *                       a job without a call site (an AQE stage job) is
-  *                       labelled by its last stage's name, and driver-side
-  *                       time is wall minus the union of job intervals
+  *                       driver-side time is wall minus the union of job
+  *                       intervals
   *   plan [query ...]    warm seconds plus the executed plan as
   *                       `explain("formatted")` (all queries by default)
-  *   drain               the fixed cost of one AvailableNow foreachBatch
+  *   drain [events ...] the fixed cost of one AvailableNow foreachBatch
   *                       drain over a trivial feed: the floor under every
-  *                       *_stream query
+  *                       *_stream query; then `GraftEngine.consume` over
+  *                       the engine's own relay log of each size (default
+  *                       10000, an append, and 300000, a backlog) with
+  *                       each drain's wall, jobs and shuffle bytes
   *   cold [sfDir]        cold-start versus warm cost of the store-backed
   *                       families
   *   contract [dataDir]  the two corpus-dependent contract bounds a new
@@ -62,7 +65,8 @@ object Probe {
       case "time" => time(spark, dir, named(rest))
       case "jobs" => jobs(spark, dir, rest)
       case "plan" => plan(spark, dir, named(rest))
-      case "drain" => drain(spark)
+      case "drain" =>
+        drain(spark, if (rest.isEmpty) Seq(10000L, 300000L) else rest.map(_.toLong))
       case "cold" =>
         cold(spark, rest.headOption.getOrElse("/root/testdata/sf0.1"))
       case "contract" =>
@@ -83,31 +87,51 @@ object Probe {
     }
   }
 
+  /** Every Spark job started while `body` ran, on any thread, as (id,
+    * start ms, end ms, label): a job without a call site (an AQE stage
+    * job) is labelled by its last stage's name. Also the shuffle bytes
+    * its stages wrote. */
+  private final class JobLog extends SparkListener {
+    val jobs = mutable.ArrayBuffer[(Int, Long, Long, String)]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    private val starts = mutable.Map[Int, (Long, String)]()
+    override def onJobStart(js: SparkListenerJobStart): Unit =
+      starts.synchronized {
+        starts(js.jobId) = (js.time,
+          Option(js.properties)
+            .flatMap(p => Option(p.getProperty("callSite.short")))
+            .filter(_.nonEmpty)
+            .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name))
+            .getOrElse(""))
+      }
+    override def onJobEnd(je: SparkListenerJobEnd): Unit =
+      starts.synchronized(starts.remove(je.jobId)).foreach { case (t0, d) =>
+        jobs.synchronized { jobs += ((je.jobId, t0, je.time, d)) }
+      }
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      shuffleBytes.addAndGet(
+        sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
+    }
+  }
+
+  /** `body`'s wall seconds and its [[JobLog]]. */
+  private def logJobs(spark: SparkSession)(body: => Any): (Double, JobLog) = {
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    val wall = try Bench.seconds(body) finally {
+      Thread.sleep(200) // let the listener bus drain
+      spark.sparkContext.removeSparkListener(log)
+    }
+    (wall, log)
+  }
+
   private def jobs(spark: SparkSession, dir: String,
       names: Seq[String]): Unit =
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       Bench.force(fn(spark, dir)) // warm pass: JIT + fixture onboarding
-      val jobs = mutable.ArrayBuffer[(Int, Long, Long, String)]()
-      val starts = mutable.Map[Int, (Long, String)]()
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          starts(js.jobId) = (js.time,
-            Option(js.properties)
-              .flatMap(p => Option(p.getProperty("callSite.short")))
-              .filter(_.nonEmpty)
-              .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name))
-              .getOrElse(""))
-        override def onJobEnd(je: SparkListenerJobEnd): Unit =
-          starts.remove(je.jobId).foreach { case (t0, d) =>
-            jobs.synchronized { jobs += ((je.jobId, t0, je.time, d)) }
-          }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val wall = Bench.seconds(Bench.force(fn(spark, dir)))
-      spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(200) // let the listener bus drain
-      val sorted = jobs.sortBy(_._2).toSeq
+      val (wall, log) = logJobs(spark)(Bench.force(fn(spark, dir)))
+      val sorted = log.jobs.sortBy(_._2).toSeq
       println(f"== $name wall=$wall%.2f s, jobs=${sorted.size}")
       var prevEnd = 0L
       var jobSum = 0.0
@@ -138,7 +162,7 @@ object Probe {
       } catch { case NonFatal(e) => println(s"failed: ${e.getMessage}") }
     }
 
-  private def drain(spark: SparkSession): Unit = {
+  private def drain(spark: SparkSession, sizes: Seq[Long]): Unit = {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("streamprobe").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$root/feed")
@@ -162,7 +186,31 @@ object Probe {
       val t = once(cp)
       println(f"drain resume $i:    $t%.3f s")
     }
+    sizes.foreach(engineDrain(spark, root, _))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
+  /** `GraftEngine.consume` over the engine's own relay log of `events`
+    * synthetic events (one `genDataEvents` append): the drain's wall,
+    * Spark jobs and shuffle bytes, the better of two drains from fresh
+    * checkpoints. */
+  private def engineDrain(spark: SparkSession, root: String,
+      events: Long): Unit = {
+    val dir = s"$root/engine-$events"
+    val engine = new GraftEngine(spark, s"$dir/log")
+    engine.genDataEvents(events)
+    val bytes = graft.pipeline.StoreFs.listDataFiles(s"$dir/log")
+      .map(_.getLen).sum
+    val noop = new graft.streaming.DatabusConsumer {
+      override def onEvent(e: graft.streaming.EnvelopeRow): Boolean = true
+    }
+    var runs = 0
+    val (wall, log) = Bench.bestOf2 {
+      runs += 1
+      logJobs(spark)(engine.consume(noop, s"$dir/cp-$runs").awaitTermination())
+    }(_._1)
+    println(f"engine drain events=$events%8d log=$bytes%9d B wall=$wall%.3f s" +
+      f" jobs=${log.jobs.size} shuffle=${log.shuffleBytes.get} B")
   }
 
   /** (store-dir suffix under WireFixtures' per-SF root, serving query) */

@@ -36,7 +36,10 @@ import org.apache.spark.sql.types.StructType
   * host. Over half of it is `RawLocalFileSystem.setPermission` forking
   * `chmod` for the data file and its `.crc` when no native Hadoop
   * library is loaded; a write's fixed cost grows with its file count,
-  * not its row count. */
+  * not its row count.
+  *
+  * The driver also reads footers here ([[footerBounds]]): per-file
+  * column bounds for decisions that must not scan rows. */
 private[graft] object DriverParquet {
 
   /** The frame's driver-local rows, when the whole plan is one
@@ -135,5 +138,54 @@ private[graft] object DriverParquet {
     }}
     Overlap.settle(writes: _*)
     writes.map(Overlap.value)
+  }
+
+  /** Per-file (min, max) of the integral columns `cols`, read from the
+    * PARQUET FOOTERS of `files` on the driver: no row is scanned and no
+    * Spark job runs, so the cost is one footer read per file. Keyed by
+    * the path's string form. A zero-row file (a schema-only part, an empty
+    * append) has no row groups and covers nothing: it is skipped. A
+    * file with rows whose named column carries no stats (wrong name or
+    * non-integral type) fails loudly — a silent empty answer would read
+    * as "nothing there". */
+  def footerBounds(files: Seq[org.apache.hadoop.fs.Path], cols: Seq[String])
+      : Seq[(String, Seq[(Long, Long)])] = {
+    import scala.jdk.CollectionConverters._
+    def asLong(v: Any, file: String, c: String): Long = v match {
+      case l: java.lang.Long => l.longValue()
+      case i: java.lang.Integer => i.longValue()
+      case other => throw new IllegalArgumentException(
+        s"footerBounds: column $c in $file has non-integral footer stats" +
+          s" (${if (other == null) "none" else other.getClass.getName})")
+    }
+    files.flatMap { path =>
+      val file = path.toString
+      val conf = StoreFs.fsPath(file)._1.getConf
+      // read options from the FileSystem's own conf: the reader's default
+      // options build a fresh Hadoop Configuration per open, which costs
+      // ~17 ms a file on a 4-vCPU host against ~1 ms for the footer read
+      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
+      try {
+        val blocks = rdr.getFooter.getBlocks.asScala.toSeq
+          .filter(_.getRowCount > 0)
+        if (blocks.isEmpty) None
+        else {
+          val chunks = blocks.flatMap(_.getColumns.asScala)
+            .groupBy(_.getPath.toDotString)
+          val bounds = cols.map { c =>
+            val cc = chunks.getOrElse(c, Seq.empty)
+              .filter(m => m.getStatistics != null &&
+                m.getStatistics.hasNonNullValue)
+            require(cc.nonEmpty,
+              s"footerBounds: no footer stats for column $c in $file")
+            (cc.map(m => asLong(m.getStatistics.genericGetMin, file, c)).min,
+              cc.map(m => asLong(m.getStatistics.genericGetMax, file, c)).max)
+          }
+          Some((file, bounds))
+        }
+      } finally rdr.close()
+    }
   }
 }

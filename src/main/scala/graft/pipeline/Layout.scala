@@ -121,17 +121,9 @@ object Layout {
     * spec-side ground truth the footer path is checked against.)
     * Loud failure on a column with no footer stats (wrong name or
     * non-integral type) — a silent empty answer would read as
-    * "perfectly clustered". */
+    * "perfectly clustered" ([[DriverParquet.footerBounds]]). */
   def footerBounds(dir: String, cols: Seq[String])
       : Seq[(String, Seq[(Long, Long)])] = {
-    import scala.jdk.CollectionConverters._
-    def asLong(v: Any, file: String, c: String): Long = v match {
-      case l: java.lang.Long => l.longValue()
-      case i: java.lang.Integer => i.longValue()
-      case other => throw new IllegalArgumentException(
-        s"footerBounds: column $c in $file has non-integral footer stats" +
-          s" (${if (other == null) "none" else other.getClass.getName})")
-    }
     val (fs, root) = StoreFs.fsPath(tablePath(dir))
     if (!fs.exists(root)) return Seq.empty
     val files = {
@@ -143,35 +135,7 @@ object Layout {
       }
       b.result()
     }
-    files.flatMap { path =>
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          path, fs.getConf))
-      try {
-        // a zero-row part file (e.g. an empty append trigger) has no
-        // row groups and legitimately no stats: it covers nothing and
-        // is SKIPPED, not an error — the loud failure below is reserved
-        // for files with rows whose named column carries no stats
-        // (wrong name or non-integral type)
-        val blocks = rdr.getFooter.getBlocks.asScala.toSeq
-          .filter(_.getRowCount > 0)
-        if (blocks.isEmpty) None
-        else {
-          val chunks = blocks.flatMap(_.getColumns.asScala)
-            .groupBy(_.getPath.toDotString)
-          val bounds = cols.map { c =>
-            val cc = chunks.getOrElse(c, Seq.empty)
-              .filter(m => m.getStatistics != null &&
-                m.getStatistics.hasNonNullValue)
-            require(cc.nonEmpty,
-              s"footerBounds: no footer stats for column $c in $path")
-            (cc.map(m => asLong(m.getStatistics.genericGetMin, path.toString, c)).min,
-              cc.map(m => asLong(m.getStatistics.genericGetMax, path.toString, c)).max)
-          }
-          Some((path.toString, bounds))
-        }
-      } finally rdr.close()
-    }
+    DriverParquet.footerBounds(files, cols)
   }
 
   /** The layout's CLUSTERING DEPTH: the maximum number of files whose

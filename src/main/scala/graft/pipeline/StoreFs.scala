@@ -99,10 +99,12 @@ object StoreFs {
   // generation) where a listStatus walk is ~0.5 ms. Maintenance
   // listings never need block locations; store trees are a handful of
   // directories deep.
-  private def walkFiles(fs: FileSystem, p: Path)
+  // `keep` prunes by name at every level, dirs and files alike
+  private def walkFiles(fs: FileSystem, p: Path,
+      keep: String => Boolean = _ => true)
       : Seq[org.apache.hadoop.fs.FileStatus] =
-    fs.listStatus(p).toSeq.flatMap { st =>
-      if (st.isDirectory) walkFiles(fs, st.getPath) else Seq(st)
+    fs.listStatus(p).toSeq.filter(st => keep(st.getPath.getName)).flatMap { st =>
+      if (st.isDirectory) walkFiles(fs, st.getPath, keep) else Seq(st)
     }
 
   /** Recursively list the file NAMES under `dir` carrying `suffix` —
@@ -121,6 +123,20 @@ object StoreFs {
       : Seq[org.apache.hadoop.fs.FileStatus] = {
     val (fs, p) = fsPath(dir)
     if (!fs.exists(p)) Seq.empty else walkFiles(fs, p)
+  }
+
+  /** The files a file-source read of `dir` admits: the recursive walk
+    * minus every path under a name the file source hides (a `_` or `.`
+    * prefix, save hive `k=v` dirs — the event log's `_staging-*` dirs,
+    * `_SUCCESS` markers, `.crc` sidecars) or marked in flight
+    * (`._COPYING_`) — the rule of Spark's `InMemoryFileIndex`, which
+    * does not export it. Empty when absent. */
+  def listDataFiles(dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val (fs, p) = fsPath(dir)
+    if (!fs.exists(p)) Seq.empty
+    else walkFiles(fs, p, name => !(name.startsWith(".") ||
+      (name.startsWith("_") && !name.contains("=")) ||
+      name.endsWith("._COPYING_")))
   }
 
   /** Set a file's modification time (the event-log generation stamp);

@@ -1,10 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, ForeachWriter, Row}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.util.AccumulatorV2
 
 import graft.model.Checkpoint
+import graft.operators.Relay
+import graft.pipeline.{DriverParquet, StoreFs}
 
 /** One delivered change event (typed dispatcher surface). */
 case class EnvelopeRow(
@@ -14,8 +23,9 @@ case class EnvelopeRow(
 
 /** Consumer callback surface — the engine's `DatabusStreamConsumer`
   * (databus-client-api/.../pub/DatabusStreamConsumer.java; dispatch loop
-  * GenericDispatcher.java:671-980). Callbacks fire per executor partition
-  * in (scn, seq) order; window boundaries are exact because micro-batches
+  * GenericDispatcher.java:671-980). Callbacks fire from one task per
+  * micro-batch, partition after partition, each in (scn, seq) order
+  * ([[Dispatcher]]); window boundaries are exact because micro-batches
   * only contain whole windows (RelayStream layout invariant).
   *
   * Must be Serializable — instances ship to executors.
@@ -54,15 +64,28 @@ case class MultiConsumer(consumers: Seq[DatabusConsumer]) extends DatabusConsume
 }
 
 /** Ordered, windowed delivery of a relay stream into consumer callbacks —
-  * the client dispatcher (K3) re-expressed as `foreachBatch`:
+  * the client dispatcher (K3) re-expressed as `foreachBatch`. Each
+  * micro-batch, on the driver then in one delivery pass:
   *
-  *  - per micro-batch: repartition by physical partition, sort within
-  *    partition by (scn, seq) — the reference's per-timeline total order
-  *    (GenericDispatcher.java:420-459);
-  *  - iterate rows per partition, emitting start/end-window callbacks at
+  *  - C5 regress check, before any delivery: a batch starting below the
+  *    watermark (the highest scn delivered on this checkpoint dir so
+  *    far) fires `onRollback` with its exact min scn. It runs no job when
+  *    there is no watermark yet, or when the Parquet footers of the files
+  *    the batch scans put its min scn at or above the watermark; only
+  *    otherwise the exact `min(scn)` job. The watermark is kept in the
+  *    checkpoint dir ([[Watermark]]), so a later `start` on the same dir
+  *    — the AvailableNow drain-per-append pattern — still sees a regress;
+  *  - delivery in per-physical-partition (scn, seq) order
+  *    (GenericDispatcher.java:420-459) by ONE job of one task, sorted
+  *    with no exchange ([[graft.operators.Relay.deliveryOrdered]]);
+  *  - rows iterate per partition, emitting start/end-window callbacks at
   *    scn boundaries (EOW markers are implicit: scn change = window done,
   *    valid because batches hold whole windows);
-  *  - checkpoint on batch commit; task failure → micro-batch replay ⇒
+  *  - the batch's checkpoint is the highest scn the delivery task
+  *    handed to the consumer, gathered by an accumulator the driver reads
+  *    once the pass returns — exact under any checkpoint or filter
+  *    predicate, with no bounds job; a batch that delivers nothing fires
+  *    no `onCheckpoint`. Task failure → micro-batch replay ⇒
   *    at-least-once with rollback, same contract as the reference
   *    (consumer must be idempotent, as there).
   */
@@ -70,49 +93,113 @@ object Dispatcher {
 
   def start(stream: DataFrame, consumer: DatabusConsumer,
       checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    // driver-side high-watermark for SCN-regress detection (C5)
-    val watermark = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val marks = new Watermark(checkpointDir)
     val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import batch.sparkSession.implicits._
-        // one bounds job per batch (min+max+maxSeq together), shared by
-        // the regress check before delivery and the checkpoint after
-        val bounds = batch.agg(min("scn"), max("scn"), max("seq")).head()
-        if (!bounds.isNullAt(0) && bounds.getLong(0) < watermark.get())
-          consumer.onRollback(Checkpoint.online(bounds.getLong(0)))
-        val delivered = batch
-          .repartition(col("partition_id"))
-          .sortWithinPartitions(col("partition_id"), col("scn"), col("seq"))
-          .as[EnvelopeRow]
-        delivered.foreachPartition { (rows: Iterator[EnvelopeRow]) =>
-          var openScn = Long.MinValue
-          var openPartition = Int.MinValue
-          rows.foreach { e =>
-            if (e.partition_id != openPartition || e.scn != openScn) {
-              if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
-              consumer.onStartWindow(e.scn)
-              openScn = e.scn
-              openPartition = e.partition_id
+        val watermark = marks.before(batchId)
+        regressedStart(batch, watermark)
+          .foreach(scn => consumer.onRollback(Checkpoint.online(scn)))
+        val delivered = new MaxScn
+        batch.sparkSession.sparkContext.register(delivered)
+        Relay.deliveryOrdered(batch).as[EnvelopeRow].foreachPartition {
+          (rows: Iterator[EnvelopeRow]) =>
+            var openScn = Long.MinValue
+            var openPartition = Int.MinValue
+            var top = Long.MinValue
+            rows.foreach { e =>
+              if (e.partition_id != openPartition || e.scn != openScn) {
+                if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
+                consumer.onStartWindow(e.scn)
+                openScn = e.scn
+                openPartition = e.partition_id
+              }
+              if (!consumer.onEvent(e))
+                throw new IllegalStateException(
+                  s"consumer rejected event seq=${e.seq} (rollback)")
+              top = math.max(top, e.scn)
             }
-            if (!consumer.onEvent(e))
-              throw new IllegalStateException(
-                s"consumer rejected event seq=${e.seq} (rollback)")
-          }
-          if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
+            if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
+            delivered.add(top)
         }
-        // driver-side checkpoint callback with the batch high-watermark;
-        // windowOffset = -1 marks the watermark window fully consumed
-        // (the reference's FULLY_CONSUMED_WINDOW_OFFSET, Checkpoint.java:
-        // 167) — 0 would replay the whole window on resume
-        if (!bounds.isNullAt(1)) {
-          watermark.getAndUpdate(w => math.max(w, bounds.getLong(1)))
-          consumer.onCheckpoint(Checkpoint.online(bounds.getLong(1),
+        // driver-side checkpoint callback with the delivered high-
+        // watermark; windowOffset = -1 marks the watermark window fully
+        // consumed (the reference's FULLY_CONSUMED_WINDOW_OFFSET,
+        // Checkpoint.java:167) — 0 would replay the whole window on resume
+        if (!delivered.isZero) {
+          marks.commit(batchId, watermark, math.max(watermark, delivered.value))
+          consumer.onCheckpoint(Checkpoint.online(delivered.value,
             windowOffset = -1L, prevScn = -1L))
         }
         ()
       }
       .option("checkpointLocation", checkpointDir)
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+  }
+
+  /** C5: the batch's exact min scn when it starts below `watermark`
+    * (`Long.MinValue` = none yet). Footers of the files the batch scans
+    * bound its min from below (a filter only raises it), so when they
+    * clear the watermark no row is read; a batch that scans no file (a
+    * non-file source) takes the exact job. */
+  private def regressedStart(batch: DataFrame, watermark: Long): Option[Long] = {
+    val files = scannedFiles(batch)
+    def footersClear = files.nonEmpty &&
+      DriverParquet.footerBounds(files, Seq("scn")).forall(_._2.head._1 >= watermark)
+    if (watermark == Long.MinValue || footersClear) None
+    else Option(batch.agg(min("scn")).head().getAs[java.lang.Long](0))
+      .map(_.longValue).filter(_ < watermark)
+  }
+
+  /** The files a micro-batch scans, from its RDD lineage: a foreachBatch
+    * frame is a LogicalRDD over the batch's planned scan, which
+    * `inputFiles` does not see into. Empty for a non-file source. */
+  private def scannedFiles(batch: DataFrame): Seq[Path] = {
+    def walk(rdd: RDD[_]): Seq[Path] = rdd match {
+      case scan: FileScanRDD => scan.filePartitions.flatMap(_.files.map(_.toPath))
+      case other => other.dependencies.flatMap(d => walk(d.rdd))
+    }
+    batch.queryExecution.logical.collect { case l: LogicalRDD => walk(l.rdd) }
+      .flatten.distinct
+  }
+
+  /** The highest scn a delivery pass handed to the consumer, merged from
+    * its tasks (`Long.MinValue` = nothing delivered). A max, so a
+    * retried task's second report changes nothing. */
+  private final class MaxScn(private var top: Long = Long.MinValue)
+      extends AccumulatorV2[Long, Long] {
+    override def isZero: Boolean = top == Long.MinValue
+    override def copy(): MaxScn = new MaxScn(top)
+    override def reset(): Unit = top = Long.MinValue
+    override def add(v: Long): Unit = top = math.max(top, v)
+    override def merge(other: AccumulatorV2[Long, Long]): Unit = add(other.value)
+    override def value: Long = top
+  }
+
+  /** The C5 watermark of one checkpoint dir, stored in that dir as
+    * `<batchId> <before> <after>` of the last batch that delivered
+    * events, written before the batch commits. A batch replayed after a
+    * failure (same id) checks against `before`, any later batch —
+    * in this `start` or a later one — against `after`. */
+  private final class Watermark(checkpointDir: String) {
+    private val file = s"$checkpointDir/dispatcher-watermark"
+    private var last: Option[(Long, Long, Long)] =
+      StoreFs.readBytesOpt(file).map { b =>
+        val Array(id, before, after) =
+          new String(b, UTF_8).trim.split(' ').map(_.toLong)
+        (id, before, after)
+      }
+
+    def before(batchId: Long): Long = last match {
+      case Some((id, before, _)) if id == batchId => before
+      case Some((_, _, after)) => after
+      case None => Long.MinValue
+    }
+
+    def commit(batchId: Long, before: Long, after: Long): Unit = {
+      StoreFs.writeAtomic(file, s"$batchId $before $after".getBytes(UTF_8))
+      last = Some((batchId, before, after))
+    }
   }
 
   /** dtail (K4): console tail of a stream — formats JSON-ish rows, `-n`

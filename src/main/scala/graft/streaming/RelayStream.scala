@@ -271,12 +271,18 @@ object RelayStream {
   }
 
   /** Min/max SCN available in the log — `/bufferInfo` for the persisted
-    * buffer; also the retention boundary for fall-off detection. */
+    * buffer; also the retention boundary for fall-off detection. Read
+    * from the Parquet footers of the files a read of the log admits
+    * (a staging dir's parts are not admitted yet), with no Spark job:
+    * the answer of `min(scn), max(scn)` over the log, at the cost of
+    * one footer read per file. Throws when the log holds no event. */
   def bufferInfo(spark: SparkSession, dir: String): (Long, Long) = {
-    val r = spark.read.schema(schema).parquet(dir).agg(min("scn"), max("scn")).head()
-    if (r.isNullAt(0))
+    val bounds = graft.pipeline.DriverParquet.footerBounds(
+      graft.pipeline.StoreFs.listDataFiles(dir).map(_.getPath), Seq("scn"))
+      .map(_._2.head)
+    if (bounds.isEmpty)
       throw new IllegalStateException(s"bufferInfo: event log at $dir is empty")
-    (r.getLong(0), r.getLong(1))
+    (bounds.map(_._1).min, bounds.map(_._2).max)
   }
 
   /** Open the streaming read of the event log after a checkpoint, with

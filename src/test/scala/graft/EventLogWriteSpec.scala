@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, functions}
 
 import graft.pipeline.{DriverParquet, StoreFs}
 import graft.streaming.RelayStream
@@ -225,5 +225,36 @@ class EventLogWriteSpec extends SparkSpec {
       assert(StoreFs.isDirectory(dir))
       assert(StoreFs.listFileStatusesRecursive(dir).isEmpty)
     }
+  }
+
+  test("bufferInfo reads the scn bounds from footers, as the aggregate does") {
+    def aggregate(dir: String): (Long, Long) = {
+      val r = spark.read.schema(RelayStream.schema).parquet(dir)
+        .agg(functions.min("scn"), functions.max("scn")).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val flat = s"${tmp("bflat")}/log"
+    RelayStream.writeEventLog(localEnvelope(1500), flat, filesHint = 4)
+    RelayStream.writeEventLog(readBack(localEnvelope(500, seed = 3L)), flat,
+      filesHint = 2)
+    // an empty append leaves a schema-only part, which covers nothing
+    RelayStream.writeEventLog(localEnvelope(100).where("false"), flat)
+    assert(logFiles(flat).exists(_.keys.isEmpty))
+    val timeline = s"${tmp("btl")}/log"
+    RelayStream.writeEventLog(localEnvelope(1500, seed = 5L), timeline,
+      filesHint = 3, partitionByTimeline = true)
+    Seq(flat, timeline).foreach { dir =>
+      // a live append's staging dir is not admitted yet: its scns are
+      // not the log's
+      localEnvelope(50).withColumn("scn", functions.col("scn") + 1000000000L)
+        .write.parquet(s"$dir/_staging-planted")
+      var got = (0L, 0L)
+      assert(jobsOf { got = RelayStream.bufferInfo(spark, dir) } == 0)
+      assert(got == aggregate(dir), dir)
+      assert(got._2 < 1000000000L)
+    }
+    val empty = s"${tmp("bempty")}/log"
+    RelayStream.writeEventLog(localEnvelope(100).where("false"), empty)
+    intercept[IllegalStateException](RelayStream.bufferInfo(spark, empty))
   }
 }
