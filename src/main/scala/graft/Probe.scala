@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -31,7 +32,8 @@ import graft.pipeline.Dedup
   *                       *_stream query; then `GraftEngine.consume` over
   *                       the engine's own relay log of each size (default
   *                       10000, an append, and 300000, a backlog) with
-  *                       each drain's wall, jobs and shuffle bytes
+  *                       each drain's wall, jobs, shuffle bytes and
+  *                       classes compiled
   *   cold [sfDir]        cold-start versus warm cost of the store-backed
   *                       families
   *   contract [dataDir]  the two corpus-dependent contract bounds a new
@@ -191,9 +193,11 @@ object Probe {
   }
 
   /** `GraftEngine.consume` over the engine's own relay log of `events`
-    * synthetic events (one `genDataEvents` append): the drain's wall,
-    * Spark jobs and shuffle bytes, the better of two drains from fresh
-    * checkpoints. */
+    * synthetic events (one `genDataEvents` append): each of two drains
+    * from fresh checkpoints with its wall, Spark jobs, shuffle bytes and
+    * the classes it compiled (Spark's `CodegenMetrics` count, so a
+    * second drain reusing the first one's code reads 0), then the
+    * better of the two. */
   private def engineDrain(spark: SparkSession, root: String,
       events: Long): Unit = {
     val dir = s"$root/engine-$events"
@@ -204,13 +208,21 @@ object Probe {
     val noop = new graft.streaming.DatabusConsumer {
       override def onEvent(e: graft.streaming.EnvelopeRow): Boolean = true
     }
+    def report(what: String, wall: Double, log: JobLog, compiled: Long): Unit =
+      println(f"engine $what events=$events%8d log=$bytes%9d B" +
+        f" wall=$wall%.3f s jobs=${log.jobs.size}" +
+        f" shuffle=${log.shuffleBytes.get} B compiled=$compiled")
     var runs = 0
-    val (wall, log) = Bench.bestOf2 {
+    val (wall, log, compiled) = Bench.bestOf2 {
       runs += 1
-      logJobs(spark)(engine.consume(noop, s"$dir/cp-$runs").awaitTermination())
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (wall, log) = logJobs(spark)(
+        engine.consume(noop, s"$dir/cp-$runs").awaitTermination())
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      report(s"drain $runs", wall, log, compiled)
+      (wall, log, compiled)
     }(_._1)
-    println(f"engine drain events=$events%8d log=$bytes%9d B wall=$wall%.3f s" +
-      f" jobs=${log.jobs.size} shuffle=${log.shuffleBytes.get} B")
+    report("best", wall, log, compiled)
   }
 
   /** (store-dir suffix under WireFixtures' per-SF root, serving query) */

@@ -4,6 +4,8 @@ import scala.concurrent.{blocking, Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.graft.ThreadBridge
+
 /** Driver-chain overlap, done safely (optimization guide §2.6 "overlap
   * independent jobs"): Spark's scheduler happily runs several jobs at
   * once — actions are only sequential because driver code calls them
@@ -42,12 +44,15 @@ private[graft] object Overlap {
   private final case class Fatal(cause: Throwable) extends RuntimeException(cause)
 
   /** Spawn one independent driver chain on the shared pool, marked
-    * blocking (see object doc). Thread-locals such as
-    * `setJobDescription` are per-thread — label inside `body` if needed. */
-  def run[A](body: => A): Future[A] =
+    * blocking (see object doc). The chain's jobs carry the caller's Spark
+    * job properties — its job group, so cancelling the caller's group
+    * (a streaming query's `stop()`) cancels them too. */
+  def run[A](body: => A): Future[A] = {
+    val chain = ThreadBridge.withCallerJobProperties(body)
     Future(blocking(
-      try body catch { case e: Throwable if !NonFatal(e) => throw Fatal(e) }
+      try chain() catch { case e: Throwable if !NonFatal(e) => throw Fatal(e) }
     ))(ExecutionContext.global)
+  }
 
   /** Wait until EVERY future has terminated, then return — or rethrow
     * the FIRST failure in argument order (matching the sequential form's

@@ -212,14 +212,6 @@ object StoreFs {
     }
   }
 
-  /** Atomically REPLACE `path` with `bytes`: write a tmp sibling, then
-    * rename with OVERWRITE through [[org.apache.hadoop.fs.FileContext]]
-    * (the API exposing POSIX rename semantics — plain FileSystem.rename
-    * refuses existing destinations). The single-file commit primitive
-    * the versioned-store pointer flip and the checkpoint store share;
-    * readers see the old bytes or the new, never a torn write.
-    * `tmpSuffix` names the in-flight file (pid-scoped by default) so
-    * crashed flips are identifiable dead bytes. */
   /** Create `path` CREATE-EXCLUSIVE (fails, returns false, when it
     * already exists — never overwrites): the conditional-write
     * primitive object-store pointer protocols need where rename is
@@ -248,6 +240,23 @@ object StoreFs {
     }
   }
 
+  /** Atomically REPLACE `path` with `bytes`: write a tmp sibling, then
+    * rename with OVERWRITE through [[org.apache.hadoop.fs.FileContext]]
+    * (the API exposing POSIX rename semantics — plain FileSystem.rename
+    * refuses existing destinations). The single-file commit primitive
+    * the versioned-store pointer flip and the checkpoint store share;
+    * readers see the old bytes or the new, never a torn write.
+    * `tmpSuffix` names the in-flight file (pid-scoped by default) so
+    * crashed flips are identifiable dead bytes.
+    *
+    * Cost on a local FS without a native Hadoop library: tens of ms per
+    * call, mostly the rename. Measured in a standalone JVM, 15 calls
+    * x 3 rounds of a 20-byte file: `fs.create` 6-20 ms, the
+    * `FileContext` rename 20-39 ms, cached or not. Without the native
+    * library `RawLocalFileSystem.getFileLinkStatus` forks `readlink`
+    * (`FileUtil.readLink`, about 3 ms a call), and the rename asks for
+    * link status more than once; the create's `setPermission` forks
+    * `chmod`. */
   def writeAtomic(path: String, bytes: Array[Byte],
       tmpSuffix: String = s".tmp.${ProcessHandle.current.pid}"): Unit = {
     val (fs, p) = fsPath(path)

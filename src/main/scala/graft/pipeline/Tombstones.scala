@@ -161,21 +161,18 @@ object Tombstones {
     * specs and backfills use) but is a PARAMETER: a continuous
     * compliance feed passes a processing-time trigger — a hardcoded
     * drain would silently stop tombstoning after the initial backlog,
-    * the worst failure mode for a legal-erasure path. */
+    * the worst failure mode for a legal-erasure path. Each micro-batch
+    * runs in the feed's home session ([[graft.streaming.HomeSink]]). */
   def takedownStream(feed: DataFrame, storeDir: String, checkpoint: String,
       opcodeCol: String = "opcode", idCol: String = "id",
       deleteOpcode: String = "DELETE",
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    feed.writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        takedownStreamBatch(b, storeDir, opcodeCol, idCol, deleteOpcode)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    graft.streaming.HomeSink.start(feed, Some(checkpoint), trigger) { (b, _) =>
+      takedownStreamBatch(b, storeDir, opcodeCol, idCol, deleteOpcode)
+      ()
+    }
 
   /** The store's tombstone set, or None when no takedown was ever
     * recorded (the common case — reads stay plain scans). The existence

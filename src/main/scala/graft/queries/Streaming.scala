@@ -52,6 +52,12 @@ object StreamingQueries extends QueryFamily {
       c0 + "," + c1 + " " + s0 + " UNION ALL " + s1
   }
 
+  /** Drain `stream` to its end through `body`, checkpointed at `cp`: the
+    * AvailableNow run each resumed drain of this family makes. */
+  private def drain(stream: DataFrame, cp: String)(
+      body: (DataFrame, Long) => Unit): Unit =
+    graft.streaming.HomeSink.start(stream, Some(cp))(body).awaitTermination()
+
   val defs: Seq[QueryDef] = Seq(
     // ---- K1/K2: /stream from a checkpoint (partial-window resume) ----
     QueryDef("q_stream_checkpoint", (s, dir) =>
@@ -107,23 +113,17 @@ object StreamingQueries extends QueryFamily {
       s2.conf.set("spark.sql.shuffle.partitions", "4")
       import s2.implicits._
       def drainOnce(): Unit = {
-        val q = s2.readStream.schema("key LONG, ts LONG")
+        val feed = s2.readStream.schema("key LONG, ts LONG")
           .parquet(s"$root/in")
           .as[graft.operators.Sessions.SessionEvent]
           .transform(in => Sessions.sessionizeStream(in, gapMs = gapUs,
-            useTimeout = false).toDF())
-          .writeStream
-          .foreachBatch { (b: DataFrame, batchId: Long) =>
-            // batch-addressed sink: a foreachBatch retry (at-least-once)
-            // rewrites its own partial instead of doubling rows
-            b.coalesce(1).write.mode("overwrite")
-              .parquet(s"$root/out/batch=$batchId"); ()
-          }
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          useTimeout = false).toDF())
+        drain(feed, s"$root/cp") { (b, batchId) =>
+          // batch-addressed sink: a foreachBatch retry (at-least-once)
+          // rewrites its own partial instead of doubling rows
+          b.coalesce(1).write.mode("overwrite")
+            .parquet(s"$root/out/batch=$batchId"); ()
+        }
       }
       ev.where(col("ts") <= mid).coalesce(2).write.parquet(s"$root/in")
       drainOnce()
@@ -199,45 +199,40 @@ object StreamingQueries extends QueryFamily {
         .schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", 2)
         .parquet(s"$root/in")
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // THREE jobs per trigger — detach, candidates, append — because
-          // local-mode job latency, not data, dominates a micro-batch:
-          // sign + band THE BATCH ONLY (O(batch); the PipelineOpsSpec
-          // accumulator proves the corpus is never re-signed), broadcast
-          // the increment's banded keys against the stored banded table
-          // (increment ≪ corpus ⇒ the store streams through with no
-          // shuffle), write candidates, append the batch signatures. The
-          // estimate/verify stages run once after the stream drains —
-          // signatures are immutable per id, so that is bit-identical to
-          // estimating per increment. Both overlay writes land in their
-          // own batch=<id> subdir with OVERWRITE semantics: a replayed
-          // trigger recomputes the identical rows (minhash is
-          // deterministic; the candidate set is distinct under the
-          // replay's already-landed sigs) and rewrites its own partial
-          val b = batch.localCheckpoint(true)
-          try {
-            val sigsNew = Dedup.minhashSignatures(b, "text", "doc_id", 3, 64)
-            val bandedNew = Dedup.bandedBucketsFromSignatures(sigsNew)
-            val bandedAll = Dedup.readBandedStore(s, store)
-              .unionByName(Dedup.bandedBucketsFromSignatures(overlaySigs()))
-              .unionByName(bandedNew)
-            Dedup.incrementalCandidatesFromBanded(bandedNew, bandedAll,
-                broadcastNew = true)
-              .coalesce(4).write.mode("overwrite")
-              .parquet(s"$over/cand/batch=$batchId")
-            sigsNew.coalesce(4).write.mode("overwrite")
-              .parquet(s"$over/sigs/batch=$batchId")
-            ()
-            // release the barrier blocks once the trigger's actions are
-            // done — without this every micro-batch's MEMORY_AND_DISK
-            // set lingers until ContextCleaner GC
-          } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
-        }
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(stream, s"$root/cp") { (batch, batchId) =>
+        // THREE jobs per trigger — detach, candidates, append — because
+        // local-mode job latency, not data, dominates a micro-batch:
+        // sign + band THE BATCH ONLY (O(batch); the PipelineOpsSpec
+        // accumulator proves the corpus is never re-signed), broadcast
+        // the increment's banded keys against the stored banded table
+        // (increment ≪ corpus ⇒ the store streams through with no
+        // shuffle), write candidates, append the batch signatures. The
+        // estimate/verify stages run once after the stream drains —
+        // signatures are immutable per id, so that is bit-identical to
+        // estimating per increment. Both overlay writes land in their
+        // own batch=<id> subdir with OVERWRITE semantics: a replayed
+        // trigger recomputes the identical rows (minhash is
+        // deterministic; the candidate set is distinct under the
+        // replay's already-landed sigs) and rewrites its own partial
+        val b = batch.localCheckpoint(true)
+        try {
+          val sigsNew = Dedup.minhashSignatures(b, "text", "doc_id", 3, 64)
+          val bandedNew = Dedup.bandedBucketsFromSignatures(sigsNew)
+          val bandedAll = Dedup.readBandedStore(s, store)
+            .unionByName(Dedup.bandedBucketsFromSignatures(overlaySigs()))
+            .unionByName(bandedNew)
+          Dedup.incrementalCandidatesFromBanded(bandedNew, bandedAll,
+              broadcastNew = true)
+            .coalesce(4).write.mode("overwrite")
+            .parquet(s"$over/cand/batch=$batchId")
+          sigsNew.coalesce(4).write.mode("overwrite")
+            .parquet(s"$over/sigs/batch=$batchId")
+          ()
+          // release the barrier blocks once the trigger's actions are
+          // done — without this every micro-batch's MEMORY_AND_DISK
+          // set lingers until ContextCleaner GC
+        } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
+      }
       // candidates touch overlay ids on one side and store∪overlay on the
       // other; the estimate reads both signature generations
       val sigsAll = Dedup.readSignatureStore(s, store)
@@ -277,32 +272,27 @@ object StreamingQueries extends QueryFamily {
         old.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
       val store = s"$root/store"
       def drainOnce(): Unit = {
-        val q = s.readStream
+        val feed = s.readStream
           .schema("opcode STRING, doc_id LONG, text STRING")
           .parquet(s"$root/feed")
-          .writeStream
-          .foreachBatch { (b0: DataFrame, batchId: Long) =>
-            // one feed read per trigger: the UPSERT write and the DELETE
-            // probe are separate actions over the same micro-batch (the
-            // localCheckpoint idiom of the sigstore/image streams)
-            val b = b0.localCheckpoint(true)
-            try {
-              val ups = b.where(col("opcode") === "UPSERT")
-                .select("doc_id", "text")
-              if (graft.pipeline.VersionedStore.currentGen(store).isEmpty)
-                Dedup.writeSignatureStore(ups, store,
-                  batchId = Some(batchId))
-              else
-                Dedup.appendToSignatureStoreBatch(ups, store, batchId)
-              val dels = b.where(col("opcode") === "DELETE").select("doc_id")
-              if (!dels.isEmpty) Dedup.tombstoneSignaturesDf(dels, store)
-              ()
-            } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drain(feed, s"$root/cp") { (b0, batchId) =>
+          // one feed read per trigger: the UPSERT write and the DELETE
+          // probe are separate actions over the same micro-batch (the
+          // localCheckpoint idiom of the sigstore/image streams)
+          val b = b0.localCheckpoint(true)
+          try {
+            val ups = b.where(col("opcode") === "UPSERT")
+              .select("doc_id", "text")
+            if (graft.pipeline.VersionedStore.currentGen(store).isEmpty)
+              Dedup.writeSignatureStore(ups, store,
+                batchId = Some(batchId))
+            else
+              Dedup.appendToSignatureStoreBatch(ups, store, batchId)
+            val dels = b.where(col("opcode") === "DELETE").select("doc_id")
+            if (!dels.isEmpty) Dedup.tombstoneSignaturesDf(dels, store)
+            ()
+          } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
+        }
       }
       // feed batch 1: upsert the even half of the twin corpus (a twin's
       // id has its base's parity — 1e6 is even — so twin pairs never
@@ -379,18 +369,13 @@ object StreamingQueries extends QueryFamily {
         .coalesce(1).write.parquet(s"$root/in")
       scored.where(col("doc_id") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(s"$root/in")
-      val q = s.readStream.schema("doc_id LONG, lang STRING, q_e4 LONG")
+      val feed = s.readStream.schema("doc_id LONG, lang STRING, q_e4 LONG")
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$root/in")
-        .writeStream
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          graft.pipeline.QuantileStore.appendBatch(b, s"$root/sketch",
-            batchId, "q_e4", "lang", bucketWidth = 50L)
-        }
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(feed, s"$root/cp") { (b, batchId) =>
+        graft.pipeline.QuantileStore.appendBatch(b, s"$root/sketch",
+          batchId, "q_e4", "lang", bucketWidth = 50L)
+      }
       graft.pipeline.QuantileStore.compact(s, s"$root/sketch")
       graft.pipeline.QuantileStore.gateFromStore(scored, s"$root/sketch",
         "q_e4", "lang", qBp = 5000, bucketWidth = 50L)
@@ -423,21 +408,16 @@ object StreamingQueries extends QueryFamily {
       val modelDir = graft.sources.WireFixtures.lmModelDir(s, dir)
       val d = docs(s, dir).select("doc_id", "text")
       def drainOnce(): Unit = {
-        val q = s.readStream.schema("doc_id LONG, text STRING")
+        val feed = s.readStream.schema("doc_id LONG, text STRING")
           .parquet(s"$root/in")
-          .writeStream
-          .foreachBatch { (b: DataFrame, batchId: Long) =>
-            val model = graft.pipeline.LangModel.load(b.sparkSession, modelDir)
-            graft.pipeline.LangModel.scoreNll(model, b)
-              .withColumn("batch_id", lit(batchId))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$root/out/batch=$batchId")
-            ()
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drain(feed, s"$root/cp") { (b, batchId) =>
+          val model = graft.pipeline.LangModel.load(b.sparkSession, modelDir)
+          graft.pipeline.LangModel.scoreNll(model, b)
+            .withColumn("batch_id", lit(batchId))
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$root/out/batch=$batchId")
+          ()
+        }
       }
       d.where(col("doc_id") % 10 === 1).coalesce(1)
         .write.parquet(s"$root/in")
@@ -471,28 +451,23 @@ object StreamingQueries extends QueryFamily {
       val root = tempQueryDir("phrstream").toString
       val d = docs(s, dir).select("doc_id", "text")
       def drainOnce(): Unit = {
-        val q = s.readStream.schema("doc_id LONG, text STRING")
+        val feed = s.readStream.schema("doc_id LONG, text STRING")
           .parquet(s"$root/in")
-          .writeStream
-          .foreachBatch { (b0: DataFrame, batchId: Long) =>
-            // batch-addressed writes: a foreachBatch retry rewrites its
-            // own partial (overwrite) instead of double-appending it.
-            // localCheckpoint: the postings append and the membership
-            // write are separate actions over the same micro-batch
-            val b = b0.localCheckpoint(true)
-            try {
-              graft.pipeline.Retrieval.appendToPostingsIndexBatch(
-                b, s"$root/index", batchId)
-              b.select(col("doc_id")).withColumn("batch_id", lit(batchId))
-                .coalesce(1).write.mode("overwrite")
-                .parquet(s"$root/member/batch=$batchId")
-              ()
-            } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drain(feed, s"$root/cp") { (b0, batchId) =>
+          // batch-addressed writes: a foreachBatch retry rewrites its
+          // own partial (overwrite) instead of double-appending it.
+          // localCheckpoint: the postings append and the membership
+          // write are separate actions over the same micro-batch
+          val b = b0.localCheckpoint(true)
+          try {
+            graft.pipeline.Retrieval.appendToPostingsIndexBatch(
+              b, s"$root/index", batchId)
+            b.select(col("doc_id")).withColumn("batch_id", lit(batchId))
+              .coalesce(1).write.mode("overwrite")
+              .parquet(s"$root/member/batch=$batchId")
+            ()
+          } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
+        }
       }
       d.where(col("doc_id") % 10 === 3).coalesce(1).write.parquet(s"$root/in")
       drainOnce()
@@ -561,17 +536,12 @@ object StreamingQueries extends QueryFamily {
       val model = graft.pipeline.Classifier.train(train, labelCol = "lang")
       train.where(col("doc_id") % 6 === 1)
         .coalesce(1).write.parquet(s"$root/feed")
-      val q = s.readStream.schema("doc_id LONG, lang STRING, text STRING")
+      val feed = s.readStream.schema("doc_id LONG, lang STRING, text STRING")
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$root/feed")
-        .writeStream
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          graft.pipeline.ForgetLog.appendBatch(b, s"$root/forget", batchId)
-        }
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(feed, s"$root/cp") { (b, batchId) =>
+        graft.pipeline.ForgetLog.appendBatch(b, s"$root/forget", batchId)
+      }
       val unlearned = graft.pipeline.ForgetLog.readOpt(s, s"$root/forget")
         .map(log => graft.pipeline.Classifier.unlearn(model, log,
           labelCol = "lang"))
@@ -591,17 +561,12 @@ object StreamingQueries extends QueryFamily {
       val model = graft.pipeline.LangModel.train(train)
       train.where(col("doc_id") % 6 === 1)
         .coalesce(1).write.parquet(s"$root/feed")
-      val q = s.readStream.schema("doc_id LONG, text STRING")
+      val feed = s.readStream.schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$root/feed")
-        .writeStream
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          graft.pipeline.ForgetLog.appendBatch(b, s"$root/forget", batchId)
-        }
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(feed, s"$root/cp") { (b, batchId) =>
+        graft.pipeline.ForgetLog.appendBatch(b, s"$root/forget", batchId)
+      }
       val unlearned = graft.pipeline.ForgetLog.readOpt(s, s"$root/forget")
         .map(graft.pipeline.LangModel.unlearn(model, _))
         .getOrElse(model)
@@ -622,27 +587,22 @@ object StreamingQueries extends QueryFamily {
       val root = tempQueryDir("cdcidx").toString
       val d = docs(s, dir).select("doc_id", "text")
       def drainOnce(): Unit = {
-        val q = s.readStream
+        val feed = s.readStream
           .schema("opcode STRING, doc_id LONG, text STRING")
           .parquet(s"$root/feed")
-          .writeStream
-          .foreachBatch { (b0: DataFrame, batchId: Long) =>
-            // one feed read per trigger (the localCheckpoint idiom)
-            val b = b0.localCheckpoint(true)
-            try {
-              graft.pipeline.Retrieval.appendToPostingsIndexBatch(
-                b.where(col("opcode") === "UPSERT").select("doc_id", "text"),
-                s"$root/index", batchId)
-              val dels = b.where(col("opcode") === "DELETE").select("doc_id")
-              if (!dels.isEmpty)
-                graft.pipeline.Retrieval.tombstoneDocsDf(dels, s"$root/index")
-              ()
-            } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drain(feed, s"$root/cp") { (b0, batchId) =>
+          // one feed read per trigger (the localCheckpoint idiom)
+          val b = b0.localCheckpoint(true)
+          try {
+            graft.pipeline.Retrieval.appendToPostingsIndexBatch(
+              b.where(col("opcode") === "UPSERT").select("doc_id", "text"),
+              s"$root/index", batchId)
+            val dels = b.where(col("opcode") === "DELETE").select("doc_id")
+            if (!dels.isEmpty)
+              graft.pipeline.Retrieval.tombstoneDocsDf(dels, s"$root/index")
+            ()
+          } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
+        }
       }
       // feed batch 1: upsert the even half of the corpus
       d.where(col("doc_id") % 2 === 0)
@@ -677,25 +637,20 @@ object StreamingQueries extends QueryFamily {
       val root = tempQueryDir("jdbccap").toString
       val span = graft.sources.JdbcTxlogCapture.maxScn(db.url,
         db.txlogTable) - 100000L
-      val q = s.readStream.format("graft-jdbc-capture")
+      val feed = s.readStream.format("graft-jdbc-capture")
         .option("url", db.url).option("view", db.viewTable)
         .option("txlog", db.txlogTable)
         .option("startingScn", 100000L)
         .option("maxScnPerBatch", math.max(span / 3 + 1, 1L))
         .load()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // batch-addressed sink: a retried trigger rewrites its partial
-          batch.select(col("txn"), col("scn"), col("l_partkey"),
-              col("l_quantity"))
-            .coalesce(4).write.mode("overwrite")
-            .parquet(s"$root/out/batch=$batchId")
-          ()
-        }
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(feed, s"$root/cp") { (batch, batchId) =>
+        // batch-addressed sink: a retried trigger rewrites its partial
+        batch.select(col("txn"), col("scn"), col("l_partkey"),
+            col("l_quantity"))
+          .coalesce(4).write.mode("overwrite")
+          .parquet(s"$root/out/batch=$batchId")
+        ()
+      }
       s.read.parquet(s"$root/out").drop("batch")
     },
       oracle = jdbcCaptureSql),
@@ -706,17 +661,12 @@ object StreamingQueries extends QueryFamily {
     QueryDef("q_ggtrail_stream", (s, dir) => {
       val trailDir = graft.sources.WireFixtures.goldenGateTrailDir(s, dir)
       val outDir = tempQueryDir("ggstream").toString
-      val q = graft.sources.GoldenGateTrail.stream(s, trailDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // batch-addressed sink: a retried trigger rewrites its partial
-          batch.write.mode("overwrite").parquet(s"$outDir/out/batch=$batchId")
-          ()
-        }
-        .option("checkpointLocation", s"$outDir/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val feed = graft.sources.GoldenGateTrail.stream(s, trailDir)
+      drain(feed, s"$outDir/cp") { (batch, batchId) =>
+        // batch-addressed sink: a retried trigger rewrites its partial
+        batch.write.mode("overwrite").parquet(s"$outDir/out/batch=$batchId")
+        ()
+      }
       graft.sources.GoldenGateTrail.toEnvelope(
           s.read.parquet(s"$outDir/out").drop("batch"), ChangeFeed.registry)
         .groupBy(col("source_id"))
@@ -771,22 +721,17 @@ object StreamingQueries extends QueryFamily {
       // q_sessionize_stream: its mtime-ordered single-run form was
       // observed flaking under heavy box load
       def drainOnce(): Unit = {
-        val q = s.readStream.schema("doc_id LONG, text STRING")
+        val feed = s.readStream.schema("doc_id LONG, text STRING")
           .parquet(s"$root/in")
-          .writeStream
-          .foreachBatch { (b: DataFrame, batchId: Long) =>
-            val refCounts = b.sparkSession.read.parquet(s"$root/refdist")
-            graft.pipeline.Monitor
-              .tokenDriftFromCounts(refCounts, b, buckets = 256)
-              .withColumn("batch_id", lit(batchId))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$root/out/batch=$batchId")
-            ()
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drain(feed, s"$root/cp") { (b, batchId) =>
+          val refCounts = b.sparkSession.read.parquet(s"$root/refdist")
+          graft.pipeline.Monitor
+            .tokenDriftFromCounts(refCounts, b, buckets = 256)
+            .withColumn("batch_id", lit(batchId))
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$root/out/batch=$batchId")
+          ()
+        }
       }
       d.where(col("doc_id") % 10 === 0).coalesce(1)
         .write.parquet(s"$root/in")
@@ -816,36 +761,31 @@ object StreamingQueries extends QueryFamily {
       val root = tempQueryDir("anncdc").toString
       val all = vecs(s, dir)
       def drainOnce(): Unit = {
-        val q = s.readStream
+        val feed = s.readStream
           .schema("opcode STRING, id LONG, vec ARRAY<FLOAT>")
           .parquet(s"$root/feed")
-          .writeStream
-          .foreachBatch { (b0: DataFrame, bid: Long) =>
-            // one feed read per trigger (the localCheckpoint idiom)
-            val b = b0.localCheckpoint(true)
-            try {
-              val ups = b.where(col("opcode") === "UPSERT").select("id", "vec")
-              // the batchId THREADS THROUGH to the store writes: a
-              // replayed micro-batch (foreachBatch is at-least-once)
-              // overwrites its own batch=<id> partition instead of
-              // double-appending cell rows — replay-idempotent appends,
-              // the appendToPostingsIndexBatch discipline on the ANN
-              // store (deletes were already idempotent by tombstone-set
-              // semantics)
-              if (graft.pipeline.VersionedStore.isVersioned(s"$root/index"))
-                Ann.appendToIndexBatch(ups, s"$root/index", bid)
-              else Ann.writeIndex(ups, s"$root/index", k = 8, iters = 3,
-                batchId = Some(bid))
-              val dels = b.where(col("opcode") === "DELETE").select("id")
-              if (!dels.isEmpty)
-                Ann.tombstoneVectorsDf(dels, s"$root/index")
-              ()
-            } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drain(feed, s"$root/cp") { (b0, bid) =>
+          // one feed read per trigger (the localCheckpoint idiom)
+          val b = b0.localCheckpoint(true)
+          try {
+            val ups = b.where(col("opcode") === "UPSERT").select("id", "vec")
+            // the batchId THREADS THROUGH to the store writes: a
+            // replayed micro-batch (foreachBatch is at-least-once)
+            // overwrites its own batch=<id> partition instead of
+            // double-appending cell rows — replay-idempotent appends,
+            // the appendToPostingsIndexBatch discipline on the ANN
+            // store (deletes were already idempotent by tombstone-set
+            // semantics)
+            if (graft.pipeline.VersionedStore.isVersioned(s"$root/index"))
+              Ann.appendToIndexBatch(ups, s"$root/index", bid)
+            else Ann.writeIndex(ups, s"$root/index", k = 8, iters = 3,
+              batchId = Some(bid))
+            val dels = b.where(col("opcode") === "DELETE").select("id")
+            if (!dels.isEmpty)
+              Ann.tombstoneVectorsDf(dels, s"$root/index")
+            ()
+          } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
+        }
       }
       val up = lit("UPSERT")
       all.select(up.as("opcode"), col("id"), col("vec"))
@@ -887,29 +827,24 @@ object StreamingQueries extends QueryFamily {
       val root = tempQueryDir("ivfpqcdc").toString
       val all = vecs(s, dir)
       def drainOnce(): Unit = {
-        val q = s.readStream
+        val feed = s.readStream
           .schema("opcode STRING, id LONG, vec ARRAY<FLOAT>")
           .parquet(s"$root/feed")
-          .writeStream
-          .foreachBatch { (b0: DataFrame, bid: Long) =>
-            // one feed read per trigger (the localCheckpoint idiom)
-            val b = b0.localCheckpoint(true)
-            try {
-              val ups = b.where(col("opcode") === "UPSERT").select("id", "vec")
-              if (graft.pipeline.VersionedStore.isVersioned(s"$root/index"))
-                Ann.appendToIvfPqIndexBatch(ups, s"$root/index", bid)
-              else Ann.writeIvfPqIndex(ups, s"$root/index", k = 8,
-                batchId = Some(bid))
-              val dels = b.where(col("opcode") === "DELETE").select("id")
-              if (!dels.isEmpty)
-                Ann.tombstoneVectorsDf(dels, s"$root/index")
-              ()
-            } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drain(feed, s"$root/cp") { (b0, bid) =>
+          // one feed read per trigger (the localCheckpoint idiom)
+          val b = b0.localCheckpoint(true)
+          try {
+            val ups = b.where(col("opcode") === "UPSERT").select("id", "vec")
+            if (graft.pipeline.VersionedStore.isVersioned(s"$root/index"))
+              Ann.appendToIvfPqIndexBatch(ups, s"$root/index", bid)
+            else Ann.writeIvfPqIndex(ups, s"$root/index", k = 8,
+              batchId = Some(bid))
+            val dels = b.where(col("opcode") === "DELETE").select("id")
+            if (!dels.isEmpty)
+              Ann.tombstoneVectorsDf(dels, s"$root/index")
+            ()
+          } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
+        }
       }
       val up = lit("UPSERT")
       all.select(up.as("opcode"), col("id"), col("vec"))
@@ -966,25 +901,20 @@ object StreamingQueries extends QueryFamily {
         .schema("doc_id LONG, payload BINARY")
         .option("maxFilesPerTrigger", 2)
         .parquet(s"$root/in")
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val b = batch.localCheckpoint(true)
-          try {
-            val sigsNew = Multimodal.imageSignatures(b)
-            Dedup.incrementalHammingPairs(sigsNew,
-                s.read.parquet(store).unionByName(overlaySigs()),
-                maxHamming = 7, chunks = 8)
-              .coalesce(4).write.mode("overwrite")
-              .parquet(s"$over/pairs/batch=$batchId")
-            sigsNew.coalesce(4).write.mode("overwrite")
-              .parquet(s"$over/sigs/batch=$batchId")
-            ()
-          } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
-        }
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(stream, s"$root/cp") { (batch, batchId) =>
+        val b = batch.localCheckpoint(true)
+        try {
+          val sigsNew = Multimodal.imageSignatures(b)
+          Dedup.incrementalHammingPairs(sigsNew,
+              s.read.parquet(store).unionByName(overlaySigs()),
+              maxHamming = 7, chunks = 8)
+            .coalesce(4).write.mode("overwrite")
+            .parquet(s"$over/pairs/batch=$batchId")
+          sigsNew.coalesce(4).write.mode("overwrite")
+            .parquet(s"$over/sigs/batch=$batchId")
+          ()
+        } finally graft.pipeline.PlanCache.freeLocalCheckpoint(b)
+      }
       s.read.parquet(s"$over/pairs").drop("batch").distinct()
         .where(col("id_a") < 1000000L && col("id_b") === col("id_a") + 1000000L)
         .select(col("id_a"), col("id_b"))
@@ -1002,21 +932,16 @@ object StreamingQueries extends QueryFamily {
       val modelDir = graft.sources.WireFixtures.nbModelDir(s, dir)
       val d = docs(s, dir).select("doc_id", "text")
       def drainOnce(): Unit = {
-        val q = s.readStream.schema("doc_id LONG, text STRING")
+        val feed = s.readStream.schema("doc_id LONG, text STRING")
           .parquet(s"$root/in")
-          .writeStream
-          .foreachBatch { (b: DataFrame, batchId: Long) =>
-            val model = graft.pipeline.Classifier.load(b.sparkSession, modelDir)
-            graft.pipeline.Classifier.classify(model, b)
-              .withColumn("batch_id", lit(batchId))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$root/out/batch=$batchId")
-            ()
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drain(feed, s"$root/cp") { (b, batchId) =>
+          val model = graft.pipeline.Classifier.load(b.sparkSession, modelDir)
+          graft.pipeline.Classifier.classify(model, b)
+            .withColumn("batch_id", lit(batchId))
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$root/out/batch=$batchId")
+          ()
+        }
       }
       d.where(col("doc_id") % 10 === 2).coalesce(1)
         .write.parquet(s"$root/in")
@@ -1051,22 +976,17 @@ object StreamingQueries extends QueryFamily {
       val evalDir = graft.sources.WireFixtures.evalEmbStoreDir(s, dir)
       val e = vecs(s, dir)
       def drainOnce(): Unit = {
-        val q = s.readStream.schema("id LONG, vec ARRAY<FLOAT>")
+        val feed = s.readStream.schema("id LONG, vec ARRAY<FLOAT>")
           .parquet(s"$root/in")
-          .writeStream
-          .foreachBatch { (b: DataFrame, batchId: Long) =>
-            graft.pipeline.Semantic.semanticDecontaminate(b,
-                b.sparkSession.read.parquet(evalDir), cosineThreshold = 0.99)
-              .select(col("id"))
-              .withColumn("batch_id", lit(batchId))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$root/out/batch=$batchId")
-            ()
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drain(feed, s"$root/cp") { (b, batchId) =>
+          graft.pipeline.Semantic.semanticDecontaminate(b,
+              b.sparkSession.read.parquet(evalDir), cosineThreshold = 0.99)
+            .select(col("id"))
+            .withColumn("batch_id", lit(batchId))
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$root/out/batch=$batchId")
+          ()
+        }
       }
       e.where(col("id") % 10 === 3).coalesce(1).write.parquet(s"$root/in")
       drainOnce()
@@ -1091,27 +1011,22 @@ object StreamingQueries extends QueryFamily {
       val storeDir = graft.sources.WireFixtures.evalGramStoreDir(s, dir)
       val d = docs(s, dir).select("doc_id", "text")
       def drainOnce(): Unit = {
-        val q = s.readStream.schema("doc_id LONG, text STRING")
+        val feed = s.readStream.schema("doc_id LONG, text STRING")
           .parquet(s"$root/in")
-          .writeStream
-          .foreachBatch { (b: DataFrame, batchId: Long) =>
-            // explicit exact mode: a df cap over ONE micro-batch would
-            // measure within-batch frequency, not the corpus-global
-            // boilerplate df the cap is defined on — a streaming
-            // deployment caps against a maintained global df store or
-            // not at all, and batch-bounded fan-out is already small
-            graft.pipeline.Dedup.contaminationReportFromGrams(b,
-                b.sparkSession.read.parquet(storeDir),
-                maxGramDf = Int.MaxValue)
-              .withColumn("batch_id", lit(batchId))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$root/out/batch=$batchId")
-            ()
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drain(feed, s"$root/cp") { (b, batchId) =>
+          // explicit exact mode: a df cap over ONE micro-batch would
+          // measure within-batch frequency, not the corpus-global
+          // boilerplate df the cap is defined on — a streaming
+          // deployment caps against a maintained global df store or
+          // not at all, and batch-bounded fan-out is already small
+          graft.pipeline.Dedup.contaminationReportFromGrams(b,
+              b.sparkSession.read.parquet(storeDir),
+              maxGramDf = Int.MaxValue)
+            .withColumn("batch_id", lit(batchId))
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$root/out/batch=$batchId")
+          ()
+        }
       }
       d.where(col("doc_id") % 10 === 3).coalesce(1).write.parquet(s"$root/in")
       drainOnce()
@@ -1154,22 +1069,17 @@ object StreamingQueries extends QueryFamily {
       val storeDir = graft.sources.WireFixtures.evalGramStoreDir(s, dir)
       val d = docs(s, dir).select("doc_id", "text")
       def drainOnce(): Unit = {
-        val q = s.readStream.schema("doc_id LONG, text STRING")
+        val feed = s.readStream.schema("doc_id LONG, text STRING")
           .parquet(s"$root/in")
-          .writeStream
-          .foreachBatch { (b: DataFrame, batchId: Long) =>
-            graft.pipeline.Dedup.contaminationAuditStreamBatch(b,
-                b.sparkSession.read.parquet(storeDir),
-                s"$root/dfstore", maxGramDf = 2, batchId = batchId)
-              .withColumn("batch_id", lit(batchId))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$root/out/batch=$batchId")
-            ()
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drain(feed, s"$root/cp") { (b, batchId) =>
+          graft.pipeline.Dedup.contaminationAuditStreamBatch(b,
+              b.sparkSession.read.parquet(storeDir),
+              s"$root/dfstore", maxGramDf = 2, batchId = batchId)
+            .withColumn("batch_id", lit(batchId))
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$root/out/batch=$batchId")
+          ()
+        }
       }
       d.where(col("doc_id") % 10 === 3).coalesce(1).write.parquet(s"$root/in")
       drainOnce()

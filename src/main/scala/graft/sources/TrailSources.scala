@@ -271,22 +271,20 @@ object BinlogFeed {
     * rotated on txn boundaries (the reference rotates binlogs the same
     * way; WireFixtures aligns its dump for the same reason). A row whose
     * COMMIT is missing from its batch falls back to the begin position
-    * (the reference's unresolved-poll contract). */
+    * (the reference's unresolved-poll contract). Each micro-batch runs
+    * in the stream's home session ([[graft.streaming.HomeSink]]). */
   def startAssembled(spark: SparkSession, path: String,
       registry: graft.model.SourceRegistry, outDir: String,
       checkpointDir: String, maxFilesPerTrigger: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream(spark, path, maxFilesPerTrigger).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batch-addressed sink (the appendToPostingsIndexBatch idiom):
-        // a retried trigger (at-least-once) rewrites its own batch=<id>
-        // partial instead of double-appending assembled envelopes; the
-        // discovered batch column is layout, readers drop it
-        toEnvelope(batch, registry)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    graft.streaming.HomeSink.start(stream(spark, path, maxFilesPerTrigger),
+        Some(checkpointDir)) { (batch, batchId) =>
+      // batch-addressed sink (the appendToPostingsIndexBatch idiom):
+      // a retried trigger (at-least-once) rewrites its own batch=<id>
+      // partial instead of double-appending assembled envelopes; the
+      // discovered batch column is layout, readers drop it
+      toEnvelope(batch, registry)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      ()
+    }
 }

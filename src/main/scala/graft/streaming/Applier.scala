@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{MetadataBuilder, StructType}
 
 import graft.operators.Bootstrap
@@ -110,14 +110,12 @@ object Applier {
     }
   }
 
-  /** Start the continuous materializer on a relay stream. */
+  /** Start the continuous materializer on a relay stream. Each apply
+    * runs in the stream's home session ([[HomeSink]]), so an apply
+    * started after another reuses its generated code. */
   def start(stream: DataFrame, stateDir: String, checkpointDir: String,
       keyCols: Seq[String] = Seq("key_long")): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch.sparkSession, batch, stateDir, keyCols)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    HomeSink.start(stream, Some(checkpointDir)) { (batch, _) =>
+      applyBatch(batch.sparkSession, batch, stateDir, keyCols)
+    }
 }

@@ -46,7 +46,9 @@ trait DatabusConsumer extends Serializable {
   /** C5 — SCN regress: fired (driver-side) when a batch starts below the
     * last committed watermark — the relay-failover "reset decoder state"
     * signal (SCNRegressMessage.java:31; DbusEventBuffer.reset(prevScn)).
-    * Also the rollback notification on replayed batches (at-least-once). */
+    * Only then: a micro-batch replayed after a failure (at-least-once)
+    * redelivers its events with no callback first, so the consumer must
+    * be idempotent. */
   def onRollback(cp: Checkpoint): Unit = {}
 }
 
@@ -86,55 +88,57 @@ case class MultiConsumer(consumers: Seq[DatabusConsumer]) extends DatabusConsume
   *    once the pass returns — exact under any checkpoint or filter
   *    predicate, with no bounds job; a batch that delivers nothing fires
   *    no `onCheckpoint`. Task failure → micro-batch replay ⇒
-  *    at-least-once with rollback, same contract as the reference
-  *    (consumer must be idempotent, as there).
+  *    at-least-once: the replay redelivers the batch with no
+  *    `onRollback` (that fires only for a C5 regress), so the consumer
+  *    must be idempotent, as in the reference;
+  *  - the batch body runs in the stream's home session ([[HomeSink]]),
+  *    so a drain started after another reuses its generated code
+  *    instead of recompiling it inside the delivery task.
   */
 object Dispatcher {
 
   def start(stream: DataFrame, consumer: DatabusConsumer,
       checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
     val marks = new Watermark(checkpointDir)
-    val writer = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import batch.sparkSession.implicits._
-        val watermark = marks.before(batchId)
-        regressedStart(batch, watermark)
-          .foreach(scn => consumer.onRollback(Checkpoint.online(scn)))
-        val delivered = new MaxScn
-        batch.sparkSession.sparkContext.register(delivered)
-        Relay.deliveryOrdered(batch).as[EnvelopeRow].foreachPartition {
-          (rows: Iterator[EnvelopeRow]) =>
-            var openScn = Long.MinValue
-            var openPartition = Int.MinValue
-            var top = Long.MinValue
-            rows.foreach { e =>
-              if (e.partition_id != openPartition || e.scn != openScn) {
-                if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
-                consumer.onStartWindow(e.scn)
-                openScn = e.scn
-                openPartition = e.partition_id
-              }
-              if (!consumer.onEvent(e))
-                throw new IllegalStateException(
-                  s"consumer rejected event seq=${e.seq} (rollback)")
-              top = math.max(top, e.scn)
+    val trigger =
+      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0)
+    HomeSink.start(stream, Some(checkpointDir), trigger) { (batch, batchId) =>
+      import batch.sparkSession.implicits._
+      val watermark = marks.before(batchId)
+      regressedStart(batch, watermark)
+        .foreach(scn => consumer.onRollback(Checkpoint.online(scn)))
+      val delivered = new MaxScn
+      batch.sparkSession.sparkContext.register(delivered)
+      Relay.deliveryOrdered(batch).as[EnvelopeRow].foreachPartition {
+        (rows: Iterator[EnvelopeRow]) =>
+          var openScn = Long.MinValue
+          var openPartition = Int.MinValue
+          var top = Long.MinValue
+          rows.foreach { e =>
+            if (e.partition_id != openPartition || e.scn != openScn) {
+              if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
+              consumer.onStartWindow(e.scn)
+              openScn = e.scn
+              openPartition = e.partition_id
             }
-            if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
-            delivered.add(top)
-        }
-        // driver-side checkpoint callback with the delivered high-
-        // watermark; windowOffset = -1 marks the watermark window fully
-        // consumed (the reference's FULLY_CONSUMED_WINDOW_OFFSET,
-        // Checkpoint.java:167) — 0 would replay the whole window on resume
-        if (!delivered.isZero) {
-          marks.commit(batchId, watermark, math.max(watermark, delivered.value))
-          consumer.onCheckpoint(Checkpoint.online(delivered.value,
-            windowOffset = -1L, prevScn = -1L))
-        }
-        ()
+            if (!consumer.onEvent(e))
+              throw new IllegalStateException(
+                s"consumer rejected event seq=${e.seq} (rollback)")
+            top = math.max(top, e.scn)
+          }
+          if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
+          delivered.add(top)
       }
-      .option("checkpointLocation", checkpointDir)
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+      // driver-side checkpoint callback with the delivered high-
+      // watermark; windowOffset = -1 marks the watermark window fully
+      // consumed (the reference's FULLY_CONSUMED_WINDOW_OFFSET,
+      // Checkpoint.java:167) — 0 would replay the whole window on resume
+      if (!delivered.isZero) {
+        marks.commit(batchId, watermark, math.max(watermark, delivered.value))
+        consumer.onCheckpoint(Checkpoint.online(delivered.value,
+          windowOffset = -1L, prevScn = -1L))
+      }
+    }
   }
 
   /** C5: the batch's exact min scn when it starts below `watermark`

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.model.{Checkpoint, VersionedSchemaSet}
 import graft.sources.ChangeFeed
@@ -82,28 +82,26 @@ object Dtail {
 
   /** Tail `logDir` from a BOB/EOB/SCN start, rendering up to `maxEvents`
     * lines of `fmt` through `out`. Returns the (started) query; callers
-    * awaitTermination(durationMs) for the duration limit. */
+    * awaitTermination(durationMs) for the duration limit. Batches render
+    * in the stream's home session ([[HomeSink]]). */
   def tail(spark: SparkSession, logDir: String, scnSpec: String = "BOB",
       fmt: String = "JSON", maxEvents: Long = Long.MaxValue,
       maxFilesPerTrigger: Int = 100, out: String => Unit = println)
       : StreamingQuery = {
     val cp = startCheckpoint(spark, logDir, parseScnSpec(scnSpec))
     val remaining = new AtomicLong(maxEvents)
-    RelayStream.read(spark, logDir, cp, maxFilesPerTrigger = Some(maxFilesPerTrigger))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val want = remaining.get()
-        if (want > 0L) {
-          val lines = format(
-            batch.orderBy(col("scn"), col("seq")), fmt)
-            .limit(if (want > Int.MaxValue) Int.MaxValue else want.toInt)
-            .collect()
-          lines.foreach(r => out(r.getString(0)))
-          remaining.addAndGet(-lines.length)
-          ()
-        }
+    HomeSink.start(RelayStream.read(spark, logDir, cp,
+        maxFilesPerTrigger = Some(maxFilesPerTrigger)), None) { (batch, _) =>
+      val want = remaining.get()
+      if (want > 0L) {
+        val lines = format(
+          batch.orderBy(col("scn"), col("seq")), fmt)
+          .limit(if (want > Int.MaxValue) Int.MaxValue else want.toInt)
+          .collect()
+        lines.foreach(r => out(r.getString(0)))
+        remaining.addAndGet(-lines.length)
+        ()
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 }
