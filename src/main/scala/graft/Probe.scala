@@ -33,7 +33,9 @@ import graft.pipeline.Dedup
   *                       the engine's own relay log of each size (default
   *                       10000, an append, and 300000, a backlog) with
   *                       each drain's wall, jobs, shuffle bytes and
-  *                       classes compiled
+  *                       classes compiled; then `Applier.start` once per
+  *                       append until one fold has run, with each
+  *                       apply's wall and jobs, and the fold's apart
   *   cold [sfDir]        cold-start versus warm cost of the store-backed
   *                       families
   *   contract [dataDir]  the two corpus-dependent contract bounds a new
@@ -96,9 +98,13 @@ object Probe {
   private final class JobLog extends SparkListener {
     val jobs = mutable.ArrayBuffer[(Int, Long, Long, String)]()
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    /** Each job's job group ("null" without one). */
+    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     private val starts = mutable.Map[Int, (Long, String)]()
     override def onJobStart(js: SparkListenerJobStart): Unit =
       starts.synchronized {
+        groups.put(js.jobId, String.valueOf(Option(js.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
         starts(js.jobId) = (js.time,
           Option(js.properties)
             .flatMap(p => Option(p.getProperty("callSite.short")))
@@ -223,6 +229,38 @@ object Probe {
       (wall, log, compiled)
     }(_._1)
     report("best", wall, log, compiled)
+    applierDrain(spark, dir, engine, events)
+  }
+
+  /** The Applier over the same log, one `Applier.start` per append: it
+    * drains the log as it stands, then [[Applier.CompactEvery]] more
+    * appends of `events` events, so one apply fills the log and the next
+    * lands in the folded generation. Each apply prints its wall and its
+    * own jobs; the fold an apply started prints apart, with its wall
+    * after the apply returned and the jobs of its own job group. */
+  private def applierDrain(spark: SparkSession, dir: String,
+      engine: GraftEngine, events: Long): Unit = {
+    import graft.streaming.Applier
+    val state = s"$dir/state"
+    val fold = s"applier-fold $state"
+    (0 to Applier.CompactEvery).foreach { k =>
+      if (k > 0) engine.genDataEvents(events)
+      val log = new JobLog
+      spark.sparkContext.addSparkListener(log)
+      val t0 = System.nanoTime()
+      Applier.start(engine.streamLive(), state, s"$dir/cp-apply")
+        .awaitTermination()
+      val t1 = System.nanoTime()
+      Applier.awaitFold(state)
+      val t2 = System.nanoTime()
+      Thread.sleep(200) // let the listener bus drain
+      spark.sparkContext.removeSparkListener(log)
+      val folds = log.jobs.count(j => log.groups.get(j._1) == fold)
+      println(f"engine apply $k events=$events%8d wall=${(t1 - t0) / 1e9}%.3f s" +
+        f" jobs=${log.jobs.size - folds}")
+      if (folds > 0)
+        println(f"engine fold  $k wall=${(t2 - t1) / 1e9}%.3f s jobs=$folds")
+    }
   }
 
   /** (store-dir suffix under WireFixtures' per-SF root, serving query) */

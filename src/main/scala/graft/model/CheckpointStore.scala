@@ -21,9 +21,9 @@ import graft.pipeline.StoreFs
   * the consumer silently restarts from scratch (at-least-once still
   * holds, but the checkpoint contract is silently lost), the same
   * silent-local-probe hazard class the store maintenance paths closed.
-  * The write is [[StoreFs.writeAtomic]] (write-tmp + FileContext rename
-  * with OVERWRITE) — a reader sees the old checkpoint or the new, never
-  * a torn one, on every scheme that renames atomically.
+  * The write is [[StoreFs.writeAtomic]] (write-tmp + rename over the
+  * old file) — a reader sees the old checkpoint or the new, never a torn
+  * one, on every scheme that renames atomically (`file:` and HDFS).
   */
 trait CheckpointStore {
   def store(consumerId: String, cp: CheckpointMult): Unit

@@ -38,8 +38,9 @@ import org.apache.spark.sql.types.StructType
   * library is loaded; a write's fixed cost grows with its file count,
   * not its row count.
   *
-  * The driver also reads footers here ([[footerBounds]]): per-file
-  * column bounds for decisions that must not scan rows. */
+  * The driver also reads footers here ([[footerBounds]],
+  * [[footerRowCount]], [[footerSchema]]): column bounds, row counts and
+  * the stored schema, for decisions that must not run a job. */
 private[graft] object DriverParquet {
 
   /** The frame's driver-local rows, when the whole plan is one
@@ -140,6 +141,39 @@ private[graft] object DriverParquet {
     writes.map(Overlap.value)
   }
 
+  /** `path`'s parquet footer, read on the driver with the options of
+    * its FileSystem's own conf: the reader's default options build a
+    * fresh Hadoop Configuration per open, which costs ~17 ms a file on a
+    * 4-vCPU host against ~1 ms for the footer read. */
+  private def footer(path: org.apache.hadoop.fs.Path)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val conf = StoreFs.fsPath(path.toString)._1.getConf
+    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
+    try rdr.getFooter finally rdr.close()
+  }
+
+  /** The rows `files` hold, summed from their footers' row-group counts:
+    * no row is scanned and no Spark job runs. */
+  def footerRowCount(files: Seq[org.apache.hadoop.fs.Path]): Long = {
+    import scala.jdk.CollectionConverters._
+    files.map(f => footer(f).getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
+
+  /** The Spark schema a Spark writer recorded in `file`'s footer (its
+    * row metadata, field metadata included), with no Spark job: the
+    * schema-inference read runs one job per call. Loud when the file
+    * carries none (a file no Spark writer wrote). */
+  def footerSchema(file: org.apache.hadoop.fs.Path): StructType =
+    Option(footer(file).getFileMetaData.getKeyValueMetaData
+        .get(org.apache.spark.sql.execution.datasources.parquet
+          .ParquetReadSupport.SPARK_METADATA_KEY))
+      .map(org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[StructType])
+      .getOrElse(throw new IllegalArgumentException(
+        s"footerSchema: $file records no Spark schema"))
+
   /** Per-file (min, max) of the integral columns `cols`, read from the
     * PARQUET FOOTERS of `files` on the driver: no row is scanned and no
     * Spark job runs, so the cost is one footer read per file. Keyed by
@@ -160,32 +194,23 @@ private[graft] object DriverParquet {
     }
     files.flatMap { path =>
       val file = path.toString
-      val conf = StoreFs.fsPath(file)._1.getConf
-      // read options from the FileSystem's own conf: the reader's default
-      // options build a fresh Hadoop Configuration per open, which costs
-      // ~17 ms a file on a 4-vCPU host against ~1 ms for the footer read
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
-        org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
-      try {
-        val blocks = rdr.getFooter.getBlocks.asScala.toSeq
-          .filter(_.getRowCount > 0)
-        if (blocks.isEmpty) None
-        else {
-          val chunks = blocks.flatMap(_.getColumns.asScala)
-            .groupBy(_.getPath.toDotString)
-          val bounds = cols.map { c =>
-            val cc = chunks.getOrElse(c, Seq.empty)
-              .filter(m => m.getStatistics != null &&
-                m.getStatistics.hasNonNullValue)
-            require(cc.nonEmpty,
-              s"footerBounds: no footer stats for column $c in $file")
-            (cc.map(m => asLong(m.getStatistics.genericGetMin, file, c)).min,
-              cc.map(m => asLong(m.getStatistics.genericGetMax, file, c)).max)
-          }
-          Some((file, bounds))
+      val blocks = footer(path).getBlocks.asScala.toSeq
+        .filter(_.getRowCount > 0)
+      if (blocks.isEmpty) None
+      else {
+        val chunks = blocks.flatMap(_.getColumns.asScala)
+          .groupBy(_.getPath.toDotString)
+        val bounds = cols.map { c =>
+          val cc = chunks.getOrElse(c, Seq.empty)
+            .filter(m => m.getStatistics != null &&
+              m.getStatistics.hasNonNullValue)
+          require(cc.nonEmpty,
+            s"footerBounds: no footer stats for column $c in $file")
+          (cc.map(m => asLong(m.getStatistics.genericGetMin, file, c)).min,
+            cc.map(m => asLong(m.getStatistics.genericGetMax, file, c)).max)
         }
-      } finally rdr.close()
+        Some((file, bounds))
+      }
     }
   }
 }

@@ -47,12 +47,19 @@ private[graft] object Overlap {
     * blocking (see object doc). The chain's jobs carry the caller's Spark
     * job properties — its job group, so cancelling the caller's group
     * (a streaming query's `stop()`) cancels them too. */
-  def run[A](body: => A): Future[A] = {
-    val chain = ThreadBridge.withCallerJobProperties(body)
+  def run[A](body: => A): Future[A] =
+    spawn(ThreadBridge.withCallerJobProperties(body))
+
+  /** [[run]], but the chain's jobs carry job group `group` and none of
+    * the caller's properties: a background chain that outlives its
+    * caller, which cancelling the caller's group must not stop. */
+  def runInGroup[A](group: String)(body: => A): Future[A] =
+    spawn(ThreadBridge.withOwnJobGroup(group)(body))
+
+  private def spawn[A](chain: () => A): Future[A] =
     Future(blocking(
       try chain() catch { case e: Throwable if !NonFatal(e) => throw Fatal(e) }
     ))(ExecutionContext.global)
-  }
 
   /** Wait until EVERY future has terminated, then return — or rethrow
     * the FIRST failure in argument order (matching the sequential form's

@@ -241,31 +241,50 @@ object StoreFs {
   }
 
   /** Atomically REPLACE `path` with `bytes`: write a tmp sibling, then
-    * rename with OVERWRITE through [[org.apache.hadoop.fs.FileContext]]
-    * (the API exposing POSIX rename semantics — plain FileSystem.rename
-    * refuses existing destinations). The single-file commit primitive
-    * the versioned-store pointer flip and the checkpoint store share;
-    * readers see the old bytes or the new, never a torn write.
-    * `tmpSuffix` names the in-flight file (pid-scoped by default) so
-    * crashed flips are identifiable dead bytes.
+    * rename it over `path`. The single-file commit primitive every
+    * pointer flip, reservation, pin, checkpoint and watermark write
+    * shares. `tmpSuffix` names the in-flight file (pid-scoped by
+    * default), so a crashed write leaves identifiable dead bytes.
     *
-    * Cost on a local FS without a native Hadoop library: tens of ms per
-    * call, mostly the rename. Measured in a standalone JVM, 15 calls
-    * x 3 rounds of a 20-byte file: `fs.create` 6-20 ms, the
-    * `FileContext` rename 20-39 ms, cached or not. Without the native
-    * library `RawLocalFileSystem.getFileLinkStatus` forks `readlink`
-    * (`FileUtil.readLink`, about 3 ms a call), and the rename asks for
-    * link status more than once; the create's `setPermission` forks
-    * `chmod`. */
+    * What a concurrent reader sees, by scheme:
+    *   - `file`: the old bytes or the new, never a missing file and
+    *     never a checksum error. The tmp is written with no `.crc`
+    *     sidecar, the destination's stale sidecar is deleted, and
+    *     `Files.move(ATOMIC_MOVE, REPLACE_EXISTING)` replaces the file in
+    *     one `rename(2)`. Hadoop's checksummed local FS opens the data
+    *     before its sidecar, so a reader that still finds the old
+    *     sidecar holds the old data. (Hadoop's own overwrite rename on
+    *     `file:` deletes the destination and then renames, and moves the
+    *     sidecar in a second step: a reader could find no file, or old
+    *     checksums over new bytes.) No process is forked: a call takes
+    *     0.3-0.7 ms (median of 50 calls of a small file, 4-vCPU host),
+    *     against 28-43 ms for the Hadoop path below, whose create forks
+    *     `chmod` and whose rename forks `readlink` without a native
+    *     Hadoop library.
+    *   - any other scheme: the tmp is written through the `FileSystem`
+    *     and renamed with OVERWRITE through
+    *     [[org.apache.hadoop.fs.FileContext]], as atomic as that scheme's
+    *     rename: HDFS replaces in one namenode step; an object store's
+    *     copy-and-delete is not atomic, which is why its stores flip with
+    *     the CREATE-EXCLUSIVE protocol ([[VersionedStore]]) instead. */
   def writeAtomic(path: String, bytes: Array[Byte],
       tmpSuffix: String = s".tmp.${ProcessHandle.current.pid}"): Unit = {
     val (fs, p) = fsPath(path)
     val dst = fs.makeQualified(p)
     val tmp = fs.makeQualified(new Path(path + tmpSuffix))
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      tmp.toUri, fs.getConf)
-    fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    if (dst.toUri.getScheme == "file") {
+      import java.nio.file.{Files, Paths, StandardCopyOption}
+      val to = Paths.get(dst.toUri)
+      Files.createDirectories(to.getParent)
+      val from = Files.write(Paths.get(tmp.toUri), bytes)
+      Files.deleteIfExists(to.resolveSibling(s".${to.getFileName}.crc"))
+      Files.move(from, to, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } else {
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      org.apache.hadoop.fs.FileContext.getFileContext(tmp.toUri, fs.getConf)
+        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
   }
 }

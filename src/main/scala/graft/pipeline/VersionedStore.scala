@@ -23,10 +23,10 @@ import org.apache.spark.sql.types.StructType
   *   - readers resolve through the `_CURRENT` pointer file, whose
   *     content is the generation id — one small read per store open;
   *   - publish = write all tables into a fresh `gen-<id>/`, drop the
-  *     marker, then flip `_CURRENT` via write-tmp + RENAME with
-  *     OVERWRITE ([[org.apache.hadoop.fs.FileContext]] — atomic on
-  *     POSIX and HDFS, the single-file rename every commit-protocol
-  *     ultimately bottoms out in). A crash ANYWHERE before the flip
+  *     marker, then flip `_CURRENT` via write-tmp + RENAME over the old
+  *     pointer ([[StoreFs.writeAtomic]] — atomic on `file:` and HDFS,
+  *     the single-file rename every commit-protocol ultimately bottoms
+  *     out in). A crash ANYWHERE before the flip
   *     leaves `_CURRENT` on the old generation: readers never see a
   *     torn store, and the partial/unreferenced generation is an
   *     [[StoreFsck.versionedStore]] finding plus [[gc]] fodder — dead
@@ -304,7 +304,15 @@ object VersionedStore {
     * table's `batch=<id>` append history (the as-of pin) through the
     * fresh generation. */
   def publish(root: String, tables: Map[String, DataFrame],
-      partitionBy: Map[String, Seq[String]] = Map.empty): Long = {
+      partitionBy: Map[String, Seq[String]] = Map.empty): Long =
+    publishIf(root, tables, partitionBy)(_ => true).get
+
+  /** [[publish]], committed only when `keep` accepts the written
+    * generation dir; otherwise the reservation is retired whole and
+    * None is returned (nothing published). */
+  private[graft] def publishIf(root: String, tables: Map[String, DataFrame],
+      partitionBy: Map[String, Seq[String]] = Map.empty)(
+      keep: String => Boolean): Option[Long] = {
     require(tables.nonEmpty, "VersionedStore.publish: no tables")
     require(partitionBy.keySet.subsetOf(tables.keySet),
       s"VersionedStore.publish: partitionBy names unknown tables" +
@@ -353,7 +361,14 @@ object VersionedStore {
       }
     }
     Overlap.settle(writes: _*)
-    commit(root, gen, token)
+    if (keep(dir)) Some(commit(root, gen, token))
+    else {
+      maintenance(root) {
+        StoreFs.deleteRecursive(s"$dir/$Reserved")
+        StoreFs.deleteRecursive(dir)
+      }
+      None
+    }
   }
 
   /** Claim the next generation id under the maintenance lock and mark
@@ -503,22 +518,31 @@ object VersionedStore {
     * destination (a replayed batch replaces its own partial); `append`
     * into an existing table moves the staged files in one by one. A crash
     * mid-append leaves the staging dir as dead bytes inside the
-    * generation, retired with it by the next publish + [[gc]]. */
+    * generation, retired with it by the next publish + [[gc]].
+    *
+    * `landIf` sees the dir the tables were written under (the staging
+    * dir, or the born generation's dir) before anything becomes
+    * visible; when it refuses, nothing lands and the append returns
+    * false. */
   private[graft] def append(root: String,
-      tables: Seq[(String, () => DataFrame)], mode: String)(
-      check: String => Unit = _ => ()): Unit =
+      tables: Seq[(String, () => DataFrame)], mode: String,
+      landIf: String => Boolean = _ => true)(
+      check: String => Unit = _ => ()): Boolean =
     publishedRoot(root) match {
       case None =>
-        publish(root, tables.map { case (n, df) => n -> df() }.toMap)
-        ()
+        publishIf(root, tables.map { case (n, df) => n -> df() }.toMap)(
+          landIf).isDefined
       case Some(t) =>
         check(t)
         val stage = s"$t/_staging-${java.util.UUID.randomUUID}"
         Overlap.settle(tables.map { case (n, df) =>
           Overlap.run(df().write.parquet(s"$stage/$n"))
         }: _*)
-        tables.foreach { case (n, _) => land(s"$stage/$n", s"$t/$n", mode) }
+        val landed = landIf(stage)
+        if (landed)
+          tables.foreach { case (n, _) => land(s"$stage/$n", s"$t/$n", mode) }
         StoreFs.deleteRecursive(stage)
+        landed
     }
 
   /** Move one staged table dir to `dst` — see [[append]]. */
@@ -970,7 +994,7 @@ object VersionedStore {
   }
 
   /** Atomic pointer flip, by the root's protocol ([[ProtocolConf]]):
-    * rename — [[StoreFs.writeAtomic]]'s tmp + RENAME with OVERWRITE,
+    * rename — [[StoreFs.writeAtomic]]'s tmp + rename over `_CURRENT`,
     * tmp name pinned to [[PointerTmpPrefix]] so a crashed flip is the
     * exact dead-bytes artifact fsck and gc name; exclusive — one
     * immutable `_POINTER.<gen>` marker written CREATE-EXCLUSIVE (an

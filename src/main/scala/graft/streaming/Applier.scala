@@ -1,11 +1,13 @@
 package graft.streaming
 
+import scala.concurrent.Future
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{MetadataBuilder, StructType}
 
 import graft.operators.Bootstrap
-import graft.pipeline.{StoreFs, VersionedStore}
+import graft.pipeline.{DriverParquet, Overlap, StoreFs, VersionedStore}
 
 /** K6/A2 — the continuous bootstrap materializer: applies the change
   * stream into a queryable snapshot, upserting by key and dropping
@@ -16,15 +18,33 @@ import graft.pipeline.{StoreFs, VersionedStore}
   * `log_<srcid>`, BootstrapApplierThread merges that log into
   * `tab_<srcid>` — BootstrapProducerCallback.java:58,621;
   * BootstrapApplierThread.java:242-386):
-  *   - `snapshot`: the merged state as of the last compaction;
+  *   - `snapshot`: the merged state as of the last fold;
   *   - `log/batch=<n>`: one raw delta per applied micro-batch.
   *
   * An apply appends its batch as the next delta — O(batch): the state is
   * neither read nor rewritten, and the delta becomes visible whole
-  * ([[VersionedStore.append]]). Every [[CompactEvery]]-th delta the apply
-  * folds the log into the snapshot: one [[VersionedStore.publish]] of
-  * `applyLog(snapshot ∪ log)`, then gc. Readers ([[snapshot]]) serve
-  * take-latest-per-key over snapshot ∪ log.
+  * ([[VersionedStore.append]]). Once the log holds [[CompactEvery]]
+  * deltas the apply starts the FOLD and returns: off the apply path, as
+  * the reference's applier thread runs beside its producer, the fold
+  * publishes `applyLog(snapshot ∪ log)` as the next generation
+  * ([[VersionedStore.publish]]), then gc's. A fold changes the layout,
+  * never the served state.
+  *
+  * The fold contract:
+  *   - at most one fold per state dir is in flight, and the next apply
+  *     to the dir joins it first (rethrowing its failure), so no append
+  *     races a fold: the store's single-writer regime;
+  *   - the fold's jobs carry their own job group, `applier-fold
+  *     <stateDir>`, not the query's, so stopping the query that started
+  *     it does not cancel it;
+  *   - readers ([[snapshot]]) never wait: they serve the old generation,
+  *     whole, until the fold's pointer flip. A frame reads its
+  *     generation's files when it runs, and the fold's gc retires the old
+  *     generation, so a read that may outlive the next fold holds a pin
+  *     ([[VersionedStore.registerPin]]);
+  *   - crash recovery: a process that exits mid-fold leaves a reservation
+  *     that gc retires, and a log still at [[CompactEvery]] deltas, so
+  *     the next apply folds again.
   *
   * Replay safety: foreachBatch is at-least-once, and an apply replayed
   * after a crash appends an identical second delta. Take-latest per
@@ -39,27 +59,46 @@ object Applier {
   private val Snapshot = "snapshot"
   private val Log = "log"
 
-  /** Log deltas that trigger a compaction. Chosen by measurement on
-    * relay-tail (10k-event batches over 100k keys): a non-compacting
-    * apply writes one batch, and a snapshot read merges at most this
-    * many deltas. */
-  private val CompactEvery = 8
+  /** Log deltas that start a fold. Chosen by measurement on relay-tail
+    * (10k-event batches over 100k keys): an apply writes one batch, and
+    * a snapshot read merges at most this many deltas. */
+  private[graft] val CompactEvery = 8
 
   /** Field-metadata flag on the key columns of the stored schema: the
     * readers take the merge key from the store itself, so [[snapshot]]
     * needs no key parameter. */
   private val KeyTag = "applier_key"
 
+  /** The in-flight fold of each state dir, keyed by its qualified path. */
+  private val folds =
+    new java.util.concurrent.ConcurrentHashMap[String, Future[Unit]]()
+
+  private def foldKey(stateDir: String): String = {
+    val (fs, p) = StoreFs.fsPath(stateDir)
+    fs.makeQualified(p).toString
+  }
+
+  /** Wait for `stateDir`'s in-flight fold, if any; rethrows its failure
+    * as the original exception. The next apply does this first; tests
+    * and probes call it to read a fold's outcome. */
+  private[graft] def awaitFold(stateDir: String): Unit =
+    Option(folds.remove(foldKey(stateDir))).foreach { f =>
+      Overlap.settle(f)
+    }
+
   /** The merged state: `applyLog(snapshot ∪ log)` of the current
     * generation, None before the first apply. Loud on a state dir in a
     * layout this build does not read ([[VersionedStore.publishedRoot]]).
-    * Infers the stored schema once, from one table. */
+    * Runs no Spark job: the stored schema, key tags included, is read
+    * from one file's footer. */
   def snapshot(spark: SparkSession, stateDir: String): Option[DataFrame] =
     VersionedStore.publishedRoot(stateDir).map { t =>
-      val first = Seq(Snapshot, Log).find(n => StoreFs.isDirectory(s"$t/$n"))
+      val file = Seq(Snapshot, Log).iterator
+        .map(n => StoreFs.listDataFiles(s"$t/$n").map(_.getPath))
+        .collectFirst { case fs if fs.nonEmpty => fs.minBy(_.toString) }
         .getOrElse(throw new IllegalStateException(
           s"Applier.snapshot: generation $t holds neither $Snapshot nor $Log"))
-      val schema = StructType(spark.read.parquet(s"$t/$first").schema
+      val schema = StructType(DriverParquet.footerSchema(file)
         .filterNot(_.name == "batch"))
       val keys = schema.filter(_.metadata.contains(KeyTag)).map(_.name)
       require(keys.nonEmpty, s"Applier.snapshot: no key columns recorded in $t")
@@ -74,23 +113,29 @@ object Applier {
       .map(n => spark.read.schema(schema).parquet(s"$t/$n").drop("batch"))
       .reduce(_ unionByName _)
 
-  /** Apply one micro-batch of envelope changes: append it as log delta
-    * `n` (one more than the largest id in the current generation's log),
-    * and compact once the log holds [[CompactEvery]] deltas. An empty
-    * batch writes nothing.
+  /** Apply one micro-batch of envelope changes, as one Spark job:
+    *   1. join the state dir's in-flight fold, rethrowing its failure;
+    *   2. append the batch as log delta `n` (one more than the largest id
+    *      in the current generation's log). An empty batch lands
+    *      nothing: a driver-local one is seen before any write, and runs
+    *      no job; any other is told from the staged files' footer row
+    *      counts, with no job besides its write;
+    *   3. once the log holds [[CompactEvery]] deltas, start the fold and
+    *      return (see the object doc).
     *
-    * The compaction reads the stored tables with `batch.schema`, the
+    * The fold reads the stored tables with the delta's schema, the
     * schema they were written with, so it starts no Parquet
     * schema-inference job. A state written under a different stream
-    * schema or other key columns is outside this contract. A compaction
-    * that crashes before its pointer flip leaves readers on the old
-    * generation; the next apply compacts again, and its gc retires the
+    * schema or other key columns is outside this contract. A fold that
+    * crashes before its pointer flip leaves readers on the old
+    * generation; the next apply folds again, and its gc retires the
     * leftover. */
   def applyBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
       keyCols: Seq[String] = Seq("key_long")): Unit = {
     require(keyCols.nonEmpty && keyCols.forall(batch.columns.contains),
       s"Applier.applyBatch: key columns $keyCols not all in the batch")
-    if (batch.isEmpty) return
+    awaitFold(stateDir)
+    if (DriverParquet.localRows(batch).exists(_._2.isEmpty)) return
     val delta = batch.select(batch.columns.toSeq.map { c =>
       if (!keyCols.contains(c)) batch(c)
       else batch(c).as(c, new MetadataBuilder()
@@ -99,14 +144,20 @@ object Applier {
     }: _*)
     val ids = VersionedStore.publishedRoot(stateDir).toSeq
       .flatMap(t => VersionedStore.batchIdsOf(s"$t/$Log"))
-    VersionedStore.append(stateDir,
-      Seq(s"$Log/batch=${ids.maxOption.fold(0L)(_ + 1)}" -> (() => delta)),
-      "overwrite")()
-    if (ids.size + 1 >= CompactEvery) {
-      VersionedStore.publish(stateDir, Map(Snapshot -> Bootstrap.applyLog(
-        stored(spark, VersionedStore.tableRoot(stateDir), delta.schema),
-        keyCols)))
-      VersionedStore.gc(stateDir, keep = 0)
+    val table = s"$Log/batch=${ids.maxOption.fold(0L)(_ + 1)}"
+    val landed = VersionedStore.append(stateDir, Seq(table -> (() => delta)),
+      "overwrite", landIf = dir => DriverParquet.footerRowCount(
+        StoreFs.listDataFiles(s"$dir/$table").map(_.getPath)) > 0)()
+    if (landed && ids.size + 1 >= CompactEvery) {
+      val schema = delta.schema
+      folds.put(foldKey(stateDir),
+        Overlap.runInGroup(s"applier-fold $stateDir") {
+          VersionedStore.publish(stateDir, Map(Snapshot -> Bootstrap.applyLog(
+            stored(spark, VersionedStore.tableRoot(stateDir), schema),
+            keyCols)))
+          VersionedStore.gc(stateDir, keep = 0)
+          ()
+        })
     }
   }
 

@@ -47,4 +47,20 @@ object ThreadBridge {
           try body finally sc.setLocalProperties(own)
         }
     }
+
+  /** `body`, to be run on another thread under job properties of its
+    * own: only job group `group`, described by the same name. Nothing of
+    * the calling thread's properties is carried, so cancelling the
+    * caller's group (a finished query's `runId`) does not reach it. */
+  def withOwnJobGroup[A](group: String)(body: => A): () => A =
+    SparkContext.getActive match {
+      case None => () => body
+      case Some(sc) =>
+        () => {
+          val own = sc.getLocalProperties
+          sc.setLocalProperties(new java.util.Properties)
+          sc.setJobGroup(group, group, interruptOnCancel = false)
+          try body finally sc.setLocalProperties(own)
+        }
+    }
 }

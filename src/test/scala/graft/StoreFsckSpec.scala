@@ -327,6 +327,7 @@ class StoreFsckSpec extends SparkSpec {
     def apply(): Unit = {
       require(i < from + 64, "no compaction within 64 applies")
       Applier.applyBatch(spark, streamBatch(i), dir)
+      Applier.awaitFold(dir)
       i += 1
     }
     if (VersionedStore.currentGen(dir).isEmpty) apply()
@@ -407,6 +408,7 @@ class StoreFsckSpec extends SparkSpec {
     // committed): the replay appends a duplicate delta, compacts past
     // the leftovers, and its gc retires them
     Applier.applyBatch(spark, streamBatch(crashed), dir)
+    Applier.awaitFold(dir)
     assert(VersionedStore.currentGen(dir).exists(_ > gen + 2))
     assert(applierRows(Applier.snapshot(spark, dir).get) ==
       applierRows(Bootstrap.applyLog(replay)))
